@@ -1,66 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every catalog query on
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line with per-query wall
-  * times. A warm-up pass (flagship query + one scan per table) absorbs
-  * JVM/codegen/parquet-footer startup so the timed numbers measure the
-  * queries, not session bring-up.
+  * times. A warm-up pass ([[EntryPoint.warmUp]]: one scan per table,
+  * every selected query on a smaller dataset, the flagship query)
+  * absorbs JVM/codegen/parquet-footer startup so the timed numbers
+  * measure the queries, not session bring-up.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Warm-up: touch every table's footer/schema, then run EVERY catalog
-    // query once at the smallest scale factor. This compiles each query's
-    // generated code and JITs the hot paths outside the timed region, so
-    // the timed numbers measure query execution at the benchmark scale,
-    // not first-hit JVM compilation — the steady state a long-lived
-    // session (or any real deployment) runs in. The warm-up directory is
-    // a DIFFERENT dataset, so no result/cache of the timed queries is
-    // precomputed by it. Best-effort: a missing table/dir must not abort
-    // the benchmark (per-query failures are recorded below).
-    Tables.names.foreach(t =>
-      try Tables.load(spark, sfDir, t).count()
-      catch { case _: Throwable => () })
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
-      "/root/testdata/sf0.001")
-    // canonical-path compare: a trailing slash must not let the warm-up
-    // run (and cache) the timed dataset itself
-    val distinctDirs =
-      try new java.io.File(warmDir).getCanonicalPath !=
-        new java.io.File(sfDir).getCanonicalPath
-      catch { case _: Throwable => false }
-    // Optional single-query iteration: SPARK_GRAFT_BENCH_ONLY=q104,q66
-    // times only queries whose name starts with a listed prefix. Dev
-    // loop only — the driver runs the full catalog (env unset).
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def selected(name: String): Boolean =
-      only.forall(_.exists(name.startsWith))
-    if (new java.io.File(warmDir).isDirectory && distinctDirs) {
-      SparkEntry.queries.foreach { case (n, fn) =>
-        if (selected(n))
-          try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-          catch { case _: Throwable => () }
-      }
-      // drop the warm-up dataset's persisted frames (shingle/tf/vector
-      // caches keyed to warmDir plans): they are never read again but
-      // would occupy the unified memory pool during the timed region
-      spark.catalog.clearCache()
-    }
-    try SparkEntry.queries("q1_agg")(spark, sfDir).count()
-    catch { case _: Throwable => () }
+    val cpus = EntryPoint.cpus
+    val spark = EntryPoint.session(cpus)
+    // Optional subset for the dev loop: SPARK_GRAFT_ONLY=q104,q66 times
+    // only the selected queries ([[EntryPoint.select]]). The full
+    // catalog runs when it is unset.
+    val picked = EntryPoint.onlyQueries
+    EntryPoint.warmUp(spark, sfDir, picked)
 
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // Evaluation action: write to the `noop` sink, NOT count(). count()
@@ -100,8 +56,8 @@ object Bench {
         try spark.catalog.clearCache() catch { case _: Throwable => () }
       }
     }
-    val sorted =
-      SparkEntry.queries.toSeq.filter(q => selected(q._1)).sortBy(_._1)
+    val all = SparkEntry.queries
+    val sorted = picked.sorted.map(n => n -> all(n))
     // Two timed passes per query. "cold" includes planning + codegen
     // (single-shot execution); "steady" is the per-query cost a
     // long-lived session pays. The HEADLINE `value` is min_total — the

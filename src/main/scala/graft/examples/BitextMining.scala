@@ -41,7 +41,7 @@ object BitextMining {
     * around mine()'s (6, 4) geometry on a corpus sample and report
     * which configs clear `recallFloorPpm` at what candidate cost —
     * run this BEFORE committing a geometry to a 100 TB mining job
-    * (ScaleMutual measured 6×4 losing under 64 clusters while 6×8
+    * (PLANS.md round 11 measured 6×4 losing under 64 clusters while 6×8
     * wins; the knob is corpus-dependent, so measure, don't guess).
     * Pick the cheapest passing row's (tables, planes) for [[mine]].
     */

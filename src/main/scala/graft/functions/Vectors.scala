@@ -77,9 +77,13 @@ object VectorKernel {
     * shape inflated the corpus ×nCentroids rows and paid a max_by
     * aggregation (buffers carrying the embedding) per vector; the
     * kernel is one fused loop per row, no fan-out, no aggregation
-    * (guide §4; optimization round 20). Empty centroid tables fail
-    * loudly — callers filter them out (the declarative shape produced
-    * no row; the caller-side size() guard preserves that).
+    * (guide §4; optimization round 20). A centroid whose id, vector
+    * or norm is null is skipped, as if absent from the table — the
+    * null-skip of the aggregation it replaces, instead of an executor
+    * NPE. Empty centroid tables — or tables with no non-null centroid
+    * — fail loudly; callers filter empty ones out (the declarative
+    * shape produced no row; the caller-side size() guard preserves
+    * that).
     */
   def bestCellCosine(e: ArrayData, nrm: Double, cenIds: ArrayData,
       cvs: ArrayData, cnrms: ArrayData): Long = {
@@ -93,14 +97,18 @@ object VectorKernel {
     var first = true
     var i = 0
     while (i < k) {
-      val cenId = cenIds.getLong(i)
-      val sim = round6(dot(e, cvs.getArray(i)) / (nrm * cnrms.getDouble(i)))
-      val c = if (first) 1 else cmpD(sim, bestSim)
-      if (c > 0 || (c == 0 && cenId < bestId)) {
-        bestSim = sim; bestId = cenId; first = false
+      if (!(cenIds.isNullAt(i) || cvs.isNullAt(i) || cnrms.isNullAt(i))) {
+        val cenId = cenIds.getLong(i)
+        val sim =
+          round6(dot(e, cvs.getArray(i)) / (nrm * cnrms.getDouble(i)))
+        val c = if (first) 1 else cmpD(sim, bestSim)
+        if (c > 0 || (c == 0 && cenId < bestId)) {
+          bestSim = sim; bestId = cenId; first = false
+        }
       }
       i += 1
     }
+    if (first) noCentroid("bestCellCosine")
     bestId
   }
 
@@ -111,7 +119,7 @@ object VectorKernel {
     * LOWEST cen_id — exactly `min_by(cen_id, struct(dist2, cen_id))`
     * over the per-(subvector, centroid) fan-out it replaces (the PQ
     * assignment sites in [[graft.operators.Similarity]]). Same
-    * fusion argument as [[bestCellCosine]].
+    * fusion argument and null-centroid skip as [[bestCellCosine]].
     */
   def bestCodeL2(sv: ArrayData, cenIds: ArrayData, cvs: ArrayData,
       cvvs: ArrayData): Long = {
@@ -126,20 +134,24 @@ object VectorKernel {
     var first = true
     var i = 0
     while (i < k) {
-      val cenId = cenIds.getLong(i)
-      val d2 = round6(svv - dot(sv, cvs.getArray(i)) * 2 + cvvs.getDouble(i))
-      val c = if (first) -1 else cmpD(d2, bestD)
-      if (c < 0 || (c == 0 && cenId < bestId)) {
-        bestD = d2; bestId = cenId; first = false
+      if (!(cenIds.isNullAt(i) || cvs.isNullAt(i) || cvvs.isNullAt(i))) {
+        val cenId = cenIds.getLong(i)
+        val d2 =
+          round6(svv - dot(sv, cvs.getArray(i)) * 2 + cvvs.getDouble(i))
+        val c = if (first) -1 else cmpD(d2, bestD)
+        if (c < 0 || (c == 0 && cenId < bestId)) {
+          bestD = d2; bestId = cenId; first = false
+        }
       }
       i += 1
     }
+    if (first) noCentroid("bestCodeL2")
     bestId
   }
 
   /** The MIN rounded squared distance of [[bestCodeL2]]'s loop (the
     * distortion a PQ drift probe needs — value, not argmin; same
-    * per-pair arithmetic and double ordering). */
+    * per-pair arithmetic, double ordering and null-centroid skip). */
   def minCodeDistL2(sv: ArrayData, cvs: ArrayData,
       cvvs: ArrayData): Double = {
     val k = cvs.numElements()
@@ -152,12 +164,20 @@ object VectorKernel {
     var first = true
     var i = 0
     while (i < k) {
-      val d2 = round6(svv - dot(sv, cvs.getArray(i)) * 2 + cvvs.getDouble(i))
-      if (first || cmpD(d2, bestD) < 0) { bestD = d2; first = false }
+      if (!(cvs.isNullAt(i) || cvvs.isNullAt(i))) {
+        val d2 =
+          round6(svv - dot(sv, cvs.getArray(i)) * 2 + cvvs.getDouble(i))
+        if (first || cmpD(d2, bestD) < 0) { bestD = d2; first = false }
+      }
       i += 1
     }
+    if (first) noCentroid("minCodeDistL2")
     bestD
   }
+
+  private def noCentroid(kernel: String): Nothing =
+    throw new IllegalArgumentException(
+      s"$kernel: every packed centroid is null — no centroid to assign")
 
   def int8Codes(a: ArrayData): ArrayData = {
     val n = a.numElements()

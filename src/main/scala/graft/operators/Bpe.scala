@@ -104,7 +104,7 @@ object Bpe {
 
   /** Learning from a prebuilt word-frequency table — the phase whose
     * cost is VOCABULARY-bounded, independent of corpus size
-    * (ScaleBpe measures the separation).
+    * (PLANS.md round 9 measured the separation).
     */
   def learnMergesFrom(spark: SparkSession, wf: DataFrame,
       k: Int): Learned = {

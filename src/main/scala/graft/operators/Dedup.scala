@@ -102,22 +102,17 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       n: Int, threshold: Double,
       maxShingleDf: Option[Int] = None,
-      cache: Boolean = true,
-      joinOnHash: Boolean = true): DataFrame = {
-    // joinOnHash: key the self-join and pair aggregation on the 8-byte
-    // 60-bit md5 hash via [[hashedShingleSet]] — a 3-5× cut in shuffle
-    // width on the hottest exchange (the n-gram string is 20-60 bytes)
-    // plus cheaper hashing/compare in the join itself. An md5-60bit
+      cache: Boolean = true): DataFrame = {
+    // key the self-join and pair aggregation on the 8-byte 60-bit md5
+    // hash via [[hashedShingleSet]] — a 3-5× cut in shuffle width on
+    // the hottest exchange (the n-gram string is 20-60 bytes) plus
+    // cheaper hashing/compare in the join itself. An md5-60bit
     // collision (≈ p²/2^61 across p distinct shingles — negligible
     // below ~10^8) inflates an intersection count deterministically;
     // the DuckDB oracle replays the same hash family, so results stay
-    // engine-identical either way. joinOnHash=false keeps exact string
-    // keys.
-    val sh0 =
-      if (joinOnHash)
-        hashedShingleSet(df, idCol, textCol, n, cache)
-          .withColumnRenamed("h", "s")
-      else shingleSet(df, idCol, textCol, n, cache)
+    // engine-identical.
+    val sh0 = hashedShingleSet(df, idCol, textCol, n, cache)
+      .withColumnRenamed("h", "s")
     val sh = maxShingleDf match {
       case Some(cap) =>
         val keep = sh0.groupBy("s").agg(count(lit(1)).as("df"))
@@ -353,7 +348,7 @@ object Dedup {
     * exchanges it pays (document-frequency aggregation + the ranking
     * window) are linear in corpus size.
     *
-    * MEASURED regimes (tools/ScaleJaccard, PLANS.md round 4): on the
+    * MEASURED regimes (PLANS.md round 4): on the
     * boilerplate shape (hot shingles shared corpus-wide, true pairs
     * only where docs genuinely overlap — the common large-corpus case)
     * this operator crosses over BELOW 5k docs and is 10× faster by 20k
@@ -453,7 +448,7 @@ object Dedup {
     // shortens the ceiling, i.e. lengthens the prefix — the safe side)
     // the prefix frame is NOT persisted: its only consumer is the
     // self-join below, whose two sides are identical plans over the
-    // (cached) shingle set — an r4 A/B (tools/PfxAb) measured persist
+    // (cached) shingle set — an r4 A/B measured persist
     // (1.92 s), eager-checkpoint-then-unpersist (2.07 s) and no-persist
     // (2.05 s) within noise at sf0.1, and no-persist keeps the operator
     // lazy and leaks nothing into the unified pool between global
@@ -520,8 +515,8 @@ object Dedup {
     * idf/avgdl-at-read trade of the TF index. What the artifact kills
     * is the expensive half of every near-dup run: re-tokenizing,
     * re-shingling and re-hashing 100 TB of TEXT that was already
-    * fingerprinted yesterday (tools/ScaleShingleIndex measures append
-    * O(increment) vs rebuild O(corpus)).
+    * fingerprinted yesterday (PLANS.md round 14, "ScaleShingleIndex":
+    * append O(increment) vs rebuild O(corpus)).
     */
   def writeShingleIndex(docs: DataFrame, path: String, n: Int,
       shingleBuckets: Int = 64, idCol: String = "doc_id",
@@ -977,25 +972,20 @@ object Dedup {
     * corpus" shape: both sides band with the SAME hash family, and the
     * band join replaces the corpus-wide self-join. The new shard is
     * normally orders of magnitude smaller than the corpus, so its
-    * banded signatures broadcast (`broadcastNew`) and the corpus-side
-    * token stream never shuffles for the join at all — signature
-    * aggregation (partial+final over shingles) is the only corpus-wide
-    * exchange. Pass `broadcastNew = false` for shard sizes past the
-    * broadcast threshold; the join degrades to a plain shuffled
-    * equi-join on (band, bv), still never all-pairs.
+    * banded signatures broadcast and the corpus-side token stream
+    * never shuffles for the join at all — signature aggregation
+    * (partial+final over shingles) is the only corpus-wide exchange.
     */
   def minhashCrossCandidates(
       newDocs: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String,
       n: Int, k: Int, bands: Int, minEst: Double,
-      broadcastNew: Boolean = true,
       cache: Boolean = true): DataFrame = {
     val bn = bandedSignatures(newDocs, idCol, textCol, n, k, bands, cache)
     val bc = bandedSignatures(corpus, idCol, textCol, n, k, bands, cache)
-    val left = if (broadcastNew) broadcast(bn) else bn
     val est = size(filter(
       zip_with(col("a.sig"), col("b.sig"), (x, y) => x === y), b => b))
-    left.as("a").join(bc.as("b"), Seq("band", "bv"))
+    broadcast(bn).as("a").join(bc.as("b"), Seq("band", "bv"))
       .select(col("a.doc_id").as("new_id"),
         col("b.doc_id").as("corpus_id"),
         (est / lit(k.toDouble)).as("est_sim"))

@@ -51,19 +51,13 @@ object Freq {
     * null frequency matters.
     *
     * The keyed input is evaluated TWICE — the sketch pass and the
-    * exact-verification pass — so `cacheInput = true` persists it
-    * (spillable) before the passes and an expensive upstream plan runs
-    * once. The default is FALSE: the result is lazy, so this function
-    * has no release point for the block — a true default would leak
-    * one MEMORY_AND_DISK cache per call into the unified pool of a
-    * long-lived session until a global `clearCache()`. Opt in only
-    * when the upstream plan is expensive AND you own the session's
-    * cache lifecycle (release with `spark.catalog.clearCache()` or by
-    * persisting the input yourself and unpersisting after the action);
-    * the result is identical either way.
+    * exact-verification pass. The result is lazy, so this function has
+    * no release point for a cache block and persists nothing: when the
+    * upstream plan is expensive, persist the input yourself and
+    * unpersist it after the action.
     */
   def heavyHitterCounts(df: DataFrame, keyCol: String,
-      capacity: Int = 4096, cacheInput: Boolean = false): DataFrame = {
+      capacity: Int = 4096): DataFrame = {
     val integral = df.schema(keyCol).dataType match {
       case LongType | IntegerType | ShortType | ByteType => true
       case _ => false
@@ -71,12 +65,8 @@ object Freq {
     val hk =
       if (integral) col(keyCol).cast("long")
       else TextOps.hash60(col(keyCol).cast("string"))
-    val keyed0 = df.filter(col(keyCol).isNotNull)
+    val keyed = df.filter(col(keyCol).isNotNull)
       .select(col(keyCol), hk.as("_hk"))
-    val keyed =
-      if (cacheInput)
-        keyed0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else keyed0
     val cand = keyed
       .agg(SketchAggs.misraGries(col("_hk"), capacity).as("ks"))
       .select(explode(col("ks")).as("_hk"))

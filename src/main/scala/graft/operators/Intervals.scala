@@ -133,6 +133,16 @@ object Intervals {
     * span — thousands of rows at 100 TB just as at sf0.01. The
     * trailing day (everything closed) is dropped; zero-concurrency
     * days INSIDE the span are kept (they are real operational facts).
+    *
+    * Measured against the naive formulation (explode every interval to
+    * its ±1 sweep events, then one unpartitioned cumulative window —
+    * all 2N events through one task), intervals over a ~6-year span
+    * with lengths 0..13 days, warm-min of 3, local[32] on a quiet box:
+    * naive vs two-phase = 0.46/0.26 s at 20M intervals and 3.38/1.15 s
+    * at 80M. The naive curve is superlinear (one task sorts all 2N
+    * events) while the two-phase curve stays linear in the delta
+    * aggregation; on a multi-executor cluster the naive arm is also
+    * capped at one machine's memory.
     */
   def dailyConcurrency(df: DataFrame, startCol: String, endCol: String)
       : DataFrame = {

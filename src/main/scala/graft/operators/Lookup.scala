@@ -21,14 +21,11 @@ import org.apache.spark.sql.functions._
   *
   * At scale: the lookup side is expected to be dimension-sized; `broadcast`
   * pins the plan to BroadcastHashJoin so a 100 TB probe side never shuffles.
-  * For lookup sides too big to broadcast, pass `hint = false` and let
-  * Catalyst/AQE pick a sort-merge join.
   */
 final case class Lookup(
     df: DataFrame,
     keys: Seq[String],
-    tiebreaker: Option[String] = None,
-    hint: Boolean = true) {
+    tiebreaker: Option[String] = None) {
   require(keys.nonEmpty, "lookup needs at least one key column")
 
   /** Key-deduplicated lookup relation (first-row-wins). */
@@ -50,8 +47,7 @@ final case class Lookup(
     val cond: Column = keys
       .map(k => input(keyMap.getOrElse(k, k)) === right(k))
       .reduce(_ && _)
-    val joined = input.join(
-      if (hint) broadcast(right) else right, cond, "left")
+    val joined = input.join(broadcast(right), cond, "left")
     // Drop the lookup's key columns: enrichment adds value columns only,
     // like the reference's dict merge of non-key values.
     keys.foldLeft(joined)((d, k) => d.drop(right(k)))

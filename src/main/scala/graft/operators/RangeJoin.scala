@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * + 1) candidate fan-out, hash-partitioned on the bin key — the
   * shuffle-parallel shape that survives a 100× scale-up. Choose
   * binDays ≈ the median interval length (fan-out ~2 bins/interval);
-  * ScaleRange measures the crossover.
+  * PLANS.md round 10 (q186) records the measured crossover.
   */
 object RangeJoin {
 

@@ -266,8 +266,8 @@ object Retrieval {
 
   /** Exhaustive top-k from a prebuilt [[bm25Index]] — posting-list
     * join, (query, doc) sum, rank. The fair exhaustive baseline when
-    * the index artifact exists (tools/ScaleWand A/Bs this against the
-    * pruned twin on the SAME index).
+    * the index artifact exists (PLANS.md rounds 12–13 A/B this against
+    * the pruned twin on the SAME index).
     */
   def bm25TopKIndexed(index: DataFrame, queries: Seq[(Int, String)],
       k: Int): DataFrame = {
@@ -840,7 +840,7 @@ object Retrieval {
     * (every doc matches every term, e.g. the synthetic corpus) leave
     * only the top term essential but survivors ≈ corpus — the
     * measured win needs real Zipfian term selectivity
-    * (tools/ScaleWand measures the survivor fraction and crossover).
+    * (PLANS.md rounds 12–13 record the survivor fraction and crossover).
     */
   def bm25TopKPruned(docs: DataFrame, idCol: String, textCol: String,
       queries: Seq[(Int, String)], k: Int,
@@ -879,22 +879,15 @@ object Retrieval {
 
   /** The max-score machinery over a contribs frame — see
     * [[bm25TopKPruned]] for the algorithm and safety argument.
-    * Exposed package-private for the ScaleWand A/B harness (which
-    * also reads [[survivorDocs]]).
     */
-  private[graft] def prunedTopK(contribs0: DataFrame, k: Int,
-      persistContribs: Boolean = true,
-      ub: Option[DataFrame] = None): DataFrame = {
-    // the contribs stream is read multiple times (ub unless stored,
-    // seed candidates, final scoring): materialize when re-derivation
-    // is expensive (the ad-hoc path recomputes the posting join per
-    // pass); the FromIndex path passes false — its rescans are
-    // partition-pruned parquet reads, cheaper than a cache write.
-    // localCheckpoint (not persist): blocks release when the frame is
-    // unreferenced, so ad-hoc queries don't leak CacheManager entries
-    val contribs = if (persistContribs) contribs0.localCheckpoint()
-    else contribs0
-    val survivors = survivorDocs(contribs, k, ub)
+  private def prunedTopK(contribs0: DataFrame, k: Int): DataFrame = {
+    // the contribs stream is read three times (upper bounds, seed
+    // candidates, final scoring), and re-deriving it re-runs the
+    // posting join: materialize it once. localCheckpoint (not
+    // persist): blocks release when the frame is unreferenced, so
+    // ad-hoc queries don't leak CacheManager entries
+    val contribs = contribs0.localCheckpoint()
+    val survivors = survivorDocs(contribs, k)
     val scored = contribs
       .join(survivors, Seq("query_id", "doc_id"), "left_semi")
       .groupBy(col("query_id"), col("doc_id"))
@@ -904,16 +897,13 @@ object Retrieval {
 
   /** Survivor documents `(query_id, doc_id)` of the max-score prune —
     * the set whose postings the final scoring aggregation touches.
-    * `precomputedUb` (the index's stored per-word maxima joined to
-    * query ids) skips the upper-bound pass entirely.
     */
-  private[graft] def survivorDocs(contribs: DataFrame, k: Int,
-      precomputedUb: Option[DataFrame] = None): DataFrame = {
+  private[graft] def survivorDocs(contribs: DataFrame, k: Int)
+      : DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // (1) per-(query, term) upper bounds — |queries|·|terms| rows
-    val ub = precomputedUb.getOrElse(
-      contribs.groupBy(col("query_id"), col("word"))
-        .agg(max(col("contrib")).as("ub")))
+    val ub = contribs.groupBy(col("query_id"), col("word"))
+      .agg(max(col("contrib")).as("ub"))
     // (2) seed candidates: top-k postings of the top-ub term, then
     // their FULL scores; θ = the k-th (null if fewer than k — then
     // nothing is pruned)

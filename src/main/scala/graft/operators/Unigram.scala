@@ -173,7 +173,7 @@ object Unigram {
     * derives a production ladder from a seed estimate. Every round is
     * vocabulary-bounded and localCheckpoint'd (flat lineage), so a
     * deep ladder costs rounds × the flat per-iteration price
-    * (ScaleUnigram measured it flat across 16× corpus growth).
+    * (PLANS.md round 13 measured it flat across 16× corpus growth).
     */
   def trainLadder(wf0: DataFrame, maxPieceLen: Int,
       vocabLadder: Seq[Int], emItersPerRound: Int = 1): DataFrame = {
@@ -215,23 +215,19 @@ object Unigram {
     * under the trained model (one vocabulary-bounded Viterbi pass),
     * then join the per-word pieces back onto the token stream. Output:
     * `(keep…, word, seq, piece)` — one row per piece occurrence, in
-    * path order within each word occurrence. `broadcastVocab` hints
-    * the (corpus-vocabulary × pieces)-sized segmentation frame for
-    * broadcast — right while the corpus vocabulary is model-like in
-    * size; at 100 TB-scale vocabularies drop the hint and let AQE
-    * shuffle-join on `word`.
+    * path order within each word occurrence. The (corpus-vocabulary
+    * × pieces)-sized segmentation frame is hinted for broadcast —
+    * right while the corpus vocabulary is model-like in size.
     */
   def segmentText(docs: DataFrame, textCol: String,
       piecesLp: DataFrame, maxPieceLen: Int,
-      keep: Seq[String] = Seq.empty,
-      broadcastVocab: Boolean = true): DataFrame = {
+      keep: Seq[String] = Seq.empty): DataFrame = {
     val words = TextOps.wordRows(docs, textCol, keep)
     val vocab = words.select(col("word")).distinct()
       .withColumn("freq", lit(1L))
-    val seg0 = segmentWords(vocab, piecesLp, maxPieceLen)
+    val seg = segmentWords(vocab, piecesLp, maxPieceLen)
       .select(col("word"), col("seq"), col("piece"))
-    val seg = if (broadcastVocab) broadcast(seg0) else seg0
-    words.join(seg, "word")
+    words.join(broadcast(seg), "word")
   }
 
   /** Corpus Viterbi log-likelihood under a trained model, in micro

@@ -308,7 +308,7 @@ object Round13 {
     // partitioned (writeBm25Index), then rank the SAME doc-as-query
     // batch through the partition-pruned indexed read
     // (bm25TopKFromIndex — chosen over the WAND coordinator because
-    // ScaleWand's doc-as-query arm measured pruning LOSING on
+    // the doc-as-query A/B (PLANS.md round 13) measured pruning LOSING on
     // common-term-anchored batches; q302 carries the pruned twin for
     // selective batches) and score P@10/MRR/nDCG against the same
     // pseudo-relevance truth. Oracle = q274's, VERBATIM: the green
@@ -335,8 +335,9 @@ object Round13 {
         val batch = Round11f.docQueryBatch(s, dir)
           .collect().map(r => (r.getLong(0).toInt, r.getString(1)))
           .toSeq
-        // exhaustive indexed read, not the WAND coordinator: ScaleWand's
-        // doc-as-query arm measured the pruned path LOSING on batches
+        // exhaustive indexed read, not the WAND coordinator: the
+        // doc-as-query A/B (PLANS.md round 13) measured the pruned path
+        // LOSING on batches
         // anchored on common terms (documents open with frequent words,
         // so every term is essential and the coordinator's extra
         // metadata/seed/θ reads never amortize) — the partition-pruned
@@ -424,7 +425,7 @@ object Round13 {
               |FROM seg3 s JOIN wf USING (word)
               |ORDER BY s.word, seq""".stripMargin)),
 
-    // ---- LSH geometry auto-calibration (the ScaleMutual lesson
+    // ---- LSH geometry auto-calibration (the PLANS.md round 11 lesson
     // operationalized: plane count is make-or-break and
     // corpus-dependent, so MEASURE the ladder before a 100 TB mining
     // job): for (2,4)/(6,4)/(6,8) over a deterministic sample of the

@@ -30,8 +30,8 @@ object Round3 {
           .persist(StorageLevel.MEMORY_AND_DISK)
         val thr = words
           .agg(ceil(count(lit(1)) * 0.001).cast("bigint").as("t"))
-        Freq.heavyHitterCounts(words, "word", capacity = 4096,
-            cacheInput = false) // words persisted above covers both passes
+        // words persisted above covers both passes
+        Freq.heavyHitterCounts(words, "word", capacity = 4096)
           .crossJoin(broadcast(thr))
           .filter(col("n_rows") >= col("t"))
           .select(col("word"), col("n_rows").as("n"))

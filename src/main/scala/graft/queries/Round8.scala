@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * measured-worse recall path the code itself warns about; q91 proved
   * Lloyd training replays in SQL, this composes it THROUGH search), the
   * persistable Bloom-filter artifact (the build-once/probe-many shape
-  * ScaleBloom's guidance promises), and the JPEG/BMP marker-scanning
+  * PLANS.md round 7's Bloom A/B promises), and the JPEG/BMP marker-scanning
   * parser paths under the parse∘construct gate.
   */
 object Round8 {
@@ -136,7 +136,7 @@ object Round8 {
     // from the benchmark split, WRITE the one-row artifact (bitmap +
     // its probe parameters) to parquet, read it back, and probe the
     // whole corpus from the persisted filter — the build-once/
-    // probe-many serving shape ScaleBloom's guidance promises ("amortize
+    // probe-many serving shape PLANS.md round 7's Bloom A/B promises ("amortize
     // by persisting the built filter"). Same parameters as q94/q96 and
     // the SAME oracle: any drift in the persisted bitmap or restored
     // parameters hash-fails here.

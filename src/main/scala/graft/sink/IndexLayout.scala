@@ -113,8 +113,11 @@ object IndexLayout {
     * (name, length, modTime) is unchanged — one driver-side
     * listStatus, orders of magnitude cheaper than the Spark job it
     * replaces, and a foreign rebuild (freshLayout deletes + rewrites
-    * meta) always changes it (round-20 hardening, ADVICE). */
-  private val metaCache =
+    * meta) always changes it (round-20 hardening, ADVICE). A listing
+    * failure yields the empty fingerprint, which never validates a
+    * cached row: two failed listings around a foreign rebuild would
+    * otherwise compare equal and serve the stale row. */
+  private[sink] val metaCache =
     new java.util.concurrent.ConcurrentHashMap[String,
       (String, org.apache.spark.sql.Row)]()
 
@@ -123,7 +126,7 @@ object IndexLayout {
     * `file:/x` and `/x` (or any non-local URI) to DISTINCT keys, so a
     * freshLayout given one form failed to invalidate a row cached
     * under the other (round-20 hardening, ADVICE). */
-  private def canonical(spark: SparkSession, path: String): String =
+  private[sink] def canonical(spark: SparkSession, path: String): String =
     try {
       val p = new Path(path)
       p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -147,7 +150,7 @@ object IndexLayout {
     val key = canonical(spark, path)
     val fp = metaFingerprint(spark, path)
     metaCache.compute(key, (_, cached) =>
-      if (cached != null && cached._1 == fp) cached
+      if (cached != null && fp.nonEmpty && cached._1 == fp) cached
       else (fp, spark.read.parquet(s"$path/meta").collect()(0)))._2
   }
 
@@ -300,8 +303,9 @@ object IndexLayout {
 
   /** Initial build of a bucketed fact tree: facts at generation 0,
     * repartitioned ON the bucket column (one file per bucket per write
-    * instead of #tasks × #buckets tiny files — the ScaleShingleIndex
-    * listing-cost lesson), overwrite into the resolved physical dir.
+    * instead of #tasks × #buckets tiny files — the listing-cost lesson
+    * of PLANS.md round 14, "ScaleShingleIndex"), overwrite into the
+    * resolved physical dir.
     * Callers compute the bucket column (each family hashes its own
     * key). */
   def writeFacts(facts: DataFrame, path: String, logical: String,

@@ -666,7 +666,7 @@ object EventStreams {
     * A micro-batch thus costs 4 manifest commits (pending_epoch,
     * reserve, publish, epoch). Folding the epoch moves into the
     * reserve/publish commits (4 → 2) was measured and DECLINED
-    * (round 18, [[graft.tools.ManifestCadence]]): one commit costs
+    * (PLANS.md, "Manifest commit cadence"): one commit costs
     * 2.3–4.8 ms on a populated layout, so the fold saves ~10 ms =
     * 0.83% of even the smallest possible (1-doc, 1.16 s) micro-batch
     * — for the price of threading the epoch through every family's

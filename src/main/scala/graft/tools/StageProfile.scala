@@ -1,50 +1,27 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-/** Per-stage time attribution for one catalog query (optimization
-  * rounds, guide §1/§7): runs the named query under the Bench session
-  * config with a stage listener and prints every completed stage's
-  * wall time, task count, and shuffle/input volumes, so "where do the
-  * seconds go" is a read instead of a guess.
+/** Per-stage time attribution for catalog queries (optimization
+  * rounds, guide §1/§7): runs the selected queries after Bench's
+  * session bootstrap and warm-up ([[graft.EntryPoint]]) with a stage
+  * listener and prints every completed stage's wall time, task count,
+  * and shuffle/input volumes, so "where do the seconds go" is a read
+  * instead of a guess.
   *
-  * `runMain graft.tools.StageProfile <query> [sfDir] [reps]`
+  * `runMain graft.tools.StageProfile <q1,q2,...> [sfDir] [reps]` —
+  * names select as `SPARK_GRAFT_ONLY` does ([[graft.EntryPoint.select]]).
   */
 object StageProfile {
   def main(args: Array[String]): Unit = {
-    val name0 = args.headOption.getOrElse("q1_agg")
+    val spec = args.headOption.getOrElse("q1_agg")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val all = graft.SparkEntry.queries
-    val names = name0.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      .flatMap { n =>
-        val r = all.keys.find(_ == n).orElse(all.keys.find(_.startsWith(n)))
-        if (r.isEmpty)
-          System.err.println(s"[stageprofile] no query matches '$n'")
-        r
-      }
+    val names = graft.EntryPoint.selectQueries(Some(spec))
     if (names.isEmpty) return
-
-    // warm pass on the small dir (Bench methodology)
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
-      "/root/testdata/sf0.001")
-    names.foreach { name =>
-      try all(name)(spark, warmDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
-    spark.catalog.clearCache()
+    val spark = graft.EntryPoint.session()
+    graft.EntryPoint.warmUp(spark, sfDir, names)
+    val all = graft.SparkEntry.queries
 
     final case class St(id: Int, nm: String, ms: Long, tasks: Int,
         inMb: Double, srMb: Double, swMb: Double, cpuMs: Long)

@@ -3,17 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one per suite via lazy val). */
+/** Shared local SparkSession for all suites (one per suite via lazy
+  * val): the [[EntryPoint]] bootstrap on a fixed 4 cores, so plan and
+  * partition assertions do not depend on the host, with a private
+  * warehouse directory. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
-    .getOrCreate()
+  lazy val spark: SparkSession = EntryPoint.session(
+    cores = SparkSpec.cores,
+    conf = Map("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-wh").toString))
 
   def fixture(name: String): String =
     getClass.getResource(s"/fixtures/$name").getPath
@@ -30,4 +28,9 @@ trait SparkSpec extends AnyFunSuite {
   def idxDirExists(path: String, logical: String): Boolean =
     graft.sink.IndexLayout.dirExists(spark,
       graft.sink.IndexLayout.resolve(spark, path, logical))
+}
+
+object SparkSpec {
+  /** Cores (and shuffle partitions) of the test session. */
+  val cores = 4
 }

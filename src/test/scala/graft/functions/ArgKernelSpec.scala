@@ -167,4 +167,58 @@ class ArgKernelSpec extends SparkSpec {
     val empty = cen.where(lit(false))
     assert(kernelCells(c, empty).count() == 0)
   }
+
+  test("cosine argmax skips null centroid vectors and norms") {
+    import spark.implicits._
+    val c = Seq((1L, Seq(1.0, 2.0, 3.0)), (2L, Seq(-1.0, 0.5, 2.0)))
+      .toDF("id", "_ed")
+      .withColumn("_ed", col("_ed").cast("array<double>"))
+      .withColumn("nrm", sqrt(dot(col("_ed"), col("_ed"))))
+    // ids 1 and 2 would win the lowest-id tie against 3 if they were
+    // scored; 1 has no vector, 2 no norm — both must be skipped
+    val cen = Seq[(Long, Option[Seq[Double]], Option[Double])](
+        (1L, None, Some(1.0)),
+        (2L, Some(Seq(0.5, 0.5, 0.5)), None),
+        (3L, Some(Seq(0.5, 0.5, 0.5)), Some(math.sqrt(0.75))),
+        (9L, Some(Seq(-1.0, 0.0, 0.0)), Some(1.0)))
+      .toDF("cen_id", "cen_e", "cen_nrm")
+    val k = kernelCells(c, cen).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the max_by twin orders a null csim below every score
+    val d = declarativeCells(c, cen).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(k == d)
+    assert(k == Map(1L -> 3L, 2L -> 9L))
+    // no non-null centroid at all: as loud as an empty table
+    val e = intercept[Exception](
+      kernelCells(c, cen.where(col("cen_id") < 3)).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage)
+        .contains("every packed centroid is null")), e.toString)
+  }
+
+  test("L2 argmin and min distance skip null centroid vectors and cvvs") {
+    import spark.implicits._
+    // sv = (1, 0). Centroid 1 has no vector and centroid 2 no cvv; if
+    // either were scored (a null cvv read as 0 gives d2 = -1) it would
+    // beat centroid 3 (d2 = 0); centroid 4 has d2 = 2.
+    val packed = Seq((1L, Seq(1.0, 0.0), Seq(1L, 2L, 3L, 4L),
+        Seq[Seq[Double]](null, Seq(1.0, 0.0), Seq(1.0, 0.0), Seq(0.0, 1.0)),
+        Seq[Option[Double]](Some(0.0), None, Some(1.0), Some(1.0))))
+      .toDF("id", "sv", "cen_ids", "cvs", "cvvs")
+    val got = packed.select(
+        Vectors.bestCodeL2(col("sv"), col("cen_ids"), col("cvs"),
+          col("cvvs")),
+        Vectors.minCodeDistL2(col("sv"), col("cvs"), col("cvvs")))
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(got == Seq((3L, 0.0)))
+    // the declarative twin over the non-null centroids agrees
+    val s = Seq((1L, 0L, Seq(1.0, 0.0))).toDF("id", "j", "sv")
+    val cen = Seq((0L, 3L, Seq(1.0, 0.0)), (0L, 4L, Seq(0.0, 1.0)))
+      .toDF("j", "cen_id", "cv")
+    val d = declarativeCodes(s, cen).select(col("code"),
+      col("mind").cast("double")).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(d == got)
+  }
 }

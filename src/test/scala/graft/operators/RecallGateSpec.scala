@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   *  - structure: IVF probing EVERY cell is exactly the brute-force
   *    answer (recall 1.0 — the bounded arms' correctness anchor);
   *  - ordering: trained codebooks/cells never fall below their seeded
-  *    baselines (the whole point of trainIters — RecallAb measured
+  *    baselines (the whole point of trainIters — PLANS.md round 9 measured
   *    0.280 vs 0.234 ADC, 0.220 vs 0.132 residual at these configs);
   *  - floors: each family stays above a hard floor set ~35% below its
   *    measured value — tight enough that a recall halving fails the
@@ -145,7 +145,7 @@ class RecallGateSpec extends SparkSpec {
     // buckets) stay green
     assert(rep((6L, 4L))._3, s"(6,4) no longer passes: $rep")
     // and the calibration must still rank it ABOVE the cheap config
-    // that ScaleMutual measured losing (6×8 under-yields here)
+    // that PLANS.md round 11 measured losing (6×8 under-yields here)
     assert(rep((6L, 4L))._1 > rep((6L, 8L))._1,
       s"(6,8) overtook (6,4): $rep")
     spark.catalog.clearCache()

@@ -103,4 +103,17 @@ class IndexLayoutSpec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(dir))
   }
+
+  test("metaRow: a failed meta listing never counts as a cache hit") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("idxmeta").toString
+    Seq(7L).toDF("n_buckets").write.parquet(s"$root/idx1/meta")
+    // a glob path: the Hadoop listing takes it literally and fails (the
+    // "" fingerprint), while the parquet read expands it to idx1/meta
+    val path = s"$root/idx[1]"
+    val stale = org.apache.spark.sql.Row(3L)
+    IndexLayout.metaCache.put(IndexLayout.canonical(spark, path),
+      ("", stale))
+    assert(IndexLayout.metaRow(spark, path).getLong(0) == 7L)
+  }
 }
