@@ -16,11 +16,14 @@ import org.apache.spark.sql.functions._
   * date parse/age derivation → valid-blood-group lookup → DQ side table →
   * idempotent batch write of `fact_customer` + `fact_customer_dq`.
   *
-  * Where the reference loops rows in Python, everything here is one
-  * declarative plan per output: the lookups are broadcast left joins, the
-  * per-row branches are `when`/`otherwise`, and the DQ side output is an
-  * issues-array + explode (graft.dq.DqSplit) — so the same pipeline
-  * parallelizes over any number of executors.
+  * Where the reference loops rows in Python, everything here is
+  * declarative: the lookups are broadcast left joins, the per-row branches
+  * are `when`/`otherwise`, and the DQ side output is an issues-array +
+  * explode (graft.dq.DqSplit) — so the same pipeline parallelizes over any
+  * number of executors. One shared materialization of the staged rows
+  * (SparkSqlTask.shared) feeds the row-count check and both outputs, so
+  * each source file is scanned once per batch; the declared CSV headers
+  * keep header reads out of plan building.
   */
 class FactCustomerTask(
     spark: SparkSession,
@@ -55,13 +58,15 @@ class FactCustomerTask(
     val rd = lit(reportDate)
 
     // main row source (reference SQL: WHERE report_date = :report_date)
-    val customers = Sources.csv(spark, customersCsv)
+    val customers = Sources.csv(spark, customersCsv,
+      columns = Seq("report_date", "name", "birthday"))
       .filter(to_date(col("report_date")) === rd)
 
     // validity-window lookup (SCD2-style point-in-interval predicate,
     // fact_customer_task.py:60-61), deterministic first-row-wins via the
     // CSV line order as tiebreaker (SURVEY.md §7.5)
-    val blood = Sources.csv(spark, bloodGroupsCsv)
+    val blood = Sources.csv(spark, bloodGroupsCsv,
+      columns = Seq("start_date", "end_date", "name", "blood_group"))
       .withColumn("__line", monotonically_increasing_id())
       .filter(to_date(col("start_date")) <= rd && to_date(col("end_date")) > rd)
       .select(col("name"), col("blood_group"), col("__line"))
@@ -69,14 +74,15 @@ class FactCustomerTask(
 
     // valid-blood-groups lookup: key and value are the same column; keep
     // a renamed value column so a miss is observable as null
-    val valid = Sources.csv(spark, validGroupsCsv)
+    val valid = Sources.csv(spark, validGroupsCsv, columns = Seq("blood_group"))
       .select(col("blood_group").as("bg_key"),
         col("blood_group").as("valid_blood_group"))
     val validLookup = Lookup(valid, Seq("bg_key"))
 
     val enriched = bgLookup.enrich(customers)
       .withColumnRenamed("blood_group", "customer_blood_group")
-    val staged = validLookup
+    // validate() and both writes derive from `staged`: materialize it once
+    val staged = shared(validLookup
       .enrich(enriched, keyMap = Map("bg_key" -> "customer_blood_group"))
       .withColumn("parsed", expr("try_to_date(birthday, 'yyyy-MM-dd')"))
       .withColumn("birthdate", when(col("parsed") > rd, lit(null))
@@ -85,7 +91,7 @@ class FactCustomerTask(
         floor(datediff(rd, col("birthdate")) / 365.25).cast("int")))
       .withColumn("report_date", rd)
       .withColumn("customer_name", col("name"))
-      .withColumn("blood_group", col("valid_blood_group"))
+      .withColumn("blood_group", col("valid_blood_group")))
 
     // row-level DQ (fact_customer_task.py:85-158), declaratively
     val rules = Seq(

@@ -19,19 +19,34 @@ object Sources {
     * Charset is caller-supplied (UTF-8 default); [[csvAutoDetect]]
     * reproduces the reference's chardet-style auto-detection
     * (utils/file.py:6-22).
+    *
+    * `columns` declares the header up front, the CSV counterpart of the
+    * schema-first option of [[json]] and [[orc]]: the all-string schema
+    * is built from the names, so no job reads the header while the plan
+    * is built. The declaration is checked rather than trusted
+    * (`enforceSchema=false`): every file's header must list the same
+    * names in the same order (case-insensitively unless
+    * `spark.sql.caseSensitive`), or the scan fails — a misnamed, missing
+    * or extra column never silently shifts values into the wrong column.
+    * Empty (the default) reads the names from the header at plan time.
     */
   def csv(
       spark: SparkSession,
       path: String,
       delimiter: String = ",",
-      encoding: String = "UTF-8"): DataFrame =
-    spark.read
+      encoding: String = "UTF-8",
+      columns: Seq[String] = Nil): DataFrame = {
+    val r = spark.read
       .option("header", "true")
       .option("inferSchema", "false")
       .option("delimiter", delimiter)
       .option("encoding", encoding)
       .option("mode", "FAILFAST")
+    (if (columns.isEmpty) r
+     else r.option("enforceSchema", "false")
+       .schema(StructType(columns.map(StructField(_, StringType)))))
       .csv(path)
+  }
 
   /** Charset auto-detection for [[csv]] — the reference detects with
     * chardet before reading (sqltask/utils/file.py:6-22, sampling the

@@ -6,13 +6,36 @@ import org.apache.spark.sql.types.StringType
 class SourcesSpec extends SparkSpec {
 
   test("csv scan: header names, all values strings (sources/csv.py:12-76)") {
-    val df = Sources.csv(spark, fixture("customers.csv"))
-    assert(df.columns.toSeq == Seq("report_date", "name", "birthday"))
-    assert(df.schema.fields.forall(_.dataType == StringType))
-    assert(df.count() == 5)
-    // empty CSV cell -> null (the reference yields '' which is falsy; null
-    // is the Spark-idiomatic missing marker and what our DQ rules test)
-    assert(df.filter(df("birthday").isNull).count() == 1)
+    val header = Seq("report_date", "name", "birthday")
+    val read = Sources.csv(spark, fixture("customers.csv"))
+    val declared = Sources.csv(spark, fixture("customers.csv"), columns = header)
+    for (df <- Seq(read, declared)) {
+      assert(df.columns.toSeq == header)
+      assert(df.schema.fields.forall(_.dataType == StringType))
+      assert(df.count() == 5)
+      // empty CSV cell -> null (the reference yields '' which is falsy; null
+      // is the Spark-idiomatic missing marker and what our DQ rules test)
+      assert(df.filter(df("birthday").isNull).count() == 1)
+    }
+    assert(declared.collect().toSeq == read.collect().toSeq)
+  }
+
+  test("csv scan: a declared header that does not match the file fails the scan") {
+    def scanError(columns: Seq[String]): String = {
+      // the plan builds without touching the file; the scan checks it
+      val df = Sources.csv(spark, fixture("customers.csv"), columns = columns)
+      val e = intercept[Exception](df.collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString("\n")
+    }
+    val misnamed = scanError(Seq("report_date", "customer", "birthday"))
+    assert(misnamed.contains("CSV header does not conform to the schema"))
+    assert(misnamed.contains("customer"))
+    for (columns <- Seq(Seq("report_date", "name"),
+        Seq("report_date", "name", "birthday", "blood_group")))
+      assert(scanError(columns).contains(
+        "Number of column in CSV header is not equal to number of fields in the schema"),
+        columns)
   }
 
   test("charset auto-detection: BOM, valid UTF-8, single-byte fallback") {
