@@ -506,9 +506,9 @@ object Dedup {
     * `(n_buckets, shingle_n)`.
     *
     * Per-document FACTS only: a document's shingle set and size never
-    * change when the corpus grows, so [[appendShingleIndex]] is a pure
-    * parquet append — nothing global (document frequency, prefix
-    * ranks) is baked into the stored rows. The global rarest-first
+    * change when the corpus grows, so [[shingleFamily]]'s `append`
+    * is a pure parquet append — nothing global (document frequency,
+    * prefix ranks) is baked into the stored rows. The global rarest-first
     * rank that PPJoin prefixes need is recomputed at READ time over
     * the index's current state ([[jaccardPairsAgainstIndex]]) — two
     * narrow-column exchanges over stored longs, exactly the
@@ -554,48 +554,24 @@ object Dedup {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
 
-  /** APPEND a document increment to a [[writeShingleIndex]] artifact:
-    * shingle ONLY the new documents, append their postings into the
-    * same bucket layout and their counts into `docs`. New doc ids must
-    * be distinct from the indexed corpus (ingest, not upsert — the
-    * [[Retrieval.appendTfIndex]] contract).
-    */
-  def appendShingleIndex(path: String, newDocs: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val spark = newDocs.sparkSession
-    val g = graft.sink.IndexLayout.reserveGen(spark, path)
-    appendShingleFacts(path, newDocs, idCol, textCol, g)
-    graft.sink.IndexLayout.publishGen(spark, path, g)
-  }
+  /** The shingle family of [[graft.sink.IndexFamily]] — append,
+    * upsert, delete, CDC, purge, compaction and streaming ingest of a
+    * [[writeShingleIndex]] artifact. Mutations shingle ONLY the
+    * increment (a re-crawled doc from its NEW text); yesterday's
+    * corpus text is never touched. [[jaccardPairsAgainstIndex]]
+    * filters tombstone-killed generations out of the postings BEFORE
+    * ranking, so prefix ranks, sizes and pairs recompute as if the
+    * killed facts never existed. CDC diffs the flat per-doc `docs`
+    * table. */
+  def shingleFamily(idCol: String = "doc_id",
+      textCol: String = "text"): graft.sink.IndexFamily =
+    graft.sink.IndexFamily("shingle", key = "doc_id", idCol = idCol,
+      bucketCol = Some("sbucket"), flats = Seq("docs"),
+      cdcTable = "docs",
+      appendFacts = (path, docs, g) =>
+        appendShingleFacts(path, docs, idCol, textCol, g))
 
-  /** UPSERT a re-crawled increment into a [[writeShingleIndex]]
-    * artifact — the [[Retrieval.upsertTfIndex]] semantics on the
-    * dedup family: tombstone the incoming ids at `below_gen = g`,
-    * append their fresh shingle facts at `gen = g` (the
-    * [[graft.sink.IndexLayout]] generation discipline). A doc whose
-    * text changed is re-shingled from its NEW text only; its stale
-    * facts die at read time, ids new to the index are a plain append,
-    * upsert-twice ≡ once, and an upsert after a delete resurrects the
-    * doc. O(increment) — yesterday's corpus text is never touched. */
-  def upsertShingleIndex(path: String, docs: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val spark = docs.sparkSession
-    // generation reserved BEFORE the tombstone/fact writes — a replay
-    // of a crashed upsert self-heals ([[graft.sink.IndexLayout
-    // .reserveGen]]); PUBLISHED after both writes, so readers see the
-    // upsert whole or not at all ([[graft.sink.IndexLayout
-    // .publishGen]])
-    val g = graft.sink.IndexLayout.reserveGen(spark, path)
-    // tombstone and fact writes are independent between the same
-    // reserve/publish pair — overlap them (guide §2.6)
-    graft.sink.IndexLayout.inParallel(
-      () => graft.sink.IndexLayout.appendTombstones(
-        docs.select(col(idCol)), path, "doc_id", g),
-      () => appendShingleFacts(path, docs, idCol, textCol, g))
-    graft.sink.IndexLayout.publishGen(spark, path, g)
-  }
-
-  private[graft] def appendShingleFacts(path: String,
+  private def appendShingleFacts(path: String,
       newDocs: DataFrame, idCol: String, textCol: String,
       gen: Long): Unit = {
     val spark = newDocs.sparkSession
@@ -615,122 +591,9 @@ object Dedup {
         path, "docs", gen))
   }
 
-  /** DELETE documents from a [[writeShingleIndex]] artifact — the
-    * takedown/GDPR twin of [[Retrieval.deleteFromTfIndex]], same
-    * layout answer: `(doc_id, below_gen)` tombstones append to
-    * `path/tombstones` ([[graft.sink.IndexLayout]] — kill every
-    * CURRENT generation, never the future, so a later
-    * [[upsertShingleIndex]] resurrects), and
-    * [[jaccardPairsAgainstIndex]] filters them out of the postings
-    * BEFORE ranking, so prefix ranks, sizes and pairs recompute as if
-    * the docs never existed. Physical removal:
-    * [[purgeShingleIndexTombstones]].
-    */
-  def deleteFromShingleIndex(path: String, docIds: DataFrame): Unit = {
-    val spark = docIds.sparkSession
-    val g = graft.sink.IndexLayout.reserveGen(spark, path)
-    graft.sink.IndexLayout.appendTombstones(docIds, path, "doc_id", g)
-    graft.sink.IndexLayout.publishGen(spark, path, g)
-  }
-
-  /** CDC over a [[writeShingleIndex]] artifact: which doc_ids changed
-    * between two pinned snapshots — [[graft.sink.IndexLayout
-    * .changedKeysBetween]] on the flat per-doc `docs` side table (the
-    * [[graft.operators.Retrieval.tfIndexChangesBetween]] semantics;
-    * postings never scanned). The FINGERPRINT layout has no per-doc
-    * side table, so its variant diffs the bucketed postings
-    * ([[fingerprintIndexChangesBetween]]) — same answer, body-sized
-    * scan. */
-  def shingleIndexChangesBetween(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      a: graft.sink.IndexManifest,
-      b: graft.sink.IndexManifest): DataFrame =
-    graft.sink.IndexLayout.changedKeysBetween(spark, path, "doc_id",
-      "docs", a, b)
-
-  /** [[shingleIndexChangesBetween]] for the fingerprint layout —
-    * diffs the bucketed `postings` facts directly (no flat side table
-    * exists; the scan is fingerprint-body-sized, still never the
-    * text). */
-  def fingerprintIndexChangesBetween(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      a: graft.sink.IndexManifest,
-      b: graft.sink.IndexManifest): DataFrame =
-    graft.sink.IndexLayout.changedKeysBetween(spark, path, "doc_id",
-      "postings", a, b)
-
-  /** Physically drop tombstone-killed generations (whole-tree
-    * staging-swap rewrite — [[graft.sink.IndexLayout
-    * .purgeTombstones]]); queries are bit-identical before and after.
-    * No-op without tombstones. */
-  def purgeShingleIndexTombstones(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    purgeBucketedTombstones(spark, path, "sbucket=")
-
-  /** [[purgeShingleIndexTombstones]] for the fingerprint layout
-    * (`fbucket=` leaves, no docs table). */
-  def purgeFingerprintIndexTombstones(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    purgeBucketedTombstones(spark, path, "fbucket=")
-
-  private def purgeBucketedTombstones(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      bucketPrefix: String): Unit = {
-    val man = graft.sink.IndexManifest.read(spark, path)
-    if (!graft.sink.IndexLayout.dirExists(spark,
-        graft.sink.IndexLayout.dir(path, man, "tombstones"))) return
-    val postings = new org.apache.hadoop.fs.Path(
-      graft.sink.IndexLayout.dir(path, man, "postings"))
-    val fs = postings.getFileSystem(spark.sessionState.newHadoopConf())
-    val leaves = fs.listStatus(postings).filter(_.isDirectory)
-      .map(_.getPath.toString)
-      .filter(_.contains(bucketPrefix))
-    require(leaves.nonEmpty,
-      s"$postings has no $bucketPrefix leaves — wrong index " +
-        "layout for this purge")
-    // ONE partitioned rewrite job into a NEW tree version, committed
-    // by pointer — never one job per bucket leaf (2^14 sequential jobs
-    // at production bucket counts), never a window where readers see a
-    // missing tree; drops exactly the generations the read-time filter
-    // drops, upsert-killed facts included
-    graft.sink.IndexLayout.purgeTombstones(spark, path, "doc_id",
-      bucketPrefix.stripSuffix("="), Seq("docs"))
-  }
-
-  /** Compact a [[writeShingleIndex]] artifact's accumulated append
-    * files — the postings tree as ONE partitioned job
-    * ([[graft.sink.Compact.compactPartitioned]], the
-    * [[Retrieval.compactTfIndex]] twin; N daily appends leave one
-    * file per bucket per day), the flat docs table through
-    * [[graft.sink.Compact.compact]]. Row values untouched: pair
-    * queries are bit-identical before and after (DedupSpec). Returns
-    * (filesBefore, filesAfter). */
-  def compactShingleIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val (pb, pa) = graft.sink.IndexLayout.compactVersioned(spark, path,
-      "postings", Some("sbucket"))
-    val (db, da) = graft.sink.IndexLayout.compactVersioned(spark, path,
-      "docs", None, targetBytes)
-    graft.sink.IndexLayout.compactMetadata(spark, path)
-    (pb + db, pa + da)
-  }
-
-  /** [[compactShingleIndex]] for the fingerprint layout (`fbucket=`
-    * tree, no docs table) — closes the compaction matrix: every
-    * persisted index family now has build/append/delete/purge AND
-    * compaction. Returns (filesBefore, filesAfter). */
-  def compactFingerprintIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): (Int, Int) = {
-    val r = graft.sink.IndexLayout.compactVersioned(spark, path,
-      "postings", Some("fbucket"))
-    graft.sink.IndexLayout.compactMetadata(spark, path)
-    r
-  }
-
   /** PPJoin-pruned exact Jaccard of a fresh INCREMENT against a
     * [[writeShingleIndex]] artifact (which already contains the
-    * increment — call [[appendShingleIndex]] first): all pairs with
+    * increment — [[shingleFamily]]'s `append` first): all pairs with
     * `J ≥ threshold` TOUCHING the increment — increment-vs-corpus and
     * increment-internal; corpus-internal pairs were yesterday's runs'
     * output and are never regenerated. Output `(da, db, inter,
@@ -1081,34 +944,19 @@ object Dedup {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
 
-  /** APPEND a document increment to a [[writeFingerprintIndex]]
-    * artifact — winnow ONLY the new documents (ingest, not upsert:
-    * new ids must be distinct; use [[upsertFingerprintIndex]] for
-    * re-crawls). */
-  def appendFingerprintIndex(path: String, newDocs: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val spark = newDocs.sparkSession
-    val g = graft.sink.IndexLayout.reserveGen(spark, path)
-    appendFingerprintFacts(path, newDocs, idCol, textCol, g)
-    graft.sink.IndexLayout.publishGen(spark, path, g)
-  }
+  /** The fingerprint family of [[graft.sink.IndexFamily]] — the
+    * [[shingleFamily]] lifecycle at substring granularity: mutations
+    * re-winnow only the increment. The layout has no per-doc side
+    * table, so CDC diffs the bucketed postings (a fingerprint-sized
+    * scan, still never the text). */
+  def fingerprintFamily(idCol: String = "doc_id",
+      textCol: String = "text"): graft.sink.IndexFamily =
+    graft.sink.IndexFamily("fingerprint", key = "doc_id", idCol = idCol,
+      bucketCol = Some("fbucket"), flats = Nil, cdcTable = "postings",
+      appendFacts = (path, docs, g) =>
+        appendFingerprintFacts(path, docs, idCol, textCol, g))
 
-  /** UPSERT a re-crawled increment into a [[writeFingerprintIndex]]
-    * artifact — [[upsertShingleIndex]]'s semantics at substring
-    * granularity: tombstone the incoming ids, re-winnow their NEW
-    * text only, append at the same generation. */
-  def upsertFingerprintIndex(path: String, docs: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val spark = docs.sparkSession
-    val g = graft.sink.IndexLayout.reserveGen(spark, path)
-    graft.sink.IndexLayout.inParallel(
-      () => graft.sink.IndexLayout.appendTombstones(
-        docs.select(col(idCol)), path, "doc_id", g),
-      () => appendFingerprintFacts(path, docs, idCol, textCol, g))
-    graft.sink.IndexLayout.publishGen(spark, path, g)
-  }
-
-  private[graft] def appendFingerprintFacts(path: String, newDocs: DataFrame,
+  private def appendFingerprintFacts(path: String, newDocs: DataFrame,
       idCol: String, textCol: String, gen: Long): Unit = {
     val spark = newDocs.sparkSession
     val meta = graft.sink.IndexLayout.metaRow(spark, path)
@@ -1131,7 +979,7 @@ object Dedup {
     * counting. `maxFpDf` drops boilerplate fingerprints by document
     * frequency over the index's CURRENT state (same lower-bound
     * semantics as the in-memory operator). Tombstones
-    * ([[deleteFromShingleIndex]]'s layout — `path/tombstones`) are
+    * ([[fingerprintFamily]]'s deletes — `path/tombstones`) are
     * anti-joined out first.
     */
   def substringCandidatesAgainstIndex(

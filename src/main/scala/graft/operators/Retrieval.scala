@@ -376,8 +376,8 @@ object Retrieval {
     * `path/meta` carrying the bucket count. Unlike [[writeBm25Index]]
     * nothing global is baked into the rows — TF and document length
     * are per-document FACTS that never change when the corpus grows,
-    * which is what makes [[appendTfIndex]] a pure parquet append. The
-    * trade: queries recompute idf/avgdl at read time
+    * which is what makes [[tfFamily]]'s `append` a pure parquet
+    * append. The trade: queries recompute idf/avgdl at read time
     * ([[bm25TopKFromTfIndex]]) instead of summing precomputed
     * contribs. At 100 TB with daily ingest this is the index you
     * actually run — a full impact-index rebuild per increment is the
@@ -385,14 +385,13 @@ object Retrieval {
     */
   def writeTfIndex(docs: DataFrame, path: String,
       wordBuckets: Int = 512, idCol: String = "doc_id",
-      textCol: String = "text",
-      tf: Option[DataFrame] = None): Unit = {
+      textCol: String = "text"): Unit = {
     require(wordBuckets >= 1)
     // a rebuild must not inherit a previous incarnation's tombstones,
     // counters, or versioned-dir pointers
     graft.sink.IndexLayout.freshLayout(docs.sparkSession, path)
-    val tfF = tf.getOrElse(termFrequencies(
-      docs.select(col(idCol), col(textCol)), idCol, textCol))
+    val tfF = termFrequencies(
+      docs.select(col(idCol), col(textCol)), idCol, textCol)
     // the two fact trees are independent jobs off one checkpointed tf
     // frame — overlap them (guide §2.6; IndexLayout.inParallel). The
     // one-row META write lands LAST and outside the group: the
@@ -413,68 +412,30 @@ object Retrieval {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
 
-  /** APPEND a document increment to a [[writeTfIndex]] artifact — the
-    * operation the impact index cannot support (its stored contribs
-    * embed idf/avgdl, which every new document shifts; appending to
-    * them silently corrupts every stored weight). New doc ids must be
-    * distinct from the indexed corpus (ingest, not upsert). Pure
-    * parquet appends into the same bucket layout. */
-  def appendTfIndex(path: String, newDocs: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text",
-      tf: Option[DataFrame] = None): Unit = {
-    val spark = newDocs.sparkSession
-    // generation RESERVED (manifest commit, driver-side — no Spark
-    // job) before any fact lands: a crashed append's replay reserves a
-    // higher gen, so tombstoning that gen can self-heal it; PUBLISHED
-    // after, so readers never see a partial append
-    val g = graft.sink.IndexLayout.reserveGen(spark, path)
-    appendTfFacts(path, newDocs, idCol, textCol, tf, g)
-    graft.sink.IndexLayout.publishGen(spark, path, g)
-  }
+  /** The TF family of [[graft.sink.IndexFamily]] — append, upsert,
+    * delete, CDC, purge, compaction and streaming ingest of a
+    * [[writeTfIndex]] artifact. Appending is the operation the impact
+    * index cannot support (its stored contribs embed idf/avgdl, which
+    * every new document shifts). Deletes and upserts tombstone
+    * `doc_id`s; [[bm25TopKFromTfIndex]] filters the killed
+    * generations out of BOTH postings and dl, so idf/avgdl/df — all
+    * computed at read time — recompute correctly for free. CDC diffs
+    * the flat `docs` table, never the postings body. */
+  def tfFamily(idCol: String = "doc_id",
+      textCol: String = "text"): graft.sink.IndexFamily =
+    graft.sink.IndexFamily("tf", key = "doc_id", idCol = idCol,
+      bucketCol = Some("wbucket"), flats = Seq("docs"),
+      cdcTable = "docs",
+      appendFacts = (path, docs, g) =>
+        appendTfFacts(path, docs, idCol, textCol, g))
 
-  /** UPSERT a re-crawled increment into a [[writeTfIndex]] artifact —
-    * the second-most-common ingest event after new docs: a doc_id
-    * whose text CHANGED gets its stale facts replaced in one call.
-    * Generation discipline ([[graft.sink.IndexLayout]]): tombstone the
-    * incoming ids at `below_gen = g`, append their fresh TF facts at
-    * `gen = g` — the fresh facts survive their own tombstone, every
-    * earlier generation of those ids dies at read time, and ids new to
-    * the index are a plain append (no earlier generation to kill).
-    * Upsert-twice ≡ once; upsert after a delete resurrects the doc.
-    * Cost is O(increment) — the corpus is never re-read. Physical
-    * removal of the dead generations: [[purgeTfIndexTombstones]].
-    */
-  def upsertTfIndex(path: String, docs: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text",
-      tf: Option[DataFrame] = None): Unit = {
-    val spark = docs.sparkSession
-    // reserve-first ordering: if a previous attempt crashed after
-    // writing facts at gen g, this replay reserves g+1 and its
-    // below_gen = g+1 tombstones kill the partial facts — the
-    // half-committed window self-heals instead of double-counting.
-    // publish-last makes the whole upsert READER-ATOMIC: tombstones
-    // and facts stay invisible until one watermark commit flips both
-    val g = graft.sink.IndexLayout.reserveGen(spark, path)
-    // tombstone and fact writes land in distinct dirs between the
-    // same reserve/publish pair — overlap them (guide §2.6)
-    graft.sink.IndexLayout.inParallel(
-      () => graft.sink.IndexLayout.appendTombstones(
-        docs.select(col(idCol)), path, "doc_id", g),
-      () => appendTfFacts(path, docs, idCol, textCol, tf, g))
-    graft.sink.IndexLayout.publishGen(spark, path, g)
-  }
-
-  /** The facts-append half of append/upsert (package-visible so the
-    * crash-window specs can simulate a mutation that died between its
-    * fact write and its commit). */
-  private[graft] def appendTfFacts(path: String, newDocs: DataFrame,
-      idCol: String, textCol: String, tf: Option[DataFrame],
-      gen: Long): Unit = {
+  private def appendTfFacts(path: String, newDocs: DataFrame,
+      idCol: String, textCol: String, gen: Long): Unit = {
     val spark = newDocs.sparkSession
     val nBuckets = graft.sink.IndexLayout.metaRow(spark, path)
       .getAs[Int]("n_buckets")
-    val tfF = tf.getOrElse(termFrequencies(
-      newDocs.select(col(idCol), col(textCol)), idCol, textCol))
+    val tfF = termFrequencies(
+      newDocs.select(col(idCol), col(textCol)), idCol, textCol)
     graft.sink.IndexLayout.inParallel(
       () => graft.sink.IndexLayout.appendFacts(
         tfF.withColumn("wbucket",
@@ -485,90 +446,14 @@ object Retrieval {
         path, "docs", gen))
   }
 
-  /** DELETE documents from a [[writeTfIndex]] artifact — the
-    * takedown/GDPR operation ingest-only appends can't express.
-    * LOGICAL deletion: `(doc_id, below_gen)` tombstones are appended
-    * to `path/tombstones` ([[graft.sink.IndexLayout]]'s generation
-    * discipline — kill every CURRENT generation, never the future,
-    * so a later [[upsertTfIndex]] of the same id resurrects it), and
-    * every [[bm25TopKFromTfIndex]] read filters them out of BOTH
-    * postings and dl, so idf/avgdl/df — all computed at read time —
-    * recompute correctly for free (the read-time-stats design paying
-    * off: a purge on the impact index would shift every stored
-    * contrib). Physical removal is a separate, schedulable concern:
-    * [[purgeTfIndexTombstones]].
-    */
-  def deleteFromTfIndex(path: String, docIds: DataFrame): Unit = {
-    val spark = docIds.sparkSession
-    val g = graft.sink.IndexLayout.reserveGen(spark, path)
-    graft.sink.IndexLayout.appendTombstones(docIds, path, "doc_id", g)
-    graft.sink.IndexLayout.publishGen(spark, path, g)
-  }
-
-  /** CDC over a [[writeTfIndex]] artifact: exactly which doc_ids
-    * changed between two PINNED snapshots — `(doc_id, change)` with
-    * change ∈ {'upsert', 'delete'} ([[graft.sink.IndexLayout
-    * .changedKeysBetween]] on the flat `docs` side table). The
-    * incremental training-data pull: a downstream job holds the pin
-    * from its last export and fetches only the delta instead of
-    * re-reading the corpus; the postings body is never touched. */
-  def tfIndexChangesBetween(spark: SparkSession, path: String,
-      a: graft.sink.IndexManifest,
-      b: graft.sink.IndexManifest): DataFrame =
-    graft.sink.IndexLayout.changedKeysBetween(spark, path, "doc_id",
-      "docs", a, b)
-
-  /** Physically drop tombstone-killed generations from a
-    * [[writeTfIndex]] artifact: rewrite the postings tree (ONE job)
-    * and the docs table into NEW physical versions and commit every
-    * pointer — including a fresh empty tombstones name — in one
-    * atomic manifest write ([[graft.sink.IndexLayout
-    * .purgeTombstones]]); concurrent readers see exactly the pre- or
-    * post-purge snapshot, never a missing tree. Queries are
-    * bit-identical before and after; what the purge buys is scan
-    * width — a years-old deletion set no longer taxes every read.
-    * No-op if nothing is tombstoned.
-    */
-  def purgeTfIndexTombstones(spark: SparkSession, path: String): Unit =
-    graft.sink.IndexLayout.purgeTombstones(spark, path, "doc_id",
-      "wbucket", Seq("docs"))
-
-  /** Compact a [[writeTfIndex]] artifact's accumulated append files:
-    * N daily [[appendTfIndex]] calls leave one file per bucket per day
-    * — the classic 100 TB ingest failure mode. Each tree is rewritten
-    * into a NEW physical version and committed by pointer
-    * ([[graft.sink.IndexLayout.compactVersioned]] — one partitioned
-    * job collapsing the postings to one file per bucket, never one
-    * sequential job per bucket leaf; the flat docs table to
-    * ⌈bytes/targetBytes⌉ files). Row values are untouched: queries
-    * hash-identically before and after (q333 gates exactly that).
-    * Returns (filesBefore, filesAfter) summed over the rewritten
-    * directories.
-    */
-  def compactTfIndex(spark: SparkSession, path: String,
-      targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val (pb, pa) = graft.sink.IndexLayout.compactVersioned(spark, path,
-      "postings", Some("wbucket"))
-    val (db, da) = graft.sink.IndexLayout.compactVersioned(spark, path,
-      "docs", None, targetBytes)
-    // manifest history pruned + any legacy metadata logs dropped
-    graft.sink.IndexLayout.compactMetadata(spark, path)
-    (pb + db, pa + da)
-  }
-
-  private def dirExists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
-
   /** Exhaustive BM25 top-k against a [[writeTfIndex]] artifact:
     * corpus statistics (n_docs, avgdl — one tiny aggregation of the
     * dl table) and per-word document frequencies are computed AT
     * QUERY TIME over the index's CURRENT state, so after any number
-    * of [[appendTfIndex]] increments the ranking is BIT-IDENTICAL to
+    * of [[tfFamily]] appends the ranking is BIT-IDENTICAL to
     * [[bm25TopK]] over the full corpus (q330's green hash is that
-    * proof). Tombstone-killed generations ([[deleteFromTfIndex]],
-    * [[upsertTfIndex]]) are filtered out of postings AND dl before
+    * proof). Tombstone-killed generations ([[tfFamily]] deletes and
+    * upserts) are filtered out of postings AND dl before
     * anything aggregates, so stats recompute as if the dead facts
     * never existed (q332's proof; the upsert row's for re-crawls).
     * The postings read is partition-pruned exactly like

@@ -1427,8 +1427,8 @@ object Similarity {
   }
 
   object IvfPqIndex {
-    /** Tombstone-killed generations ([[deleteFromIvfPqIndex]],
-      * [[upsertIvfPqIndex]]) are filtered out of the code stream at
+    /** Tombstone-killed generations ([[ivfPqFamily]] deletes and
+      * upserts) are filtered out of the code stream at
       * read time, so a takedown or re-embed is visible to every
       * subsequent search without touching cells/codebook (frozen, the
       * `append` contract — a deleted vector simply stops being a
@@ -1457,86 +1457,32 @@ object Similarity {
     }
   }
 
-  /** DELETE vectors from a persisted [[IvfPqIndex]] — the
-    * takedown/GDPR operation of the ANN family ([[Retrieval
-    * .deleteFromTfIndex]]'s pattern): `(id, below_gen)` tombstones
-    * append to `path/tombstones` ([[graft.sink.IndexLayout]] — kill
-    * every CURRENT generation, never the future, so a later
-    * [[upsertIvfPqIndex]] resurrects); [[IvfPqIndex.read]] filters
-    * them out of the code stream. Cells and codebook stay frozen (the
-    * `append` contract). Physical removal: [[purgeIvfPqTombstones]]. */
-  def deleteFromIvfPqIndex(path: String, ids: DataFrame): Unit = {
-    val spark = ids.sparkSession
-    val g = graft.sink.IndexLayout.reserveGen(spark, path)
-    graft.sink.IndexLayout.appendTombstones(ids, path, "id", g)
-    graft.sink.IndexLayout.publishGen(spark, path, g)
-  }
+  /** The IVF-PQ family of [[graft.sink.IndexFamily]] — append,
+    * upsert, delete, CDC, purge, compaction and streaming ingest of a
+    * persisted [[IvfPqIndex]]. Appends and upserts are
+    * [[IvfPqIndex.append]]'s FAISS-`add()` semantics without
+    * rewriting the corpus-sized code stream: cells and codebook are
+    * read back FROZEN, only the increment is assigned and encoded,
+    * and only its code rows are appended — delta work, delta I/O. An
+    * upsert is the re-embed event (a new embedding under the same
+    * id); the quantization-drift caveat applies doubly there — run
+    * [[ivfPqDriftStats]] on the batch and retrain
+    * ([[retrainIvfPqIndex]]) past the calibrated threshold. Deletes
+    * are FAISS `remove_ids`: [[IvfPqIndex.read]] filters the `id`
+    * tombstones out of the code stream, cells and codebook stay
+    * frozen. There is no postings tree: purge, compaction and CDC
+    * work on the flat `codes` table. */
+  def ivfPqFamily(dims: Int, m: Int, idCol: String = "vec_id",
+      embCol: String = "embedding"): graft.sink.IndexFamily =
+    graft.sink.IndexFamily("ivfpq", key = "id", idCol = idCol,
+      bucketCol = None, flats = Seq("codes"), cdcTable = "codes",
+      appendFacts = (path, vecs, g) =>
+        appendIvfPqCodes(path, vecs, dims, m, idCol, embCol, g))
 
-  /** CDC over a persisted [[IvfPqIndex]]: which vector ids changed
-    * between two pinned snapshots — [[graft.sink.IndexLayout
-    * .changedKeysBetween]] on the flat `codes` stream (the
-    * [[graft.operators.Retrieval.tfIndexChangesBetween]] semantics:
-    * re-embeds and resurrections report `upsert`, takedowns
-    * `delete`, window churn collapses to net state, and a purge or
-    * compaction between the pins contributes nothing as long as both
-    * pins stay retained). A RETRAIN between the pins re-encodes the
-    * whole corpus at a fresh generation, so CDC reports every id as
-    * `upsert` — deliberately: the stored codes really did all change,
-    * and a downstream mirror of the index must re-pull them. */
-  def ivfPqChangesBetween(spark: org.apache.spark.sql.SparkSession,
-      path: String, a: graft.sink.IndexManifest,
-      b: graft.sink.IndexManifest): DataFrame =
-    graft.sink.IndexLayout.changedKeysBetween(spark, path, "id",
-      "codes", a, b)
-
-  /** UPSERT re-embedded vectors into a persisted [[IvfPqIndex]] — the
-    * re-crawl event of the ANN family (a document whose text changed
-    * gets a NEW embedding under the same id): tombstone the incoming
-    * ids at `below_gen = g`, encode the fresh vectors against the
-    * FROZEN cells/codebook, append their codes at `gen = g` — one
-    * call, O(increment), the [[Retrieval.upsertTfIndex]] semantics.
-    * The distribution-drift caveat applies doubly here (the new
-    * embeddings quantize under yesterday's geometry) — run
-    * [[ivfPqDriftStats]] on the upsert batch and retrain past the
-    * calibrated threshold. */
-  def upsertIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, vecs: DataFrame, dims: Int, m: Int,
-      idCol: String = "vec_id", embCol: String = "embedding"): Unit = {
-    // generation reserved BEFORE the tombstone/code writes — a replay
-    // of a crashed upsert self-heals ([[graft.sink.IndexLayout
-    // .reserveGen]]); PUBLISHED after both writes — readers see the
-    // re-embed whole or not at all ([[graft.sink.IndexLayout
-    // .publishGen]])
-    val g = graft.sink.IndexLayout.reserveGen(spark, path)
-    graft.sink.IndexLayout.appendTombstones(
-      vecs.select(col(idCol)), path, "id", g)
-    appendIvfPqCodes(spark, path, vecs, dims, m, idCol, embCol, g)
-    graft.sink.IndexLayout.publishGen(spark, path, g)
-  }
-
-  /** Parquet-APPEND a new-vector increment's codes to a PERSISTED
-    * [[IvfPqIndex]] — [[IvfPqIndex.append]]'s FAISS-`add()` semantics
-    * without rewriting the corpus-sized code stream: cells and
-    * codebook are read back frozen, ONLY the increment is assigned
-    * and encoded, and only its code rows are appended. This is the
-    * nightly-ingest shape at 100 TB (delta work, delta I/O); the
-    * in-memory `append` + whole-index `write` rewrites every stored
-    * code per ingest. N appends leave N files —
-    * [[compactIvfPqIndex]] collapses them on a schedule. */
-  def appendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, newVecs: DataFrame, dims: Int, m: Int,
-      idCol: String = "vec_id", embCol: String = "embedding"): Unit = {
-    val g = graft.sink.IndexLayout.reserveGen(spark, path)
-    appendIvfPqCodes(spark, path, newVecs, dims, m, idCol, embCol, g)
-    graft.sink.IndexLayout.publishGen(spark, path, g)
-  }
-
-  /** The codes-append half of append/upsert (package-visible so the
-    * crash-window rows/specs can simulate a mutation that died between
-    * its code write and its publish). */
-  private[graft] def appendIvfPqCodes(spark: org.apache.spark.sql.SparkSession,
-      path: String, newVecs: DataFrame, dims: Int, m: Int,
-      idCol: String, embCol: String, gen: Long): Unit = {
+  private def appendIvfPqCodes(path: String, newVecs: DataFrame,
+      dims: Int, m: Int, idCol: String, embCol: String,
+      gen: Long): Unit = {
+    val spark = newVecs.sparkSession
     val man = graft.sink.IndexManifest.read(spark, path)
     def sub(l: String) = graft.sink.IndexLayout.dir(path, man, l)
     val cells = spark.read.parquet(sub("cells"))
@@ -1548,32 +1494,6 @@ object Similarity {
         .join(newCells, Seq("id")),
       path, "codes", gen)
   }
-
-  /** Compact a persisted [[IvfPqIndex]]'s accumulated code-append
-    * files ([[graft.sink.Compact.compact]] on the flat codes table —
-    * the [[graft.operators.Retrieval.compactTfIndex]] discipline on
-    * the ANN family; cells/codebook are model-sized and never
-    * accrete). Row values untouched: searches are bit-identical
-    * before and after. Returns (filesBefore, filesAfter). */
-  def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val r = graft.sink.IndexLayout.compactVersioned(spark, path,
-      "codes", None, targetBytes)
-    graft.sink.IndexLayout.compactMetadata(spark, path)
-    r
-  }
-
-  /** Physically drop tombstone-killed code generations: the filtered
-    * code stream is written as a NEW version and committed together
-    * with a fresh empty tombstones pointer in one atomic manifest
-    * write ([[graft.sink.IndexLayout.purgeFlatTombstones]] — readers
-    * see exactly the pre- or post-purge snapshot); searches are
-    * bit-identical before and after. No-op without tombstones. */
-  def purgeIvfPqTombstones(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit =
-    graft.sink.IndexLayout.purgeFlatTombstones(spark, path, "id",
-      Seq("codes"))
 
   /** Per-batch PQ residual distortion under a FROZEN codebook — the
     * quantity a retrain decision needs WITHOUT brute-force truth: for

@@ -784,7 +784,7 @@ object Round13 {
         graft.operators.Retrieval.writeTfIndex(
           docs.where(col("doc_id") % 3 =!= 2),
           outDir.getAbsolutePath, wordBuckets = 16)
-        graft.operators.Retrieval.appendTfIndex(
+        graft.operators.Retrieval.tfFamily().append(
           outDir.getAbsolutePath, docs.where(col("doc_id") % 3 === 2))
         graft.operators.Retrieval.bm25TopKFromTfIndex(
           s, outDir.getAbsolutePath, Round13.incrementalQueries, k = 10)

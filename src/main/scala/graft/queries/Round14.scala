@@ -118,7 +118,7 @@ object Round14 {
           docs.where(col("doc_id") % 4 =!= 3),
           outDir.getAbsolutePath, n = 3, shingleBuckets = 16)
         val inc = docs.where(col("doc_id") % 4 === 3)
-        graft.operators.Dedup.appendShingleIndex(
+        graft.operators.Dedup.shingleFamily().append(
           outDir.getAbsolutePath, inc)
         graft.operators.Dedup.jaccardPairsAgainstIndex(
             s, outDir.getAbsolutePath, threshold = 0.5,
@@ -157,9 +157,9 @@ object Round14 {
           docs.where(col("doc_id") % 4 =!= 3),
           outDir.getAbsolutePath, n = 3, shingleBuckets = 16)
         val inc = docs.where(col("doc_id") % 4 === 3)
-        graft.operators.Dedup.appendShingleIndex(
+        graft.operators.Dedup.shingleFamily().append(
           outDir.getAbsolutePath, inc)
-        graft.operators.Dedup.deleteFromShingleIndex(
+        graft.operators.Dedup.shingleFamily().delete(
           outDir.getAbsolutePath,
           docs.where(col("doc_id") % 5 === 4).select(col("doc_id")))
         graft.operators.Dedup.jaccardPairsAgainstIndex(
@@ -207,7 +207,7 @@ object Round14 {
         val docs = t("documents")(s, dir)
         graft.operators.Retrieval.writeTfIndex(
           docs, outDir.getAbsolutePath, wordBuckets = 16)
-        graft.operators.Retrieval.deleteFromTfIndex(
+        graft.operators.Retrieval.tfFamily().delete(
           outDir.getAbsolutePath,
           docs.where(col("doc_id") % 3 === 2).select(col("doc_id")))
         graft.operators.Retrieval.bm25TopKFromTfIndex(
@@ -229,9 +229,10 @@ object Round14 {
     // ---- small-file COMPACTION through the append path (the classic
     // 100 TB ingest failure mode: N daily appends leave one file per
     // bucket per day): build on doc_id%3=0, append %3=1, append %3=2
-    // — three files per touched bucket — then compactTfIndex rewrites
-    // every bucket leaf + the docs table through sink/Compact's
-    // staging-swap, and the query runs against the COMPACTED index.
+    // — three files per touched bucket — then the TF family's compact
+    // rewrites the postings tree + the docs table into new versions
+    // committed by pointer, and the query runs against the COMPACTED
+    // index.
     // Oracle = exhaustive full-corpus BM25: the green hash proves
     // bit-identity through compaction (RetrievalSpec asserts the file
     // counts actually shrank — a no-op "compaction" would hash green
@@ -243,12 +244,12 @@ object Round14 {
         graft.operators.Retrieval.writeTfIndex(
           docs.where(col("doc_id") % 3 === 0),
           outDir.getAbsolutePath, wordBuckets = 16)
-        graft.operators.Retrieval.appendTfIndex(
+        val tf = graft.operators.Retrieval.tfFamily()
+        tf.append(
           outDir.getAbsolutePath, docs.where(col("doc_id") % 3 === 1))
-        graft.operators.Retrieval.appendTfIndex(
+        tf.append(
           outDir.getAbsolutePath, docs.where(col("doc_id") % 3 === 2))
-        graft.operators.Retrieval.compactTfIndex(
-          s, outDir.getAbsolutePath)
+        tf.compact(s, outDir.getAbsolutePath)
         graft.operators.Retrieval.bm25TopKFromTfIndex(
           s, outDir.getAbsolutePath, Round13.incrementalQueries, k = 10)
       },
@@ -622,7 +623,7 @@ object Round14 {
           docs.where(col("doc_id") % 4 =!= 3),
           outDir.getAbsolutePath, k = 25, w = 10, fpBuckets = 16)
         val inc = docs.where(col("doc_id") % 4 === 3)
-        graft.operators.Dedup.appendFingerprintIndex(
+        graft.operators.Dedup.fingerprintFamily().append(
           outDir.getAbsolutePath, inc)
         graft.operators.Dedup.substringCandidatesAgainstIndex(
             s, outDir.getAbsolutePath, minShared = 2,
@@ -671,7 +672,7 @@ object Round14 {
         graft.operators.Similarity.ivfPqIndex(emb, nCells = 8,
             dims = 64, m = 8, nCentroids = 16)
           .write(outDir.getAbsolutePath)
-        graft.operators.Similarity.deleteFromIvfPqIndex(
+        graft.operators.Similarity.ivfPqFamily(dims = 64, m = 8).delete(
           outDir.getAbsolutePath,
           emb.where(col("vec_id") % 4 === 1).select(col("vec_id")))
         val index = graft.operators.Similarity.IvfPqIndex.read(

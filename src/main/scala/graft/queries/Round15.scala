@@ -53,7 +53,7 @@ object Round15 {
           docs, outDir.getAbsolutePath, wordBuckets = 16)
         val recrawl = docs.where(col("doc_id") % 5 === 0)
           .withColumn("text", concat(col("text"), lit(recrawlSuffix)))
-        graft.operators.Retrieval.upsertTfIndex(
+        graft.operators.Retrieval.tfFamily().upsert(
           outDir.getAbsolutePath, recrawl)
         graft.operators.Retrieval.bm25TopKFromTfIndex(
           s, outDir.getAbsolutePath, upsertQueries, k = 10)
@@ -88,7 +88,7 @@ object Round15 {
           docs, outDir.getAbsolutePath, n = 3, shingleBuckets = 16)
         val recrawl = docs.where(col("doc_id") % 5 === 0)
           .withColumn("text", concat(col("text"), lit(recrawlSuffix)))
-        graft.operators.Dedup.upsertShingleIndex(
+        graft.operators.Dedup.shingleFamily().upsert(
           outDir.getAbsolutePath, recrawl)
         graft.operators.Dedup.jaccardPairsAgainstIndex(
             s, outDir.getAbsolutePath, threshold = 0.5,
@@ -276,7 +276,7 @@ object Round15 {
     // the first operator where the streaming and index lifecycles
     // meet): the index is built on doc_id%3=0, then the %3=1 and %3=2
     // thirds arrive as foreachBatch micro-batches through
-    // [[EventStreams.ingestTfIndexBatch]] — the REAL sink body,
+    // [[graft.sink.IndexFamily.ingestBatch]] — the REAL sink body,
     // including its exactly-once guard — and batch 0 is REDELIVERED
     // (an at-least-once transport's failure replay, the q272
     // discipline). The guard skips it via the committed-epoch marker
@@ -295,11 +295,11 @@ object Round15 {
         val b0 = docs.where(col("doc_id") % 3 === 1)
         val b1 = docs.where(col("doc_id") % 3 === 2)
         val p = outDir.getAbsolutePath
-        graft.streaming.EventStreams.ingestTfIndexBatch(b0, 0L, p)
-        graft.streaming.EventStreams.ingestTfIndexBatch(b1, 1L, p)
+        val tf = graft.operators.Retrieval.tfFamily()
+        tf.ingestBatch(p, b0, 0L)
+        tf.ingestBatch(p, b1, 1L)
         // the transport replays batch 0 — the guard must skip it
-        val replayed =
-          graft.streaming.EventStreams.ingestTfIndexBatch(b0, 0L, p)
+        val replayed = tf.ingestBatch(p, b0, 0L)
         require(!replayed, "replay guard failed to skip epoch 0")
         graft.operators.Retrieval.bm25TopKFromTfIndex(
           s, p, Round13.incrementalQueries, k = 10)
@@ -530,9 +530,8 @@ object Round15 {
           when(col("vec_id") % 5 === 0,
             transform(col("embedding"), x => -x))
             .otherwise(col("embedding")))
-        graft.operators.Similarity.upsertIvfPqIndex(
-          s, outDir.getAbsolutePath,
-          mutated.where(col("vec_id") % 5 === 0), dims = 64, m = 8)
+        graft.operators.Similarity.ivfPqFamily(dims = 64, m = 8).upsert(
+          outDir.getAbsolutePath, mutated.where(col("vec_id") % 5 === 0))
         graft.operators.Similarity.ivfPqSearch(
             mutated.filter(col("vec_id") < 12),
             graft.operators.Similarity.IvfPqIndex.read(

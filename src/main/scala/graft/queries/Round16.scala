@@ -50,8 +50,8 @@ object Round16 {
           shingleBuckets = 16)
         val b0 = mutated.where(col("doc_id") % 3 === 1 ||
           (col("doc_id") % 3 === 0 && col("doc_id") % 5 === 0))
-        val ok0 = graft.streaming.EventStreams
-          .ingestShingleIndexBatch(b0, 0L, p, upsert = true)
+        val sh = graft.operators.Dedup.shingleFamily()
+        val ok0 = sh.ingestBatch(p, b0, 0L, upsert = true)
         require(ok0, "epoch 0 must ingest")
         // epoch 1 first delivery crashes after its facts append
         val b1 = mutated.where(col("doc_id") % 3 === 2)
@@ -59,14 +59,11 @@ object Round16 {
         graft.sink.IndexManifest.commit(s, p,
           m0.copy(pendingEpoch = 1L))
         val g = graft.sink.IndexLayout.reserveGen(s, p)
-        graft.operators.Dedup.appendShingleFacts(p, b1, "doc_id",
-          "text", g)
+        sh.appendFacts(p, b1, g)
         // the at-least-once replay (append mode) must self-heal
-        val healed = graft.streaming.EventStreams
-          .ingestShingleIndexBatch(b1, 1L, p, upsert = false)
+        val healed = sh.ingestBatch(p, b1, 1L, upsert = false)
         require(healed, "crashed epoch 1 must replay")
-        val replayed = graft.streaming.EventStreams
-          .ingestShingleIndexBatch(b0, 0L, p, upsert = true)
+        val replayed = sh.ingestBatch(p, b0, 0L, upsert = true)
         require(!replayed, "replay guard failed to skip epoch 0")
         graft.operators.Dedup.jaccardPairsAgainstIndex(
             s, p, threshold = 0.5,
@@ -437,9 +434,9 @@ object Round16 {
           nCentroids = 16).write(p)
         Similarity.writeIvfPqDriftBaseline(s, p, even, dims = 64,
           m = 8)
-        Similarity.appendToIvfPqIndex(s, p, odd, dims = 64, m = 8)
-        Similarity.deleteFromIvfPqIndex(p,
-          odd.where(col("vec_id") === 3).select(col("vec_id")))
+        val ivf = Similarity.ivfPqFamily(dims = 64, m = 8)
+        ivf.append(p, odd)
+        ivf.delete(p, odd.where(col("vec_id") === 3).select(col("vec_id")))
         // the trigger: the appended half's distortion under yesterday's
         // codebook (q347 measured 1.084M ppm on this exact split —
         // past the calibrated 1.04M alert threshold)
@@ -469,7 +466,7 @@ object Round16 {
     // changed); epoch 1's first delivery is simulated to die AFTER
     // its facts landed but BEFORE its commit (pending marker +
     // reserved generation + raw fact append — exactly
-    // ingestTfIndexBatch's prefix), then REPLAYED in plain APPEND
+    // the TF family's ingestBatch prefix), then REPLAYED in plain APPEND
     // mode: the pending-epoch marker must route the replay through
     // the upsert path so the crashed attempt's facts die under the
     // replay's tombstones. A missed self-heal double-counts docs
@@ -492,25 +489,22 @@ object Round16 {
         // epoch 0: new docs + re-crawls of seed docs, one batch
         val b0 = mutated.where(col("doc_id") % 3 === 1 ||
           (col("doc_id") % 3 === 0 && col("doc_id") % 5 === 0))
-        val ok0 = graft.streaming.EventStreams.ingestTfIndexBatch(
-          b0, 0L, p, upsert = true)
+        val tf = graft.operators.Retrieval.tfFamily()
+        val ok0 = tf.ingestBatch(p, b0, 0L, upsert = true)
         require(ok0, "epoch 0 must ingest")
         // epoch 1 first delivery CRASHES after its facts append —
-        // simulate by running ingestTfIndexBatch's exact prefix
+        // simulate by running ingestBatch's exact prefix
         val b1 = mutated.where(col("doc_id") % 3 === 2)
         val m0 = graft.sink.IndexManifest.readOrInit(s, p)
         graft.sink.IndexManifest.commit(s, p,
           m0.copy(pendingEpoch = 1L))
         val g = graft.sink.IndexLayout.reserveGen(s, p)
-        graft.operators.Retrieval.appendTfFacts(p, b1, "doc_id",
-          "text", None, g)
+        tf.appendFacts(p, b1, g)
         // the at-least-once replay (append mode!) must self-heal
-        val healed = graft.streaming.EventStreams.ingestTfIndexBatch(
-          b1, 1L, p, upsert = false)
+        val healed = tf.ingestBatch(p, b1, 1L, upsert = false)
         require(healed, "crashed epoch 1 must replay")
         // and a replay of the committed epoch 0 must be skipped
-        val replayed = graft.streaming.EventStreams.ingestTfIndexBatch(
-          b0, 0L, p, upsert = true)
+        val replayed = tf.ingestBatch(p, b0, 0L, upsert = true)
         require(!replayed, "replay guard failed to skip epoch 0")
         graft.operators.Retrieval.bm25TopKFromTfIndex(
           s, p, Round15.upsertQueries, k = 10)

@@ -41,10 +41,11 @@ object Round17 {
         val recrawl = docs.where(col("doc_id") % 5 === 0)
           .withColumn("text",
             concat(col("text"), lit(" recrawl revision fresh tokens")))
-        graft.operators.Retrieval.upsertTfIndex(p, recrawl)
-        graft.operators.Retrieval.deleteFromTfIndex(p,
+        val tf = graft.operators.Retrieval.tfFamily()
+        tf.upsert(p, recrawl)
+        tf.delete(p,
           docs.where(col("doc_id") % 7 === 3).select(col("doc_id")))
-        graft.operators.Retrieval.purgeTfIndexTombstones(s, p)
+        tf.purgeTombstones(s, p)
         graft.operators.Retrieval.bm25TopKFromTfIndex(
           s, p, Round15.upsertQueries, k = 10,
           pinned = Some(graft.sink.IndexManifest.readAt(s, p,
@@ -91,8 +92,8 @@ object Round17 {
             transform(col("embedding"), x => -x))
             .otherwise(col("embedding")))
         val b0 = mutated.where(col("vec_id") % 10 === 0)
-        val ok0 = graft.streaming.EventStreams.ingestIvfPqBatch(
-          b0, 0L, p, dims = 64, m = 8, upsert = true)
+        val ivf = graft.operators.Similarity.ivfPqFamily(dims = 64, m = 8)
+        val ok0 = ivf.ingestBatch(p, b0, 0L, upsert = true)
         require(ok0, "epoch 0 must ingest")
         // epoch 1 first delivery crashes after its code append (no
         // tombstones, no publish — the double-serve window)
@@ -101,13 +102,10 @@ object Round17 {
         graft.sink.IndexManifest.commit(s, p,
           m0.copy(pendingEpoch = 1L))
         val g = graft.sink.IndexLayout.reserveGen(s, p)
-        graft.operators.Similarity.appendIvfPqCodes(s, p, b1,
-          dims = 64, m = 8, "vec_id", "embedding", g)
-        val healed = graft.streaming.EventStreams.ingestIvfPqBatch(
-          b1, 1L, p, dims = 64, m = 8, upsert = false)
+        ivf.appendFacts(p, b1, g)
+        val healed = ivf.ingestBatch(p, b1, 1L, upsert = false)
         require(healed, "crashed epoch 1 must replay")
-        val replayed = graft.streaming.EventStreams.ingestIvfPqBatch(
-          b0, 0L, p, dims = 64, m = 8, upsert = true)
+        val replayed = ivf.ingestBatch(p, b0, 0L, upsert = true)
         require(!replayed, "replay guard failed to skip epoch 0")
         graft.operators.Similarity.ivfPqSearch(
             mutated.filter(col("vec_id") < 12),
@@ -135,21 +133,18 @@ object Round17 {
           docs.where(col("doc_id") % 4 =!= 3), p,
           k = 25, w = 10, fpBuckets = 16)
         val b0 = docs.where(col("doc_id") % 8 === 3)
-        val ok0 = graft.streaming.EventStreams
-          .ingestFingerprintIndexBatch(b0, 0L, p)
+        val fp = graft.operators.Dedup.fingerprintFamily()
+        val ok0 = fp.ingestBatch(p, b0, 0L)
         require(ok0, "epoch 0 must ingest")
         val b1 = docs.where(col("doc_id") % 8 === 7)
         val m0 = graft.sink.IndexManifest.readOrInit(s, p)
         graft.sink.IndexManifest.commit(s, p,
           m0.copy(pendingEpoch = 1L))
         val g = graft.sink.IndexLayout.reserveGen(s, p)
-        graft.operators.Dedup.appendFingerprintFacts(p, b1, "doc_id",
-          "text", g)
-        val healed = graft.streaming.EventStreams
-          .ingestFingerprintIndexBatch(b1, 1L, p)
+        fp.appendFacts(p, b1, g)
+        val healed = fp.ingestBatch(p, b1, 1L)
         require(healed, "crashed epoch 1 must replay")
-        val replayed = graft.streaming.EventStreams
-          .ingestFingerprintIndexBatch(b0, 0L, p)
+        val replayed = fp.ingestBatch(p, b0, 0L)
         require(!replayed, "replay guard failed to skip epoch 0")
         graft.operators.Dedup.substringCandidatesAgainstIndex(
             s, p, minShared = 2,

@@ -47,10 +47,10 @@ object Round18 {
           () => graft.operators.Dedup.writeFingerprintIndex(seedDocs,
             pfp, k = 25, w = 10, fpBuckets = 16)))(_.apply())
         val families = Seq(
-          graft.streaming.FamilySink.tf(ptf),
-          graft.streaming.FamilySink.fingerprint(pfp))
+          graft.operators.Retrieval.tfFamily() -> ptf,
+          graft.operators.Dedup.fingerprintFamily() -> pfp)
         def epochs() = Seq(ptf, pfp).map(
-          graft.streaming.EventStreams.committedTfIndexEpoch(s, _))
+          graft.sink.IndexFamily.committedEpoch(s, _))
         val b0 = docs.where(col("doc_id") % 8 === 3)
         val b1 = docs.where(col("doc_id") % 8 === 7)
         graft.streaming.EventStreams.ingestFamiliesBatch(b0, 0L,
@@ -104,14 +104,15 @@ object Round18 {
         graft.operators.Retrieval.writeTfIndex(docs, p,
           wordBuckets = 16)
         val a = graft.sink.IndexManifest.pin(s, p)
-        graft.operators.Retrieval.upsertTfIndex(p,
+        val tf = graft.operators.Retrieval.tfFamily()
+        tf.upsert(p,
           docs.where(col("doc_id") % 5 === 0)
             .withColumn("text",
               concat(col("text"), lit(" recrawl revision"))))
-        graft.operators.Retrieval.deleteFromTfIndex(p,
+        tf.delete(p,
           docs.where(col("doc_id") % 7 === 3).select(col("doc_id")))
         val b = graft.sink.IndexManifest.pin(s, p)
-        graft.operators.Retrieval.tfIndexChangesBetween(s, p, a, b)
+        tf.changesBetween(s, p, a, b)
           .orderBy(col("doc_id"))
       },
       Some("""SELECT doc_id,

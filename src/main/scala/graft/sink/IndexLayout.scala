@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * families (TF — [[graft.operators.Retrieval.writeTfIndex]], shingle
   * and fingerprint — [[graft.operators.Dedup.writeShingleIndex]] /
   * `writeFingerprintIndex`, IVF-PQ codes —
-  * [[graft.operators.Similarity.IvfPqIndex]]).
+  * [[graft.operators.Similarity.IvfPqIndex]]); their mutation and
+  * maintenance operations are written once in [[IndexFamily]].
   *
   * The ingest-only appends those layouts started with cannot express a
   * RE-CRAWL: a doc_id whose text changed needs its old facts replaced,
@@ -59,9 +60,9 @@ import org.apache.spark.sql.functions._
   *    skipped from row-group stats, not scanned.
   *  - ''Versioned rewrites'': a purge/compaction builds
   *    `postings-v{n+1}` beside the live tree and commits by one pointer
-  *    write ([[purgeTombstones]], [[compactVersioned]]); concurrent
-  *    readers resolve the pointer first and always see exactly the pre-
-  *    or post-rewrite snapshot — never a missing or half-swapped tree
+  *    write ([[IndexFamily.purgeTombstones]], [[compactVersioned]]);
+  *    concurrent readers resolve the pointer first and always see
+  *    exactly the pre- or post-rewrite snapshot — never a missing or half-swapped tree
   *    (the in-place two-rename swap of [[Compact]] remains for plain
   *    non-index directories). GC keeps a HISTORY grace window: each
   *    rewrite's [[gcWithGrace]] call retains every tree the newest
@@ -476,7 +477,7 @@ object IndexLayout {
     * ordinary unreferenced version that the next [[gcWithGrace]]
     * sweeps (and the loser deletes its own eagerly —
     * [[commitVersions]]). */
-  private def buildVersion(spark: SparkSession, path: String,
+  private[sink] def buildVersion(spark: SparkSession, path: String,
       m: IndexManifest, logical: String,
       build: String => Unit): String = {
     val token = java.util.UUID.randomUUID.toString
@@ -494,7 +495,7 @@ object IndexLayout {
     * garbage — delete them eagerly (they'd also fall to the next
     * [[gcWithGrace]]) and rethrow with the recovery contract spelled
     * out. */
-  private def abortStaged(spark: SparkSession, path: String,
+  private[sink] def abortStaged(spark: SparkSession, path: String,
       staged: Seq[String],
       e: ManifestCommitRaceException): Nothing = {
     val root = new Path(path)
@@ -564,79 +565,6 @@ object IndexLayout {
     }
   }
 
-  /** Physically drop the tombstone-killed generations: rewrite the
-    * bucketed postings tree (ONE job, `repartition(partitionCol)`) and
-    * each existing flat side table into NEW physical versions, keeping
-    * exactly the facts the read-time filter keeps, then commit every
-    * pointer — postings, flats, and a FRESH (empty) tombstones name —
-    * in one atomic manifest write. Readers never observe a missing
-    * tree, a half-rewritten tree, or a purged tree with its old
-    * tombstones: the snapshot either has all of the old or all of the
-    * new. Queries are bit-identical before and after; the purge buys
-    * back the tombstone join's read tax. The generation counter is
-    * untouched — purging is physical, the counter keeps counting.
-    * No-op without tombstones.
-    *
-    * `hook` is a test seam: called with `"built"` after the new
-    * versions exist (pointer not yet moved), `"committed"` after the
-    * pointer moved (old trees still on disk), `"gc"` after old
-    * versions are deleted — the spec interleaves reads and simulated
-    * crashes at each. */
-  def purgeTombstones(spark: SparkSession, path: String,
-      keyName: String, partitionCol: String,
-      flatLogicals: Seq[String],
-      hook: String => Unit = _ => ()): Unit = {
-    val m0 = IndexManifest.readOrInit(spark, path)
-    val mOpt = Some(m0)
-    tombstoneFloor(spark, path, keyName, mOpt).foreach { floor0 =>
-      val floor = floor0.localCheckpoint()
-      // keep exactly the PUBLISHED facts a reader keeps — a crashed
-      // unpublished mutation's partial rows are dropped here too (its
-      // replay reserves a fresh generation and rewrites them whole)
-      val keep = (df: DataFrame) =>
-        applyTombstones(visibleFacts(df, mOpt), Some(floor), keyName)
-      val staged = scala.collection.mutable.ListBuffer.empty[String]
-      var m = m0
-      val newPostings = buildVersion(spark, path, m0, "postings", { st =>
-        val remaining = keep(
-          spark.read.parquet(dir(path, mOpt, "postings")))
-        remaining.repartition(col(partitionCol))
-          .write.mode("overwrite").partitionBy(partitionCol)
-          .parquet(st)
-        Compact.ensureReadable(spark, st,
-          org.apache.spark.sql.types.StructType(
-            remaining.schema.filterNot(_.name == partitionCol)),
-          Some(s"$partitionCol=0"))
-      })
-      staged += newPostings
-      m = m.withDir("postings", newPostings)
-      flatLogicals
-        .filter(l => dirExists(spark, dir(path, mOpt, l)))
-        .foreach { l =>
-          val nn = buildVersion(spark, path, m0, l, { st =>
-            val remaining = keep(spark.read.parquet(dir(path, mOpt, l)))
-            remaining.write.mode("overwrite").parquet(st)
-            Compact.ensureReadable(spark, st, remaining.schema, None)
-          })
-          staged += nn
-          m = m.withDir(l, nn)
-        }
-      // fresh tombstones = a not-yet-existing name: absent dir ≡ no
-      // kill floor to every reader, and the old tombstones stay paired
-      // with the old trees until the commit flips the whole snapshot
-      m = m.withDir("tombstones", s"tombstones-v${m0.seq + 1}")
-      hook("built")
-      try IndexManifest.commit(spark, path, m)
-      catch { case e: ManifestCommitRaceException =>
-        abortStaged(spark, path, staged.toSeq, e) }
-      hook("committed")
-      // grace GC: anything the retained manifest history references
-      // survives, so a stale reader finishes cleanly
-      gcWithGrace(spark, path)
-      hook("gc")
-    }
-  }
-
   /** Build new versions of several logical subtrees (each `build` is
     * handed its staging path) and commit every pointer — plus any
     * extra manifest change from `mutate` — in ONE atomic write, then
@@ -661,44 +589,6 @@ object IndexLayout {
         abortStaged(spark, path, staged.toSeq, e) }
     gcWithGrace(spark, path)
     committed
-  }
-
-  /** [[purgeTombstones]] for a layout whose fact tables are all FLAT
-    * (no bucketed postings tree — the IVF-PQ code stream). Same
-    * snapshot discipline: every rewritten table and the fresh empty
-    * tombstones name commit in one atomic manifest write. */
-  def purgeFlatTombstones(spark: SparkSession, path: String,
-      keyName: String, flatLogicals: Seq[String],
-      hook: String => Unit = _ => ()): Unit = {
-    val m0 = IndexManifest.readOrInit(spark, path)
-    val mOpt = Some(m0)
-    tombstoneFloor(spark, path, keyName, mOpt).foreach { floor0 =>
-      val floor = floor0.localCheckpoint()
-      val staged = scala.collection.mutable.ListBuffer.empty[String]
-      var m = m0
-      flatLogicals
-        .filter(l => dirExists(spark, dir(path, mOpt, l)))
-        .foreach { l =>
-          val nn = buildVersion(spark, path, m0, l, { st =>
-            val remaining = applyTombstones(
-              visibleFacts(spark.read.parquet(dir(path, mOpt, l)),
-                mOpt),
-              Some(floor), keyName)
-            remaining.write.mode("overwrite").parquet(st)
-            Compact.ensureReadable(spark, st, remaining.schema, None)
-          })
-          staged += nn
-          m = m.withDir(l, nn)
-        }
-      m = m.withDir("tombstones", s"tombstones-v${m0.seq + 1}")
-      hook("built")
-      try IndexManifest.commit(spark, path, m)
-      catch { case e: ManifestCommitRaceException =>
-        abortStaged(spark, path, staged.toSeq, e) }
-      hook("committed")
-      gcWithGrace(spark, path)
-      hook("gc")
-    }
   }
 
   /** Compact a logical subtree's accumulated append files into a NEW

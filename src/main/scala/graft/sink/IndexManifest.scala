@@ -93,8 +93,8 @@ final class ManifestCommitRaceException(msg: String)
   * `epoch` is the highest COMMITTED streaming ingest epoch;
   * `pendingEpoch` marks an epoch whose fact write may be in flight,
   * letting a replay detect the half-committed case and route through
-  * the self-healing upsert path ([[graft.streaming.EventStreams
-  * .ingestTfIndexBatch]]). `dirs` maps logical subtree names
+  * the self-healing upsert path ([[IndexFamily.ingestBatch]]).
+  * `dirs` maps logical subtree names
   * (`postings`, `docs`, `codes`, `tombstones`, …) to their current
   * physical directory name; unlisted names resolve to themselves,
   * which is also how pre-manifest (round-15 and older) layouts stay

@@ -181,14 +181,8 @@ final case class JdbcTarget(
       // follows creates the table (same contract as the reference's
       // truncate-then-insert on a fresh target)
       val meta = conn.getMetaData
-      val esc = meta.getSearchStringEscape
-      val folded =
-        if (meta.storesUpperCaseIdentifiers) spec.name.toUpperCase
-        else if (meta.storesLowerCaseIdentifiers) spec.name.toLowerCase
-        else spec.name
-      val pattern = folded.replace(esc, esc + esc)
-        .replace("_", esc + "_").replace("%", esc + "%")
-      val tables = meta.getTables(null, conn.getSchema, pattern, null)
+      val tables = meta.getTables(null, conn.getSchema,
+        tableNamePattern(meta, spec.name), null)
       val exists = try tables.next() finally tables.close()
       if (!exists) return
       // Spark's JDBC writer quotes column identifiers (case-exact) but
@@ -213,6 +207,22 @@ final case class JdbcTarget(
         stmt.executeBatch()
       }
     } finally conn.close()
+  }
+
+  /** `name` as a JDBC metadata table-name PATTERN: case-folded the
+    * way the database stores unquoted identifiers (Spark's JDBC writer
+    * passes the table name through unquoted), with the escape
+    * character, `_` and `%` escaped so `fact_customer` doesn't also
+    * match `factXcustomer`. */
+  private def tableNamePattern(meta: java.sql.DatabaseMetaData,
+      name: String): String = {
+    val esc = meta.getSearchStringEscape
+    val folded =
+      if (meta.storesUpperCaseIdentifiers) name.toUpperCase
+      else if (meta.storesLowerCaseIdentifiers) name.toLowerCase
+      else name
+    folded.replace(esc, esc + esc)
+      .replace("_", esc + "_").replace("%", esc + "%")
   }
 
   override def append(df: DataFrame, spec: TableSpec): Unit =
@@ -300,21 +310,10 @@ final case class JdbcTarget(
     val conn = java.sql.DriverManager.getConnection(url, properties)
     try {
       val meta = conn.getMetaData
-      // Spark's JDBC writer creates case-exact quoted column names; the
-      // unquoted table name is stored case-folded by the database. The
-      // name is also a JDBC *pattern* here: escape `_`/`%` so
-      // fact_customer doesn't also match factXcustomer, and pin the
-      // schema to the connection's current one so same-named tables in
-      // other schemas can't pollute the diff.
-      val esc = meta.getSearchStringEscape
-      val folded =
-        if (meta.storesUpperCaseIdentifiers) spec.name.toUpperCase
-        else if (meta.storesLowerCaseIdentifiers) spec.name.toLowerCase
-        else spec.name
-      val pattern = folded
-        .replace(esc, esc + esc)
-        .replace("_", esc + "_")
-        .replace("%", esc + "%")
+      // Spark's JDBC writer creates case-exact quoted column names.
+      // Pin the schema to the connection's current one so same-named
+      // tables in other schemas can't pollute the diff.
+      val pattern = tableNamePattern(meta, spec.name)
       val rs = meta.getColumns(null, conn.getSchema, pattern, null)
       // name → live comment (REMARKS; null/absent ⇒ None)
       val live = Iterator.continually(rs)

@@ -25,54 +25,6 @@ case class Session(
 case class OpenSession(
     start: Timestamp, end: Timestamp, n: Long, total: Double)
 
-/** One index family's slot in a composed multi-family sink
-  * ([[EventStreams.startDocFamiliesSink]]): the family's target path
-  * plus its exactly-once ingest entry point. Build instances with the
-  * companion's constructors — each closes over the family's
-  * `ingest*Batch` protocol, so a [[FamilySink]] carries the SAME
-  * epoch guard and crash self-heal the family's standalone sink has.
-  */
-final case class FamilySink(name: String, path: String,
-    ingest: (DataFrame, Long) => Boolean)
-
-object FamilySink {
-
-  /** TF (BM25 retrieval) index slot —
-    * [[EventStreams.ingestTfIndexBatch]]. */
-  def tf(path: String, idCol: String = "doc_id",
-      textCol: String = "text", upsert: Boolean = false): FamilySink =
-    FamilySink("tf", path, (b, e) =>
-      EventStreams.ingestTfIndexBatch(b, e, path, idCol, textCol,
-        upsert))
-
-  /** Shingle (near-dup) index slot —
-    * [[EventStreams.ingestShingleIndexBatch]]. */
-  def shingle(path: String, idCol: String = "doc_id",
-      textCol: String = "text", upsert: Boolean = false): FamilySink =
-    FamilySink("shingle", path, (b, e) =>
-      EventStreams.ingestShingleIndexBatch(b, e, path, idCol, textCol,
-        upsert))
-
-  /** Fingerprint (substring-dedup) index slot —
-    * [[EventStreams.ingestFingerprintIndexBatch]]. */
-  def fingerprint(path: String, idCol: String = "doc_id",
-      textCol: String = "text", upsert: Boolean = false): FamilySink =
-    FamilySink("fingerprint", path, (b, e) =>
-      EventStreams.ingestFingerprintIndexBatch(b, e, path, idCol,
-        textCol, upsert))
-
-  /** IVF-PQ (ANN) index slot — [[EventStreams.ingestIvfPqBatch]];
-    * give it the embedding column of the same fanned-out batch (a
-    * crawler row carrying both text and its embedding feeds all four
-    * families from one stream). */
-  def ivfPq(path: String, dims: Int, m: Int,
-      idCol: String = "vec_id", embCol: String = "embedding",
-      upsert: Boolean = false): FamilySink =
-    FamilySink("ivfpq", path, (b, e) =>
-      EventStreams.ingestIvfPqBatch(b, e, path, dims, m, idCol,
-        embCol, upsert))
-}
-
 /** Structured Streaming operators over the `events` schema — the
   * streaming twins of `graft.queries.EventOps` (q35–q37): identical
   * epoch-aligned `window()` buckets and 30-minute-gap session semantics,
@@ -430,158 +382,20 @@ object EventStreams {
       .start()
   }
 
-  /** The TF index's max committed streaming epoch (−1 when nothing has
-    * been ingested): a [[graft.sink.IndexManifest]] field — driver-side
-    * FS read, no Spark job (legacy `path/ingest_meta` parquet-log
-    * fallback for pre-manifest artifacts). */
-  def committedTfIndexEpoch(spark: SparkSession, path: String): Long =
-    graft.sink.IndexManifest.read(spark, path).map(_.epoch)
-      .getOrElse(graft.sink.IndexManifest.legacyEpoch(spark, path))
+  private val NoHook: String => Unit = _ => ()
 
-  /** Ingest ONE micro-batch into a [[graft.operators.Retrieval
-    * .writeTfIndex]] artifact, exactly-once per epoch WITH crash
-    * self-healing (three manifest commits, all driver-side FS ops —
-    * zero metadata Spark jobs):
-    *
-    *  1. a batch whose `epochId` is ≤ the committed epoch is SKIPPED
-    *     (foreachBatch re-delivers committed batches after a restart —
-    *     without the guard every replay double-counts its documents'
-    *     facts in df/tf/dl and silently shifts every BM25 score);
-    *  2. `pending_epoch = epochId` commits BEFORE the fact write, so a
-    *     replay can detect the half-committed case: if the incoming
-    *     epoch equals the recorded pending epoch, a previous attempt
-    *     may have died AFTER appending facts but BEFORE committing —
-    *     the replay routes through the UPSERT path, whose fresh-
-    *     generation tombstones kill the crashed attempt's partial
-    *     facts (generations are reserved before facts are written —
-    *     [[graft.sink.IndexLayout.reserveGen]] — so the replay's
-    *     generation is strictly higher). Append mode therefore
-    *     self-heals too, not just `upsert = true`;
-    *  3. `epoch = epochId` commits AFTER the append — the batch is
-    *     now exactly-once durable.
-    *
-    * @return true if the batch was ingested, false if skipped. */
-  def ingestTfIndexBatch(batch: DataFrame, epochId: Long, path: String,
-      idCol: String = "doc_id", textCol: String = "text",
-      upsert: Boolean = false): Boolean =
-    ingestIndexBatch(batch.sparkSession, path, epochId) { healAsUpsert =>
-      if (upsert || healAsUpsert)
-        graft.operators.Retrieval.upsertTfIndex(path, batch, idCol,
-          textCol)
-      else
-        graft.operators.Retrieval.appendTfIndex(path, batch, idCol,
-          textCol)
-    }
-
-  /** [[ingestTfIndexBatch]] for the SHINGLE (near-dup) index — the
-    * same exactly-once epoch guard and crash self-heal around
-    * [[graft.operators.Dedup.appendShingleIndex]] /
-    * `upsertShingleIndex`: the crawler's dedup index stays as fresh
-    * as its retrieval index. */
-  def ingestShingleIndexBatch(batch: DataFrame, epochId: Long,
-      path: String, idCol: String = "doc_id",
-      textCol: String = "text", upsert: Boolean = false): Boolean =
-    ingestIndexBatch(batch.sparkSession, path, epochId) { healAsUpsert =>
-      if (upsert || healAsUpsert)
-        graft.operators.Dedup.upsertShingleIndex(path, batch, idCol,
-          textCol)
-      else
-        graft.operators.Dedup.appendShingleIndex(path, batch, idCol,
-          textCol)
-    }
-
-  /** [[ingestTfIndexBatch]] for the FINGERPRINT (substring-dedup)
-    * index — the same exactly-once epoch guard and crash self-heal
-    * around [[graft.operators.Dedup.appendFingerprintIndex]] /
-    * `upsertFingerprintIndex`; the per-character winnow kernel runs
-    * over the micro-batch only. */
-  def ingestFingerprintIndexBatch(batch: DataFrame, epochId: Long,
-      path: String, idCol: String = "doc_id",
-      textCol: String = "text", upsert: Boolean = false): Boolean =
-    ingestIndexBatch(batch.sparkSession, path, epochId) { healAsUpsert =>
-      if (upsert || healAsUpsert)
-        graft.operators.Dedup.upsertFingerprintIndex(path, batch,
-          idCol, textCol)
-      else
-        graft.operators.Dedup.appendFingerprintIndex(path, batch,
-          idCol, textCol)
-    }
-
-  /** [[ingestTfIndexBatch]] for the IVF-PQ (ANN) index — the fourth
-    * and last persisted family gets the streaming discipline: each
-    * micro-batch of `(id, embedding)` rows is assigned and encoded
-    * against the FROZEN cells/codebook ([[graft.operators.Similarity
-    * .appendToIvfPqIndex]] / `upsertIvfPqIndex` — delta-sized work,
-    * the corpus code stream is never rewritten), exactly-once per
-    * epoch, crash replays routed through the upsert path whose
-    * fresh-generation tombstones kill a crashed attempt's partial
-    * codes. `upsert = true` is the RE-EMBED stream (a re-crawled
-    * document's new embedding under the same id — q349's semantics
-    * per micro-batch); run [[graft.operators.Similarity
-    * .ivfPqDriftStats]] on the batches and retrain past the
-    * calibrated threshold, as with batch appends. */
-  def ingestIvfPqBatch(batch: DataFrame, epochId: Long, path: String,
-      dims: Int, m: Int, idCol: String = "vec_id",
-      embCol: String = "embedding",
-      upsert: Boolean = false): Boolean = {
-    val spark = batch.sparkSession
-    ingestIndexBatch(spark, path, epochId) { healAsUpsert =>
-      if (upsert || healAsUpsert)
-        graft.operators.Similarity.upsertIvfPqIndex(spark, path,
-          batch, dims, m, idCol, embCol)
-      else
-        graft.operators.Similarity.appendToIvfPqIndex(spark, path,
-          batch, dims, m, idCol, embCol)
-    }
-  }
-
-  /** [[startTfIndexSink]] for the fingerprint index. */
-  def startFingerprintIndexSink(docs: DataFrame, path: String,
-      checkpoint: String, idCol: String = "doc_id",
-      textCol: String = "text",
-      upsert: Boolean = false): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        ingestFingerprintIndexBatch(batch, epochId, path, idCol,
-          textCol, upsert)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** [[startTfIndexSink]] for the IVF-PQ index: stream embedding
-    * micro-batches INTO the persisted ANN artifact — the crawler's
-    * similarity index stays as fresh as its retrieval and dedup
-    * indexes (all four families now share the one epoch protocol). */
-  def startIvfPqIndexSink(vecs: DataFrame, path: String,
-      checkpoint: String, dims: Int, m: Int,
-      idCol: String = "vec_id", embCol: String = "embedding",
-      upsert: Boolean = false): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        ingestIvfPqBatch(batch, epochId, path, dims, m, idCol,
-          embCol, upsert)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** Fan ONE micro-batch into SEVERAL index families — the composed
-    * half of the crawler shape: a real crawler does not run one
+  /** Fan ONE micro-batch into one or more persisted indexes — each
+    * `(family, path)` target runs its family's exactly-once
+    * [[graft.sink.IndexFamily.ingestBatch]] against its own manifest.
+    * This is the crawler shape: a real crawler does not run one
     * stream per index, it lands each micro-batch of documents in its
     * retrieval (TF), near-dup (shingle), substring (fingerprint) and
     * ANN (IVF-PQ) indexes together. Composition contract:
     *
-    *  - each family keeps its OWN exactly-once epoch protocol
-    *    ([[ingestIndexBatch]]) against its own manifest — there is
-    *    deliberately no cross-family transaction (the families live
-    *    at different paths, possibly different filesystems; a
-    *    distributed transaction here would buy nothing a replay does
-    *    not already give);
+    *  - there is deliberately no cross-family transaction (the
+    *    families live at different paths, possibly different
+    *    filesystems; a distributed transaction here would buy nothing
+    *    a replay does not already give);
     *  - a crash BETWEEN family ingests of one micro-batch therefore
     *    leaves the families at DIFFERENT committed epochs — the
     *    window the per-family protocols cannot see individually. The
@@ -593,156 +407,68 @@ object EventStreams {
     *    twin. A crash INSIDE one family's ingest is the case the
     *    per-family pending-epoch self-heal already covers; composed,
     *    both kinds of crash land on the same replay path;
-    *  - the micro-batch is materialized ONCE (`localCheckpoint`)
-    *    before the fan-out: each family runs several Spark actions
-    *    over it, and without pinning, N families × M actions would
-    *    re-derive the micro-batch source N×M times.
+    *  - with more than one target the micro-batch is materialized
+    *    ONCE (`localCheckpoint`) before the fan-out: each family runs
+    *    several Spark actions over it, and without pinning, N
+    *    families × M actions would re-derive the micro-batch source
+    *    N×M times. A single target reads the batch as it is — a pin
+    *    would add a job and save none.
     *
-    * `hook(name)` runs after each family's ingest — the crash-
-    * injection seam (the spec kills between two families of one
-    * micro-batch), same pattern as [[graft.sink.IndexLayout
-    * .purgeTombstones]]'s phase hook.
+    * `upsert` selects every target's upsert path (the crawler's
+    * re-crawl stream). `hook(name)` runs after each family's ingest —
+    * the crash-injection seam (the specs kill between two families of
+    * one micro-batch), same pattern as
+    * [[graft.sink.IndexFamily.purgeTombstones]]'s phase hook.
     *
-    * Families live at DIFFERENT paths with independent manifests, so
-    * with the default (no-op) hook their ingests OVERLAP from driver
-    * threads (guide §2.6 — each family's micro-batch jobs are small
-    * and driver-bound; sequential ingest left the cluster idle
+    * With the default (no-op) hook the families' ingests OVERLAP from
+    * driver threads (guide §2.6 — each family's micro-batch jobs are
+    * small and driver-bound; sequential ingest left the cluster idle
     * between family tails; optimization round 20). A caller-supplied
     * hook forces the sequential ingest order the crash-injection
     * specs rely on — the concurrency is an execution detail, never a
-    * protocol change: each family keeps its own exactly-once epoch
-    * commit against its own manifest either way.
-    * @return per-family (name, ingested?) in `families` order. */
-  private val NoHook: String => Unit = _ => ()
-
+    * protocol change.
+    * @return per-family (name, ingested?) in `targets` order. */
   def ingestFamiliesBatch(batch: DataFrame, epochId: Long,
-      families: Seq[FamilySink],
+      targets: Seq[(graft.sink.IndexFamily, String)],
+      upsert: Boolean = false,
       hook: String => Unit = NoHook): Seq[(String, Boolean)] = {
-    val pinned = batch.localCheckpoint()
-    def one(f: FamilySink): (String, Boolean) = {
-      val r = f.ingest(pinned, epochId)
-      hook(f.name)
-      f.name -> r
+    val input = if (targets.sizeIs > 1) batch.localCheckpoint() else batch
+    def one(t: (graft.sink.IndexFamily, String)): (String, Boolean) = {
+      val (family, path) = t
+      val r = family.ingestBatch(path, input, epochId, upsert)
+      hook(family.name)
+      family.name -> r
     }
     try {
-      if (hook eq NoHook) graft.core.Par.mapInParallel(families)(one)
-      else families.map(one)
+      if (hook eq NoHook) graft.core.Par.mapInParallel(targets)(one)
+      else targets.map(one)
     } finally {
-      pinned.unpersist()
+      if (input ne batch) input.unpersist()
       ()
     }
   }
 
-  /** Stream document micro-batches into SEVERAL index families at
-    * once — [[ingestFamiliesBatch]] under one streaming query and one
-    * checkpoint. Families ingest sequentially within a micro-batch
-    * (concurrent mutators on ONE index are out of contract, and the
-    * families' Spark jobs each use the whole cluster anyway); across
-    * micro-batches the usual exactly-once epoch protocol applies
-    * per family, so a crash anywhere — inside a family's ingest or
-    * between two families — heals on restart with every family
-    * converging to the same committed epoch. */
-  def startDocFamiliesSink(docs: DataFrame, checkpoint: String,
-      families: Seq[FamilySink],
-      hook: String => Unit = _ => ()): StreamingQuery =
-    docs.writeStream
+  /** Stream micro-batches INTO one or more persisted indexes —
+    * [[ingestFamiliesBatch]] under one streaming query and one
+    * checkpoint: the operator where the streaming and index
+    * lifecycles meet. Each micro-batch is an O(increment) append (or,
+    * with `upsert = true`, an upsert — new-id upsert ≡ append, so a
+    * pure-new stream costs one extra tombstone write per batch) into
+    * every target; queries against the indexes see every committed
+    * batch immediately — the freshness contract an impact index
+    * cannot give a stream. Replays are skipped per family, and a
+    * crash anywhere — inside a family's ingest or between two
+    * families — heals on restart with every family converging to the
+    * same committed epoch. */
+  def startIndexSink(input: DataFrame, checkpoint: String,
+      targets: Seq[(graft.sink.IndexFamily, String)],
+      upsert: Boolean = false,
+      hook: String => Unit = NoHook): StreamingQuery =
+    input.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        ingestFamiliesBatch(batch, epochId, families, hook)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** The shared exactly-once-per-epoch protocol (see
-    * [[ingestTfIndexBatch]]'s contract): skip committed epochs,
-    * commit `pending_epoch` BEFORE the mutation, hand the mutation a
-    * `healAsUpsert` flag (true when this epoch's previous attempt may
-    * have died mid-write — the mutation must then route through its
-    * upsert path so fresh-generation tombstones kill the partial
-    * facts), commit `epoch` after.
-    *
-    * A micro-batch thus costs 4 manifest commits (pending_epoch,
-    * reserve, publish, epoch). Folding the epoch moves into the
-    * reserve/publish commits (4 → 2) was measured and DECLINED
-    * (PLANS.md, "Manifest commit cadence"): one commit costs
-    * 2.3–4.8 ms on a populated layout, so the fold saves ~10 ms =
-    * 0.83% of even the smallest possible (1-doc, 1.16 s) micro-batch
-    * — for the price of threading the epoch through every family's
-    * mutation entry point; and the fold's other motivation (pin
-    * aging: 4 commits per micro-batch burn the retention window 4×
-    * faster) is solved directly by per-index configurable retention
-    * ([[graft.sink.IndexManifest.setRetention]]). */
-  private def ingestIndexBatch(spark: SparkSession, path: String,
-      epochId: Long)(mutate: Boolean => Unit): Boolean = {
-    val m0 = graft.sink.IndexManifest.readOrInit(spark, path)
-    if (epochId <= m0.epoch) false
-    else {
-      val suspectReplay = m0.pendingEpoch == epochId
-      // commutable commits ride the retrying CAS (commitWith): a lost
-      // race re-derives against the winner's snapshot — the epoch
-      // fields are this batch's own, so the merge is trivial
-      graft.sink.IndexManifest.commitWith(spark, path,
-        _.copy(pendingEpoch = epochId))
-      mutate(suspectReplay)
-      // the mutation committed its own generation reservation and
-      // publish — commitWith re-reads, so the epoch commit carries
-      // them forward
-      graft.sink.IndexManifest.commitWith(spark, path,
-        _.copy(epoch = epochId, pendingEpoch = -1L))
-      true
-    }
-  }
-
-  /** Stream document micro-batches INTO a TF inverted index — the
-    * operator where the streaming and index lifecycles meet: each
-    * micro-batch parquet-appends its TF facts ([[graft.operators
-    * .Retrieval.appendTfIndex]] — O(increment), read-time stats stay
-    * exact), guarded exactly-once per epoch by
-    * [[ingestTfIndexBatch]]. Queries against the index
-    * ([[graft.operators.Retrieval.bm25TopKFromTfIndex]]) see every
-    * committed batch immediately — the freshness contract an impact
-    * index cannot give a stream.
-    *
-    * `upsert = true` is the CRAWLER shape: a stream mixing new docs
-    * and RE-CRAWLS of known ids goes through
-    * [[graft.operators.Retrieval.upsertTfIndex]] per batch (new-id
-    * upsert ≡ append, so a pure-new stream costs one extra tombstone
-    * write per batch). Replays are guarded in BOTH modes, and a batch
-    * that half-committed before a crash self-heals in both too: the
-    * pending-epoch marker routes the replay through the upsert path,
-    * whose fresh-generation tombstones kill the partial facts
-    * ([[ingestTfIndexBatch]]). */
-  def startTfIndexSink(docs: DataFrame, path: String,
-      checkpoint: String, idCol: String = "doc_id",
-      textCol: String = "text",
-      upsert: Boolean = false): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        ingestTfIndexBatch(batch, epochId, path, idCol, textCol,
-          upsert)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** [[startTfIndexSink]] for the shingle index: stream document
-    * micro-batches INTO the near-dup artifact — same exactly-once
-    * epoch guard, same crash self-heal, same crawler `upsert` mode
-    * (see [[ingestShingleIndexBatch]]). */
-  def startShingleIndexSink(docs: DataFrame, path: String,
-      checkpoint: String, idCol: String = "doc_id",
-      textCol: String = "text",
-      upsert: Boolean = false): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        ingestShingleIndexBatch(batch, epochId, path, idCol, textCol,
-          upsert)
+        ingestFamiliesBatch(batch, epochId, targets, upsert, hook)
         ()
       }
       .trigger(Trigger.AvailableNow())

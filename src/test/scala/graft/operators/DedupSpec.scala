@@ -608,7 +608,7 @@ class DedupSpec extends SparkSpec {
         .createTempDirectory("shidx").toString
       Dedup.writeShingleIndex(corpus, dir, n = 3,
         shingleBuckets = buckets)
-      Dedup.appendShingleIndex(dir, inc)
+      Dedup.shingleFamily().append(dir, inc)
       val got = Dedup.jaccardPairsAgainstIndex(spark, dir, 0.5,
           inc.select(col("doc_id")))
         .orderBy("da", "db").collect()
@@ -626,8 +626,8 @@ class DedupSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("shidx2").toString
     Dedup.writeShingleIndex(all.where(col("doc_id") <= 2), dir, n = 3,
       shingleBuckets = 4)
-    Dedup.appendShingleIndex(dir, all.where(col("doc_id").isin(3L, 4L)))
-    Dedup.appendShingleIndex(dir, all.where(col("doc_id") >= 5))
+    Dedup.shingleFamily().append(dir, all.where(col("doc_id").isin(3L, 4L)))
+    Dedup.shingleFamily().append(dir, all.where(col("doc_id") >= 5))
     // querying with the SECOND increment only: (1,4)/(2,4)/(1,2) are
     // corpus-or-earlier-increment-internal — absent by contract
     val got = Dedup.jaccardPairsAgainstIndex(spark, dir, 0.5,
@@ -652,9 +652,9 @@ class DedupSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("shidx3").toString
     Dedup.writeShingleIndex(all.where(col("doc_id") <= 4), dir, n = 3,
       shingleBuckets = 4)
-    Dedup.appendShingleIndex(dir, all.where(col("doc_id") >= 5))
+    Dedup.shingleFamily().append(dir, all.where(col("doc_id") >= 5))
     // delete doc 2 (a member of the 1/2/4/5 near-dup family)
-    Dedup.deleteFromShingleIndex(dir,
+    Dedup.shingleFamily().delete(dir,
       all.where(col("doc_id") === 2).select(col("doc_id")))
     val truth = Dedup.jaccardPairsPrefix(
         all.where(col("doc_id") =!= 2), "doc_id", "text",
@@ -673,7 +673,7 @@ class DedupSpec extends SparkSpec {
     assert(logical.forall { case (a, b, _, _) => a != 2L && b != 2L })
     // physical purge: tombstones gone, postings thinner, same answers
     val before = idxDf(dir, "postings").count()
-    Dedup.purgeShingleIndexTombstones(spark, dir)
+    Dedup.shingleFamily().purgeTombstones(spark, dir)
     assert(!idxDirExists(dir, "tombstones"))
     assert(idxDf(dir, "postings").count() < before)
     assert(run() == truth)
@@ -693,7 +693,7 @@ class DedupSpec extends SparkSpec {
       val recrawl = Seq(
         (3L, "the quick brown fox jumps over the lazy dog")
       ).toDF("doc_id", "text")
-      Dedup.upsertShingleIndex(dir, recrawl)
+      Dedup.shingleFamily().upsert(dir, recrawl)
       val mutated = all.where(col("doc_id") =!= 3).unionAll(recrawl)
       val truth = Dedup.jaccardPairsPrefix(mutated, "doc_id", "text",
           n = 3, threshold = 0.5, cache = false)
@@ -709,11 +709,11 @@ class DedupSpec extends SparkSpec {
           r.getDouble(3))).toSeq
       assert(run() == truth)
       // idempotence
-      Dedup.upsertShingleIndex(dir, recrawl)
+      Dedup.shingleFamily().upsert(dir, recrawl)
       assert(run() == truth)
       // physical purge of the dead generations: answers unchanged
       val before = idxDf(dir, "postings").count()
-      Dedup.purgeShingleIndexTombstones(spark, dir)
+      Dedup.shingleFamily().purgeTombstones(spark, dir)
       assert(!idxDirExists(dir, "tombstones"))
       assert(idxDf(dir, "postings").count() < before)
       assert(run() == truth)
@@ -734,7 +734,7 @@ class DedupSpec extends SparkSpec {
       val recrawl = Seq(
         (6L, "prefix text the quick brown fox jumps over the lazy dog")
       ).toDF("doc_id", "text")
-      Dedup.upsertFingerprintIndex(dir, recrawl)
+      Dedup.fingerprintFamily().upsert(dir, recrawl)
       val mutated = all.where(col("doc_id") =!= 6).unionAll(recrawl)
       def canon(df: org.apache.spark.sql.DataFrame) =
         df.orderBy("da", "db").collect()
@@ -756,7 +756,7 @@ class DedupSpec extends SparkSpec {
     try {
       Dedup.writeFingerprintIndex(all.where(col("doc_id") <= 4), dir,
         k = 25, w = 10, fpBuckets = 4)
-      Dedup.appendFingerprintIndex(dir, all.where(col("doc_id") >= 5))
+      Dedup.fingerprintFamily().append(dir, all.where(col("doc_id") >= 5))
       def canon(df: org.apache.spark.sql.DataFrame) =
         df.orderBy("da", "db").collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
@@ -769,7 +769,7 @@ class DedupSpec extends SparkSpec {
           .select(col("doc_id"))))
       assert(got == truth)
       // tombstoning doc 2 removes its pairs, ≡ a rebuild without it
-      Dedup.deleteFromShingleIndex(dir, // same tombstones layout
+      Dedup.shingleFamily().delete(dir, // same tombstones layout
         all.where(col("doc_id") === 2).select(col("doc_id")))
       val truth2 = canon(Dedup.substringCandidates(
           all.where(col("doc_id") =!= 2), "doc_id", "text",
@@ -781,7 +781,7 @@ class DedupSpec extends SparkSpec {
       // physical purge of the fbucket layout: tombstones gone,
       // postings thinner, same answers
       val before = idxDf(dir, "postings").count()
-      Dedup.purgeFingerprintIndexTombstones(spark, dir)
+      Dedup.fingerprintFamily().purgeTombstones(spark, dir)
       assert(!idxDirExists(dir, "tombstones"))
       assert(idxDf(dir, "postings").count() < before)
       assert(canon(Dedup.substringCandidatesAgainstIndex(spark, dir,
@@ -807,9 +807,9 @@ class DedupSpec extends SparkSpec {
     try {
       Dedup.writeFingerprintIndex(all.where(col("doc_id") <= 2), dir,
         k = 25, w = 10, fpBuckets = 4)
-      Dedup.appendFingerprintIndex(dir,
+      Dedup.fingerprintFamily().append(dir,
         all.where(col("doc_id").isin(3L, 4L)))
-      Dedup.appendFingerprintIndex(dir, all.where(col("doc_id") >= 5))
+      Dedup.fingerprintFamily().append(dir, all.where(col("doc_id") >= 5))
       def run() = Dedup.substringCandidatesAgainstIndex(spark, dir,
           minShared = 1, all.where(col("doc_id") >= 5)
             .select(col("doc_id")))
@@ -818,7 +818,7 @@ class DedupSpec extends SparkSpec {
       val before = run()
       assert(before.nonEmpty)
       val nBefore = parquetFiles()
-      val (fb, fa) = Dedup.compactFingerprintIndex(spark, dir)
+      val (fb, fa) = Dedup.fingerprintFamily().compact(spark, dir)
       assert(fb == nBefore && fa < fb, s"$fb -> $fa")
       assert(parquetFiles() == fa)
       assert(run() == before)
@@ -841,8 +841,8 @@ class DedupSpec extends SparkSpec {
     try {
       Dedup.writeShingleIndex(all.where(col("doc_id") <= 2), dir,
         n = 3, shingleBuckets = 4)
-      Dedup.appendShingleIndex(dir, all.where(col("doc_id").isin(3L, 4L)))
-      Dedup.appendShingleIndex(dir, all.where(col("doc_id") >= 5))
+      Dedup.shingleFamily().append(dir, all.where(col("doc_id").isin(3L, 4L)))
+      Dedup.shingleFamily().append(dir, all.where(col("doc_id") >= 5))
       def run() = Dedup.jaccardPairsAgainstIndex(spark, dir, 0.5,
           all.where(col("doc_id") >= 5).select(col("doc_id")))
         .orderBy("da", "db").collect()
@@ -851,7 +851,7 @@ class DedupSpec extends SparkSpec {
       val truth = run()
       assert(truth.nonEmpty)
       val filesBefore = parquetFiles()
-      val (b, a) = Dedup.compactShingleIndex(spark, dir)
+      val (b, a) = Dedup.shingleFamily().compact(spark, dir)
       assert(b > a, s"compaction did not shrink: $b -> $a")
       // grace GC keeps the pre-compaction trees for stale readers;
       // the DISK claim holds after the post-grace full sweep

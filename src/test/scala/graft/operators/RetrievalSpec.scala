@@ -135,7 +135,7 @@ class RetrievalSpec extends SparkSpec {
     try {
       Retrieval.writeTfIndex(
         docs.where(col("doc_id") % 3 =!= 2), dir, wordBuckets = 8)
-      Retrieval.appendTfIndex(dir,
+      Retrieval.tfFamily().append(dir,
         docs.where(col("doc_id") % 3 === 2))
       for (k <- Seq(1, 5, 10)) {
         val full = canonTopK(
@@ -147,7 +147,7 @@ class RetrievalSpec extends SparkSpec {
       // a second increment keeps the equivalence (stats shift again)
       val more = Seq((100L, "needle needle brand new common"))
         .toDF("doc_id", "text")
-      Retrieval.appendTfIndex(dir, more)
+      Retrieval.tfFamily().append(dir, more)
       val full2 = canonTopK(Retrieval.bm25TopK(
         docs.unionAll(more), "doc_id", "text", queries, 5))
       val idx2 = canonTopK(
@@ -172,7 +172,7 @@ class RetrievalSpec extends SparkSpec {
       .createTempDirectory("graft_tfdel").toString
     try {
       Retrieval.writeTfIndex(docs, dir, wordBuckets = 8)
-      Retrieval.deleteFromTfIndex(dir,
+      Retrieval.tfFamily().delete(dir,
         docs.where(col("doc_id") % 4 === 1).select(col("doc_id")))
       val truth = canonTopK(Retrieval.bm25TopK(
         docs.where(col("doc_id") % 4 =!= 1), "doc_id", "text",
@@ -182,7 +182,7 @@ class RetrievalSpec extends SparkSpec {
       // append AFTER delete: both mutations visible, stats correct
       val more = Seq((100L, "needle common brand new"))
         .toDF("doc_id", "text")
-      Retrieval.appendTfIndex(dir, more)
+      Retrieval.tfFamily().append(dir, more)
       val truth2 = canonTopK(Retrieval.bm25TopK(
         docs.where(col("doc_id") % 4 =!= 1).unionAll(more),
         "doc_id", "text", queries, 10))
@@ -194,8 +194,8 @@ class RetrievalSpec extends SparkSpec {
         .createTempDirectory("graft_tfdel2").toString
       try {
         Retrieval.writeTfIndex(docs, dir2, wordBuckets = 8)
-        Retrieval.appendTfIndex(dir2, more)
-        Retrieval.deleteFromTfIndex(dir2,
+        Retrieval.tfFamily().append(dir2, more)
+        Retrieval.tfFamily().delete(dir2,
           docs.where(col("doc_id") % 4 === 1).select(col("doc_id")))
         assert(canonTopK(Retrieval.bm25TopKFromTfIndex(
           spark, dir2, queries, 10)) == truth2)
@@ -203,13 +203,13 @@ class RetrievalSpec extends SparkSpec {
         .deleteQuietly(new java.io.File(dir2))
       // physical purge: same answers, tombstones gone, postings thinner
       val beforeRows = idxDf(dir, "postings").count()
-      Retrieval.purgeTfIndexTombstones(spark, dir)
+      Retrieval.tfFamily().purgeTombstones(spark, dir)
       assert(!idxDirExists(dir, "tombstones"))
       assert(idxDf(dir, "postings").count() < beforeRows)
       assert(canonTopK(
         Retrieval.bm25TopKFromTfIndex(spark, dir, queries, 10)) == truth2)
       // deleting an APPENDED doc works too (takedown of fresh ingest)
-      Retrieval.deleteFromTfIndex(dir,
+      Retrieval.tfFamily().delete(dir,
         Seq(100L).toDF("doc_id"))
       assert(canonTopK(
         Retrieval.bm25TopKFromTfIndex(spark, dir, queries, 10)) == truth)
@@ -232,31 +232,31 @@ class RetrievalSpec extends SparkSpec {
     try {
       Retrieval.writeTfIndex(docs, dir, wordBuckets = 8)
       val crawl = mutated.where(col("doc_id") % 5 === 0)
-      Retrieval.upsertTfIndex(dir, crawl)
+      Retrieval.tfFamily().upsert(dir, crawl)
       val truth = canonTopK(Retrieval.bm25TopK(
         mutated, "doc_id", "text", queries, 10))
       assert(canonTopK(
         Retrieval.bm25TopKFromTfIndex(spark, dir, queries, 10)) == truth)
       // idempotence: the same crawl delivered twice changes nothing
-      Retrieval.upsertTfIndex(dir, crawl)
+      Retrieval.tfFamily().upsert(dir, crawl)
       assert(canonTopK(
         Retrieval.bm25TopKFromTfIndex(spark, dir, queries, 10)) == truth)
       // an upsert of ids NEW to the index is a plain append
       val fresh = Seq((200L, "needle updated brand new"))
         .toDF("doc_id", "text")
-      Retrieval.upsertTfIndex(dir, fresh)
+      Retrieval.tfFamily().upsert(dir, fresh)
       val truth2 = canonTopK(Retrieval.bm25TopK(
         mutated.unionAll(fresh), "doc_id", "text", queries, 10))
       assert(canonTopK(
         Retrieval.bm25TopKFromTfIndex(spark, dir, queries, 10)) == truth2)
       // upsert AFTER a delete resurrects the doc with its new text
-      Retrieval.deleteFromTfIndex(dir, Seq(200L).toDF("doc_id"))
-      Retrieval.upsertTfIndex(dir, fresh)
+      Retrieval.tfFamily().delete(dir, Seq(200L).toDF("doc_id"))
+      Retrieval.tfFamily().upsert(dir, fresh)
       assert(canonTopK(
         Retrieval.bm25TopKFromTfIndex(spark, dir, queries, 10)) == truth2)
       // physical purge drops the dead generations, answers unchanged
       val beforeRows = idxDf(dir, "postings").count()
-      Retrieval.purgeTfIndexTombstones(spark, dir)
+      Retrieval.tfFamily().purgeTombstones(spark, dir)
       assert(!idxDirExists(dir, "tombstones"))
       assert(idxDf(dir, "postings").count() < beforeRows)
       assert(canonTopK(
@@ -277,20 +277,20 @@ class RetrievalSpec extends SparkSpec {
       val crawl = docs.where(col("doc_id") % 5 === 0)
         .withColumn("text",
           concat(col("text"), lit(" updated revision")))
-      Retrieval.upsertTfIndex(dir, crawl)
+      Retrieval.tfFamily().upsert(dir, crawl)
       def run() = canonTopK(
         Retrieval.bm25TopKFromTfIndex(spark, dir, queries, 10))
       val expected = run()
       // compact while the upsert's tombstones are still live:
       // compaction rewrites FILES, never rows — the dead generations
       // stay physically present and logically dead
-      val (before, after) = Retrieval.compactTfIndex(spark, dir)
+      val (before, after) = Retrieval.tfFamily().compact(spark, dir)
       assert(after < before)
       assert(idxDirExists(dir, "tombstones"))
       assert(run() == expected)
       // the purge afterwards still drops exactly the dead generations
       val rows = idxDf(dir, "postings").count()
-      Retrieval.purgeTfIndexTombstones(spark, dir)
+      Retrieval.tfFamily().purgeTombstones(spark, dir)
       assert(idxDf(dir, "postings").count() < rows)
       assert(run() == expected)
     } finally org.apache.commons.io.FileUtils
@@ -315,12 +315,12 @@ class RetrievalSpec extends SparkSpec {
     try {
       Retrieval.writeTfIndex(
         docs.where(col("doc_id") % 3 === 0), dir, wordBuckets = 8)
-      Retrieval.appendTfIndex(dir, docs.where(col("doc_id") % 3 === 1))
-      Retrieval.appendTfIndex(dir, docs.where(col("doc_id") % 3 === 2))
+      Retrieval.tfFamily().append(dir, docs.where(col("doc_id") % 3 === 1))
+      Retrieval.tfFamily().append(dir, docs.where(col("doc_id") % 3 === 2))
       val truth = canonTopK(
         Retrieval.bm25TopKFromTfIndex(spark, dir, queries, 10))
       val filesBefore = parquetFiles()
-      val (b, a) = Retrieval.compactTfIndex(spark, dir)
+      val (b, a) = Retrieval.tfFamily().compact(spark, dir)
       assert(b > a, s"compaction did not shrink: $b -> $a")
       // grace GC keeps the pre-compaction trees for stale readers;
       // the DISK claim holds after the post-grace full sweep

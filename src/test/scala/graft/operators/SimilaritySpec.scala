@@ -294,6 +294,10 @@ class SimilaritySpec extends SparkSpec {
 
   // a larger deterministic corpus for the bounded-arm equivalences:
   // 30 vectors in 8 dims, no duplicates, spread over the sphere
+  /** The IVF-PQ family of the 8-dim, 2-subspace persisted-index
+    * tests. */
+  private val ivf = Similarity.ivfPqFamily(dims = 8, m = 2)
+
   private def corpus30 = {
     import spark.implicits._
     (0L until 30L).map { i =>
@@ -595,7 +599,7 @@ class SimilaritySpec extends SparkSpec {
     try {
       Similarity.ivfPqIndex(emb, nCells = 4, dims = 8, m = 2,
         nCentroids = 4).write(dir)
-      Similarity.deleteFromIvfPqIndex(dir,
+      ivf.delete(dir,
         emb.where(col("vec_id") % 3 === 1).select(col("vec_id")))
       def search() = Similarity.ivfPqSearch(
           emb.filter(col("vec_id") < 6), Similarity.IvfPqIndex.read(
@@ -612,7 +616,7 @@ class SimilaritySpec extends SparkSpec {
       assert(idxDf(dir, "cells").count() == 4)
       // purge: tombstones gone, codes thinner, same answers
       val before = idxDf(dir, "codes").count()
-      Similarity.purgeIvfPqTombstones(spark, dir)
+      ivf.purgeTombstones(spark, dir)
       assert(!idxDirExists(dir, "tombstones"))
       assert(idxDf(dir, "codes").count() < before)
       assert(search() == logical)
@@ -636,7 +640,7 @@ class SimilaritySpec extends SparkSpec {
       // re-embed ids %5=0 (negated vectors — different cells)
       val recrawl = (0L until 24L by 5).map(i => (i, vec(i, flip = true)))
         .toDF("vec_id", "embedding")
-      Similarity.upsertIvfPqIndex(spark, dir, recrawl, dims = 8, m = 2)
+      ivf.upsert(dir, recrawl)
       val mutated = orig.where(col("vec_id") % 5 =!= 0)
         .unionAll(recrawl)
       def search() = Similarity.ivfPqSearch(
@@ -663,16 +667,15 @@ class SimilaritySpec extends SparkSpec {
       val expected = twin()
       assert(search() == expected)
       // idempotence
-      Similarity.upsertIvfPqIndex(spark, dir, recrawl, dims = 8, m = 2)
+      ivf.upsert(dir, recrawl)
       assert(search() == expected)
       // delete then upsert resurrects with the new embedding
-      Similarity.deleteFromIvfPqIndex(dir, Seq(5L).toDF("vec_id"))
-      Similarity.upsertIvfPqIndex(spark, dir,
-        recrawl.where(col("vec_id") === 5), dims = 8, m = 2)
+      ivf.delete(dir, Seq(5L).toDF("vec_id"))
+      ivf.upsert(dir, recrawl.where(col("vec_id") === 5))
       assert(search() == expected)
       // physical purge: thinner codes, identical searches
       val before = idxDf(dir, "codes").count()
-      Similarity.purgeIvfPqTombstones(spark, dir)
+      ivf.purgeTombstones(spark, dir)
       assert(!idxDirExists(dir, "tombstones"))
       assert(idxDf(dir, "codes").count() < before)
       assert(search() == expected)
@@ -680,9 +683,9 @@ class SimilaritySpec extends SparkSpec {
       .deleteQuietly(new java.io.File(dir))
   }
 
-  test("persisted IVF-PQ append + compaction: appendToIvfPqIndex ≡ " +
+  test("persisted IVF-PQ append + compaction: the family's append ≡ " +
       "in-memory append (delta codes only); file count shrinks " +
-      "through compactIvfPqIndex with searches bit-identical") {
+      "through the family's compact with searches bit-identical") {
     import spark.implicits._
     def vecs(ids: Range) = ids.map { i =>
       (i.toLong, Array.tabulate(8)(d =>
@@ -692,10 +695,8 @@ class SimilaritySpec extends SparkSpec {
     try {
       Similarity.ivfPqIndex(vecs(0 until 16), nCells = 4, dims = 8,
         m = 2, nCentroids = 4).write(dir)
-      Similarity.appendToIvfPqIndex(spark, dir, vecs(16 until 24),
-        dims = 8, m = 2)
-      Similarity.appendToIvfPqIndex(spark, dir, vecs(24 until 32),
-        dims = 8, m = 2)
+      ivf.append(dir, vecs(16 until 24))
+      ivf.append(dir, vecs(24 until 32))
       def search() = Similarity.ivfPqSearch(
           vecs(0 until 4), Similarity.IvfPqIndex.read(spark, dir),
           k = 4, nprobe = 2, dims = 8, m = 2)
@@ -717,7 +718,7 @@ class SimilaritySpec extends SparkSpec {
       assert(onDisk == inMem)
       assert(onDisk.exists(_._2 >= 16), "appended ids must serve")
       // compaction: genuinely fewer files, bit-identical searches
-      val (before, after) = Similarity.compactIvfPqIndex(spark, dir)
+      val (before, after) = ivf.compact(spark, dir)
       assert(after < before, s"$before -> $after")
       assert(search() == onDisk)
     } finally org.apache.commons.io.FileUtils
@@ -783,9 +784,8 @@ class SimilaritySpec extends SparkSpec {
         nCentroids = 4).write(dir)
       Similarity.writeIvfPqDriftBaseline(spark, dir, old, dims = 8,
         m = 2)
-      Similarity.appendToIvfPqIndex(spark, dir, drifted, dims = 8,
-        m = 2)
-      Similarity.deleteFromIvfPqIndex(dir, Seq(3L).toDF("vec_id"))
+      ivf.append(dir, drifted)
+      ivf.delete(dir, Seq(3L).toDF("vec_id"))
       val genBefore = graft.sink.IndexLayout.currentGen(spark, dir)
       // the LIVE corpus: everything except the takedown
       val live = old.unionAll(drifted).where(col("vec_id") =!= 3)
@@ -810,7 +810,7 @@ class SimilaritySpec extends SparkSpec {
       // next gen, and a post-retrain takedown works as usual
       assert(graft.sink.IndexLayout.currentGen(spark, dir) ==
         genBefore + 1)
-      Similarity.deleteFromIvfPqIndex(dir, Seq(5L).toDF("vec_id"))
+      ivf.delete(dir, Seq(5L).toDF("vec_id"))
       assert(search(Similarity.IvfPqIndex.read(spark, dir))
         .forall(_._2 != 5L))
       // the drift baseline was rewritten from the retrain corpus:

@@ -18,7 +18,7 @@ class IndexLayoutSpec extends SparkSpec {
         Seq((1L, "some common words"), (2L, "needle common"))
           .toDF("doc_id", "text"), dir, wordBuckets = 4)
       // a takedown batch that matched nothing — routine in production
-      graft.operators.Retrieval.deleteFromTfIndex(dir,
+      graft.operators.Retrieval.tfFamily().delete(dir,
         Seq.empty[Long].toDF("doc_id"))
       assert(!idxDirExists(dir, "tombstones"))
       // reads keep working and see everything
@@ -26,7 +26,7 @@ class IndexLayoutSpec extends SparkSpec {
         spark, dir, Seq(1 -> "needle common"), 10)
       assert(got.count() == 2)
       // an empty UPSERT is likewise inert
-      graft.operators.Retrieval.upsertTfIndex(dir,
+      graft.operators.Retrieval.tfFamily().upsert(dir,
         Seq.empty[(Long, String)].toDF("doc_id", "text"))
       assert(graft.operators.Retrieval.bm25TopKFromTfIndex(
         spark, dir, Seq(1 -> "needle common"), 10).count() == 2)
@@ -48,19 +48,19 @@ class IndexLayoutSpec extends SparkSpec {
         dir, wordBuckets = 4)
       assert(IndexLayout.currentGen(spark, dir) == 0L) // fresh build
       for (i <- 2L to 16L)
-        graft.operators.Retrieval.appendTfIndex(dir,
+        graft.operators.Retrieval.tfFamily().append(dir,
           Seq((i, s"doc $i common")).toDF("doc_id", "text"))
       assert(IndexLayout.currentGen(spark, dir) == 15L)
       // two commits per mutation: the generation RESERVE before the
       // facts and the visibility PUBLISH after them (reader-atomicity)
       assert(manifestFiles() == 30)
-      graft.operators.Retrieval.compactTfIndex(spark, dir)
+      graft.operators.Retrieval.tfFamily().compact(spark, dir)
       // compaction prunes the manifest history to its tail...
       assert(manifestFiles() <= IndexManifest.HistoryKeep)
       // ...with the counter preserved
       assert(IndexLayout.currentGen(spark, dir) == 15L)
       // and the counter keeps counting after compaction
-      graft.operators.Retrieval.appendTfIndex(dir,
+      graft.operators.Retrieval.tfFamily().append(dir,
         Seq((77L, "doc 77 common")).toDF("doc_id", "text"))
       assert(IndexLayout.currentGen(spark, dir) == 16L)
     } finally org.apache.commons.io.FileUtils
@@ -95,7 +95,7 @@ class IndexLayoutSpec extends SparkSpec {
         spark, dir, Seq(1 -> "needle common"), 10)
       assert(got.count() == 2)
       // first mutation folds the legacy gen log into a fresh manifest
-      graft.operators.Retrieval.appendTfIndex(dir,
+      graft.operators.Retrieval.tfFamily().append(dir,
         Seq((3L, "third common doc")).toDF("doc_id", "text"))
       assert(IndexManifest.read(spark, dir).map(_.gen) == Some(4L))
       assert(graft.operators.Retrieval.bm25TopKFromTfIndex(

@@ -34,14 +34,13 @@ class ManifestSpec extends SparkSpec {
     try {
       val docs = tfDocs(spark)
       Retrieval.writeTfIndex(docs, dir, wordBuckets = 8)
-      Retrieval.deleteFromTfIndex(dir,
+      Retrieval.tfFamily().delete(dir,
         docs.where(col("doc_id") % 4 === 1).select(col("doc_id")))
       val expected = canon(
         Retrieval.bm25TopKFromTfIndex(spark, dir, queries, 10))
       val preRows = idxDf(dir, "postings").count() // dead gens present
       var steps = List.empty[String]
-      IndexLayout.purgeTombstones(spark, dir, "doc_id", "wbucket",
-        Seq("docs"), hook = { step =>
+      Retrieval.tfFamily().purgeTombstones(spark, dir, hook = { step =>
           steps ::= step
           // the QUERY answer is snapshot-invariant by design — purge
           // is logical-identity — so it must hold at every step
@@ -77,7 +76,7 @@ class ManifestSpec extends SparkSpec {
     try {
       val docs = tfDocs(spark)
       Retrieval.writeTfIndex(docs, dir, wordBuckets = 8)
-      Retrieval.deleteFromTfIndex(dir,
+      Retrieval.tfFamily().delete(dir,
         docs.where(col("doc_id") % 4 === 1).select(col("doc_id")))
       val expected = canon(
         Retrieval.bm25TopKFromTfIndex(spark, dir, queries, 10))
@@ -86,8 +85,7 @@ class ManifestSpec extends SparkSpec {
 
       // CRASH #1: after the new trees are built, before the commit.
       final class Boom extends RuntimeException("crash")
-      intercept[Boom](IndexLayout.purgeTombstones(spark, dir, "doc_id",
-        "wbucket", Seq("docs"),
+      intercept[Boom](Retrieval.tfFamily().purgeTombstones(spark, dir,
         hook = s => if (s == "built") throw new Boom))
       // the pointer never moved: reads see the OLD snapshot, whole
       assert(read() == expected)
@@ -96,8 +94,7 @@ class ManifestSpec extends SparkSpec {
       // CRASH #2 (on the retry): after the commit, before GC. The
       // retry first rebuilds the same staging names over crash #1's
       // leftovers — that must be harmless.
-      intercept[Boom](IndexLayout.purgeTombstones(spark, dir, "doc_id",
-        "wbucket", Seq("docs"),
+      intercept[Boom](Retrieval.tfFamily().purgeTombstones(spark, dir,
         hook = s => if (s == "committed") throw new Boom))
       // the pointer moved atomically: reads see the NEW snapshot
       assert(read() == expected)
@@ -112,9 +109,8 @@ class ManifestSpec extends SparkSpec {
 
       // a further purge is a no-op (tombstones are gone) and mutations
       // keep working against the new snapshot
-      IndexLayout.purgeTombstones(spark, dir, "doc_id", "wbucket",
-        Seq("docs"))
-      Retrieval.appendTfIndex(dir,
+      Retrieval.tfFamily().purgeTombstones(spark, dir)
+      Retrieval.tfFamily().append(dir,
         Seq((100L, "needle common fresh")).toDF("doc_id", "text"))
       assert(Retrieval.bm25TopKFromTfIndex(spark, dir,
         Seq(1 -> "fresh"), 10).count() == 1)
@@ -138,7 +134,7 @@ class ManifestSpec extends SparkSpec {
       // compaction are logical-identity, so every read below must
       // return exactly this (the mutation-vs-reader race has its own
       // test — the visibility watermark makes those reader-atomic too)
-      Retrieval.upsertTfIndex(dir, crawl)
+      Retrieval.tfFamily().upsert(dir, crawl)
       val expected = canon(
         Retrieval.bm25TopKFromTfIndex(spark, dir, queries, 10))
       @volatile var writerDone = false
@@ -170,10 +166,10 @@ class ManifestSpec extends SparkSpec {
       }
       try {
         Seq[() => Unit](
-          () => { Retrieval.compactTfIndex(spark, dir); () },
-          () => Retrieval.purgeTfIndexTombstones(spark, dir),
-          () => { Retrieval.compactTfIndex(spark, dir); () },
-          () => { Retrieval.compactTfIndex(spark, dir); () }
+          () => { Retrieval.tfFamily().compact(spark, dir); () },
+          () => Retrieval.tfFamily().purgeTombstones(spark, dir),
+          () => { Retrieval.tfFamily().compact(spark, dir); () },
+          () => { Retrieval.tfFamily().compact(spark, dir); () }
         ).foreach { rewrite =>
           rewrite()
           awaitReads(reads + 2) // ≥1 full read born after the commit
@@ -281,13 +277,13 @@ class ManifestSpec extends SparkSpec {
       reader.start()
       try {
         (1 to 4).foreach { k =>
-          Retrieval.upsertTfIndex(dir, twins(k).localCheckpoint())
+          Retrieval.tfFamily().upsert(dir, twins(k).localCheckpoint())
         }
         // a delete + resurrecting upsert: valid snapshots are 0 or 2
         // twins, never 1
-        Retrieval.deleteFromTfIndex(dir,
+        Retrieval.tfFamily().delete(dir,
           Seq(101L, 102L).toDF("doc_id"))
-        Retrieval.upsertTfIndex(dir, twins(5).localCheckpoint())
+        Retrieval.tfFamily().upsert(dir, twins(5).localCheckpoint())
       } finally {
         writerDone = true
         reader.join(120000)
@@ -321,7 +317,7 @@ class ManifestSpec extends SparkSpec {
       val g = IndexLayout.reserveGen(spark, dir)
       IndexLayout.appendTombstones(crawl.select(col("doc_id")), dir,
         "doc_id", g)
-      Retrieval.appendTfFacts(dir, crawl, "doc_id", "text", None, g)
+      Retrieval.tfFamily().appendFacts(dir, crawl, g)
       // readers still see EXACTLY the pre-mutation snapshot: the
       // unpublished tombstones don't delete doc 1, the unpublished
       // facts don't serve
@@ -548,22 +544,22 @@ class ManifestSpec extends SparkSpec {
       Retrieval.writeTfIndex(docs, dir, wordBuckets = 8)
       val crawl = Seq((1L, "needle revised fresh text"))
         .toDF("doc_id", "text")
-      // simulate upsertTfIndex dying AFTER its fact append (the last
+      // simulate a TF upsert dying AFTER its fact append (the last
       // step) — generation reserved, tombstones written, facts written
       val g = IndexLayout.reserveGen(spark, dir)
       IndexLayout.appendTombstones(crawl.select(col("doc_id")), dir,
         "doc_id", g)
-      Retrieval.appendTfFacts(dir, crawl, "doc_id", "text", None, g)
+      Retrieval.tfFamily().appendFacts(dir, crawl, g)
       // the replay reserves g+1: its tombstones kill the crashed
       // attempt's facts, so the state ≡ a single clean upsert
-      Retrieval.upsertTfIndex(dir, crawl)
+      Retrieval.tfFamily().upsert(dir, crawl)
       val got = canon(Retrieval.bm25TopKFromTfIndex(
         spark, dir, queries, 10))
       val cleanDir = java.nio.file.Files
         .createTempDirectory("mres2").toString
       try {
         Retrieval.writeTfIndex(docs, cleanDir, wordBuckets = 8)
-        Retrieval.upsertTfIndex(cleanDir, crawl)
+        Retrieval.tfFamily().upsert(cleanDir, crawl)
         assert(got == canon(Retrieval.bm25TopKFromTfIndex(
           spark, cleanDir, queries, 10)),
           "crashed-then-replayed upsert diverged from a clean upsert")

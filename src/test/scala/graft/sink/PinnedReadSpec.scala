@@ -38,17 +38,17 @@ class PinnedReadSpec extends SparkSpec {
         spark, dir, queries, 10))
       // the crawler keeps going: re-crawl, takedown, physical purge,
       // compaction — every mutation class the layout supports
-      Retrieval.upsertTfIndex(dir,
+      Retrieval.tfFamily().upsert(dir,
         Seq((1L, "needle revised fresh text")).toDF("doc_id", "text"))
-      Retrieval.deleteFromTfIndex(dir,
+      Retrieval.tfFamily().delete(dir,
         Seq(5L, 9L).toDF("doc_id"))
       val pinnedMid = canon(Retrieval.bm25TopKFromTfIndex(spark, dir,
         queries, 10,
         pinned = Some(IndexManifest.readAt(spark, dir, snap.seq))))
       assert(pinnedMid == expected,
         "pinned read drifted under live mutations")
-      Retrieval.purgeTfIndexTombstones(spark, dir)
-      Retrieval.compactTfIndex(spark, dir)
+      Retrieval.tfFamily().purgeTombstones(spark, dir)
+      Retrieval.tfFamily().compact(spark, dir)
       val pinnedLate = canon(Retrieval.bm25TopKFromTfIndex(spark, dir,
         queries, 10,
         pinned = Some(IndexManifest.readAt(spark, dir, snap.seq))))
@@ -98,13 +98,13 @@ class PinnedReadSpec extends SparkSpec {
       val expected = canon(Retrieval.bm25TopKFromTfIndex(
         spark, dir, queries, 10))
       (0 until 8).foreach { i =>
-        Retrieval.upsertTfIndex(dir,
+        Retrieval.tfFamily().upsert(dir,
           Seq((i.toLong, s"recrawled body number $i fresh"))
             .toDF("doc_id", "text"))
       }
-      Retrieval.deleteFromTfIndex(dir, Seq(13L).toDF("doc_id"))
-      Retrieval.purgeTfIndexTombstones(spark, dir)
-      Retrieval.compactTfIndex(spark, dir) // runs pruneHistory too
+      Retrieval.tfFamily().delete(dir, Seq(13L).toDF("doc_id"))
+      Retrieval.tfFamily().purgeTombstones(spark, dir)
+      Retrieval.tfFamily().compact(spark, dir) // runs pruneHistory too
       assert(canon(Retrieval.bm25TopKFromTfIndex(spark, dir, queries,
         10, pinned = Some(IndexManifest.readAt(spark, dir, snap.seq))))
         == expected, "pin died inside its raised retention window")
@@ -143,8 +143,7 @@ class PinnedReadSpec extends SparkSpec {
       (0 until 6).foreach { e =>
         val b = Seq((100L + e, s"streamed doc number $e needle"))
           .toDF("doc_id", "text")
-        assert(graft.streaming.EventStreams.ingestTfIndexBatch(
-          b, e.toLong, dir))
+        assert(Retrieval.tfFamily().ingestBatch(dir, b, e.toLong))
       }
       IndexManifest.pruneHistory(spark, dir)
       // 6 micro-batches × 4 commits = 24 subsequent commits — past
@@ -181,7 +180,7 @@ class PinnedReadSpec extends SparkSpec {
       val before = canon(Dedup.jaccardPairsAgainstIndex(spark, sdir,
         0.3, ids).orderBy(col("da"), col("db")))
       assert(before.nonEmpty)
-      Dedup.upsertShingleIndex(sdir,
+      Dedup.shingleFamily().upsert(sdir,
         Seq((2L, "unrelated replacement text body words"))
           .toDF("doc_id", "text"))
       val pinnedPairs = canon(Dedup.jaccardPairsAgainstIndex(spark,
@@ -208,7 +207,7 @@ class PinnedReadSpec extends SparkSpec {
         val fBefore = canon(Dedup.substringCandidatesAgainstIndex(
           spark, fdir, 1, fIds).orderBy(col("da"), col("db")))
         assert(fBefore.nonEmpty)
-        Dedup.upsertFingerprintIndex(fdir,
+        Dedup.fingerprintFamily().upsert(fdir,
           Seq((2L, "zz completely different body with nothing shared"))
             .toDF("doc_id", "text"))
         assert(canon(Dedup.substringCandidatesAgainstIndex(spark,
@@ -230,7 +229,8 @@ class PinnedReadSpec extends SparkSpec {
       val vsnap = IndexManifest.pin(spark, vdir)
       val nBefore = Similarity.IvfPqIndex.read(spark, vdir)
         .codes.select(col("id")).distinct().count()
-      Similarity.deleteFromIvfPqIndex(vdir, Seq(3L, 4L).toDF("vec_id"))
+      Similarity.ivfPqFamily(dims = 4, m = 2).delete(vdir,
+        Seq(3L, 4L).toDF("vec_id"))
       val pinnedIdx = Similarity.IvfPqIndex.read(spark, vdir,
         pinned = Some(IndexManifest.readAt(spark, vdir, vsnap.seq)))
       assert(pinnedIdx.codes.select(col("id")).distinct().count()

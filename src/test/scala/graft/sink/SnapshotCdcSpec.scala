@@ -4,7 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Snapshot CDC ([[IndexLayout.changedKeysBetween]] /
-  * [[graft.operators.Retrieval.tfIndexChangesBetween]]): the diff of
+  * [[IndexFamily.changesBetween]]): the diff of
   * two pinned snapshots' live (key, gen) maps is exact change capture
   * — every mutation class maps to the right verdict, window-internal
   * churn collapses to the NET change, no-ops vanish, and physical
@@ -15,7 +15,7 @@ class SnapshotCdcSpec extends SparkSpec {
 
   private def changes(dir: String, a: IndexManifest,
       b: IndexManifest): Map[Long, String] =
-    Retrieval.tfIndexChangesBetween(spark, dir, a, b).collect()
+    Retrieval.tfFamily().changesBetween(spark, dir, a, b).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
 
   test("every mutation class between two pins classifies exactly: " +
@@ -32,22 +32,22 @@ class SnapshotCdcSpec extends SparkSpec {
       IndexManifest.setRetention(spark, dir, commits = 24)
       val a = IndexManifest.pin(spark, dir)
       // the window: one of every mutation class
-      Retrieval.appendTfIndex(dir,
+      Retrieval.tfFamily().append(dir,
         Seq((20L, "brand new doc twenty"), (21L, "brand new doc21"))
           .toDF("doc_id", "text"))
-      Retrieval.upsertTfIndex(dir,
+      Retrieval.tfFamily().upsert(dir,
         Seq((1L, "recrawled body one")).toDF("doc_id", "text"))
-      Retrieval.deleteFromTfIndex(dir, Seq(5L, 9L).toDF("doc_id"))
+      Retrieval.tfFamily().delete(dir, Seq(5L, 9L).toDF("doc_id"))
       // delete then resurrect inside the window → net upsert
-      Retrieval.deleteFromTfIndex(dir, Seq(3L).toDF("doc_id"))
-      Retrieval.upsertTfIndex(dir,
+      Retrieval.tfFamily().delete(dir, Seq(3L).toDF("doc_id"))
+      Retrieval.tfFamily().upsert(dir,
         Seq((3L, "resurrected body three")).toDF("doc_id", "text"))
       // upsert then delete inside the window → net delete
-      Retrieval.upsertTfIndex(dir,
+      Retrieval.tfFamily().upsert(dir,
         Seq((7L, "doomed revision seven")).toDF("doc_id", "text"))
-      Retrieval.deleteFromTfIndex(dir, Seq(7L).toDF("doc_id"))
+      Retrieval.tfFamily().delete(dir, Seq(7L).toDF("doc_id"))
       // no-op tombstone: an id that was never live
-      Retrieval.deleteFromTfIndex(dir, Seq(999L).toDF("doc_id"))
+      Retrieval.tfFamily().delete(dir, Seq(999L).toDF("doc_id"))
       val b = IndexManifest.pin(spark, dir)
       val expected = Map(20L -> "upsert", 21L -> "upsert",
         1L -> "upsert", 3L -> "upsert",
@@ -57,8 +57,8 @@ class SnapshotCdcSpec extends SparkSpec {
       assert(changes(dir, b, b).isEmpty)
       // purge + compaction preserve every live (key, gen) pair, so
       // the diff across them is IDENTICAL — and (b, c) is empty
-      Retrieval.purgeTfIndexTombstones(spark, dir)
-      Retrieval.compactTfIndex(spark, dir)
+      Retrieval.tfFamily().purgeTombstones(spark, dir)
+      Retrieval.tfFamily().compact(spark, dir)
       val c = IndexManifest.pin(spark, dir)
       assert(changes(dir, a, c) == expected,
         "physical rewrites disturbed the logical diff")
@@ -93,25 +93,23 @@ class SnapshotCdcSpec extends SparkSpec {
         .toDF("doc_id", "text")
       Dedup.writeShingleIndex(docs, sh, n = 3, shingleBuckets = 4)
       val sa = IndexManifest.pin(spark, sh)
-      Dedup.upsertShingleIndex(sh,
+      Dedup.shingleFamily().upsert(sh,
         Seq((2L, "totally new replacement body")).toDF("doc_id", "text"))
-      Dedup.deleteFromShingleIndex(sh, Seq(5L).toDF("doc_id"))
+      Dedup.shingleFamily().delete(sh, Seq(5L).toDF("doc_id"))
       val sb = IndexManifest.pin(spark, sh)
-      assert(Dedup.shingleIndexChangesBetween(spark, sh, sa, sb)
+      assert(Dedup.shingleFamily().changesBetween(spark, sh, sa, sb)
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
         == Map(2L -> "upsert", 5L -> "delete"))
 
       Dedup.writeFingerprintIndex(docs, fp, k = 10, w = 4,
         fpBuckets = 4)
       val fa = IndexManifest.pin(spark, fp)
-      Dedup.upsertFingerprintIndex(fp,
+      Dedup.fingerprintFamily().upsert(fp,
         Seq((3L, "substrings rewritten entirely anew"))
           .toDF("doc_id", "text"))
-      // fingerprint takedowns ride the generic doc_id tombstone
-      // appender (the fp layout has no dedicated delete entry point)
-      Dedup.deleteFromShingleIndex(fp, Seq(6L).toDF("doc_id"))
+      Dedup.fingerprintFamily().delete(fp, Seq(6L).toDF("doc_id"))
       val fb = IndexManifest.pin(spark, fp)
-      assert(Dedup.fingerprintIndexChangesBetween(spark, fp, fa, fb)
+      assert(Dedup.fingerprintFamily().changesBetween(spark, fp, fa, fb)
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
         == Map(3L -> "upsert", 6L -> "delete"))
 
@@ -122,12 +120,13 @@ class SnapshotCdcSpec extends SparkSpec {
       Similarity.ivfPqIndex(vecs, nCells = 2, dims, m, nCentroids = 4)
         .write(vq)
       val va = IndexManifest.pin(spark, vq)
-      Similarity.upsertIvfPqIndex(spark, vq,
+      val ivf = Similarity.ivfPqFamily(dims, m)
+      ivf.upsert(vq,
         Seq((1L, Array.tabulate(dims)(d => -(d + 1).toFloat)))
-          .toDF("vec_id", "embedding"), dims, m)
-      Similarity.deleteFromIvfPqIndex(vq, Seq(4L).toDF("vec_id"))
+          .toDF("vec_id", "embedding"))
+      ivf.delete(vq, Seq(4L).toDF("vec_id"))
       val vb = IndexManifest.pin(spark, vq)
-      assert(Similarity.ivfPqChangesBetween(spark, vq, va, vb)
+      assert(ivf.changesBetween(spark, vq, va, vb)
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
         == Map(1L -> "upsert", 4L -> "delete"))
       // retrain: every stored code changes → everything upserts (and
@@ -139,7 +138,7 @@ class SnapshotCdcSpec extends SparkSpec {
       Similarity.retrainIvfPqIndex(spark, vq, liveVecs, nCells = 2,
         dims = dims, m = m, nCentroids = 4)
       val vc = IndexManifest.pin(spark, vq)
-      val afterRetrain = Similarity.ivfPqChangesBetween(spark, vq,
+      val afterRetrain = ivf.changesBetween(spark, vq,
         vb, vc).collect().map(r => r.getLong(0) -> r.getString(1))
         .toMap
       assert(afterRetrain ==
@@ -166,10 +165,10 @@ class SnapshotCdcSpec extends SparkSpec {
         Seq("add" -> Seq(2L), "del" -> Seq(11L)))
       cycles.foreach { muts =>
         muts.foreach {
-          case ("add", ids) => Retrieval.upsertTfIndex(dir,
+          case ("add", ids) => Retrieval.tfFamily().upsert(dir,
             ids.map(i => (i, s"cycle body $i")).toDF("doc_id", "text"))
           case (_, ids) =>
-            Retrieval.deleteFromTfIndex(dir, ids.toDF("doc_id"))
+            Retrieval.tfFamily().delete(dir, ids.toDF("doc_id"))
         }
         val now = IndexManifest.pin(spark, dir)
         changes(dir, last, now).foreach {

@@ -12,6 +12,11 @@ import org.apache.spark.sql.streaming.OutputMode
   * micro-batches so event-time progression is controlled exactly.
   */
 class EventStreamsSpec extends SparkSpec {
+  import graft.operators.{Dedup, Retrieval, Similarity}
+  import graft.sink.IndexFamily
+
+  private val tfFam = Retrieval.tfFamily()
+  private val fpFam = Dedup.fingerprintFamily()
 
   private def ts(minutes: Long): Timestamp =
     new Timestamp(1704067200000L + minutes * 60000L) // 2024-01-01 00:00 UTC
@@ -452,10 +457,10 @@ class EventStreamsSpec extends SparkSpec {
       // two streamed micro-batches, then a REPLAY of each
       val b1 = docs.slice(10, 20).toDF("doc_id", "text")
       val b2 = docs.slice(20, 30).toDF("doc_id", "text")
-      assert(EventStreams.ingestTfIndexBatch(b1, 0L, dir))
-      assert(EventStreams.ingestTfIndexBatch(b2, 1L, dir))
-      assert(!EventStreams.ingestTfIndexBatch(b1, 0L, dir), "replay!")
-      assert(!EventStreams.ingestTfIndexBatch(b2, 1L, dir), "replay!")
+      assert(tfFam.ingestBatch(dir, b1, 0L))
+      assert(tfFam.ingestBatch(dir, b2, 1L))
+      assert(!tfFam.ingestBatch(dir, b1, 0L), "replay!")
+      assert(!tfFam.ingestBatch(dir, b2, 1L), "replay!")
       val streamed = graft.operators.Retrieval.bm25TopKFromTfIndex(
           spark, dir, queries, 10).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
@@ -466,7 +471,7 @@ class EventStreamsSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
           r.getLong(3))).sortBy(t => (t._1, t._4)).toSeq
       assert(streamed == full)
-      assert(EventStreams.committedTfIndexEpoch(spark, dir) == 1L)
+      assert(IndexFamily.committedEpoch(spark, dir) == 1L)
     } finally org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(dir))
   }
@@ -485,11 +490,9 @@ class EventStreamsSpec extends SparkSpec {
       // batch 0: one NEW doc + one RE-CRAWL of doc 1 with changed text
       val b0 = Seq((2L, "hay common brand new"),
         (1L, "needle revised fresh text")).toDF("doc_id", "text")
-      assert(graft.streaming.EventStreams.ingestTfIndexBatch(
-        b0, 0L, dir, upsert = true))
+      assert(tfFam.ingestBatch(dir, b0, 0L, upsert = true))
       // replay skipped
-      assert(!graft.streaming.EventStreams.ingestTfIndexBatch(
-        b0, 0L, dir, upsert = true))
+      assert(!tfFam.ingestBatch(dir, b0, 0L, upsert = true))
       val got = graft.operators.Retrieval.bm25TopKFromTfIndex(
           spark, dir, queries, 10).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
@@ -530,24 +533,21 @@ class EventStreamsSpec extends SparkSpec {
       val b1 = (15L until 20L).map(i => (i, s"needle hay doc$i"))
       graft.operators.Retrieval.writeTfIndex(
         base.toDF("doc_id", "text"), dir, wordBuckets = 8)
-      assert(EventStreams.ingestTfIndexBatch(
-        b0.toDF("doc_id", "text"), 0L, dir))
+      assert(tfFam.ingestBatch(dir, b0.toDF("doc_id", "text"), 0L))
       // simulate epoch 1 dying between its fact append and its epoch
-      // commit — exactly ingestTfIndexBatch's prefix, in append mode:
+      // commit — exactly ingestBatch's prefix, in append mode:
       // pending marker, generation reservation, fact append... crash.
       val m0 = graft.sink.IndexManifest.readOrInit(spark, dir)
       graft.sink.IndexManifest.commit(spark, dir,
         m0.copy(pendingEpoch = 1L))
       val g = graft.sink.IndexLayout.reserveGen(spark, dir)
-      graft.operators.Retrieval.appendTfFacts(
-        dir, b1.toDF("doc_id", "text"), "doc_id", "text", None, g)
+      tfFam.appendFacts(dir, b1.toDF("doc_id", "text"), g)
       // the facts are fully on disk, the epoch is NOT committed
-      assert(EventStreams.committedTfIndexEpoch(spark, dir) == 0L)
+      assert(IndexFamily.committedEpoch(spark, dir) == 0L)
       // the at-least-once replay of the SAME batch at the SAME epoch:
       // without the self-heal this would double every tf/df/dl of
       // docs 15-19 and shift every BM25 score below
-      assert(EventStreams.ingestTfIndexBatch(
-        b1.toDF("doc_id", "text"), 1L, dir))
+      assert(tfFam.ingestBatch(dir, b1.toDF("doc_id", "text"), 1L))
       val got = canon(graft.operators.Retrieval.bm25TopKFromTfIndex(
         spark, dir, queries, 10))
       val twin = canon(graft.operators.Retrieval.bm25TopK(
@@ -555,14 +555,13 @@ class EventStreamsSpec extends SparkSpec {
         "doc_id", "text", queries, 10))
       assert(got == twin, "replayed crash double-counted facts")
       // a further replay of the now-committed epoch is skipped outright
-      assert(!EventStreams.ingestTfIndexBatch(
-        b1.toDF("doc_id", "text"), 1L, dir))
-      assert(EventStreams.committedTfIndexEpoch(spark, dir) == 1L)
+      assert(!tfFam.ingestBatch(dir, b1.toDF("doc_id", "text"), 1L))
+      assert(IndexFamily.committedEpoch(spark, dir) == 1L)
     } finally org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(dir))
   }
 
-  test("startTfIndexSink end to end: a real foreachBatch stream " +
+  test("startIndexSink (TF) end to end: a real foreachBatch stream " +
       "lands its documents in the index; a second run ingests only " +
       "the new data") {
     implicit val sqlCtx = spark.sqlContext
@@ -578,8 +577,8 @@ class EventStreamsSpec extends SparkSpec {
         wordBuckets = 8)
       val in = MemoryStream[(Long, String)]
       def run(): Unit = {
-        val q = EventStreams.startTfIndexSink(
-          in.toDS().toDF("doc_id", "text"), dir, ckpt)
+        val q = EventStreams.startIndexSink(
+          in.toDS().toDF("doc_id", "text"), ckpt, Seq(tfFam -> dir))
         q.awaitTermination() // AvailableNow: drains then stops
       }
       in.addData((1L, "needle common words"), (2L, "hay common"))
@@ -608,8 +607,8 @@ class EventStreamsSpec extends SparkSpec {
     }
   }
 
-  test("startShingleIndexSink end to end: a real foreachBatch stream " +
-      "lands its documents in the near-dup index; a second run " +
+  test("startIndexSink (shingle) end to end: a real foreachBatch " +
+      "stream lands its documents in the near-dup index; a second run " +
       "ingests only the new data; pairs ≡ a batch-built index") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -628,8 +627,9 @@ class EventStreamsSpec extends SparkSpec {
         shingleBuckets = 4)
       val in = MemoryStream[(Long, String)]
       def run(): Unit = {
-        val q = EventStreams.startShingleIndexSink(
-          in.toDS().toDF("doc_id", "text"), dir, ckpt)
+        val q = EventStreams.startIndexSink(
+          in.toDS().toDF("doc_id", "text"), ckpt,
+          Seq(Dedup.shingleFamily() -> dir))
         q.awaitTermination() // AvailableNow: drains then stops
       }
       in.addData(corpus(1), corpus(2))
@@ -663,8 +663,8 @@ class EventStreamsSpec extends SparkSpec {
     }
   }
 
-  test("startIvfPqIndexSink end to end: a real foreachBatch re-embed " +
-      "stream upserts into the frozen-geometry ANN index across two " +
+  test("startIndexSink (IVF-PQ) end to end: a real foreachBatch " +
+      "re-embed stream upserts into the frozen-geometry ANN index across two " +
       "runs (earlier epochs skipped on restart); searches ≡ one " +
       "batch upsert of everything") {
     implicit val sqlCtx = spark.sqlContext
@@ -684,9 +684,9 @@ class EventStreamsSpec extends SparkSpec {
         .write(dir)
       val in = MemoryStream[(Long, Array[Float])]
       def run(): Unit = {
-        val q = EventStreams.startIvfPqIndexSink(
-          in.toDS().toDF("vec_id", "embedding"), dir, ckpt, dims, m,
-          upsert = true)
+        val q = EventStreams.startIndexSink(
+          in.toDS().toDF("vec_id", "embedding"), ckpt,
+          Seq(Similarity.ivfPqFamily(dims, m) -> dir), upsert = true)
         q.awaitTermination()
       }
       // two runs, two re-embed batches (ids 1,2 then 3)
@@ -707,9 +707,9 @@ class EventStreamsSpec extends SparkSpec {
             corpus.toDF("vec_id", "embedding"), nCells = 2, dims, m,
             nCentroids = 4)
           .write(twinDir)
-        graft.operators.Similarity.upsertIvfPqIndex(spark, twinDir,
+        Similarity.ivfPqFamily(dims, m).upsert(twinDir,
           Seq((1L, vec(1, true)), (2L, vec(2, true)),
-            (3L, vec(3, true))).toDF("vec_id", "embedding"), dims, m)
+            (3L, vec(3, true))).toDF("vec_id", "embedding"))
         assert(search(dir) == search(twinDir))
       } finally org.apache.commons.io.FileUtils
         .deleteQuietly(new java.io.File(twinDir))
@@ -772,17 +772,17 @@ class EventStreamsSpec extends SparkSpec {
           nCells = 2, dims, m, nCentroids = 4)
         .write(vqDir)
       val families = Seq(
-        FamilySink.tf(tfDir),
-        FamilySink.shingle(shDir),
-        FamilySink.fingerprint(fpDir),
-        FamilySink.ivfPq(vqDir, dims, m, idCol = "doc_id"))
+        tfFam -> tfDir,
+        Dedup.shingleFamily() -> shDir,
+        fpFam -> fpDir,
+        Similarity.ivfPqFamily(dims, m, idCol = "doc_id") -> vqDir)
       def epochs() = Seq(tfDir, shDir, fpDir, vqDir)
-        .map(EventStreams.committedTfIndexEpoch(spark, _))
+        .map(IndexFamily.committedEpoch(spark, _))
       val in = MemoryStream[(Long, String, Array[Float])]
       def run(hook: String => Unit = _ => ()): Option[Throwable] = {
-        val q = EventStreams.startDocFamiliesSink(
+        val q = EventStreams.startIndexSink(
           in.toDS().toDF("doc_id", "text", "embedding"), ckpt,
-          families, hook)
+          families, hook = hook)
         try { q.awaitTermination(); None }
         catch { case t: org.apache.spark.sql.streaming
           .StreamingQueryException => Some(t) }
@@ -850,9 +850,8 @@ class EventStreamsSpec extends SparkSpec {
             .select($"doc_id".as("vec_id"), $"embedding"),
           nCells = 2, dims, m, nCentroids = 4)
         .write(vqTwin)
-      graft.operators.Similarity.appendToIvfPqIndex(spark, vqTwin,
-        (b0 ++ b1).toDF("doc_id", "text", "embedding"), dims, m,
-        idCol = "doc_id")
+      Similarity.ivfPqFamily(dims, m, idCol = "doc_id").append(vqTwin,
+        (b0 ++ b1).toDF("doc_id", "text", "embedding"))
       def search(d: String) = graft.operators.Similarity.ivfPqSearch(
           seed.map(t => (t._1, t._3)).toDF("vec_id", "embedding"),
           graft.operators.Similarity.IvfPqIndex.read(spark, d),
@@ -886,8 +885,7 @@ class EventStreamsSpec extends SparkSpec {
       graft.operators.Dedup.writeFingerprintIndex(
         seed.toDF("doc_id", "text"), fpDir, k = 10, w = 4,
         fpBuckets = 4)
-      val families = Seq(FamilySink.tf(tfDir),
-        FamilySink.fingerprint(fpDir))
+      val families = Seq(tfFam -> tfDir, fpFam -> fpDir)
       // micro-batch 0 lands cleanly in both
       EventStreams.ingestFamiliesBatch(b0.toDF("doc_id", "text"), 0L,
         families)
@@ -896,15 +894,14 @@ class EventStreamsSpec extends SparkSpec {
       // before its epoch commit; the driver crash also means the
       // composed loop never reached any later family
       val b1df = b1.toDF("doc_id", "text")
-      assert(EventStreams.ingestTfIndexBatch(b1df, 1L, tfDir))
+      assert(tfFam.ingestBatch(tfDir, b1df, 1L))
       val m0 = graft.sink.IndexManifest.readOrInit(spark, fpDir)
       graft.sink.IndexManifest.commit(spark, fpDir,
         m0.copy(pendingEpoch = 1L))
       val g = graft.sink.IndexLayout.reserveGen(spark, fpDir)
-      graft.operators.Dedup.appendFingerprintFacts(fpDir, b1df,
-        "doc_id", "text", g)
-      assert(EventStreams.committedTfIndexEpoch(spark, tfDir) == 1L)
-      assert(EventStreams.committedTfIndexEpoch(spark, fpDir) == 0L)
+      fpFam.appendFacts(fpDir, b1df, g)
+      assert(IndexFamily.committedEpoch(spark, tfDir) == 1L)
+      assert(IndexFamily.committedEpoch(spark, fpDir) == 0L)
       // the composed replay of the SAME micro-batch: TF skips
       // (committed), fingerprint detects its own pending marker and
       // heals as an upsert (fresh-generation tombstones kill the
@@ -912,7 +909,7 @@ class EventStreamsSpec extends SparkSpec {
       val healed = EventStreams.ingestFamiliesBatch(b1df, 1L, families)
       assert(healed == Seq("tf" -> false, "fingerprint" -> true))
       assert(Seq(tfDir, fpDir).map(
-        EventStreams.committedTfIndexEpoch(spark, _)) == Seq(1L, 1L))
+        IndexFamily.committedEpoch(spark, _)) == Seq(1L, 1L))
       // fingerprint ≡ a cleanly built index (a missed heal would
       // double doc 3's fingerprints and inflate every shared count)
       graft.operators.Dedup.writeFingerprintIndex(
@@ -928,7 +925,7 @@ class EventStreamsSpec extends SparkSpec {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
   }
 
-  test("ingestFingerprintIndexBatch: exactly-once per epoch, and a " +
+  test("ingestBatch (fingerprint): exactly-once per epoch, and a " +
       "crashed-after-facts delivery self-heals on an append-mode " +
       "replay (candidates ≡ a cleanly appended index)") {
     import spark.implicits._
@@ -955,8 +952,8 @@ class EventStreamsSpec extends SparkSpec {
         fpBuckets = 4)
       // epoch 0 ingests once; its replay is skipped
       val b0 = inc0.toDF("doc_id", "text")
-      assert(EventStreams.ingestFingerprintIndexBatch(b0, 0L, dir))
-      assert(!EventStreams.ingestFingerprintIndexBatch(b0, 0L, dir))
+      assert(fpFam.ingestBatch(dir, b0, 0L))
+      assert(!fpFam.ingestBatch(dir, b0, 0L))
       // epoch 1 crashes after its facts; the append-mode replay heals
       // (without the heal, doc 4's fingerprints double and every
       // shared count inflates)
@@ -965,9 +962,8 @@ class EventStreamsSpec extends SparkSpec {
       graft.sink.IndexManifest.commit(spark, dir,
         m0.copy(pendingEpoch = 1L))
       val g = graft.sink.IndexLayout.reserveGen(spark, dir)
-      graft.operators.Dedup.appendFingerprintFacts(dir, b1, "doc_id",
-        "text", g)
-      assert(EventStreams.ingestFingerprintIndexBatch(b1, 1L, dir))
+      fpFam.appendFacts(dir, b1, g)
+      assert(fpFam.ingestBatch(dir, b1, 1L))
       graft.operators.Dedup.writeFingerprintIndex(
         (corpus ++ inc0 ++ inc1).toDF("doc_id", "text"), clean,
         k = 10, w = 4, fpBuckets = 4)
