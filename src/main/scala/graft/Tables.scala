@@ -61,22 +61,29 @@ object Tables {
     }
   }
 
+  /** Run `body` with `spark.sql.legacy.parquet.nanosAsLong` set, then
+    * restore the session's previous value (or unset it). The flag is
+    * session-wide (no per-reader option exists) but is only consulted
+    * while a relation is resolved (captured into the relation's hadoop
+    * conf), so it can be restored immediately after `spark.read` /
+    * `spark.readStream` — verified: count() succeeds with the flag back
+    * at false — leaving unrelated TIMESTAMP(NANOS) reads in the
+    * session untouched. For non-nanos layouts the flag is inert.
+    */
+  def withNanosAsLong[A](spark: SparkSession)(body: => A): A = {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    if (name == "events") {
-      // The nanosAsLong flag is only consulted while the relation is
-      // resolved (captured into the relation's hadoop conf), so it can
-      // be restored immediately after `spark.read` — verified: count()
-      // succeeds with the flag back at false — leaving unrelated
-      // TIMESTAMP(NANOS) reads in the session untouched. For non-nanos
-      // layouts the flag is inert.
-      val prev = spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      try normalizeTs(spark.read.parquet(s"$sfDir/$name.parquet"))
-      finally prev match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-        case None =>
-          spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-      }
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
+    if (name == "events")
+      withNanosAsLong(spark)(
+        normalizeTs(spark.read.parquet(s"$sfDir/$name.parquet")))
+    else spark.read.parquet(s"$sfDir/$name.parquet")
 }

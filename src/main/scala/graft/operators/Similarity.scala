@@ -1,23 +1,26 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Similarity search over embedding columns (`array<float>`).
   *
-  * Two paths, per the standard ANN playbook:
-  *  - [[bruteForceTopK]]: exact cosine top-k — the correctness baseline.
-  *    The query side is broadcast, so the candidate scan parallelizes
-  *    perfectly and never shuffles; per-group top-k via ranking window.
-  *  - [[lshNearDupPairs]]: sign-random-projection LSH — the scale path.
-  *    Documents reduce to a small bucket id; only same-bucket pairs are
-  *    compared, an equi-join that scales linearly in practice.
+  * The arms — exhaustive ([[bruteForceTopK]], the correctness
+  * baseline: the query side broadcasts, so the candidate scan never
+  * shuffles), IVF, PQ, IVF-PQ, sign-random-projection LSH
+  * ([[lshNearDupPairs]]: only same-bucket pairs are compared) and
+  * caller-supplied candidates — differ only in candidate generation.
+  * Every scoring and selection step is one shared private stage:
+  * [[vecs]], [[cos6]], [[probeCells]], [[adcTopK]], [[topK]],
+  * [[argmax]], [[marginTail]].
   *
-  * Numeric policy: dot products run in double via `aggregate` in index
-  * order (same sequential order DuckDB's list functions use) and final
-  * similarities are rounded to 6 decimals on both engines, putting
-  * cross-engine float divergence (~1e-15) far below the comparison
-  * granularity.
+  * Numeric policy: dot products run in double in index order (the
+  * native kernel sums left to right, the sequential order DuckDB's
+  * list functions use) and final similarities are rounded to 6
+  * decimals on both engines, putting cross-engine float divergence
+  * (~1e-15) far below the comparison granularity.
   */
 object Similarity {
 
@@ -62,6 +65,44 @@ object Similarity {
     * list_dot_product/sqrt(..)·sqrt(..) evaluation shape. */
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(norm2(a)) * sqrt(norm2(b)))
+
+  /** The scoring projection `(id, e: array<double>, nrm)` under the
+    * caller's names: the embedding cast and its norm computed once per
+    * vector, never once per (query, candidate) pair —
+    * sqrt(‖a‖²)·sqrt(‖b‖²) is the same float op either way. */
+  private def vecs(df: DataFrame, id: Column, embCol: String,
+      e: String, nrm: String): DataFrame =
+    df.select(id, darr(col(embCol)).as(e),
+      sqrt(norm2(col(embCol))).as(nrm))
+
+  /** The rounded cosine every argmax and rank sees, over precomputed
+    * norms: `round(dot(a, b) / (‖a‖·‖b‖), 6)` — rounding BEFORE any
+    * comparison makes cell assignment and ranking cross-engine
+    * deterministic (ties then break by id). */
+  private def cos6(a: String, b: String, na: String, nb: String): Column =
+    round(dot(col(a), col(b)) / (col(na) * col(nb)), 6)
+
+  /** A 6-decimal similarity as exact integer micro-units: the DECIMAL
+    * cast makes ×10⁶ exact, so sums and margins have no float
+    * boundary. */
+  private def micro(sim6: Column): Column =
+    (sim6.cast("decimal(10,6)") * 1000000).cast("bigint")
+
+  /** The top-1 argmax every mutual-NN and margin arm shares: `value`
+    * at the highest `score`, ties to the lowest `id` (`nr` is the
+    * negated id). A map-side combining `max_by`, never a ranking
+    * window. */
+  private def argmax(value: Column, score: String, id: String): Column =
+    max_by(value, struct(col(score), (-col(id)).as("nr")))
+
+  /** Each `by` group's first `k` rows under `order`, numbered in a
+    * BIGINT `rank` column — the ranking window of every top-k arm. */
+  private def topK(scored: DataFrame, by: String, k: Int,
+      order: Column*): DataFrame =
+    scored.withColumn("rank", row_number()
+        .over(Window.partitionBy(col(by)).orderBy(order: _*))
+        .cast("bigint"))
+      .filter(col("rank") <= k)
 
   /** Per-vector int8 scalar quantization: maps each component into
     * [-128, 127] by min/max scaling — `code = round((v−mn)/(mx−mn)·255)
@@ -111,6 +152,65 @@ object Similarity {
     transform(q.getField("codes"),
       c => q.getField("mn") + (c + 128).cast("double") * q.getField("step"))
 
+  /** One row per (vector, subspace): `(idAs, carry…, j, svAs)` — the
+    * shared subvector explode of the PQ family. `carry` columns ride
+    * along unchanged. */
+  private def pqSubvectors(in: DataFrame, dims: Int, m: Int,
+      idCol: String, embCol: String, idAs: String, svAs: String,
+      carry: Seq[String] = Nil): DataFrame = {
+    require(m > 0 && dims % m == 0, "m must divide dims")
+    val sub = dims / m
+    val keys = col(idAs) +: carry.map(col)
+    in.select((col(idCol).as(idAs) +: carry.map(col)) :+
+        darr(col(embCol)).as("d"): _*)
+      .select(keys :+ explode(transform(
+        sequence(lit(0), lit(m - 1)),
+        j => struct(j.as("j"),
+          slice(col("d"), j * sub + 1, lit(sub)).as(svAs)))).as("x"): _*)
+      .select(keys ++ Seq(col("x.j").as("j"), col(s"x.$svAs").as(svAs)): _*)
+  }
+
+  /** The deterministic per-subspace codebook `(j, cen_id, cv)`:
+    * subvectors of the `nCentroids` lowest-id vectors. */
+  private def pqCentroids(df: DataFrame, dims: Int, m: Int,
+      nCentroids: Int, idCol: String, embCol: String): DataFrame =
+    pqSubvectors(df.orderBy(col(idCol)).limit(nCentroids),
+      dims, m, idCol, embCol, "cen_id", "cv")
+
+  /** A per-subspace codebook `(j, cen_id, cv)` packed to ONE row per
+    * subspace of parallel arrays `(j, cen_ids, cvs, cvvs)` — the
+    * broadcast side of the fused argmin assignment
+    * ([[graft.functions.VectorKernel.bestCodeL2]]). `cvv = dot(cv,
+    * cv)` is precomputed once per CENTROID here instead of once per
+    * (subvector, centroid) pair in the fan-out it replaces. */
+  private def packCodebook(cen: DataFrame): DataFrame =
+    packed(cen.select(col("j"), col("cen_id"), darr(col("cv")).as("cv"))
+      .withColumn("cvv", graft.functions.Vectors.dot(col("cv"), col("cv"))),
+      Seq("j"), "cen_id", "cv", "cvv")
+
+  /** Each `keys` group's rows as parallel arrays `<field>s` — the
+    * broadcast side of the fused argmin/argmax kernels. */
+  private def packed(df: DataFrame, keys: Seq[String],
+      fields: String*): DataFrame =
+    df.groupBy(keys.map(col): _*)
+      .agg(collect_list(struct(fields.map(col): _*)).as("cs"))
+      .select(keys.map(col) ++ fields.map(f =>
+        transform(col("cs"), x => x.getField(f)).as(s"${f}s")): _*)
+
+  private def pqAssignWith(cen: DataFrame, df: DataFrame,
+      dims: Int, m: Int, idCol: String, embCol: String): DataFrame = {
+    val s = graft.Tables.rebalance(
+      pqSubvectors(df, dims, m, idCol, embCol, "id", "sv"))
+    // fused argmin: one kernel call per (vector, subspace) row against
+    // the packed subspace codebook — replaces the ×nCentroids fan-out
+    // join + min_by aggregation (identical dist2 rounding and tie
+    // order — ArgKernelSpec; guide §4, optimization round 20)
+    s.join(broadcast(packCodebook(cen)), Seq("j"))
+      .select(col("id"), col("j"),
+        graft.functions.Vectors.bestCodeL2(col("sv"), col("cen_ids"),
+          col("cvs"), col("cvvs")).as("code"))
+  }
+
   /** Product-quantization codebook assignment (Jégou et al. 2011): each
     * vector splits into `m` subvectors of `dims/m` components; each
     * subvector maps to its nearest (rounded squared-L2, ties to the
@@ -128,59 +228,6 @@ object Similarity {
     * m·log₂(nCentroids) bits per vector (here 8×4 bits vs int8's 64
     * bytes) at the cost of centroid-table lookups.
     */
-  /** One row per (vector, subspace): `(idAs, j, svAs)` — the shared
-    * subvector explode of the PQ family. */
-  private def pqSubvectors(in: DataFrame, dims: Int, m: Int,
-      idCol: String, embCol: String,
-      idAs: String, svAs: String): DataFrame = {
-    require(m > 0 && dims % m == 0, "m must divide dims")
-    val sub = dims / m
-    in.select(col(idCol).as(idAs), darr(col(embCol)).as("d"))
-      .select(col(idAs), explode(transform(
-        sequence(lit(0), lit(m - 1)),
-        j => struct(j.as("j"),
-          slice(col("d"), j * sub + 1, lit(sub)).as(svAs)))).as("x"))
-      .select(col(idAs), col("x.j").as("j"), col(s"x.$svAs").as(svAs))
-  }
-
-  /** The deterministic per-subspace codebook `(j, cen_id, cv)`:
-    * subvectors of the `nCentroids` lowest-id vectors. */
-  private def pqCentroids(df: DataFrame, dims: Int, m: Int,
-      nCentroids: Int, idCol: String, embCol: String): DataFrame =
-    pqSubvectors(df.orderBy(col(idCol)).limit(nCentroids),
-      dims, m, idCol, embCol, "cen_id", "cv")
-
-  /** A per-subspace codebook `(j, cen_id, cv)` packed to ONE row per
-    * subspace of parallel arrays `(j, cen_ids, cvs, cvvs)` — the
-    * broadcast side of the fused argmin assignment
-    * ([[graft.functions.VectorKernel.bestCodeL2]]). `cvv = dot(cv,
-    * cv)` is precomputed once per CENTROID here instead of once per
-    * (subvector, centroid) pair in the fan-out it replaces. */
-  private def packCodebook(cen: DataFrame): DataFrame =
-    cen.select(col("j"), col("cen_id"), darr(col("cv")).as("cv"))
-      .withColumn("cvv", graft.functions.Vectors.dot(col("cv"), col("cv")))
-      .groupBy(col("j"))
-      .agg(collect_list(struct(col("cen_id"), col("cv"), col("cvv")))
-        .as("cs"))
-      .select(col("j"),
-        transform(col("cs"), x => x.getField("cen_id")).as("cen_ids"),
-        transform(col("cs"), x => x.getField("cv")).as("cvs"),
-        transform(col("cs"), x => x.getField("cvv")).as("cvvs"))
-
-  private def pqAssignWith(cen: DataFrame, df: DataFrame,
-      dims: Int, m: Int, idCol: String, embCol: String): DataFrame = {
-    val s = graft.Tables.rebalance(
-      pqSubvectors(df, dims, m, idCol, embCol, "id", "sv"))
-    // fused argmin: one kernel call per (vector, subspace) row against
-    // the packed subspace codebook — replaces the ×nCentroids fan-out
-    // join + min_by aggregation (identical dist2 rounding and tie
-    // order — ArgKernelSpec; guide §4, optimization round 20)
-    s.join(broadcast(packCodebook(cen)), Seq("j"))
-      .select(col("id"), col("j"),
-        graft.functions.Vectors.bestCodeL2(col("sv"), col("cen_ids"),
-          col("cvs"), col("cvvs")).as("code"))
-  }
-
   def pqAssign(
       df: DataFrame, dims: Int, m: Int, nCentroids: Int,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame =
@@ -267,10 +314,8 @@ object Similarity {
     * Scale shape: candidates carry only their m codes; the per-query
     * distance TABLE (|queries|·m·nCentroids rows — the small side by
     * construction) broadcasts onto the code stream, and the partial
-    * aggregation reduces to |queries|·|candidates| sums of m terms.
-    * Per-subspace distances round to 6 decimals and accumulate in
-    * DECIMAL, so the sum is associative (partition-order-proof) and
-    * SQL-replayable.
+    * aggregation reduces to |queries|·|candidates| sums of m terms
+    * ([[adcTopK]]).
     */
   def pqTopK(
       queries: DataFrame, candidates: DataFrame, k: Int,
@@ -282,25 +327,35 @@ object Similarity {
         trainedPqCentroids(candidates, dims, m, nCentroids, trainIters,
           idCol, embCol)
       else pqCentroids(candidates, dims, m, nCentroids, idCol, embCol)
-    val assign = pqAssignWith(cen, candidates, dims, m, idCol, embCol)
-    val qsub = pqSubvectors(queries, dims, m, idCol, embCol,
-      "query_id", "qv")
-    val table = qsub.join(cen, Seq("j"))
-      .select(col("query_id"), col("j"), col("cen_id").as("code"),
+    val table = adcTable(pqSubvectors(queries, dims, m, idCol, embCol,
+      "query_id", "qv"), cen, "query_id", "j")
+    adcTopK(pqAssignWith(cen, candidates, dims, m, idCol, embCol)
+      .join(broadcast(table), Seq("j", "code"))
+      .filter(col("query_id") =!= col("id")), k)
+  }
+
+  /** The per-query ADC distance table: for each query subvector `qv`
+    * and each codebook centroid `cv` of its subspace, the squared L2
+    * rounded to 6 decimals as DECIMAL(20,6) — `(keys…, code, d2)`. */
+  private def adcTable(qsub: DataFrame, codebook: DataFrame,
+      keys: String*): DataFrame =
+    qsub.join(codebook, Seq("j"))
+      .select(keys.map(col) ++ Seq(col("cen_id").as("code"),
         round(dot(col("qv"), col("qv")) - dot(col("qv"), col("cv")) * 2
           + dot(col("cv"), col("cv")), 6)
-          .cast("decimal(20,6)").as("d2"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("adist"), col("neighbor_id"))
-    assign.join(broadcast(table), Seq("j", "code"))
-      .filter(col("query_id") =!= col("id"))
-      .groupBy(col("query_id"), col("id"))
-      .agg(sum(col("d2")).cast("double").as("adist"))
-      .select(col("query_id"), col("id").as("neighbor_id"), col("adist"))
-      .withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
-  }
+          .cast("decimal(20,6)").as("d2")): _*)
+
+  /** The ADC tail: over `(query_id, id, d2)` rows — one per (query,
+    * candidate, subspace) — the DECIMAL sum of the subspace distances
+    * (associative, so partition-order-proof and SQL-replayable),
+    * ranked ascending with id tiebreak:
+    * `(query_id, neighbor_id, adist, rank)`. */
+  private def adcTopK(terms: DataFrame, k: Int): DataFrame =
+    topK(terms.groupBy(col("query_id"), col("id"))
+        .agg(sum(col("d2")).cast("double").as("adist"))
+        .select(col("query_id"), col("id").as("neighbor_id"),
+          col("adist")),
+      "query_id", k, col("adist"), col("neighbor_id"))
 
   /** ±1 sign vector (length dims) for hyperplane `p`, derived from md5 so
     * the oracle can inline the identical literal list.
@@ -309,38 +364,20 @@ object Similarity {
     (0 until dims).map(i =>
       if ((TextOps.hash60Const(s"plane:$p:$i") & 1L) == 1L) 1.0 else -1.0)
 
-  /** Sign-random-projection bucket id over `planes` hyperplanes (bit p =
-    * sign of ⟨e, plane_p⟩) — single-table convenience form of
-    * [[lshTableBucket]]. */
-  def lshBucket(e: Column, planes: Int, dims: Int): Column =
-    lshTableBucket(e, 0, planes, dims)
-
   /** Exact cosine top-k: for each query vector, the k nearest candidates
     * (excluding itself), ranked by rounded cosine with id tiebreak.
     */
   def bruteForceTopK(
       queries: DataFrame, candidates: DataFrame, k: Int,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    // Norms are computed once per vector, not once per (query, candidate)
-    // pair — sqrt(‖a‖²)·sqrt(‖b‖²) is the same float op either way, so
-    // results (and the oracle) are unchanged while the per-pair work drops
-    // to a single dot product.
-    val q = queries.select(col(idCol).as("query_id"),
-      darr(col(embCol)).as("q_emb"),
-      sqrt(norm2(col(embCol))).as("q_nrm"))
-    val c = graft.Tables.rebalance(
-      candidates.select(col(idCol).as("neighbor_id"),
-        darr(col(embCol)).as("c_emb"),
-        sqrt(norm2(col(embCol))).as("c_nrm")))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(dot(col("q_emb"), col("c_emb")) /
-          (col("q_nrm") * col("c_nrm")), 6).as("sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
+    val q = vecs(queries, col(idCol).as("query_id"), embCol, "q_emb",
+      "q_nrm")
+    val c = graft.Tables.rebalance(vecs(candidates,
+      col(idCol).as("neighbor_id"), embCol, "c_emb", "c_nrm"))
+    topK(c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+        .select(col("query_id"), col("neighbor_id"),
+          cos6("q_emb", "c_emb", "q_nrm", "c_nrm").as("sim")),
+      "query_id", k, col("sim").desc, col("neighbor_id"))
   }
 
   /** Mutual nearest neighbors — the bitext-mining / paired-data shape
@@ -385,6 +422,26 @@ object Similarity {
       .orderBy(col("a"))
   }
 
+  /** Each `by` row's top-1 `id` in a scored pair stream `(by, id,
+    * sim)` — the [[argmax]] aggregation (partial map-side combine), not
+    * a ranking window: `(by, id, sim)`, one row per `by`. */
+  private def top1(scored: DataFrame, by: String = "query_id",
+      id: String = "neighbor_id"): DataFrame =
+    scored.groupBy(col(by))
+      .agg(argmax(struct(col(id), col("sim")), "sim", id).as("best"))
+      .select(col(by), col(s"best.$id").as(id), col("best.sim").as("sim"))
+
+  /** A caller's candidate pairs `(aId, bId)` scored by [[cos6]]: each
+    * side's [[vecs]] frame `(id, e, nrm)` joins on its id — ids are
+    * join keys, never a cross product: `(aId, bId, sim)`. */
+  private def scorePairs(pairs: DataFrame, a: DataFrame,
+      b: DataFrame): DataFrame = {
+    val Array(aId, aE, aN) = a.columns
+    val Array(bId, bE, bN) = b.columns
+    pairs.join(a, Seq(aId)).join(b, Seq(bId))
+      .select(col(aId), col(bId), cos6(aE, bE, aN, bN).as("sim"))
+  }
+
   /** CANDIDATE-BOUNDED mutual nearest neighbors — the 100 TB arm of
     * [[mutualNearestNeighbors]]: IVF cells bound which pairs are ever
     * scored ([[ivfTopK]]'s probe join — queries score only their
@@ -412,51 +469,13 @@ object Similarity {
   def mutualNearestNeighborsIvf(df: DataFrame,
       nCentroids: Int, nprobe: Int,
       idCol: String = "vec_id", embCol: String = "embedding",
-      trainIters: Int = 0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // [[ivfTopK]]'s probe pipeline, with the generic k ranking window
-    // replaced by a per-query max_by argmax: k = 1 needs no sorted
-    // group — the partial aggregation combines map-side over the
-    // probed-cell scored stream (the assignCells shape), cutting the
-    // window sort of ~|q|·nprobe·|cell| rows. Same rounding, same
-    // (sim desc, id asc) tiebreak ⇒ bit-identical to ivfTopK(k=1)
-    // (spec-pinned via the ≡-exact equivalences).
-    val cen =
-      if (trainIters > 0)
-        trainedCentroids(df, nCentroids, trainIters, idCol, embCol)
-      else seedCentroids(df, nCentroids, idCol, embCol)
-    val assigned = assignCells(df, cen, idCol, embCol)
-      .select(col("id").as("neighbor_id"), darr(col("e")).as("c_emb"),
-        col("nrm").as("c_nrm"), col("cell"))
-    val q = df.select(col(idCol).as("query_id"),
-      darr(col(embCol)).as("q_emb"),
-      sqrt(norm2(col(embCol))).as("q_nrm"))
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("psim").desc, col("cen_id"))
-    val probes = q.join(broadcast(
-        cen.withColumn("_cend", darr(col("cen_e")))), lit(true))
-      .select(col("query_id"), col("q_emb"), col("q_nrm"),
-        col("cen_id"),
-        round(dot(col("q_emb"), col("_cend")) /
-          (col("q_nrm") * col("cen_nrm")), 6).as("psim"))
-      .withColumn("r", row_number().over(wProbe))
-      .filter(col("r") <= nprobe)
-      .select(col("query_id"), col("q_emb"), col("q_nrm"),
-        col("cen_id").as("cell"))
-    val np = df.sparkSession.sparkContext.defaultParallelism
-    val top1 = probes
-      .join(assigned.repartition(np, col("cell")), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(dot(col("q_emb"), col("c_emb")) /
-          (col("q_nrm") * col("c_nrm")), 6).as("sim"))
-      .groupBy(col("query_id"))
-      .agg(max_by(struct(col("neighbor_id"), col("sim")),
-        struct(col("sim"), (-col("neighbor_id")).as("ni"))).as("best"))
-      .select(col("query_id"), col("best.neighbor_id").as("neighbor_id"),
-        col("best.sim").as("sim"))
-    mutualFilter(top1)
-  }
+      trainIters: Int = 0): DataFrame =
+    // ivfTopK(k = 1) with the map-side [[top1]] argmax in place of the
+    // ranking window's sort of ~|q|·nprobe·|cell| rows; same rounding
+    // and tiebreak ⇒ bit-identical (spec-pinned via the ≡-exact
+    // equivalences)
+    mutualFilter(top1(ivfScores(df, df, nCentroids, nprobe, idCol,
+      embCol, trainIters)))
 
   /** [[mutualNearestNeighbors]] over a CALLER-SUPPLIED candidate pair
     * frame — the generic bounded arm for candidate generators this
@@ -477,32 +496,17 @@ object Similarity {
   def mutualNearestNeighborsFromCandidates(pairs: DataFrame,
       emb: DataFrame, idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    val e = emb.select(col(idCol).cast("long").as("id"),
-      darr(col(embCol)).as("e"), sqrt(norm2(col(embCol))).as("nrm"))
     // symmetrize once: per-side top-1 needs both directions of each
     // undirected candidate pair
-    val undirected = pairs
-      .select(col("da").cast("long").as("qid"),
-        col("db").cast("long").as("nid"))
-    val directed = undirected.union(
-      undirected.select(col("nid").as("qid"), col("qid").as("nid")))
-    val scored = directed
-      .join(e.select(col("id").as("qid"), col("e").as("q_e"),
-        col("nrm").as("q_nrm")), Seq("qid"))
-      .join(e.select(col("id").as("nid"), col("e").as("n_e"),
-        col("nrm").as("n_nrm")), Seq("nid"))
-      .select(col("qid"), col("nid"),
-        round(dot(col("q_e"), col("n_e")) /
-          (col("q_nrm") * col("n_nrm")), 6).as("sim"))
-    // within-candidates top-1: max_by over (sim, −id) — the
-    // assignCells aggregation shape (partial map-side combine), not a
-    // ranking window
-    val top1 = scored.groupBy(col("qid"))
-      .agg(max_by(struct(col("nid"), col("sim")),
-        struct(col("sim"), (-col("nid")).as("ni"))).as("best"))
-      .select(col("qid").as("query_id"),
-        col("best.nid").as("neighbor_id"), col("best.sim").as("sim"))
-    mutualFilter(top1)
+    val undirected = pairs.select(col("da").cast("long").as("query_id"),
+      col("db").cast("long").as("neighbor_id"))
+    val directed = undirected.union(undirected.select(
+      col("neighbor_id").as("query_id"), col("query_id").as("neighbor_id")))
+    def side(id: String, p: String) =
+      vecs(emb, col(idCol).cast("long").as(id), embCol, s"${p}_e",
+        s"${p}_nrm")
+    mutualFilter(top1(scorePairs(directed, side("query_id", "q"),
+      side("neighbor_id", "n"))))
   }
 
   /** Every (left, right) pair's rounded cosine — the cross-corpus
@@ -516,17 +520,12 @@ object Similarity {
     */
   private def crossScores(left: DataFrame, right: DataFrame,
       idCol: String, embCol: String): DataFrame = {
-    val l = left.select(col(idCol).as("left_id"),
-      darr(col(embCol)).as("l_emb"),
-      sqrt(norm2(col(embCol))).as("l_nrm"))
-    val r = graft.Tables.rebalance(
-      right.select(col(idCol).as("right_id"),
-        darr(col(embCol)).as("r_emb"),
-        sqrt(norm2(col(embCol))).as("r_nrm")))
+    val l = vecs(left, col(idCol).as("left_id"), embCol, "l_emb", "l_nrm")
+    val r = graft.Tables.rebalance(vecs(right, col(idCol).as("right_id"),
+      embCol, "r_emb", "r_nrm"))
     r.join(broadcast(l), lit(true))
       .select(col("left_id"), col("right_id"),
-        round(dot(col("l_emb"), col("r_emb")) /
-          (col("l_nrm") * col("r_nrm")), 6).as("sim"))
+        cos6("l_emb", "r_emb", "l_nrm", "r_nrm").as("sim"))
   }
 
   /** CROSS-CORPUS mutual nearest neighbors — the actual bitext-mining
@@ -551,14 +550,9 @@ object Similarity {
       idCol: String = "vec_id", embCol: String = "embedding")
       : DataFrame = {
     val scored = crossScores(left, right, idCol, embCol)
-    val lTop = scored.groupBy(col("left_id"))
-      .agg(max_by(struct(col("right_id"), col("sim")),
-        struct(col("sim"), (-col("right_id")).as("nr"))).as("b"))
-      .select(col("left_id"), col("b.right_id").as("right_id"),
-        col("b.sim").as("sim"))
+    val lTop = top1(scored, "left_id", "right_id")
     val rTop = scored.groupBy(col("right_id"))
-      .agg(max_by(col("left_id"),
-        struct(col("sim"), (-col("left_id")).as("nl"))).as("r_best"))
+      .agg(argmax(col("left_id"), "sim", "left_id").as("r_best"))
     lTop.join(rTop,
         lTop("right_id") === rTop("right_id") &&
           col("left_id") === col("r_best"))
@@ -582,32 +576,39 @@ object Similarity {
     * floor `//` agree on every operand sign). No float boundary —
     * the driver hash gates the margins exactly.
     *
-    * Cost shape: the scored stream is generated per consumer pass
-    * (map-side broadcast work, see [[crossScores]]); the two top-k
+    * Cost shape: the scored stream is generated once (map-side
+    * broadcast work, see [[crossScores]]) and persisted; the two top-k
     * neighborhoods need per-side ranking windows over the scored
     * stream (|L|·|R| rows at the exact baseline — at scale, generate
     * candidates with IVF/LSH first and run the same windows over the
     * candidate-bounded stream; the arithmetic is unchanged).
     */
   def marginMiningScores(left: DataFrame, right: DataFrame, k: Int,
-      idCol: String = "vec_id", embCol: String = "embedding",
-      cache: Boolean = true): DataFrame = {
-    require(k >= 1, "k must be >= 1")
-    import org.apache.spark.sql.expressions.Window
+      idCol: String = "vec_id", embCol: String = "embedding")
+      : DataFrame =
     // the micro-sim stream feeds BOTH per-side neighborhood windows;
-    // persist it (3 longs per pair — spillable) so the dot products
-    // run once, not per branch (the module's shared-frame contract:
-    // pass cache=false in long-lived sessions streaming many corpora,
-    // or when the pair stream is too large to spill profitably — at
-    // that size use candidate-bounded generation anyway)
-    val scored0 = crossScores(left, right, idCol, embCol)
-      .select(col("left_id"), col("right_id"),
-        (round(col("sim"), 6).cast("decimal(10,6)") * 1000000)
-          .cast("bigint").as("sim_micro"))
-    val scored = if (cache)
-      scored0.persist(org.apache.spark.storage.StorageLevel
-        .MEMORY_AND_DISK)
-    else scored0
+    // persisted (3 longs per pair — spillable), the dot products run
+    // once, not per branch
+    marginTail(simMicro(crossScores(left, right, idCol, embCol))
+      .persist(StorageLevel.MEMORY_AND_DISK), k)
+
+  /** `df` persisted MEMORY_AND_DISK when `cache` — the operators'
+    * shared-frame contract: a frame read by several plan branches is
+    * computed once. */
+  private def persistIf(cache: Boolean)(df: DataFrame): DataFrame =
+    if (cache) df.persist(StorageLevel.MEMORY_AND_DISK) else df
+
+  /** `(left_id, right_id, sim_micro)` of a scored cross-corpus pair
+    * stream `(left_id, right_id, sim)`. */
+  private def simMicro(scored: DataFrame): DataFrame =
+    scored.select(col("left_id"), col("right_id"),
+      micro(round(col("sim"), 6)).as("sim_micro"))
+
+  /** The margin arithmetic of both margin arms over a micro-sim
+    * stream `(left_id, right_id, sim_micro)`: per-side top-k
+    * neighborhood sums, the left top-1, and its margin. */
+  private def marginTail(scored: DataFrame, k: Int): DataFrame = {
+    require(k >= 1, "k must be >= 1")
     val wL = Window.partitionBy(col("left_id"))
       .orderBy(col("sim_micro").desc, col("right_id"))
     val wR = Window.partitionBy(col("right_id"))
@@ -617,9 +618,8 @@ object Similarity {
       .groupBy(col("left_id"))
       .agg(sum(col("sim_micro")).as("sum_l"),
         count(lit(1)).as("k_l"),
-        max_by(struct(col("right_id"), col("sim_micro")),
-          struct(col("sim_micro"), (-col("right_id")).as("nr")))
-          .as("top"))
+        argmax(struct(col("right_id"), col("sim_micro")), "sim_micro",
+          "right_id").as("top"))
     val rNbh = scored.withColumn("_r", row_number().over(wR))
       .filter(col("_r") <= k)
       .groupBy(col("right_id"))
@@ -628,9 +628,8 @@ object Similarity {
     // avg_micro = (sum_l·k_r + sum_r·k_l) / (2·k_l·k_r), sign-split
     // truncating so both engines agree on negative sums
     val s = col("sum_l") * col("k_r") + col("sum_r") * col("k_l")
-    val d = col("k_l") * col("k_r") * 2
-    val avgMicro = when(s < 0, -expr("(abs(sum_l * k_r + sum_r * k_l))" +
-        " div (k_l * k_r * 2)"))
+    val avgMicro = when(s < 0,
+        -expr("(abs(sum_l * k_r + sum_r * k_l)) div (k_l * k_r * 2)"))
       .otherwise(expr("(sum_l * k_r + sum_r * k_l)" +
         " div (k_l * k_r * 2)"))
     lNbh
@@ -650,9 +649,8 @@ object Similarity {
     * pairs `(left_id, right_id)` (undirected by construction — one
     * row per pair; ids live in separate namespaces); only those pairs
     * are ever scored, each side's k-NN neighborhood sum is its top-k
-    * WITHIN its candidates, and the margin arithmetic is byte-for-byte
-    * [[marginMiningScores]]' (micro ints, sign-split truncating
-    * average). Left vectors with no candidate produce nothing.
+    * WITHIN its candidates, and the margin arithmetic is the shared
+    * [[marginTail]]. Left vectors with no candidate produce nothing.
     *
     * Exact whenever the candidate set covers each side's true top-k
     * in the other corpus (spec-pinned: candidates ⊇ per-side top-k ⇒
@@ -667,56 +665,13 @@ object Similarity {
   def marginMiningScoresFromCandidates(pairs: DataFrame,
       left: DataFrame, right: DataFrame, k: Int,
       idCol: String = "vec_id", embCol: String = "embedding")
-      : DataFrame = {
-    require(k >= 1, "k must be >= 1")
-    import org.apache.spark.sql.expressions.Window
-    val l = left.select(col(idCol).as("left_id"),
-      darr(col(embCol)).as("l_emb"),
-      sqrt(norm2(col(embCol))).as("l_nrm"))
-    val r = right.select(col(idCol).as("right_id"),
-      darr(col(embCol)).as("r_emb"),
-      sqrt(norm2(col(embCol))).as("r_nrm"))
-    val scored = pairs
-      .select(col("left_id").cast("long").as("left_id"),
-        col("right_id").cast("long").as("right_id"))
-      .join(l, Seq("left_id"))
-      .join(r, Seq("right_id"))
-      .select(col("left_id"), col("right_id"),
-        (round(round(dot(col("l_emb"), col("r_emb")) /
-            (col("l_nrm") * col("r_nrm")), 6), 6)
-          .cast("decimal(10,6)") * 1000000)
-          .cast("bigint").as("sim_micro"))
-    val wL = Window.partitionBy(col("left_id"))
-      .orderBy(col("sim_micro").desc, col("right_id"))
-    val wR = Window.partitionBy(col("right_id"))
-      .orderBy(col("sim_micro").desc, col("left_id"))
-    val lNbh = scored.withColumn("_r", row_number().over(wL))
-      .filter(col("_r") <= k)
-      .groupBy(col("left_id"))
-      .agg(sum(col("sim_micro")).as("sum_l"),
-        count(lit(1)).as("k_l"),
-        max_by(struct(col("right_id"), col("sim_micro")),
-          struct(col("sim_micro"), (-col("right_id")).as("nr")))
-          .as("top"))
-    val rNbh = scored.withColumn("_r", row_number().over(wR))
-      .filter(col("_r") <= k)
-      .groupBy(col("right_id"))
-      .agg(sum(col("sim_micro")).as("sum_r"),
-        count(lit(1)).as("k_r"))
-    val s = col("sum_l") * col("k_r") + col("sum_r") * col("k_l")
-    val avgMicro = when(s < 0,
-        -expr("(abs(sum_l * k_r + sum_r * k_l)) div (k_l * k_r * 2)"))
-      .otherwise(expr("(sum_l * k_r + sum_r * k_l)" +
-        " div (k_l * k_r * 2)"))
-    lNbh
-      .select(col("left_id"), col("top.right_id").as("right_id"),
-        col("top.sim_micro").as("sim_micro"), col("sum_l"),
-        col("k_l"))
-      .join(rNbh, Seq("right_id"))
-      .select(col("left_id"), col("right_id"), col("sim_micro"),
-        (col("sim_micro") - avgMicro).as("margin_micro"))
-      .orderBy(col("left_id"))
-  }
+      : DataFrame =
+    marginTail(simMicro(scorePairs(
+      pairs.select(col("left_id").cast("long").as("left_id"),
+        col("right_id").cast("long").as("right_id")),
+      vecs(left, col(idCol).as("left_id"), embCol, "l_emb", "l_nrm"),
+      vecs(right, col(idCol).as("right_id"), embCol, "r_emb", "r_nrm"))),
+      k)
 
   /** CROSS-CORPUS LSH candidate pairs: `(left_id, right_id)` pairs of
     * vectors sharing a sign-LSH bucket in ANY of `tables` tables — the
@@ -735,19 +690,26 @@ object Similarity {
       planesPerTable: Int, dims: Int, idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
     def bucketed(df: DataFrame, as: String): DataFrame =
-      graft.Tables.rebalance(
-          df.select(col(idCol).as(as), col(embCol).as("e")))
-        .select(col(as), posexplode(
-          graft.functions.Lsh.buckets(darr(col("e")), tables,
-            planesPerTable, dims)))
-        .select(col(as), col("pos").cast("int").as("t"),
-          col("col").as("bk"))
+      lshBuckets(graft.Tables.rebalance(
+          df.select(col(idCol).as(as), col(embCol).as("e"))),
+        as, "e", tables, planesPerTable, dims)
     val np = left.sparkSession.sparkContext.defaultParallelism
     bucketed(left, "left_id").repartition(np, col("t"), col("bk"))
       .join(bucketed(right, "right_id"), Seq("t", "bk"))
       .select(col("left_id"), col("right_id"))
       .distinct()
   }
+
+  /** One row per (vector, LSH table): `(id, t, bk)` — the bucket of
+    * every table from ONE native kernel call per row over the `emb`
+    * column (bit-identical to the per-table literal-array dot products
+    * of [[lshTableBucket]], but the plan carries ~5 nodes instead of
+    * ~1,500 literals — see LshKernel). */
+  private def lshBuckets(df: DataFrame, id: String, emb: String,
+      tables: Int, planesPerTable: Int, dims: Int): DataFrame =
+    df.select(col(id), posexplode(graft.functions.Lsh.buckets(
+        darr(col(emb)), tables, planesPerTable, dims)))
+      .select(col(id), col("pos").cast("int").as("t"), col("col").as("bk"))
 
   /** LSH geometry auto-calibration — the measurement PLANS.md round
     * 11 ("ScaleMutual") proved is make-or-break (6×4 planes LOSE
@@ -789,9 +751,7 @@ object Similarity {
     // right (the max_by argmax over the broadcast cross stream)
     val truth = crossScores(sl, sr, idCol, embCol)
       .groupBy(col("left_id"))
-      .agg(max_by(col("right_id"),
-        struct(col("sim"), (-col("right_id")).as("nr")))
-        .as("right_id"))
+      .agg(argmax(col("right_id"), "sim", "right_id").as("right_id"))
       .localCheckpoint()
     val sizes = sl.agg(count(lit(1)).as("n_left")).crossJoin(
       sr.agg(count(lit(1)).as("n_right"))).crossJoin(
@@ -805,11 +765,8 @@ object Similarity {
     val arms = graft.core.Par.mapInParallel(configs) {
       case (tables, planes) =>
       def occ(df: DataFrame, as: String): DataFrame =
-        df.select(posexplode(graft.functions.Lsh.buckets(
-            darr(col(embCol)), tables, planes, dims)))
-          .select(col("pos").as("t"), col("col").as("bk"))
-          .groupBy(col("t"), col("bk"))
-          .agg(count(lit(1)).as(as))
+        lshBuckets(df, idCol, embCol, tables, planes, dims)
+          .groupBy(col("t"), col("bk")).agg(count(lit(1)).as(as))
       val probeVol = occ(sl, "cl").join(occ(sr, "cr"), Seq("t", "bk"))
         .agg(coalesce(sum(col("cl") * col("cr")), lit(0L))
           .as("probe_volume"))
@@ -1137,6 +1094,15 @@ object Similarity {
     cen
   }
 
+  /** The coarse quantizer of every IVF arm: `trainIters` rounds of
+    * [[trainedCentroids]] when positive, else the lowest-id
+    * [[seedCentroids]]. */
+  private def coarseCentroids(df: DataFrame, nCentroids: Int,
+      trainIters: Int, idCol: String, embCol: String): DataFrame =
+    if (trainIters > 0)
+      trainedCentroids(df, nCentroids, trainIters, idCol, embCol)
+    else seedCentroids(df, nCentroids, idCol, embCol)
+
   /** Nearest-cell assignment against a (broadcast) centroid frame:
     * `(id, e, nrm, cell)` with cell = argmax rounded cosine, ties to the
     * lowest cen_id.
@@ -1171,16 +1137,10 @@ object Similarity {
     // order are bit-identical (VectorKernel.bestCellCosine mirrors
     // round(..,6) and the struct ordering exactly; ArgKernelSpec
     // pins kernel ≡ declarative). Guide §4; optimization round 20.
-    val packed = cen
-      .select(col("cen_id"), darr(col("cen_e")).as("cv"),
-        col("cen_nrm").as("cnrm"))
-      .agg(collect_list(struct(col("cen_id"), col("cv"), col("cnrm")))
-        .as("cs"))
-      .select(
-        transform(col("cs"), x => x.getField("cen_id")).as("cen_ids"),
-        transform(col("cs"), x => x.getField("cv")).as("cvs"),
-        transform(col("cs"), x => x.getField("cnrm")).as("cnrms"))
-    c.join(broadcast(packed), lit(true))
+    val table = packed(cen.select(col("cen_id"),
+      darr(col("cen_e")).as("cv"), col("cen_nrm").as("cnrm")), Nil,
+      "cen_id", "cv", "cnrm")
+    c.join(broadcast(table), lit(true))
       // empty centroid table ⇒ no assignment rows (the fan-out shape's
       // inner-join semantics, preserved)
       .where(size(col("cen_ids")) > 0)
@@ -1194,41 +1154,49 @@ object Similarity {
     * cells once ([[assignCells]]), queries probe only their `nprobe`
     * best cells, and exact scoring runs inside probed cells only —
     * search cost drops by ~nprobe/nCentroids versus brute force,
-    * trading bounded recall.
-    *
-    * All centroid joins broadcast; similarity is rounded to 6 decimals
-    * *before* the argmax/rank windows so cell assignment and ranking are
-    * cross-engine deterministic (ties broken by id).
+    * trading bounded recall. Scoring is the shared [[cos6]].
     */
   def ivfTopK(
       queries: DataFrame, candidates: DataFrame, k: Int,
       nCentroids: Int, nprobe: Int,
       idCol: String = "vec_id", embCol: String = "embedding",
-      trainIters: Int = 0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cen =
-      if (trainIters > 0)
-        trainedCentroids(candidates, nCentroids, trainIters, idCol, embCol)
-      else seedCentroids(candidates, nCentroids, idCol, embCol)
+      trainIters: Int = 0): DataFrame =
+    topK(ivfScores(queries, candidates, nCentroids, nprobe, idCol, embCol,
+        trainIters),
+      "query_id", k, col("sim").desc, col("neighbor_id"))
+
+  /** Each query's `nprobe` best cells — rounded cosine to the cell
+    * centroid, ties to the lowest cen_id: `(query_id, q_emb, q_nrm,
+    * cell)`, one row per probed cell. The centroid table broadcasts. */
+  private def probeCells(queries: DataFrame, idCol: String,
+      embCol: String, cells: DataFrame, nprobe: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("psim").desc, col("cen_id"))
+    vecs(queries, col(idCol).as("query_id"), embCol, "q_emb", "q_nrm")
+      .join(broadcast(cells.withColumn("_cend", darr(col("cen_e")))),
+        lit(true))
+      .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cen_id"),
+        cos6("q_emb", "_cend", "q_nrm", "cen_nrm").as("psim"))
+      .withColumn("_r", row_number().over(w))
+      .filter(col("_r") <= nprobe)
+      .select(col("query_id"), col("q_emb"), col("q_nrm"),
+        col("cen_id").as("cell"))
+  }
+
+  /** IVF candidate generation + exact scoring, shared by [[ivfTopK]]
+    * and [[mutualNearestNeighborsIvf]]: candidates assigned to their
+    * nearest cell ([[assignCells]]), each query scored against the
+    * candidates of its probed cells only, self pairs excluded —
+    * `(query_id, neighbor_id, sim)`. */
+  private def ivfScores(queries: DataFrame, candidates: DataFrame,
+      nCentroids: Int, nprobe: Int, idCol: String, embCol: String,
+      trainIters: Int): DataFrame = {
+    val cen = coarseCentroids(candidates, nCentroids, trainIters, idCol,
+      embCol)
     val assigned = assignCells(candidates, cen, idCol, embCol)
       .select(col("id").as("neighbor_id"), darr(col("e")).as("c_emb"),
         col("nrm").as("c_nrm"), col("cell"))
-    val q = queries.select(col(idCol).as("query_id"),
-      darr(col(embCol)).as("q_emb"),
-      sqrt(norm2(col(embCol))).as("q_nrm"))
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("psim").desc, col("cen_id"))
-    val probes = q.join(broadcast(
-        cen.withColumn("_cend", darr(col("cen_e")))), lit(true))
-      .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cen_id"),
-        round(dot(col("q_emb"), col("_cend")) /
-          (col("q_nrm") * col("cen_nrm")), 6).as("psim"))
-      .withColumn("r", row_number().over(wProbe))
-      .filter(col("r") <= nprobe)
-      .select(col("query_id"), col("q_emb"), col("q_nrm"),
-        col("cen_id").as("cell"))
-    val wRank = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
+    val probes = probeCells(queries, idCol, embCol, cen, nprobe)
     // same explosive-join guard as lshNearDupPairs: the probe⨝cell join's
     // inputs are small but its output is ~|queries|·nprobe·(N/nCentroids);
     // pin user-specified partitioning so AQE can't serialize the fan-out
@@ -1236,10 +1204,7 @@ object Similarity {
     probes.join(assigned.repartition(np, col("cell")), Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        round(dot(col("q_emb"), col("c_emb")) /
-          (col("q_nrm") * col("c_nrm")), 6).as("sim"))
-      .withColumn("rank", row_number().over(wRank).cast("bigint"))
-      .filter(col("rank") <= k)
+        cos6("q_emb", "c_emb", "q_nrm", "c_nrm").as("sim"))
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -1278,10 +1243,7 @@ object Similarity {
       idCol: String = "vec_id", embCol: String = "embedding",
       cache: Boolean = true,
       trainIters: Int = 0): (DataFrame, CacheHandle) = {
-    val cen =
-      if (trainIters > 0)
-        trainedCentroids(df, nCentroids, trainIters, idCol, embCol)
-      else seedCentroids(df, nCentroids, idCol, embCol)
+    val cen = coarseCentroids(df, nCentroids, trainIters, idCol, embCol)
     // the assignment frame feeds both self-join branches and the final
     // verdict join — persist so the centroid scoring runs once, not 3×.
     // CacheManager keys on the canonical plan, so repeat calls over the
@@ -1291,10 +1253,7 @@ object Similarity {
     // point discipline Freq.heavyHitterCounts documents). With the
     // default, spark.catalog.clearCache() after consuming the result
     // releases the entry (what Bench/Verify do between queries).
-    val a0 = assignCells(df, cen, idCol, embCol)
-    val a = if (cache)
-      a0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else a0
+    val a = persistIf(cache)(assignCells(df, cen, idCol, embCol))
     val np = df.sparkSession.sparkContext.defaultParallelism
     val ap = a.repartition(np, col("cell"))
     // "y has a lower-id near-identical neighbor x in its cell" ⇒ y is
@@ -1305,8 +1264,7 @@ object Similarity {
       darr(col("e")).as("_ed"))
     val dups = apd.as("x").join(apd.as("y"),
         col("x.cell") === col("y.cell") && col("x.id") < col("y.id"))
-      .filter(round(dot(col("x._ed"), col("y._ed")) /
-        (col("x.nrm") * col("y.nrm")), 6) >= threshold)
+      .filter(cos6("x._ed", "y._ed", "x.nrm", "y.nrm") >= threshold)
       .select(col("y.id").as("id")).distinct()
       .withColumn("semdup", lit(true))
     val result = a.join(dups, Seq("id"), "left")
@@ -1336,8 +1294,7 @@ object Similarity {
       .join(labels, Seq("neighbor_id"))
       .groupBy(col("query_id"), col("n_label"))
       .agg(count(lit(1)).as("n_votes"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
+    val w = Window.partitionBy(col("query_id"))
       .orderBy(col("n_votes").desc, col("n_label"))
     votes.withColumn("_r", row_number().over(w))
       .filter(col("_r") === 1)
@@ -1416,14 +1373,9 @@ object Similarity {
       */
     def append(newVecs: DataFrame, dims: Int, m: Int,
         idCol: String = "vec_id",
-        embCol: String = "embedding"): IvfPqIndex = {
-      val newCells = assignCells(newVecs, cells, idCol, embCol)
-        .select(col("id"), col("cell"))
-      val newCodes = pqAssignWith(codebook, newVecs, dims, m, idCol,
-          embCol)
-        .join(newCells, Seq("id"))
-      IvfPqIndex(cells, codebook, codes.unionByName(newCodes))
-    }
+        embCol: String = "embedding"): IvfPqIndex =
+      copy(codes = codes.unionByName(
+        ivfPqCodes(cells, codebook, newVecs, dims, m, idCol, embCol)))
   }
 
   object IvfPqIndex {
@@ -1485,13 +1437,10 @@ object Similarity {
     val spark = newVecs.sparkSession
     val man = graft.sink.IndexManifest.read(spark, path)
     def sub(l: String) = graft.sink.IndexLayout.dir(path, man, l)
-    val cells = spark.read.parquet(sub("cells"))
-    val codebook = spark.read.parquet(sub("codebook"))
-    val newCells = assignCells(newVecs, cells, idCol, embCol)
-      .select(col("id"), col("cell"))
     graft.sink.IndexLayout.appendFlatFacts(
-      pqAssignWith(codebook, newVecs, dims, m, idCol, embCol)
-        .join(newCells, Seq("id")),
+      ivfPqCodes(spark.read.parquet(sub("cells")),
+        spark.read.parquet(sub("codebook")), newVecs, dims, m, idCol,
+        embCol),
       path, "codes", gen)
   }
 
@@ -1647,18 +1596,23 @@ object Similarity {
   def ivfPqIndex(candidates: DataFrame, nCells: Int, dims: Int, m: Int,
       nCentroids: Int, idCol: String = "vec_id",
       embCol: String = "embedding", trainIters: Int = 0): IvfPqIndex = {
-    val cells =
-      if (trainIters > 0)
-        trainedCentroids(candidates, nCells, trainIters, idCol, embCol)
-      else seedCentroids(candidates, nCells, idCol, embCol)
-    val cand = assignCells(candidates, cells, idCol, embCol)
-      .select(col("id"), col("cell"))
+    val cells = coarseCentroids(candidates, nCells, trainIters, idCol,
+      embCol)
     val codebook = pqCentroids(candidates, dims, m, nCentroids,
       idCol, embCol)
-    val codes = pqAssignWith(codebook, candidates, dims, m, idCol, embCol)
-      .join(cand, Seq("id"))
-    IvfPqIndex(cells, codebook, codes)
+    IvfPqIndex(cells, codebook,
+      ivfPqCodes(cells, codebook, candidates, dims, m, idCol, embCol))
   }
+
+  /** The IVF-PQ code stream of `vecs` under a given geometry: one
+    * `(id, j, code, cell)` row per (vector, subspace) — each vector's
+    * nearest cell and its per-subspace PQ codes. */
+  private def ivfPqCodes(cells: DataFrame, codebook: DataFrame,
+      in: DataFrame, dims: Int, m: Int, idCol: String,
+      embCol: String): DataFrame =
+    pqAssignWith(codebook, in, dims, m, idCol, embCol)
+      .join(assignCells(in, cells, idCol, embCol)
+        .select(col("id"), col("cell")), Seq("id"))
 
   /** Search half of [[ivfPqTopK]]: probe the index's `nprobe` best
     * cells per query, broadcast the per-query ADC distance table, and
@@ -1669,38 +1623,14 @@ object Similarity {
   def ivfPqSearch(queries: DataFrame, index: IvfPqIndex, k: Int,
       nprobe: Int, dims: Int, m: Int, idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val q = queries.select(col(idCol).as("query_id"),
-      darr(col(embCol)).as("q_emb"),
-      sqrt(norm2(col(embCol))).as("q_nrm"))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("psim").desc, col("cen_id"))
-    val probes = q.join(broadcast(
-        index.cells.withColumn("_cend", darr(col("cen_e")))), lit(true))
-      .select(col("query_id"), col("cen_id"),
-        round(dot(col("q_emb"), col("_cend")) /
-          (col("q_nrm") * col("cen_nrm")), 6).as("psim"))
-      .withColumn("_r", row_number().over(wProbe))
-      .filter(col("_r") <= nprobe)
-      .select(col("query_id"), col("cen_id").as("cell"))
-    val qsub = pqSubvectors(queries, dims, m, idCol, embCol,
-      "query_id", "qv")
-    val table = qsub.join(index.codebook, Seq("j"))
-      .select(col("query_id"), col("j"), col("cen_id").as("code"),
-        round(dot(col("qv"), col("qv")) - dot(col("qv"), col("cv")) * 2
-          + dot(col("cv"), col("cv")), 6)
-          .cast("decimal(20,6)").as("d2"))
-    val wRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist"), col("neighbor_id"))
-    index.codes
+    val probes = probeCells(queries, idCol, embCol, index.cells, nprobe)
+      .select(col("query_id"), col("cell"))
+    val table = adcTable(pqSubvectors(queries, dims, m, idCol, embCol,
+      "query_id", "qv"), index.codebook, "query_id", "j")
+    adcTopK(index.codes
       .join(broadcast(probes), Seq("cell"))
       .filter(col("query_id") =!= col("id"))
-      .join(broadcast(table), Seq("query_id", "j", "code"))
-      .groupBy(col("query_id"), col("id"))
-      .agg(sum(col("d2")).cast("double").as("adist"))
-      .select(col("query_id"), col("id").as("neighbor_id"), col("adist"))
-      .withColumn("rank", row_number().over(wRank).cast("bigint"))
-      .filter(col("rank") <= k)
+      .join(broadcast(table), Seq("query_id", "j", "code")), k)
   }
 
   /** IVF-PQ with per-cell RESIDUAL encoding — the full FAISS
@@ -1722,9 +1652,8 @@ object Similarity {
     *
     * Same deterministic discipline as the rest of the family: the
     * codebook seeds are the residual subvectors of the `nCentroids`
-    * lowest-id vectors, per-subspace distances round to 6 decimals and
-    * accumulate in DECIMAL, ties break to the lowest id — the DuckDB
-    * oracle replays every step (q88). An exact duplicate of a query
+    * lowest-id vectors and the ADC tail is the shared [[adcTopK]] —
+    * the DuckDB oracle replays every step (q88). An exact duplicate of a query
     * vector achieves the minimal possible ADC sum in its cell, so it
     * ranks first (spec-pinned).
     *
@@ -1747,17 +1676,14 @@ object Similarity {
       idCol: String = "vec_id", embCol: String = "embedding",
       trainIters: Int = 0,
       acknowledgeSeeded: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // acknowledgeSeeded: a caller that DELIBERATELY runs the seeded
     // path (q88's catalog row — the oracle-replayable baseline the
     // trained q106 row is A/B'd against) opts out of the recall
     // warning; unacknowledged seeded production use still warns.
     if (!acknowledgeSeeded)
       seededResidualWarning(trainIters).foreach(log.warn)
-    val cells =
-      if (trainIters > 0)
-        trainedCentroids(candidates, nCells, trainIters, idCol, embCol)
-      else seedCentroids(candidates, nCells, idCol, embCol)
+    val cells = coarseCentroids(candidates, nCells, trainIters, idCol,
+      embCol)
     val cellsE = cells.select(col("cen_id").as("cell"),
       darr(col("cen_e")).as("cell_e"))
     // candidate residuals: r = e − centroid(cell); (id, cell, r)
@@ -1766,64 +1692,29 @@ object Similarity {
       .select(col("id"), col("cell"),
         zip_with(darr(col("e")), col("cell_e"), (a, b) => a - b).as("r"))
     val codebook = pqCentroids(resid, dims, m, nCentroids, "id", "r")
-    require(m > 0 && dims % m == 0, "m must divide dims")
-    val sub = dims / m
-    // code assignment carries `cell` through the min_by grouping keys
+    // code assignment carries `cell` through the subvector rows
     // (functionally dependent on id) instead of re-joining the corpus
     // against itself afterwards — one corpus-sized shuffle, not three
-    val rsub = graft.Tables.rebalance(resid)
-      .select(col("id"), col("cell"),
-        explode(transform(sequence(lit(0), lit(m - 1)),
-          j => struct(j.as("j"),
-            slice(col("r"), j * sub + 1, lit(sub)).as("sv")))).as("x"))
-      .select(col("id"), col("cell"), col("x.j").as("j"),
-        col("x.sv").as("sv"))
+    val rsub = pqSubvectors(graft.Tables.rebalance(resid), dims, m,
+      "id", "r", "id", "sv", carry = Seq("cell"))
     val codes = rsub.join(broadcast(packCodebook(codebook)), Seq("j"))
       .select(col("id"), col("cell"), col("j"),
         graft.functions.Vectors.bestCodeL2(col("sv"), col("cen_ids"),
           col("cvs"), col("cvvs")).as("code"))
-    val q = queries.select(col(idCol).as("query_id"),
-      darr(col(embCol)).as("q_emb"),
-      sqrt(norm2(col(embCol))).as("q_nrm"))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("psim").desc, col("cen_id"))
-    val probes = q.join(broadcast(
-        cells.withColumn("_cend", darr(col("cen_e")))), lit(true))
-      .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cen_id"),
-        round(dot(col("q_emb"), col("_cend")) /
-          (col("q_nrm") * col("cen_nrm")), 6).as("psim"))
-      .withColumn("_r", row_number().over(wProbe))
-      .filter(col("_r") <= nprobe)
-      .select(col("query_id"), col("q_emb"), col("cen_id").as("cell"))
+    val probes = probeCells(queries, idCol, embCol, cells, nprobe)
     // per-(query, probed cell) residual subvectors → distance table
     val qres = probes.join(broadcast(cellsE), Seq("cell"))
       .select(col("query_id"), col("cell"),
         zip_with(darr(col("q_emb")), col("cell_e"), (a, b) => a - b)
           .as("qr"))
-    val qsub = qres.select(col("query_id"), col("cell"),
-        explode(transform(sequence(lit(0), lit(m - 1)),
-          j => struct(j.as("j"),
-            slice(col("qr"), j * sub + 1, lit(sub)).as("qv")))).as("x"))
-      .select(col("query_id"), col("cell"), col("x.j").as("j"),
-        col("x.qv").as("qv"))
-    val table = qsub.join(codebook, Seq("j"))
-      .select(col("query_id"), col("cell"), col("j"),
-        col("cen_id").as("code"),
-        round(dot(col("qv"), col("qv")) - dot(col("qv"), col("cv")) * 2
-          + dot(col("cv"), col("cv")), 6)
-          .cast("decimal(20,6)").as("d2"))
-    val wRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist"), col("neighbor_id"))
-    codes
+    val table = adcTable(pqSubvectors(qres, dims, m, "query_id", "qr",
+      "query_id", "qv", carry = Seq("cell")), codebook,
+      "query_id", "cell", "j")
+    adcTopK(codes
       .join(broadcast(probes.select(col("query_id"), col("cell"))),
         Seq("cell"))
       .filter(col("query_id") =!= col("id"))
-      .join(broadcast(table), Seq("query_id", "cell", "j", "code"))
-      .groupBy(col("query_id"), col("id"))
-      .agg(sum(col("d2")).cast("double").as("adist"))
-      .select(col("query_id"), col("id").as("neighbor_id"), col("adist"))
-      .withColumn("rank", row_number().over(wRank).cast("bigint"))
-      .filter(col("rank") <= k)
+      .join(broadcast(table), Seq("query_id", "cell", "j", "code")), k)
   }
 
   /** Multi-table LSH near-dup pairs: candidates share a bucket in ANY of
@@ -1855,17 +1746,9 @@ object Similarity {
     // on the canonical plan, so repeat calls reuse rather than pile up);
     // pass cache=false in long-lived sessions that stream many distinct
     // corpora through this operator.
-    def maybeCache(d: DataFrame): DataFrame =
-      if (cache)
-        d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else d
-    val b = maybeCache(graft.Tables.rebalance(
+    val b = persistIf(cache)(graft.Tables.rebalance(
       df.select(col(idCol).as("id"), col(embCol).as("e")))
       .withColumn("nrm", sqrt(norm2(col("e")))))
-    // one native kernel call per row yields all table buckets at once
-    // (bit-identical to the per-table literal-array dot products, but the
-    // plan carries ~5 nodes instead of ~1,500 literals — see LshKernel)
-    //
     // The explicit fixed-width repartition on the join key is load-bearing
     // at scale: the bucket rows themselves are tiny, so AQE would coalesce
     // the self-join's input shuffles down to one partition — and the join
@@ -1876,13 +1759,9 @@ object Similarity {
     // single-task stage to seconds). The join reuses this partitioning,
     // so no extra exchange is introduced.
     val np = df.sparkSession.sparkContext.defaultParallelism
-    val bucketed = maybeCache(b
-      .select(col("id"), posexplode(
-        graft.functions.Lsh.buckets(darr(col("e")), tables,
-          planesPerTable, dims)))
-      .select(col("id"), col("pos").cast("int").as("t"),
-        col("col").as("bk"))
-      .repartition(np, col("t"), col("bk")))
+    val bucketed = persistIf(cache)(
+      lshBuckets(b, "id", "e", tables, planesPerTable, dims)
+        .repartition(np, col("t"), col("bk")))
     val result = bucketed.as("a").join(bucketed.as("b"), Seq("t", "bk"))
       .filter(col("a.id") < col("b.id"))
       .select(col("a.id").as("da"), col("b.id").as("db"))
@@ -1890,8 +1769,7 @@ object Similarity {
       .join(b.as("ea"), col("da") === col("ea.id"))
       .join(b.as("eb"), col("db") === col("eb.id"))
       .select(col("da"), col("db"),
-        round(dot(col("ea.e"), col("eb.e")) /
-          (col("ea.nrm") * col("eb.nrm")), 6).as("sim"))
+        cos6("ea.e", "eb.e", "ea.nrm", "eb.nrm").as("sim"))
       .filter(col("sim") >= threshold)
     (result,
       if (cache) new CacheHandle(Seq(b, bucketed)) else CacheHandle.empty)
@@ -1921,14 +1799,11 @@ object Similarity {
       idCol: String = "vec_id", embCol: String = "embedding")
       : DataFrame = {
     val c = graft.Tables.rebalance(
-      candidates.select(col(idCol).as("id"),
-        darr(col(embCol)).as("e"), sqrt(norm2(col(embCol))).as("nrm")))
+      vecs(candidates, col(idCol).as("id"), embCol, "e", "nrm"))
     val cenD = cen.withColumn("_cend", darr(col("cen_e")))
     val sims = c.join(broadcast(cenD), lit(true))
       .select(col("id"), col("cen_id"),
-        (round(dot(col("e"), col("_cend")) /
-            (col("nrm") * col("cen_nrm")), 6).cast("decimal(10,6)")
-          * 1000000).cast("bigint").as("sim_micro"))
+        micro(cos6("e", "_cend", "nrm", "cen_nrm")).as("sim_micro"))
     val top2 = sims.groupBy(col("id"))
       .agg(slice(reverse(array_sort(collect_list(
         struct(col("sim_micro"), (-col("cen_id")).as("nid"))))), 1, 2)

@@ -88,13 +88,6 @@ object TextOps {
     v >>> 4
   }
 
-  def md5HexConst(s: String): String = {
-    val md = md5Tl.get()
-    md.reset()
-    md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-  }
-
   /** Count of tokens (with multiplicity) that appear in a marker set —
     * the building block of the n-gram/stopword language-ID heuristic.
     */

@@ -43,15 +43,7 @@ object Round11c {
     // persisted artifact hash-fails here.
     QueryDef("q259_ranked_persist",
       (s, dir) => {
-        val dirKey = try new java.io.File(dir).getCanonicalPath
-          catch { case _: Throwable => dir }
-        val tag = java.security.MessageDigest.getInstance("MD5")
-          .digest(dirKey.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString.take(16) + "_" +
-          java.lang.ProcessHandle.current().pid()
-        val outDir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_q259_ranked_$tag")
-        Round5.registerScratchCleanup(outDir)
+        val outDir = scratchDir(dir, "q259_ranked")
         Dedup.rankedShingleRows(t("documents")(s, dir),
             "doc_id", "text", n = 3)
           .write.mode("overwrite").parquet(outDir.getAbsolutePath)

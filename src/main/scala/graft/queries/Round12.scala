@@ -138,15 +138,7 @@ object Round12 {
     // whole persisted-index prune path is lossless.
     QueryDef("q302_bm25_index_pruned",
       (s, dir) => {
-        val dirKey = try new java.io.File(dir).getCanonicalPath
-          catch { case _: Throwable => dir }
-        val tag = java.security.MessageDigest.getInstance("MD5")
-          .digest(dirKey.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString.take(16) + "_" +
-          java.lang.ProcessHandle.current().pid()
-        val outDir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_q302_bm25idx_$tag")
-        Round5.registerScratchCleanup(outDir)
+        val outDir = scratchDir(dir, "q302_bm25idx")
         val idx = graft.operators.Retrieval.bm25Index(
           t("documents")(s, dir), "doc_id", "text",
           tf = Some(Round9b.sharedTf(s, dir)))

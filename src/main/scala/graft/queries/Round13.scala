@@ -318,15 +318,7 @@ object Round13 {
     // driver-frame contract.)
     QueryDef("q321_retrieval_metrics_indexed",
       (s, dir) => {
-        val dirKey = try new java.io.File(dir).getCanonicalPath
-          catch { case _: Throwable => dir }
-        val tag = java.security.MessageDigest.getInstance("MD5")
-          .digest(dirKey.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString.take(16) + "_" +
-          java.lang.ProcessHandle.current().pid()
-        val outDir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_q321_bm25idx_$tag")
-        Round5.registerScratchCleanup(outDir)
+        val outDir = scratchDir(dir, "q321_bm25idx")
         val idx = graft.operators.Retrieval.bm25Index(
           t("documents")(s, dir), "doc_id", "text",
           tf = Some(Round9b.sharedTf(s, dir)))
@@ -771,15 +763,7 @@ object Round13 {
     // included.
     QueryDef("q330_bm25_incremental",
       (s, dir) => {
-        val dirKey = try new java.io.File(dir).getCanonicalPath
-          catch { case _: Throwable => dir }
-        val tag = java.security.MessageDigest.getInstance("MD5")
-          .digest(dirKey.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString.take(16) + "_" +
-          java.lang.ProcessHandle.current().pid()
-        val outDir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_q330_tfidx_$tag")
-        Round5.registerScratchCleanup(outDir)
+        val outDir = scratchDir(dir, "q330_tfidx")
         val docs = t("documents")(s, dir)
         graft.operators.Retrieval.writeTfIndex(
           docs.where(col("doc_id") % 3 =!= 2),

@@ -14,20 +14,6 @@ object Round14 {
   private def t(name: String): QueryFn =
     (s, dir) => Tables.load(s, dir, name)
 
-  /** Scratch dir unique per (dataset, process) — the q330 idiom. */
-  private[queries] def scratchDir(dir: String, tag: String): java.io.File = {
-    val dirKey = try new java.io.File(dir).getCanonicalPath
-      catch { case _: Throwable => dir }
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dirKey.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16) + "_" +
-      java.lang.ProcessHandle.current().pid()
-    val f = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_${tag}_$h")
-    Round5.registerScratchCleanup(f)
-    f
-  }
-
   // ---- q334/q335 oracle helpers: SQL replay of the PINNED JPEG
   // arithmetic (graft.functions.JpegMath — divR is `(x + half) >> n`,
   // an arithmetic shift in both engines; quantR is sign-biased

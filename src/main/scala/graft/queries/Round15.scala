@@ -47,7 +47,7 @@ object Round15 {
     // logical).
     QueryDef("q344_bm25_upsert",
       (s, dir) => {
-        val outDir = Round14.scratchDir(dir, "q344_tfidx")
+        val outDir = scratchDir(dir, "q344_tfidx")
         val docs = t("documents")(s, dir)
         graft.operators.Retrieval.writeTfIndex(
           docs, outDir.getAbsolutePath, wordBuckets = 16)
@@ -82,7 +82,7 @@ object Round15 {
     // hash proves the stale shingles are dead and the new ones pair.
     QueryDef("q345_jaccard_upsert",
       (s, dir) => {
-        val outDir = Round14.scratchDir(dir, "q345_shidx")
+        val outDir = scratchDir(dir, "q345_shidx")
         val docs = t("documents")(s, dir)
         graft.operators.Dedup.writeShingleIndex(
           docs, outDir.getAbsolutePath, n = 3, shingleBuckets = 16)
@@ -232,7 +232,7 @@ object Round15 {
     QueryDef("q347_ann_drift_trigger",
       (s, dir) => {
         val emb = t("embeddings")(s, dir)
-        val outDir = Round14.scratchDir(dir, "q347_annidx")
+        val outDir = scratchDir(dir, "q347_annidx")
         graft.operators.Similarity.ivfPqIndex(
             emb.where(col("vec_id") % 2 === 0), nCells = 8, dims = 64,
             m = 8, nCentroids = 16)
@@ -287,7 +287,7 @@ object Round15 {
     // MemoryStream + checkpoint restart).
     QueryDef("q348_tf_stream_ingest",
       (s, dir) => {
-        val outDir = Round14.scratchDir(dir, "q348_tfidx")
+        val outDir = scratchDir(dir, "q348_tfidx")
         val docs = t("documents")(s, dir)
         graft.operators.Retrieval.writeTfIndex(
           docs.where(col("doc_id") % 3 === 0),
@@ -522,7 +522,7 @@ object Round15 {
     QueryDef("q349_ann_upsert",
       (s, dir) => {
         val emb = t("embeddings")(s, dir)
-        val outDir = Round14.scratchDir(dir, "q349_annidx")
+        val outDir = scratchDir(dir, "q349_annidx")
         graft.operators.Similarity.ivfPqIndex(emb, nCells = 8,
             dims = 64, m = 8, nCentroids = 16)
           .write(outDir.getAbsolutePath)

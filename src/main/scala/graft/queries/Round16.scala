@@ -38,7 +38,7 @@ object Round16 {
     // stream-built ≡ batch rebuild, hash-gated.
     QueryDef("q355_shingle_stream_ingest",
       (s, dir) => {
-        val outDir = Round14.scratchDir(dir, "q355_shidx")
+        val outDir = scratchDir(dir, "q355_shidx")
         val p = outDir.getAbsolutePath
         val docs = t("documents")(s, dir)
         val mutated = docs.withColumn("text",
@@ -425,7 +425,7 @@ object Round16 {
     QueryDef("q357_ann_retrain",
       (s, dir) => {
         import graft.operators.Similarity
-        val outDir = Round14.scratchDir(dir, "q357_annrt")
+        val outDir = scratchDir(dir, "q357_annrt")
         val p = outDir.getAbsolutePath
         val emb = t("embeddings")(s, dir)
         val even = emb.where(col("vec_id") % 2 === 0)
@@ -477,7 +477,7 @@ object Round16 {
     // proof that stream-built ≡ batch-rebuilt.
     QueryDef("q353_tf_stream_upsert",
       (s, dir) => {
-        val outDir = Round14.scratchDir(dir, "q353_tfidx")
+        val outDir = scratchDir(dir, "q353_tfidx")
         val p = outDir.getAbsolutePath
         val docs = t("documents")(s, dir)
         val suffix = " recrawl revision fresh tokens"

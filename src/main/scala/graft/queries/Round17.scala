@@ -31,7 +31,7 @@ object Round17 {
     // leaves the HistoryKeep window — is spec-gated: PinnedReadSpec.)
     QueryDef("q358_bm25_pinned_read",
       (s, dir) => {
-        val outDir = Round14.scratchDir(dir, "q358_tfidx")
+        val outDir = scratchDir(dir, "q358_tfidx")
         val p = outDir.getAbsolutePath
         val docs = t("documents")(s, dir)
         graft.operators.Retrieval.writeTfIndex(docs, p,
@@ -82,7 +82,7 @@ object Round17 {
     QueryDef("q359_ann_stream_upsert",
       (s, dir) => {
         val emb = t("embeddings")(s, dir)
-        val outDir = Round14.scratchDir(dir, "q359_annidx")
+        val outDir = scratchDir(dir, "q359_annidx")
         val p = outDir.getAbsolutePath
         graft.operators.Similarity.ivfPqIndex(emb, nCells = 8,
             dims = 64, m = 8, nCentroids = 16)
@@ -126,7 +126,7 @@ object Round17 {
     // q343's batch-appended index — the oracle is q343's verbatim.
     QueryDef("q360_fingerprint_stream_ingest",
       (s, dir) => {
-        val outDir = Round14.scratchDir(dir, "q360_fpidx")
+        val outDir = scratchDir(dir, "q360_fpidx")
         val p = outDir.getAbsolutePath
         val docs = t("documents")(s, dir)
         graft.operators.Dedup.writeFingerprintIndex(

@@ -33,8 +33,8 @@ object Round18 {
     // EventStreamsSpec "COMPOSED multi-family crash recovery").
     QueryDef("q361_composed_stream_recovery",
       (s, dir) => {
-        val ptf = Round14.scratchDir(dir, "q361_tfidx").getAbsolutePath
-        val pfp = Round14.scratchDir(dir, "q361_fpidx").getAbsolutePath
+        val ptf = scratchDir(dir, "q361_tfidx").getAbsolutePath
+        val pfp = scratchDir(dir, "q361_fpidx").getAbsolutePath
         val docs = t("documents")(s, dir)
         val seedDocs = docs.where(col("doc_id") % 4 =!= 3)
         // the two family seeds are independent artifacts at distinct
@@ -99,7 +99,7 @@ object Round18 {
     // between the pins — SnapshotCdcSpec).
     QueryDef("q362_index_cdc",
       (s, dir) => {
-        val p = Round14.scratchDir(dir, "q362_tfidx").getAbsolutePath
+        val p = scratchDir(dir, "q362_tfidx").getAbsolutePath
         val docs = t("documents")(s, dir)
         graft.operators.Retrieval.writeTfIndex(docs, p,
           wordBuckets = 16)

@@ -13,26 +13,6 @@ import org.apache.spark.sql.functions._
 object Round5 {
   private def t(name: String): QueryFn = (s, dir) => Tables.load(s, dir, name)
 
-  /** Recursive-delete `dir` at JVM exit, registered once per path —
-    * q80's per-process JSONL scratch must not accumulate across
-    * bench/verify runs (the per-pid tag that isolates concurrent
-    * processes would otherwise leak a corpus copy per invocation).
-    * Deletion at exit, not after the query: the returned frame reads
-    * the files lazily, possibly multiple times (cold + steady).
-    */
-  private val scratchRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private[queries] def registerScratchCleanup(dir: java.io.File): Unit =
-    if (scratchRegistered.add(dir.getAbsolutePath))
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles()
-          if (kids != null) kids.foreach(rm)
-          f.delete(): Unit
-        }
-        rm(dir)
-      }))
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- Gopher-style repetition metrics, entirely map-side: every
@@ -406,21 +386,7 @@ object Round5 {
     QueryDef("q80_jsonl_roundtrip",
       (s, dir) => {
         val docs = t("documents")(s, dir)
-        // path keyed by sf dir + process: concurrent harness runs
-        // (Verify at one sf, Bench at another; parallel drivers) must
-        // not overwrite each other's files mid-read. Re-runs within
-        // one process stay idempotent via overwrite mode. md5 of the
-        // canonical path, not String.hashCode: a 32-bit hash of two
-        // distinct dirs can collide and cross-clobber mid-read.
-        val dirKey = try new java.io.File(dir).getCanonicalPath
-          catch { case _: Throwable => dir }
-        val tag = java.security.MessageDigest.getInstance("MD5")
-          .digest(dirKey.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString.take(16) + "_" +
-          java.lang.ProcessHandle.current().pid()
-        val outDir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_q80_jsonl_$tag")
-        Round5.registerScratchCleanup(outDir)
+        val outDir = scratchDir(dir, "q80_jsonl")
         val out = outDir.getAbsolutePath
         docs.write.mode("overwrite").json(out)
         graft.sources.Sources.json(s, out, Some(docs.schema))

@@ -220,15 +220,7 @@ object Round7 {
     QueryDef("q95_ivfpq_persist",
       (s, dir) => {
         val emb = t("embeddings")(s, dir)
-        val dirKey = try new java.io.File(dir).getCanonicalPath
-          catch { case _: Throwable => dir }
-        val tag = java.security.MessageDigest.getInstance("MD5")
-          .digest(dirKey.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString.take(16) + "_" +
-          java.lang.ProcessHandle.current().pid()
-        val outDir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_q95_index_$tag")
-        Round5.registerScratchCleanup(outDir)
+        val outDir = scratchDir(dir, "q95_index")
         Similarity.ivfPqIndex(emb, nCells = 8, dims = 64, m = 8,
             nCentroids = 16)
           .write(outDir.getAbsolutePath)

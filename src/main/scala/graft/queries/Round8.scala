@@ -143,15 +143,7 @@ object Round8 {
     QueryDef("q102_bloom_persist",
       (s, dir) => {
         val docs = t("documents")(s, dir)
-        val dirKey = try new java.io.File(dir).getCanonicalPath
-          catch { case _: Throwable => dir }
-        val tag = java.security.MessageDigest.getInstance("MD5")
-          .digest(dirKey.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString.take(16) + "_" +
-          java.lang.ProcessHandle.current().pid()
-        val outDir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_q102_bloom_$tag")
-        Round5.registerScratchCleanup(outDir)
+        val outDir = scratchDir(dir, "q102_bloom")
         Curation.BloomFilter
           .build(docs.filter(col("doc_id") % 7 === 0), "text", "doc_id",
             n = 8, mBits = 4194304L, kHashes = 4)

@@ -378,15 +378,7 @@ object Round9 {
     QueryDef("q113_orc_roundtrip",
       (s, dir) => {
         val docs = t("documents")(s, dir)
-        val dirKey = try new java.io.File(dir).getCanonicalPath
-          catch { case _: Throwable => dir }
-        val tag = java.security.MessageDigest.getInstance("MD5")
-          .digest(dirKey.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString.take(16) + "_" +
-          java.lang.ProcessHandle.current().pid()
-        val outDir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_q113_orc_$tag")
-        Round5.registerScratchCleanup(outDir)
+        val outDir = scratchDir(dir, "q113_orc")
         val out = outDir.getAbsolutePath
         docs.write.mode("overwrite").orc(out)
         graft.sources.Sources.orc(s, out, Some(docs.schema))

@@ -260,15 +260,7 @@ object Round9b {
         val li = t("lineitem")(s, dir).select(col("l_orderkey"))
         val even = li.filter(col("l_orderkey") % 2 === 0)
         val odd = li.filter(col("l_orderkey") % 2 === 1)
-        val dirKey = try new java.io.File(dir).getCanonicalPath
-          catch { case _: Throwable => dir }
-        val tag = java.security.MessageDigest.getInstance("MD5")
-          .digest(dirKey.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString.take(16) + "_" +
-          java.lang.ProcessHandle.current().pid()
-        val outDir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_q120_hll_$tag")
-        Round5.registerScratchCleanup(outDir)
+        val outDir = scratchDir(dir, "q120_hll")
         Cardinality.writeSketch(
           Cardinality.hllRegisters(even, "l_orderkey"),
           outDir.getAbsolutePath)

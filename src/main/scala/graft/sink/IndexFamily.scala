@@ -136,7 +136,7 @@ final case class IndexFamily(name: String, key: String, idCol: String,
           val remaining = keep("postings")
           remaining.repartition(col(bc))
             .write.mode("overwrite").partitionBy(bc).parquet(st)
-          Compact.ensureReadable(spark, st,
+          ensureReadable(spark, st,
             org.apache.spark.sql.types.StructType(
               remaining.schema.filterNot(_.name == bc)),
             Some(s"$bc=0"))
@@ -148,7 +148,7 @@ final case class IndexFamily(name: String, key: String, idCol: String,
           l -> { (st: String) =>
             val remaining = keep(l)
             remaining.write.mode("overwrite").parquet(st)
-            Compact.ensureReadable(spark, st, remaining.schema, None)
+            ensureReadable(spark, st, remaining.schema, None)
           }
         }
       val staged = builds.map { case (l, build) =>
@@ -168,6 +168,38 @@ final case class IndexFamily(name: String, key: String, idCol: String,
       // survives, so a stale reader finishes cleanly
       IndexLayout.gcWithGrace(spark, path)
       hook("gc")
+    }
+  }
+
+  /** A purge that drops EVERY row writes an empty tree (no parquet
+    * files for a dynamic-partition write), and an empty tree breaks
+    * every later schema-inferring read. Keep it readable: write one
+    * zero-row parquet file carrying the read schema. For a partitioned
+    * tree the file must live INSIDE a partition directory
+    * (`partitionSubdir`, e.g. `sbucket=0`) — a flat file at the root
+    * would make later partitioned appends fail partition discovery
+    * ("conflicting directory structures"). The synthetic partition
+    * value must parse to the partition column's type; the
+    * integer-bucketed index layouts satisfy that by construction. */
+  private def ensureReadable(spark: SparkSession, dir: String,
+      schema: org.apache.spark.sql.types.StructType,
+      partitionSubdir: Option[String]): Unit = {
+    val staging = new Path(dir)
+    val fs = staging.getFileSystem(spark.sessionState.newHadoopConf())
+    val hasParquet = fs.exists(staging) && {
+      val it = fs.listFiles(staging, true)
+      var found = false
+      while (!found && it.hasNext)
+        found = it.next().getPath.getName.endsWith(".parquet")
+      found
+    }
+    if (!hasParquet) {
+      val target = partitionSubdir.map(d => new Path(staging, d))
+        .getOrElse(staging)
+      // a 0-partition plan writes exactly one schema-only file
+      spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        .write.mode("overwrite").parquet(target.toString)
     }
   }
 

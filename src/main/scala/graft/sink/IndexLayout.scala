@@ -62,9 +62,9 @@ import org.apache.spark.sql.functions._
   *    `postings-v{n+1}` beside the live tree and commits by one pointer
   *    write ([[IndexFamily.purgeTombstones]], [[compactVersioned]]);
   *    concurrent readers resolve the pointer first and always see
-  *    exactly the pre- or post-rewrite snapshot — never a missing or half-swapped tree
-  *    (the in-place two-rename swap of [[Compact]] remains for plain
-  *    non-index directories). GC keeps a HISTORY grace window: each
+  *    exactly the pre- or post-rewrite snapshot — never a missing or
+  *    half-swapped tree; this is the only rewrite protocol (there is
+  *    no in-place swap). GC keeps a HISTORY grace window: each
   *    rewrite's [[gcWithGrace]] call retains every tree the newest
   *    [[IndexManifest.HistoryKeep]] snapshots reference (a reader
   *    holding a snapshot up to that many commits stale still finds
@@ -592,9 +592,8 @@ object IndexLayout {
   }
 
   /** Compact a logical subtree's accumulated append files into a NEW
-    * physical version and commit the pointer — the versioned
-    * replacement for the in-place [[Compact]] swap on index layouts
-    * (readers never observe the tree mid-rewrite). Bucketed trees
+    * physical version and commit the pointer (readers never observe
+    * the tree mid-rewrite). Bucketed trees
     * (`partitionCol` set) collapse to one file per bucket; flat tables
     * to ⌈bytes / targetBytes⌉ files. Row values untouched: reads are
     * bit-identical before and after.

@@ -73,15 +73,8 @@ object EventStreams {
     */
   def readEvents(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Int = 1): DataFrame = {
-    // nanosAsLong is a session-wide flag (no per-reader option exists),
-    // but it is only consulted at relation-resolution time, so set it
-    // just for the probe + readStream calls and restore — unrelated
-    // TIMESTAMP(NANOS) reads in the session are unaffected (same
-    // save/restore contract as Tables.load). For non-nanos layouts the
-    // flag is inert.
-    val prev = spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try {
+    // the flag is set just for the probe + readStream calls
+    graft.Tables.withNanosAsLong(spark) {
       // An empty directory cannot be probed (schema inference throws);
       // fall back to the logical µs-timestamp schema so a stream can be
       // STARTED before its first file arrives — the pre-probe behavior.
@@ -93,11 +86,6 @@ object EventStreams {
         .schema(fileSchema)
         .option("maxFilesPerTrigger", maxFilesPerTrigger)
         .parquet(dir))
-    } finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-      case None =>
-        spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
     }
   }
 
@@ -336,12 +324,6 @@ object EventStreams {
   def enrichWithDim(events: DataFrame, dim: DataFrame,
       keys: Seq[String]): DataFrame =
     events.join(broadcast(dim), keys, "left")
-
-  /** Start a streaming query into an in-memory table (tests/debug). */
-  def startMemorySink(df: DataFrame, name: String,
-      mode: OutputMode = OutputMode.Append): StreamingQuery =
-    df.writeStream.format("memory").queryName(name)
-      .outputMode(mode).trigger(Trigger.AvailableNow()).start()
 
   /** Streaming exact dedup with watermark-bounded state: re-deliveries of
     * the same key (e.g. an at-least-once source replaying `event_id`)

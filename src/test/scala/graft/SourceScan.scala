@@ -29,4 +29,14 @@ object SourceScan {
           .collect { case (line, i) if needles.exists(line.contains) =>
             s"${srcRoot.relativize(f)}:${i + 1}" }
       }.toSeq
+
+  /** `path:line` (relative to [[srcRoot]]) of every match of `pattern`
+    * in `file` — a match may span lines; its first line is reported. */
+  def matches(file: Path, pattern: scala.util.matching.Regex): Seq[String] = {
+    val text = new String(Files.readAllBytes(file), ISO_8859_1)
+    pattern.findAllMatchIn(text).map { m =>
+      val line = text.substring(0, m.start).count(_ == '\n') + 1
+      s"${srcRoot.relativize(file)}:$line"
+    }.toSeq
+  }
 }

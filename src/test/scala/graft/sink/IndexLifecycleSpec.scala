@@ -11,7 +11,9 @@ import org.apache.spark.sql.DataFrame
   * (for the text families a fresh build of the live corpus; for IVF-PQ
   * the live vectors encoded in memory under the seed build's frozen
   * geometry), and the surviving keys must be exactly the expected
-  * ones. Purge and compaction must leave reads bit-identical.
+  * ones. Purge and compaction must leave reads bit-identical, and a
+  * purge of every key must leave a readable empty index that later
+  * appends extend.
   */
 class IndexLifecycleSpec extends SparkSpec {
   import graft.operators.{Dedup, Retrieval, Similarity}
@@ -194,6 +196,28 @@ class IndexLifecycleSpec extends SparkSpec {
         f.upsert(dir, row.input(recrawl2))
         live ++= recrawl2
         check("replayed upsert")
+      } finally delete(dir)
+    }
+
+    test(s"${row.name}: a purge that drops every row leaves a readable " +
+        "zero-row index; a later append reads back exactly its rows") {
+      val f = row.family
+      val dir = tmp(s"lc_empty_${row.name}")
+      try {
+        val seed = (0L until 4L).map(_ -> 0)
+        row.build(row.input(seed), dir)
+        import spark.implicits._
+        f.delete(dir, seed.map(_._1).toDF(f.idCol))
+        f.purgeTombstones(spark, dir)
+        assert(!idxDirExists(dir, "tombstones"))
+        assert(row.read(dir) == ((Set.empty, Set.empty)),
+          "purged index not empty")
+
+        val inc = (4L until 8L).map(_ -> 0)
+        f.append(dir, row.input(inc))
+        val got = row.read(dir)
+        assert(got._2 == inc.map(_._1).toSet, "appended keys")
+        assert(got == row.twin(row.input(inc)), "append after purge ≠ twin")
       } finally delete(dir)
     }
   }
