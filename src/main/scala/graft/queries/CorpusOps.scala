@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import graft.operators.{Dedup, Similarity, TextOps}
 import org.apache.spark.sql.functions._
 
@@ -12,8 +11,6 @@ import org.apache.spark.sql.functions._
   * families (constants inlined into both engines' plans).
   */
 object CorpusOps {
-  private def t(name: String): QueryFn = (s, dir) => Tables.load(s, dir, name)
-
   /** DuckDB 60-bit hash twin of [[TextOps.hash60]]. */
   private[queries] def oH60(e: String): String =
     s"CAST(concat('0x', substr(md5($e), 1, 15)) AS BIGINT)"
@@ -93,12 +90,7 @@ object CorpusOps {
     QueryDef("q25_jaccard_pairs",
       (s, dir) => sharedJaccardPairs(s, dir)
         .orderBy(col("da"), col("db")),
-      Some(s"""WITH $oShingles,
-              |hs AS (SELECT doc_id, ${oH60("s")} AS h FROM sh),
-              |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-              |p AS (SELECT a.doc_id da, b.doc_id db, COUNT(*) AS inter
-              |  FROM hs a JOIN hs b ON a.h = b.h AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2)
+      Some(s"""WITH $oShinglePairs
               |SELECT da, db, inter,
               |  inter / (x.n + y.n - inter) AS jaccard
               |FROM p JOIN sz x ON da = x.doc_id JOIN sz y ON db = y.doc_id

@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,8 +13,6 @@ import org.apache.spark.sql.functions._
   * `time_bucket` for the durations used here.
   */
 object EventOps {
-  private def t(name: String): QueryFn = (s, dir) => Tables.load(s, dir, name)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- tumbling window aggregation (streaming: groupBy(window(...)))

@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import graft.functions.TopKAgg
 import graft.operators.{Similarity, Skew}
 import org.apache.spark.sql.functions._
@@ -9,8 +8,6 @@ import org.apache.spark.sql.functions._
   * UDAF surface, and IVF similarity search — each oracle-checked.
   */
 object Extras {
-  private def t(name: String): QueryFn = (s, dir) => Tables.load(s, dir, name)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- salted skew join: row-identical to the plain equi-join (the
@@ -109,39 +106,12 @@ object Extras {
     // oracle.
     QueryDef("q43_asof_join",
       (s, dir) => {
-        val ev = t("events")(s, dir)
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"), col("ts"),
-            col("value"))
-        val errW = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("user_id"), col("ts"))
-          .orderBy(col("event_id").desc)
-        val errors = ev.filter(col("event_type") === "error")
-          .withColumn("_r", row_number().over(errW))
-          .filter(col("_r") === 1)
-          .select(col("user_id"), col("ts").as("err_ts"),
-            col("value").as("err_value"))
+        val (clicks, errors) = clicksAndErrors(s, dir)
         graft.operators.AsOf.join(clicks, errors, Seq("user_id"),
             "ts", "err_ts", Seq("err_ts", "err_value"))
           .orderBy(col("event_id"))
       },
-      Some("""WITH ev AS (SELECT event_id, user_id,
-             |    CAST(ts AS TIMESTAMP) AS ts, value, event_type
-             |  FROM events),
-             |clicks AS (SELECT event_id, user_id, ts, value FROM ev
-             |  WHERE event_type = 'click'),
-             |err0 AS (SELECT user_id, ts, value, event_id FROM ev
-             |  WHERE event_type = 'error'),
-             |err1 AS (SELECT *, row_number() OVER (
-             |    PARTITION BY user_id, ts ORDER BY event_id DESC) AS r
-             |  FROM err0),
-             |errors AS (SELECT user_id, ts AS err_ts,
-             |    value AS err_value FROM err1 WHERE r = 1)
-             |SELECT c.event_id, c.user_id, c.ts, c.value,
-             |  e.err_ts, e.err_value
-             |FROM clicks c ASOF LEFT JOIN errors e
-             |  ON c.user_id = e.user_id AND c.ts >= e.err_ts
-             |ORDER BY c.event_id""".stripMargin)),
+      Some(oAsOfClickErrors)),
 
     // ---- exact percentiles (sort-based aggregate; the approximate
     // twins — approx_percentile / HLL sketches — are covered in
@@ -174,23 +144,8 @@ object Extras {
           .select(col("id").as("doc_id"), col("cluster"))
           .orderBy(col("doc_id"))
       },
-      Some(s"""WITH RECURSIVE ${CorpusOps.oShinglesSql},
-              |hs AS (SELECT doc_id, ${CorpusOps.oH60("s")} AS h FROM sh),
-              |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-              |p AS (SELECT a.doc_id da, b.doc_id db, COUNT(*) AS inter
-              |  FROM hs a JOIN hs b ON a.h = b.h AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
-              |pairs AS (SELECT da, db FROM p
-              |  JOIN sz x ON da = x.doc_id JOIN sz y ON db = y.doc_id
-              |  WHERE inter / (x.n + y.n - inter) >= 0.6),
-              |edges AS (SELECT da AS src, db AS dst FROM pairs
-              |  UNION ALL SELECT db, da FROM pairs),
-              |walk AS (
-              |  SELECT doc_id AS id, doc_id AS lbl FROM documents
-              |  UNION
-              |  SELECT e.dst AS id, w.lbl
-              |  FROM walk w JOIN edges e ON w.id = e.src
-              |  WHERE w.lbl < e.dst)
+      Some(s"""WITH RECURSIVE $oJaccardEdges,
+              |$oWalk
               |SELECT id AS doc_id, min(lbl) AS cluster
               |FROM walk GROUP BY id ORDER BY doc_id""".stripMargin)),
 
@@ -213,23 +168,8 @@ object Extras {
             countDistinct(col("cluster")).as("n_clusters"))
           .orderBy(col("split"))
       },
-      Some(s"""WITH RECURSIVE ${CorpusOps.oShinglesSql},
-              |hs AS (SELECT doc_id, ${CorpusOps.oH60("s")} AS h FROM sh),
-              |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-              |p AS (SELECT a.doc_id da, b.doc_id db, COUNT(*) AS inter
-              |  FROM hs a JOIN hs b ON a.h = b.h AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
-              |pairs AS (SELECT da, db FROM p
-              |  JOIN sz x ON da = x.doc_id JOIN sz y ON db = y.doc_id
-              |  WHERE inter / (x.n + y.n - inter) >= 0.6),
-              |edges AS (SELECT da AS src, db AS dst FROM pairs
-              |  UNION ALL SELECT db, da FROM pairs),
-              |walk AS (
-              |  SELECT doc_id AS id, doc_id AS lbl FROM documents
-              |  UNION
-              |  SELECT e.dst AS id, w.lbl
-              |  FROM walk w JOIN edges e ON w.id = e.src
-              |  WHERE w.lbl < e.dst),
+      Some(s"""WITH RECURSIVE $oJaccardEdges,
+              |$oWalk,
               |cl AS (SELECT id AS doc_id, min(lbl) AS cluster
               |  FROM walk GROUP BY id),
               |sp AS (SELECT doc_id, cluster,

@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,8 +19,6 @@ import org.apache.spark.sql.functions._
   * decimal-exact sums come from [[graft.queries.dsum]].
   */
 object Relational {
-  private def t(name: String): QueryFn = (s, dir) => Tables.load(s, dir, name)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- scan + filter + projection (pushdown: filter and 4-column read

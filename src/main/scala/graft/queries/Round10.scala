@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import org.apache.spark.sql.functions._
 
 /** Round-10 catalog (q161+): the r9 verdict's asks — exact
@@ -9,9 +8,6 @@ import org.apache.spark.sql.functions._
   * codebooks, and the streaming interval join's batch twin.
   */
 object Round10 {
-  private def t(name: String): QueryFn =
-    (s, dir) => Tables.load(s, dir, name)
-
   /** One inclusion-dependency candidate of q185's oracle: distinct
     * child values LEFT-joined to distinct parent values, counts +
     * exact-ppm containment.
@@ -58,22 +54,7 @@ object Round10 {
           threshold = 0.8,
           rankedIn = Some(Round11.sharedRanked(s, dir)))
         .orderBy(col("contained"), col("container")),
-      Some(s"""WITH ${CorpusOps.oShinglesSql},
-              |hs AS (SELECT doc_id, ${CorpusOps.oH60("s")} AS h FROM sh),
-              |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-              |p AS (SELECT a.doc_id da, b.doc_id db, COUNT(*) AS inter
-              |  FROM hs a JOIN hs b ON a.h = b.h AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2)
-              |SELECT CASE WHEN x.n <= y.n THEN da ELSE db END
-              |    AS contained,
-              |  CASE WHEN x.n <= y.n THEN db ELSE da END AS container,
-              |  inter, LEAST(x.n, y.n) AS n_small,
-              |  GREATEST(x.n, y.n) AS n_big,
-              |  inter / LEAST(x.n, y.n) AS containment
-              |FROM p JOIN sz x ON da = x.doc_id
-              |JOIN sz y ON db = y.doc_id
-              |WHERE inter / LEAST(x.n, y.n) >= 0.8
-              |ORDER BY contained, container""".stripMargin)),
+      Some(oContainmentPairs)),
 
     // ---- TPC-H Q21 planner shape (suppliers who kept orders
     // waiting): the canon's hardest join topology — an exists AND a
@@ -156,20 +137,8 @@ object Round10 {
         .select(col("j"), col("cen_id"), col("p").cast("bigint").as("p"),
           col("mv"))
         .orderBy(col("j"), col("cen_id"), col("p")),
-      Some("""WITH e AS (SELECT vec_id,
-             |    CAST(embedding AS DOUBLE[]) AS d FROM embeddings),
-             |s AS (SELECT vec_id, t.j, d[t.j*8+1 : t.j*8+8] AS sv
-             |  FROM e, range(0, 8) t(j)),
-             |cen AS (SELECT j, s.vec_id AS cen_id, sv AS cv FROM s
-             |  WHERE s.vec_id IN (SELECT vec_id FROM e
-             |    ORDER BY vec_id LIMIT 16)),
-             |a0 AS (SELECT s.vec_id AS id, s.j, s.sv, cen_id,
-             |    round(list_dot_product(sv, sv)
-             |      - 2 * list_dot_product(sv, cv)
-             |      + list_dot_product(cv, cv), 6) AS dist2
-             |  FROM s JOIN cen ON s.j = cen.j),
-             |a1 AS (SELECT *, row_number() OVER (PARTITION BY id, j
-             |    ORDER BY dist2, cen_id) AS r FROM a0),
+      Some(s"""WITH $oPqSeeds,
+             |${oPqNearest("a", "cen", carry = "s.sv, ")},
              |asg AS (SELECT id, j, sv, cen_id FROM a1 WHERE r = 1),
              |m1 AS (SELECT j, cen_id, t.p,
              |    round(avg(sv[t.p + 1]), 6) AS mv
@@ -189,52 +158,17 @@ object Round10 {
             dims = 64, m = 8, nCentroids = 16, trainIters = 1)
           .orderBy(col("query_id"), col("rank"))
       },
-      Some("""WITH e AS (SELECT vec_id,
-             |    CAST(embedding AS DOUBLE[]) AS d FROM embeddings),
-             |s AS (SELECT vec_id, t.j, d[t.j*8+1 : t.j*8+8] AS sv
-             |  FROM e, range(0, 8) t(j)),
-             |cen AS (SELECT j, s.vec_id AS cen_id, sv AS cv FROM s
-             |  WHERE s.vec_id IN (SELECT vec_id FROM e
-             |    ORDER BY vec_id LIMIT 16)),
-             |a0 AS (SELECT s.vec_id AS id, s.j, s.sv, cen_id,
-             |    round(list_dot_product(sv, sv)
-             |      - 2 * list_dot_product(sv, cv)
-             |      + list_dot_product(cv, cv), 6) AS dist2
-             |  FROM s JOIN cen ON s.j = cen.j),
-             |a1 AS (SELECT *, row_number() OVER (PARTITION BY id, j
-             |    ORDER BY dist2, cen_id) AS r FROM a0),
+      Some(s"""WITH $oPqSeeds,
+             |${oPqNearest("a", "cen", carry = "s.sv, ")},
              |asg AS (SELECT id, j, sv, cen_id FROM a1 WHERE r = 1),
              |m1 AS (SELECT j, cen_id, t.p,
              |    round(avg(sv[t.p + 1]), 6) AS mv
              |  FROM asg, range(0, 8) t(p) GROUP BY j, cen_id, t.p),
              |cen1 AS (SELECT j, cen_id, list(mv ORDER BY p) AS cv
              |  FROM m1 GROUP BY j, cen_id),
-             |b0 AS (SELECT s.vec_id AS id, s.j, cen_id,
-             |    round(list_dot_product(sv, sv)
-             |      - 2 * list_dot_product(sv, cv)
-             |      + list_dot_product(cv, cv), 6) AS dist2
-             |  FROM s JOIN cen1 ON s.j = cen1.j),
-             |b1 AS (SELECT *, row_number() OVER (PARTITION BY id, j
-             |    ORDER BY dist2, cen_id) AS r FROM b0),
+             |${oPqNearest("b", "cen1")},
              |c AS (SELECT id, j, cen_id AS code FROM b1 WHERE r = 1),
-             |qs AS (SELECT vec_id AS query_id, j, sv AS qv FROM s
-             |  WHERE vec_id < 20),
-             |tbl AS (SELECT query_id, qs.j, cen_id AS code,
-             |    CAST(round(list_dot_product(qv, qv)
-             |      - 2 * list_dot_product(qv, cv)
-             |      + list_dot_product(cv, cv), 6)
-             |      AS DECIMAL(20,6)) AS d2
-             |  FROM qs JOIN cen1 ON qs.j = cen1.j),
-             |sums AS (SELECT query_id, c.id AS neighbor_id,
-             |    CAST(SUM(d2) AS DOUBLE) AS adist
-             |  FROM c JOIN tbl ON c.j = tbl.j AND c.code = tbl.code
-             |  WHERE query_id != c.id GROUP BY query_id, c.id),
-             |r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-             |    ORDER BY adist, neighbor_id) AS rank FROM sums)
-             |SELECT query_id, neighbor_id, adist,
-             |  CAST(rank AS BIGINT) AS rank
-             |FROM r WHERE rank <= 5
-             |ORDER BY query_id, rank""".stripMargin)),
+             |${oPqAdcTop5("cen1")}""".stripMargin)),
 
     // ---- stream-stream interval join, batch twin: the SAME
     // EventStreams.intervalJoin code path (withWatermark is a no-op on
@@ -403,19 +337,7 @@ object Round10 {
         .select(col("k").as("event_type"), col("day"),
           col("n_events"), col("ewma_milli"))
         .orderBy(col("event_type"), col("day")),
-      Some("""WITH e AS (SELECT event_type, CAST(ts AS DATE) AS day
-             |  FROM events),
-             |c AS (SELECT event_type, day, COUNT(*) AS n FROM e
-             |  GROUP BY 1, 2),
-             |sp AS (SELECT event_type, MIN(day) AS d0, MAX(day) AS d1
-             |  FROM e GROUP BY 1),
-             |cal AS (SELECT event_type,
-             |    CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY))
-             |      AS DATE) AS day FROM sp),
-             |f AS (SELECT cal.event_type, cal.day,
-             |    CAST(COALESCE(c.n, 0) AS BIGINT) AS n_events
-             |  FROM cal LEFT JOIN c ON cal.event_type = c.event_type
-             |    AND cal.day = c.day),
+      Some(s"""WITH $oDailyFilled,
              |l AS (SELECT event_type, day, n_events,
              |    LAG(n_events, 1) OVER w AS l1,
              |    LAG(n_events, 2) OVER w AS l2,
@@ -593,12 +515,7 @@ object Round10 {
           CorpusOps.sharedJaccardPairs(s, dir), "da", "db", iters = 3)
         .withColumnRenamed("node", "doc_id")
         .orderBy(col("doc_id")),
-      Some(s"""WITH ${CorpusOps.oShinglesSql},
-              |hs AS (SELECT doc_id, ${CorpusOps.oH60("s")} AS h FROM sh),
-              |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-              |p AS (SELECT a.doc_id da, b.doc_id db, COUNT(*) AS inter
-              |  FROM hs a JOIN hs b ON a.h = b.h AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
+      Some(s"""WITH $oShinglePairs,
               |pairs AS (SELECT da, db FROM p
               |  JOIN sz x ON da = x.doc_id JOIN sz y ON db = y.doc_id
               |  WHERE inter / (x.n + y.n - inter) >= 0.6),
@@ -1338,18 +1255,7 @@ object Round10 {
     // union-window pass (q43's backward twin mirrored)
     QueryDef("q194_asof_forward",
       (s, dir) => {
-        val ev = t("events")(s, dir)
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"), col("ts"),
-            col("value"))
-        val errW = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("user_id"), col("ts"))
-          .orderBy(col("event_id").desc)
-        val errors = ev.filter(col("event_type") === "error")
-          .withColumn("_r", row_number().over(errW))
-          .filter(col("_r") === 1)
-          .select(col("user_id"), col("ts").as("nerr_ts"),
-            col("value").as("nerr_value"))
+        val (clicks, errors) = clicksAndErrors(s, dir, "nerr")
         graft.operators.AsOf.joinForward(clicks, errors,
             Seq("user_id"), "ts", "nerr_ts",
             Seq("nerr_ts", "nerr_value"))
@@ -1438,23 +1344,8 @@ object Round10 {
             expr("(tokens_removed * 1000000) div n_tokens")
               .as("tokens_removed_ppm"))
       },
-      Some(s"""WITH RECURSIVE ${CorpusOps.oShinglesSql},
-              |hs AS (SELECT doc_id, ${CorpusOps.oH60("s")} AS h FROM sh),
-              |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-              |p AS (SELECT a.doc_id da, b.doc_id db, COUNT(*) AS inter
-              |  FROM hs a JOIN hs b ON a.h = b.h AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
-              |pairs AS (SELECT da, db FROM p
-              |  JOIN sz x ON da = x.doc_id JOIN sz y ON db = y.doc_id
-              |  WHERE inter / (x.n + y.n - inter) >= 0.6),
-              |edges AS (SELECT da AS src, db AS dst FROM pairs
-              |  UNION ALL SELECT db, da FROM pairs),
-              |walk AS (
-              |  SELECT doc_id AS id, doc_id AS lbl FROM documents
-              |  UNION
-              |  SELECT e.dst AS id, w.lbl
-              |  FROM walk w JOIN edges e ON w.id = e.src
-              |  WHERE w.lbl < e.dst),
+      Some(s"""WITH RECURSIVE $oJaccardEdges,
+              |$oWalk,
               |cl AS (SELECT id, MIN(lbl) AS cluster FROM walk
               |  GROUP BY id),
               |tk AS (SELECT doc_id, CAST(len(list_filter(
@@ -1621,23 +1512,8 @@ object Round10 {
             col("x.share_ppm"))
           .orderBy(col("stage"))
       },
-      Some(s"""WITH RECURSIVE ${CorpusOps.oShinglesSql},
-              |hs AS (SELECT doc_id, ${CorpusOps.oH60("s")} AS h FROM sh),
-              |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-              |p AS (SELECT a.doc_id da, b.doc_id db, COUNT(*) AS inter
-              |  FROM hs a JOIN hs b ON a.h = b.h AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
-              |pairs AS (SELECT da, db FROM p
-              |  JOIN sz x ON da = x.doc_id JOIN sz y ON db = y.doc_id
-              |  WHERE inter / (x.n + y.n - inter) >= 0.6),
-              |edges AS (SELECT da AS src, db AS dst FROM pairs
-              |  UNION ALL SELECT db, da FROM pairs),
-              |walk AS (
-              |  SELECT doc_id AS id, doc_id AS lbl FROM documents
-              |  UNION
-              |  SELECT e.dst AS id, w.lbl
-              |  FROM walk w JOIN edges e ON w.id = e.src
-              |  WHERE w.lbl < e.dst),
+      Some(s"""WITH RECURSIVE $oJaccardEdges,
+              |$oWalk,
               |cl AS (SELECT id, MIN(lbl) AS cluster FROM walk
               |  GROUP BY id),
               |wlist AS (SELECT doc_id, list_filter(

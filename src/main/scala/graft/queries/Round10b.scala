@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import graft.operators.{Classifier, Eval}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -21,8 +20,27 @@ import org.apache.spark.sql.functions._
   * distinct-score-frame contract at full width.
   */
 object Round10b {
-  private def t(name: String): QueryFn =
-    (s, dir) => Tables.load(s, dir, name)
+  /** Oracle CTEs of the LOCF rows: each user's last observed value per
+    * day (latest writer wins) over the user's dense calendar,
+    * `j(k, day, value)`, NULL on days without an observation. */
+  private val oUserDays: String =
+    """e AS (SELECT user_id,
+      |    CAST(ts AS TIMESTAMP) AS ts, value, event_id
+      |  FROM events WHERE ts IS NOT NULL),
+      |r AS (SELECT user_id, CAST(ts AS DATE) AS day, value,
+      |    row_number() OVER (PARTITION BY user_id,
+      |      CAST(ts AS DATE) ORDER BY ts DESC, event_id DESC)
+      |      AS rn FROM e),
+      |d AS (SELECT user_id AS k, day, value FROM r
+      |  WHERE rn = 1),
+      |sp AS (SELECT k, MIN(day) AS d0, MAX(day) AS d1 FROM d
+      |  GROUP BY k),
+      |cal AS (SELECT k, CAST(unnest(generate_series(
+      |    CAST(d0 AS TIMESTAMP), CAST(d1 AS TIMESTAMP),
+      |    INTERVAL 1 DAY)) AS DATE) AS day FROM sp),
+      |j AS (SELECT cal.k, cal.day, d.value
+      |  FROM cal LEFT JOIN d
+      |    ON cal.k = d.k AND cal.day = d.day)""".stripMargin
 
   /** (doc_id, score, label): exact micro-margin of the q104 fused
     * kernel (truncating div — Spark `div` ≡ DuckDB `//`), label =
@@ -45,21 +63,7 @@ object Round10b {
     * `sc(doc_id, score, label)`.
     */
   private val oEvalFrame: String =
-    """w AS (SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '\s+'),
-      |      x -> len(x) > 0) AS ws FROM documents),
-      |f AS (SELECT doc_id, list_concat(ws,
-      |    list_transform(generate_series(1, len(ws) - 1),
-      |      i -> ws[i] || ' ' || ws[i+1])) AS feats FROM w),
-      |e AS (SELECT doc_id, unnest(feats) AS feat FROM f),
-      |b AS (SELECT doc_id,
-      |    CAST(concat('0x', substr(md5('cls|' || feat), 1, 15))
-      |      AS BIGINT) % 262144 AS bucket FROM e),
-      |s AS (SELECT doc_id, COUNT(*) AS n_feats,
-      |    SUM(CAST(concat('0x',
-      |        substr(md5('w|cls|' || CAST(bucket AS VARCHAR)),
-      |          1, 15)) AS BIGINT) % 2001 - 1000) AS w_milli
-      |  FROM b GROUP BY doc_id),
+    s"""$oHashedWeights,
       |sc AS (SELECT d.doc_id, (s.w_milli * 1000) // s.n_feats AS score,
       |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS label
       |  FROM documents d JOIN s USING (doc_id) WHERE s.n_feats > 0),
@@ -295,18 +299,7 @@ object Round10b {
           t("documents")(s, dir), "text", "doc_id", "lang",
           nBuckets = 3)
         .orderBy(col("doc_id")),
-      Some("""WITH w AS (SELECT doc_id, unnest(list_filter(
-             |    string_split_regex(lower(text), '\s+'),
-             |    x -> len(x) > 0)) AS word FROM documents),
-             |tf AS (SELECT doc_id, word, COUNT(*) AS tf
-             |  FROM w GROUP BY doc_id, word),
-             |c AS (SELECT word, COUNT(*) AS cnt FROM w GROUP BY word),
-             |n AS (SELECT SUM(cnt) AS n_total FROM c),
-             |lp AS (SELECT word, CAST(round(ln(cnt / n_total), 6)
-             |    AS DECIMAL(20,6)) AS logp FROM c, n),
-             |d AS (SELECT tf.doc_id, SUM(tf.tf) AS n_tokens,
-             |    SUM(lp.logp * tf.tf) AS s
-             |  FROM tf JOIN lp USING (word) GROUP BY tf.doc_id),
+      Some(s"""WITH $oUnigramLogProbs,
              |m AS (SELECT doc_id,
              |    (CASE WHEN s < 0 THEN -1 ELSE 1 END) *
              |      ((CAST(abs(s) * 1000000 AS BIGINT) * 2 + n_tokens)
@@ -446,12 +439,7 @@ object Round10b {
           k = 2, rounds = 3)
         .withColumnRenamed("node", "doc_id")
         .orderBy(col("doc_id")),
-      Some(s"""WITH ${CorpusOps.oShinglesSql},
-              |hs AS (SELECT doc_id, ${CorpusOps.oH60("s")} AS h FROM sh),
-              |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-              |p AS (SELECT a.doc_id da, b.doc_id db, COUNT(*) AS inter
-              |  FROM hs a JOIN hs b ON a.h = b.h AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
+      Some(s"""WITH $oShinglePairs,
               |pairs AS (SELECT da, db FROM p
               |  JOIN sz x ON da = x.doc_id JOIN sz y ON db = y.doc_id
               |  WHERE inter / (x.n + y.n - inter) >= 0.6),
@@ -698,12 +686,7 @@ object Round10b {
               |  WHERE inter / (x.n + y.n - inter) >= 0.6),
               |edges AS (SELECT da AS src, db AS dst FROM pairs
               |  UNION ALL SELECT db, da FROM pairs),
-              |walk AS (
-              |  SELECT doc_id AS id, doc_id AS lbl FROM documents
-              |  UNION
-              |  SELECT e.dst AS id, w.lbl
-              |  FROM walk w JOIN edges e ON w.id = e.src
-              |  WHERE w.lbl < e.dst),
+              |$oWalk,
               |cc AS (SELECT id, MIN(lbl) AS cluster FROM walk
               |  GROUP BY id),
               |jj AS (SELECT cc.cluster, d.doc_id AS id, d.lang,
@@ -965,23 +948,7 @@ object Round10b {
       (s, dir) => graft.operators.Series.forwardFillDaily(
           t("events")(s, dir), "user_id", "ts", "value", "event_id")
         .orderBy(col("k"), col("day")),
-      Some("""WITH e AS (SELECT user_id,
-             |    CAST(ts AS TIMESTAMP) AS ts, value, event_id
-             |  FROM events WHERE ts IS NOT NULL),
-             |r AS (SELECT user_id, CAST(ts AS DATE) AS day, value,
-             |    row_number() OVER (PARTITION BY user_id,
-             |      CAST(ts AS DATE) ORDER BY ts DESC, event_id DESC)
-             |      AS rn FROM e),
-             |d AS (SELECT user_id AS k, day, value FROM r
-             |  WHERE rn = 1),
-             |sp AS (SELECT k, MIN(day) AS d0, MAX(day) AS d1 FROM d
-             |  GROUP BY k),
-             |cal AS (SELECT k, CAST(unnest(generate_series(
-             |    CAST(d0 AS TIMESTAMP), CAST(d1 AS TIMESTAMP),
-             |    INTERVAL 1 DAY)) AS DATE) AS day FROM sp),
-             |j AS (SELECT cal.k, cal.day, d.value
-             |  FROM cal LEFT JOIN d
-             |    ON cal.k = d.k AND cal.day = d.day),
+      Some(s"""WITH $oUserDays,
              |f AS (SELECT k, day,
              |    LAST_VALUE(value IGNORE NULLS) OVER w AS v_filled,
              |    MAX(CASE WHEN value IS NOT NULL THEN day END) OVER w
@@ -1199,23 +1166,7 @@ object Round10b {
       (s, dir) => graft.operators.Series.timeWeightedAverage(
           t("events")(s, dir), "user_id", "ts", "value", "event_id")
         .orderBy(col("k")),
-      Some("""WITH e AS (SELECT user_id,
-             |    CAST(ts AS TIMESTAMP) AS ts, value, event_id
-             |  FROM events WHERE ts IS NOT NULL),
-             |r AS (SELECT user_id, CAST(ts AS DATE) AS day, value,
-             |    row_number() OVER (PARTITION BY user_id,
-             |      CAST(ts AS DATE) ORDER BY ts DESC, event_id DESC)
-             |      AS rn FROM e),
-             |d AS (SELECT user_id AS k, day, value FROM r
-             |  WHERE rn = 1),
-             |sp AS (SELECT k, MIN(day) AS d0, MAX(day) AS d1 FROM d
-             |  GROUP BY k),
-             |cal AS (SELECT k, CAST(unnest(generate_series(
-             |    CAST(d0 AS TIMESTAMP), CAST(d1 AS TIMESTAMP),
-             |    INTERVAL 1 DAY)) AS DATE) AS day FROM sp),
-             |j AS (SELECT cal.k, cal.day, d.value
-             |  FROM cal LEFT JOIN d
-             |    ON cal.k = d.k AND cal.day = d.day),
+      Some(s"""WITH $oUserDays,
              |f AS (SELECT k, day,
              |    LAST_VALUE(value IGNORE NULLS) OVER (PARTITION BY k
              |      ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND

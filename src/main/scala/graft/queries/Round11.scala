@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import graft.operators.{Dedup, Similarity}
 import org.apache.spark.sql.functions._
 
@@ -14,9 +13,6 @@ import org.apache.spark.sql.functions._
   * nested-exists + correlated agg on a composite key (q249).
   */
 object Round11 {
-  private def t(name: String): QueryFn =
-    (s, dir) => Tables.load(s, dir, name)
-
   /** Shared ranked-shingle artifact per (session, dataset) — the
     * q105/q115 artifact-registration discipline applied to the PPJoin
     * family: q25/q66/q161 all rank the SAME corpus's 3-shingles by

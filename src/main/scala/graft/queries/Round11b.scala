@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import org.apache.spark.sql.functions._
 
 /** Round-11 continuation: the remaining classic TPC-H planner shapes
@@ -16,9 +15,6 @@ import org.apache.spark.sql.functions._
   * indistinguishable.
   */
 object Round11b {
-  private def t(name: String): QueryFn =
-    (s, dir) => Tables.load(s, dir, name)
-
   /** Exact per-row revenue: extprice·(1−disc) as DECIMAL(25,4). */
   private val revDec =
     col("l_extendedprice").cast("decimal(12,2)") *

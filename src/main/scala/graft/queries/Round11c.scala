@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import graft.operators.{Dedup, Similarity}
 import org.apache.spark.sql.functions._
 
@@ -11,9 +10,6 @@ import org.apache.spark.sql.functions._
   * mutual-NN, each oracle-gated.
   */
 object Round11c {
-  private def t(name: String): QueryFn =
-    (s, dir) => Tables.load(s, dir, name)
-
   /** DuckDB rounded-cosine expression over DOUBLE[] columns. */
   private def oCos(a: String, b: String): String =
     s"round(list_dot_product($a, $b) / " +
@@ -53,7 +49,7 @@ object Round11c {
             ranked = Some(ranked))
           .orderBy(col("da"), col("db"))
       },
-      Round3.defs.find(_.name == "q66_jaccard_prefix").get.oracle),
+      Some(oJaccardPairs)),
 
     // ---- cross-corpus mutual nearest neighbors: the ACTUAL bitext-
     // mining deployment shape (pairs BETWEEN a source and a target
@@ -100,28 +96,7 @@ object Round11c {
               |pm AS (SELECT left_id, right_id,
               |    CAST(CAST(sim AS DECIMAL(10,6)) * 1000000 AS BIGINT)
               |      AS sim_micro FROM p),
-              |ln0 AS (SELECT *, row_number() OVER (
-              |    PARTITION BY left_id
-              |    ORDER BY sim_micro DESC, right_id) AS rk FROM pm),
-              |ln AS (SELECT left_id, SUM(sim_micro) AS sum_l,
-              |    COUNT(*) AS k_l FROM ln0 WHERE rk <= 3 GROUP BY 1),
-              |ltop AS (SELECT left_id, right_id, sim_micro FROM ln0
-              |  WHERE rk = 1),
-              |rn0 AS (SELECT *, row_number() OVER (
-              |    PARTITION BY right_id
-              |    ORDER BY sim_micro DESC, left_id) AS rk FROM pm),
-              |rn AS (SELECT right_id, SUM(sim_micro) AS sum_r,
-              |    COUNT(*) AS k_r FROM rn0 WHERE rk <= 3 GROUP BY 1)
-              |SELECT ltop.left_id, ltop.right_id, ltop.sim_micro,
-              |  CAST(ltop.sim_micro - (CASE
-              |    WHEN sum_l * k_r + sum_r * k_l < 0
-              |    THEN -(abs(sum_l * k_r + sum_r * k_l)
-              |      // (k_l * k_r * 2))
-              |    ELSE (sum_l * k_r + sum_r * k_l)
-              |      // (k_l * k_r * 2) END) AS BIGINT) AS margin_micro
-              |FROM ltop JOIN ln USING (left_id)
-              |JOIN rn USING (right_id)
-              |ORDER BY ltop.left_id""".stripMargin)),
+              |$oMarginTop3""".stripMargin)),
 
     // ---- Gopher quality rules (Rae et al. 2021): the canonical
     // public document-filter set as exact-integer metrics + rule

@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import graft.operators.Intervals
 import org.apache.spark.sql.functions._
 
@@ -16,9 +15,6 @@ import org.apache.spark.sql.functions._
   * oracle replays the same derivation.
   */
 object Round11d {
-  private def t(name: String): QueryFn =
-    (s, dir) => Tables.load(s, dir, name)
-
   /** lineitem → (l_suppkey, s, e): ship date + (orderkey+linenumber)%14
     * transit days, inclusive. */
   private def transit(s: org.apache.spark.sql.SparkSession, dir: String) =

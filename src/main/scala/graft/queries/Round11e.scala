@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import graft.operators.Dedup
 import org.apache.spark.sql.functions._
 
@@ -13,9 +12,6 @@ import org.apache.spark.sql.functions._
   * reading-ease in exact integer micro-points.
   */
 object Round11e {
-  private def t(name: String): QueryFn =
-    (s, dir) => Tables.load(s, dir, name)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- line-level exact dedup: the corpus is single-line word

@@ -11,9 +11,6 @@ import org.apache.spark.sql.functions._
   * overlap (replayed verbatim by the oracle).
   */
 object Round11f {
-  private def t(name: String): QueryFn =
-    (s, dir) => Tables.load(s, dir, name)
-
   /** Shared doc-as-query BM25 SCORES artifact per (session, dataset)
     * — the q115/q244 registry discipline applied to the q274/q314
     * query batch (doc_id%20=0, first-5-words queries, shared TF):
@@ -164,15 +161,7 @@ object Round11f {
       (s, dir) => graft.operators.Series.acfDaily(
           t("events")(s, dir), "ts", maxLag = 7)
         .orderBy(col("lag")),
-      Some("""WITH c AS (SELECT CAST(ts AS DATE) AS day,
-             |    CAST(COUNT(*) AS BIGINT) AS x FROM events GROUP BY 1),
-             |sp AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM c),
-             |cal AS (SELECT d0, CAST(unnest(generate_series(
-             |    CAST(d0 AS TIMESTAMP), CAST(d1 AS TIMESTAMP),
-             |    INTERVAL 1 DAY)) AS DATE) AS day FROM sp),
-             |dense AS (SELECT CAST(DATEDIFF('day', cal.d0, cal.day)
-             |    AS BIGINT) AS t, COALESCE(c.x, 0) AS x
-             |  FROM cal LEFT JOIN c USING (day)),
+      Some(s"""WITH $oDenseDays,
              |st AS (SELECT CAST(COUNT(*) AS HUGEINT) AS n,
              |    CAST(SUM(x) AS HUGEINT) AS sx FROM dense),
              |dev AS (SELECT t, st.n * x - st.sx AS d
@@ -274,12 +263,7 @@ object Round11f {
       (s, dir) => graft.operators.Series.weekdayDecomposition(
           t("events")(s, dir), "ts")
         .orderBy(col("day")),
-      Some("""WITH c AS (SELECT CAST(ts AS DATE) AS day,
-             |    CAST(COUNT(*) AS BIGINT) AS x FROM events GROUP BY 1),
-             |sp AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM c),
-             |cal AS (SELECT d0, CAST(unnest(generate_series(
-             |    CAST(d0 AS TIMESTAMP), CAST(d1 AS TIMESTAMP),
-             |    INTERVAL 1 DAY)) AS DATE) AS day FROM sp),
+      Some(s"""WITH $oDailyTotals,
              |dense AS (SELECT cal.day,
              |    CAST(DATEDIFF('day', cal.d0, cal.day) AS BIGINT) AS t,
              |    COALESCE(c.x, 0) AS x
@@ -317,15 +301,7 @@ object Round11f {
     QueryDef("q279_mann_kendall",
       (s, dir) => graft.operators.Series.mannKendallDaily(
         t("events")(s, dir), "ts"),
-      Some("""WITH c AS (SELECT CAST(ts AS DATE) AS day,
-             |    CAST(COUNT(*) AS BIGINT) AS x FROM events GROUP BY 1),
-             |sp AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM c),
-             |cal AS (SELECT d0, CAST(unnest(generate_series(
-             |    CAST(d0 AS TIMESTAMP), CAST(d1 AS TIMESTAMP),
-             |    INTERVAL 1 DAY)) AS DATE) AS day FROM sp),
-             |dense AS (SELECT CAST(DATEDIFF('day', cal.d0, cal.day)
-             |    AS BIGINT) AS t, COALESCE(c.x, 0) AS x
-             |  FROM cal LEFT JOIN c USING (day)),
+      Some(s"""WITH $oDenseDays,
              |p AS (SELECT a.x AS xi, b.x AS xj FROM dense a
              |  JOIN dense b ON b.t > a.t),
              |sf AS (SELECT CAST(SUM(CASE WHEN xj > xi THEN 1
@@ -354,15 +330,7 @@ object Round11f {
     QueryDef("q280_theil_sen",
       (s, dir) => graft.operators.Series.theilSenDaily(
         t("events")(s, dir), "ts"),
-      Some("""WITH c AS (SELECT CAST(ts AS DATE) AS day,
-             |    CAST(COUNT(*) AS BIGINT) AS x FROM events GROUP BY 1),
-             |sp AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM c),
-             |cal AS (SELECT d0, CAST(unnest(generate_series(
-             |    CAST(d0 AS TIMESTAMP), CAST(d1 AS TIMESTAMP),
-             |    INTERVAL 1 DAY)) AS DATE) AS day FROM sp),
-             |dense AS (SELECT CAST(DATEDIFF('day', cal.d0, cal.day)
-             |    AS BIGINT) AS t, COALESCE(c.x, 0) AS x
-             |  FROM cal LEFT JOIN c USING (day)),
+      Some(s"""WITH $oDenseDays,
              |p AS (SELECT b.x - a.x AS dy, b.t - a.t AS dx
              |  FROM dense a JOIN dense b ON b.t > a.t),
              |r AS (SELECT dy, dx, ROW_NUMBER() OVER (ORDER BY

@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import graft.operators.TextOps
 import org.apache.spark.sql.functions._
 
@@ -11,9 +10,6 @@ import org.apache.spark.sql.functions._
   * tokenizer sees the text.
   */
 object Round11g {
-  private def t(name: String): QueryFn =
-    (s, dir) => Tables.load(s, dir, name)
-
   /** Oracle twin of [[TextOps.hashSplit]] at 80/10/10 over an
     * arbitrary key expression (the q46 CASE, factored).
     */
@@ -53,12 +49,7 @@ object Round11g {
           .withColumn("is_leak", col("split_a") =!= col("split_b"))
           .orderBy(col("split_a"), col("split_b"))
       },
-      Some(s"""WITH ${CorpusOps.oShinglesSql},
-              |hs AS (SELECT doc_id, ${CorpusOps.oH60("s")} AS h FROM sh),
-              |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-              |p AS (SELECT a.doc_id da, b.doc_id db, COUNT(*) AS inter
-              |  FROM hs a JOIN hs b ON a.h = b.h AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
+      Some(s"""WITH $oShinglePairs,
               |pairs AS (SELECT da, db FROM p
               |  JOIN sz x ON da = x.doc_id JOIN sz y ON db = y.doc_id
               |  WHERE inter / (x.n + y.n - inter) >= 0.6),
@@ -113,12 +104,7 @@ object Round11g {
           .select(col("anchor_id"), col("neg_id"), col("neg_rank"))
           .orderBy(col("anchor_id"), col("neg_rank"))
       },
-      Some(s"""WITH ${CorpusOps.oShinglesSql},
-              |hs AS (SELECT doc_id, ${CorpusOps.oH60("s")} AS h FROM sh),
-              |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-              |p AS (SELECT a.doc_id da, b.doc_id db, COUNT(*) AS inter
-              |  FROM hs a JOIN hs b ON a.h = b.h AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
+      Some(s"""WITH $oShinglePairs,
               |pairs AS (SELECT da, db FROM p
               |  JOIN sz x ON da = x.doc_id JOIN sz y ON db = y.doc_id
               |  WHERE inter / (x.n + y.n - inter) >= 0.6),
@@ -525,12 +511,7 @@ object Round11g {
             concat_ws("|", col("lang"), col("source"))))
           .orderBy(col("scheme"))
       },
-      Some(s"""WITH ${CorpusOps.oShinglesSql},
-              |hs AS (SELECT doc_id, ${CorpusOps.oH60("s")} AS h FROM sh),
-              |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-              |p AS (SELECT a.doc_id da, b.doc_id db, COUNT(*) AS inter
-              |  FROM hs a JOIN hs b ON a.h = b.h AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
+      Some(s"""WITH $oShinglePairs,
               |pairs AS (SELECT da, db FROM p
               |  JOIN sz x ON da = x.doc_id JOIN sz y ON db = y.doc_id
               |  WHERE inter / (x.n + y.n - inter) >= 0.6),

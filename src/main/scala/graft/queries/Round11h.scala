@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import graft.operators.TextOps
 import org.apache.spark.sql.functions._
 
@@ -9,9 +8,6 @@ import org.apache.spark.sql.functions._
   * rank-sketch next to HLL/KMV/CMS, with an exact rank-error audit).
   */
 object Round11h {
-  private def t(name: String): QueryFn =
-    (s, dir) => Tables.load(s, dir, name)
-
   private val enM = Seq("the", "of", "and", "a", "to", "in", "is")
   private val esM = Seq("el", "la", "de", "los", "y", "en", "que")
   private val deM = Seq("der", "die", "das", "und", "ist")

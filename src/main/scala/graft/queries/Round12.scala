@@ -1,7 +1,7 @@
 package graft.queries
 
-import graft.Tables
 import graft.operators.Similarity
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Round-12 catalog (q300+): the r11 verdict's asks — the
@@ -11,8 +11,37 @@ import org.apache.spark.sql.functions._
   * (q301 — the public scale answer to q274's exhaustive scoring).
   */
 object Round12 {
-  private def t(name: String): QueryFn =
-    (s, dir) => Tables.load(s, dir, name)
+  /** Little-endian hex of a 16-bit value. */
+  private def le16h(c: Column): Column = {
+    val x = lpad(hex(c), 4, "0")
+    concat(substring(x, 3, 2), substring(x, 1, 2))
+  }
+
+  /** The audio rows' per-document sample count. */
+  private def pcmSamples: Column = col("doc_id") % 50 + 10
+
+  /** The audio rows' 16-bit PCM samples as little-endian hex: sample i
+    * of a document is (doc_id·7 + i·13) mod 2^16. */
+  private def pcmHex: Column = array_join(transform(
+    sequence(lit(0L), pcmSamples - 1),
+    i => le16h(pmod(col("doc_id") * 7 + i * 13, lit(65536L)))), "")
+
+  /** Oracle CTEs of the audio-frame rows: every complete 8-sample frame's
+    * signed samples, `v(doc_id, frame_no, smp)`. */
+  private val oPcmFrames: String =
+    """d AS (SELECT doc_id, doc_id % 50 + 10 AS n
+      |  FROM documents),
+      |f AS (SELECT doc_id, n, unnest(generate_series(0,
+      |    CAST((n - 8) // 8 AS BIGINT))) AS frame_no
+      |  FROM d WHERE n >= 8),
+      |sm AS (SELECT doc_id, frame_no,
+      |    unnest(generate_series(0, 7)) AS j FROM f),
+      |u AS (SELECT doc_id, frame_no,
+      |    (doc_id * 7 + (frame_no * 8 + j) * 13) % 65536 AS uu
+      |  FROM sm),
+      |v AS (SELECT doc_id, frame_no,
+      |    CASE WHEN uu < 32768 THEN uu ELSE uu - 65536 END
+      |      AS smp FROM u)""".stripMargin
 
   /** DuckDB rounded-cosine expression over DOUBLE[] columns. */
   private def oCos(a: String, b: String): String =
@@ -38,8 +67,6 @@ object Round12 {
     2 -> "window merge batch stream vector",
     3 -> "scan filter zzzabsent",
     4 -> "partition shuffle")
-  private val prunedValues: String = prunedQueries
-    .map { case (qid, txt) => s"($qid, '$txt')" }.mkString(", ")
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -82,28 +109,7 @@ object Round12 {
            |    CAST(CAST(${oCos("lb.e", "rb.e")} AS DECIMAL(10,6))
            |      * 1000000 AS BIGINT) AS sim_micro
            |  FROM cand JOIN lb USING (left_id) JOIN rb USING (right_id)),
-           |ln0 AS (SELECT *, row_number() OVER (
-           |    PARTITION BY left_id
-           |    ORDER BY sim_micro DESC, right_id) AS rk FROM pm),
-           |ln AS (SELECT left_id, SUM(sim_micro) AS sum_l,
-           |    COUNT(*) AS k_l FROM ln0 WHERE rk <= 3 GROUP BY 1),
-           |ltop AS (SELECT left_id, right_id, sim_micro FROM ln0
-           |  WHERE rk = 1),
-           |rn0 AS (SELECT *, row_number() OVER (
-           |    PARTITION BY right_id
-           |    ORDER BY sim_micro DESC, left_id) AS rk FROM pm),
-           |rn AS (SELECT right_id, SUM(sim_micro) AS sum_r,
-           |    COUNT(*) AS k_r FROM rn0 WHERE rk <= 3 GROUP BY 1)
-           |SELECT ltop.left_id, ltop.right_id, ltop.sim_micro,
-           |  CAST(ltop.sim_micro - (CASE
-           |    WHEN sum_l * k_r + sum_r * k_l < 0
-           |    THEN -(abs(sum_l * k_r + sum_r * k_l)
-           |      // (k_l * k_r * 2))
-           |    ELSE (sum_l * k_r + sum_r * k_l)
-           |      // (k_l * k_r * 2) END) AS BIGINT) AS margin_micro
-           |FROM ltop JOIN ln USING (left_id)
-           |JOIN rn USING (right_id)
-           |ORDER BY ltop.left_id""".stripMargin
+           |$oMarginTop3""".stripMargin
       }),
 
     // ---- max-score-pruned BM25 top-k (Turtle & Flood 1995; the
@@ -117,16 +123,7 @@ object Round12 {
       (s, dir) => graft.operators.Retrieval.bm25TopKPruned(
         t("documents")(s, dir), "doc_id", "text",
         prunedQueries, k = 10, tf = Some(Round9b.sharedTf(s, dir))),
-      Some(s"""WITH ${graft.operators.Retrieval.bm25OracleCtes(
-                prunedValues, 1.2, 0.75)},
-              |r AS (SELECT query_id, doc_id, score,
-              |    ROW_NUMBER() OVER (PARTITION BY query_id
-              |      ORDER BY score DESC, doc_id) AS rnk
-              |  FROM sc)
-              |SELECT query_id, doc_id, score,
-              |  CAST(rnk AS BIGINT) AS rank
-              |FROM r WHERE rnk <= 10
-              |ORDER BY query_id, rank""".stripMargin)),
+      Some(oBm25Top10(prunedQueries))),
 
     // ---- the WRITTEN inverted index end to end (the 100 TB
     // deployment shape: q95/q259's build-once/persist/consume-many
@@ -147,16 +144,7 @@ object Round12 {
         graft.operators.Retrieval.bm25TopKPrunedFromIndex(
           s, outDir.getAbsolutePath, prunedQueries, k = 10)
       },
-      Some(s"""WITH ${graft.operators.Retrieval.bm25OracleCtes(
-                prunedValues, 1.2, 0.75)},
-              |r AS (SELECT query_id, doc_id, score,
-              |    ROW_NUMBER() OVER (PARTITION BY query_id
-              |      ORDER BY score DESC, doc_id) AS rnk
-              |  FROM sc)
-              |SELECT query_id, doc_id, score,
-              |  CAST(rnk AS BIGINT) AS rank
-              |FROM r WHERE rnk <= 10
-              |ORDER BY query_id, rank""".stripMargin)),
+      Some(oBm25Top10(prunedQueries))),
 
     // ---- rendezvous (highest-random-weight) shard placement and the
     // resize-stability audit: growing 5 → 6 shards moves ~1/6 of the
@@ -241,23 +229,8 @@ object Round12 {
           .unionAll(arm("doc_hash", naive))
           .orderBy(col("scheme"))
       },
-      Some(s"""WITH RECURSIVE ${CorpusOps.oShinglesSql},
-              |hs AS (SELECT doc_id, ${CorpusOps.oH60("s")} AS h FROM sh),
-              |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-              |p AS (SELECT a.doc_id da, b.doc_id db, COUNT(*) AS inter
-              |  FROM hs a JOIN hs b ON a.h = b.h AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
-              |pairs AS (SELECT da, db FROM p
-              |  JOIN sz x ON da = x.doc_id JOIN sz y ON db = y.doc_id
-              |  WHERE inter / (x.n + y.n - inter) >= 0.6),
-              |edges AS (SELECT da AS src, db AS dst FROM pairs
-              |  UNION ALL SELECT db, da FROM pairs),
-              |walk AS (
-              |  SELECT doc_id AS id, doc_id AS lbl FROM documents
-              |  UNION
-              |  SELECT e.dst AS id, w.lbl
-              |  FROM walk w JOIN edges e ON w.id = e.src
-              |  WHERE w.lbl < e.dst),
+      Some(s"""WITH RECURSIVE $oJaccardEdges,
+              |$oWalk,
               |cl AS (SELECT id AS doc_id, min(lbl) AS cluster
               |  FROM walk GROUP BY id),
               |nv AS (SELECT doc_id, CASE
@@ -338,26 +311,18 @@ object Round12 {
     // must yield all nulls (the garbage-rows contract).
     QueryDef("q306_wav_pcm_stats",
       (s, dir) => {
-        def le16h(c: org.apache.spark.sql.Column) = {
-          val x = lpad(hex(c), 4, "0")
-          concat(substring(x, 3, 2), substring(x, 1, 2))
-        }
-        def le32h(c: org.apache.spark.sql.Column) = {
+        def le32h(c: Column) = {
           val x = lpad(hex(c), 8, "0")
           concat(substring(x, 7, 2), substring(x, 5, 2),
             substring(x, 3, 2), substring(x, 1, 2))
         }
-        val n = col("doc_id") % 50 + 10
-        val samplesHex = array_join(transform(
-          sequence(lit(0L), n - 1),
-          i => le16h(pmod(col("doc_id") * 7 + i * 13, lit(65536L)))),
-          "")
+        val n = pcmSamples
         val wav = unhex(concat(
           lit("52494646"), le32h(lit(36L) + n * 2), lit("57415645"),
           lit("666D7420"), le32h(lit(16L)), le16h(lit(1L)),
           le16h(lit(1L)), le32h(lit(8000L)), le32h(lit(16000L)),
           le16h(lit(2L)), le16h(lit(16L)),
-          lit("64617461"), le32h(n * 2), samplesHex))
+          lit("64617461"), le32h(n * 2), pcmHex))
         val payload = when(col("doc_id") % 5 === 4,
             graft.operators.Multimodal.syntheticPayload(col("text")))
           .otherwise(wav)
@@ -401,34 +366,14 @@ object Round12 {
     // shorter than one frame vanish (complete-frames contract).
     QueryDef("q307_audio_frames",
       (s, dir) => {
-        def le16h(c: org.apache.spark.sql.Column) = {
-          val x = lpad(hex(c), 4, "0")
-          concat(substring(x, 3, 2), substring(x, 1, 2))
-        }
-        val n = col("doc_id") % 50 + 10
-        val pcm = unhex(array_join(transform(
-          sequence(lit(0L), n - 1),
-          i => le16h(pmod(col("doc_id") * 7 + i * 13, lit(65536L)))),
-          ""))
+        val pcm = unhex(pcmHex)
         graft.operators.Multimodal.audioFrameEnergy(
             graft.Tables.rebalance(t("documents")(s, dir))
               .withColumn("payload", pcm),
             "doc_id", "payload", frameBytes = 16, stride = 16)
           .orderBy(col("doc_id"), col("frame_no"))
       },
-      Some("""WITH d AS (SELECT doc_id, doc_id % 50 + 10 AS n
-             |  FROM documents),
-             |f AS (SELECT doc_id, n, unnest(generate_series(0,
-             |    CAST((n - 8) // 8 AS BIGINT))) AS frame_no
-             |  FROM d WHERE n >= 8),
-             |sm AS (SELECT doc_id, frame_no,
-             |    unnest(generate_series(0, 7)) AS j FROM f),
-             |u AS (SELECT doc_id, frame_no,
-             |    (doc_id * 7 + (frame_no * 8 + j) * 13) % 65536 AS uu
-             |  FROM sm),
-             |v AS (SELECT doc_id, frame_no,
-             |    CASE WHEN uu < 32768 THEN uu ELSE uu - 65536 END
-             |      AS smp FROM u)
+      Some(s"""WITH $oPcmFrames
              |SELECT doc_id, frame_no,
              |  CAST(8 AS BIGINT) AS n_samples,
              |  CAST(MAX(abs(smp)) AS BIGINT) AS peak_abs,
@@ -447,34 +392,14 @@ object Round12 {
     // same frame arithmetic and the frame_no − row_number island key.
     QueryDef("q308_audio_segments",
       (s, dir) => {
-        def le16h(c: org.apache.spark.sql.Column) = {
-          val x = lpad(hex(c), 4, "0")
-          concat(substring(x, 3, 2), substring(x, 1, 2))
-        }
-        val n = col("doc_id") % 50 + 10
-        val pcm = unhex(array_join(transform(
-          sequence(lit(0L), n - 1),
-          i => le16h(pmod(col("doc_id") * 7 + i * 13, lit(65536L)))),
-          ""))
+        val pcm = unhex(pcmHex)
         graft.operators.Multimodal.activeSegments(
             graft.Tables.rebalance(t("documents")(s, dir))
               .withColumn("payload", pcm),
             "doc_id", "payload", frameBytes = 16, stride = 16)
           .orderBy(col("doc_id"), col("seg_start"))
       },
-      Some("""WITH d AS (SELECT doc_id, doc_id % 50 + 10 AS n
-             |  FROM documents),
-             |f AS (SELECT doc_id, n, unnest(generate_series(0,
-             |    CAST((n - 8) // 8 AS BIGINT))) AS frame_no
-             |  FROM d WHERE n >= 8),
-             |sm AS (SELECT doc_id, frame_no,
-             |    unnest(generate_series(0, 7)) AS j FROM f),
-             |u AS (SELECT doc_id, frame_no,
-             |    (doc_id * 7 + (frame_no * 8 + j) * 13) % 65536 AS uu
-             |  FROM sm),
-             |v AS (SELECT doc_id, frame_no,
-             |    CASE WHEN uu < 32768 THEN uu ELSE uu - 65536 END
-             |      AS smp FROM u),
+      Some(s"""WITH $oPcmFrames,
              |fr AS (SELECT doc_id, frame_no,
              |    CAST(SUM(smp * smp) AS BIGINT) AS sum_sq,
              |    SUM(CASE WHEN abs(smp) <= 256 THEN 1 ELSE 0 END) * 2

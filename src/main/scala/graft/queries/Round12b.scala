@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import graft.operators.TextOps
 import org.apache.spark.sql.functions._
 
@@ -9,9 +8,6 @@ import org.apache.spark.sql.functions._
   * sequence-padding waste audit.
   */
 object Round12b {
-  private def t(name: String): QueryFn =
-    (s, dir) => Tables.load(s, dir, name)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- exact single change-point (binary segmentation, k=1) on
@@ -22,15 +18,7 @@ object Round12b {
     QueryDef("q310_changepoint",
       (s, dir) => graft.operators.Series.changePointDaily(
         t("events")(s, dir), "ts"),
-      Some("""WITH c AS (SELECT CAST(ts AS DATE) AS day,
-             |    CAST(COUNT(*) AS BIGINT) AS x FROM events GROUP BY 1),
-             |sp AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM c),
-             |cal AS (SELECT d0, CAST(unnest(generate_series(
-             |    CAST(d0 AS TIMESTAMP), CAST(d1 AS TIMESTAMP),
-             |    INTERVAL 1 DAY)) AS DATE) AS day FROM sp),
-             |dense AS (SELECT CAST(DATEDIFF('day', cal.d0, cal.day)
-             |    AS BIGINT) AS t, COALESCE(c.x, 0) AS x
-             |  FROM cal LEFT JOIN c USING (day)),
+      Some(s"""WITH $oDenseDays,
              |tot AS (SELECT SUM(CAST(x AS HUGEINT)) AS s_all,
              |    CAST(COUNT(*) AS HUGEINT) AS n_all FROM dense),
              |pref AS (SELECT t, t + 1 AS n_l,
@@ -327,12 +315,7 @@ object Round12b {
             expr("(n_tokens * 1000000) div n_docs")
               .as("mean_tokens_micro"))
       },
-      Some(s"""WITH ${CorpusOps.oShinglesSql},
-              |hs AS (SELECT doc_id, ${CorpusOps.oH60("s")} AS h FROM sh),
-              |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-              |p AS (SELECT a.doc_id da, b.doc_id db, COUNT(*) AS inter
-              |  FROM hs a JOIN hs b ON a.h = b.h AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
+      Some(s"""WITH $oShinglePairs,
               |pairs AS (SELECT da, db FROM p
               |  JOIN sz x ON da = x.doc_id JOIN sz y ON db = y.doc_id
               |  WHERE inter / (x.n + y.n - inter) >= 0.6),
@@ -538,12 +521,7 @@ object Round12b {
              |    FROM cc$pct c JOIN documents ON c.id = documents.doc_id
              |    WHERE c.id <> c.cluster) AS chars_removable_cc"""
             .stripMargin
-        s"""WITH RECURSIVE ${CorpusOps.oShinglesSql},
-           |hs AS (SELECT doc_id, ${CorpusOps.oH60("s")} AS h FROM sh),
-           |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-           |p AS (SELECT a.doc_id da, b.doc_id db, COUNT(*) AS inter
-           |  FROM hs a JOIN hs b ON a.h = b.h AND a.doc_id < b.doc_id
-           |  GROUP BY 1, 2),
+        s"""WITH RECURSIVE $oShinglePairs,
            |j AS MATERIALIZED (SELECT da, db,
            |    inter / (x.n + y.n - inter) AS jc FROM p
            |  JOIN sz x ON da = x.doc_id JOIN sz y ON db = y.doc_id),

@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import graft.functions.Png
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -13,9 +12,6 @@ import org.apache.spark.sql.functions._
   * remain stubbed.
   */
 object Round13 {
-  private def t(name: String): QueryFn =
-    (s, dir) => Tables.load(s, dir, name)
-
   /** Shared trained unigram vocabulary per (session, dataset) — the
     * registry discipline: q323 is the unconditional BUILD row, q324
     * consumes the same trained model (training twice would double the
@@ -144,8 +140,6 @@ object Round13 {
     2 -> "window merge batch stream vector",
     3 -> "scan filter zzzabsent",
     4 -> "partition shuffle")
-  private val incrementalValues: String = incrementalQueries
-    .map { case (qid, txt) => s"($qid, '$txt')" }.mkString(", ")
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -168,19 +162,9 @@ object Round13 {
         val ch = when(col("doc_id") % 3 === 0, 1L)
           .when(col("doc_id") % 3 === 1, 3L).otherwise(4L)
         val png = Png.pngEncode(w, h, ch, pixelBytes(w * h * ch, None))
-        val payload = when(col("doc_id") % 7 === 6,
-            graft.operators.Multimodal.syntheticPayload(col("text")))
-          .otherwise(png)
-        graft.Tables.rebalance(t("documents")(s, dir)
-            .select(col("doc_id"), col("text")))
-          .withColumn("st", Png.pngStats(payload))
-          .select(col("doc_id"), col("st.width"), col("st.height"),
-            col("st.channels"), col("st.n_pixels"), col("st.sum_c0"),
-            col("st.sum_c1"), col("st.sum_c2"),
-            col("st.sum_luma_milli"))
-          .orderBy(col("doc_id"))
+        statsRows(mediaDocs(s, dir), Png.pngStats(blobOrText(png)))
       },
-      Some("""WITH d AS (SELECT doc_id, doc_id % 12 + 5 AS w,
+      Some(s"""WITH d AS (SELECT doc_id, doc_id % 12 + 5 AS w,
              |    doc_id % 9 + 4 AS h,
              |    CASE doc_id % 3 WHEN 0 THEN 1 WHEN 1 THEN 3
              |      ELSE 4 END AS ch
@@ -206,11 +190,7 @@ object Round13 {
              |    ELSE 299 * s0 + 587 * s1 + 114 * s2 END AS BIGINT)
              |    AS sum_luma_milli
              |FROM a
-             |UNION ALL
-             |SELECT doc_id, NULL, NULL, NULL, NULL, NULL, NULL, NULL,
-             |  NULL
-             |FROM documents WHERE doc_id % 7 = 6
-             |ORDER BY doc_id""".stripMargin)),
+             |${oNullTail(8)}""".stripMargin)),
 
     // ---- pixel dHash near-dup on REAL compressed images — the q293
     // shape upgraded from BMP-constructed grayscale stand-ins to
@@ -662,17 +642,9 @@ object Round13 {
         val w = col("doc_id") % 10 + 6
         val h = col("doc_id") % 7 + 5
         val png = Png.pngEncode(w, h, lit(3), pixelBytes(w * h * 3, None))
-        val payload = when(col("doc_id") % 7 === 6,
-            graft.operators.Multimodal.syntheticPayload(col("text")))
-          .otherwise(png)
-        graft.Tables.rebalance(t("documents")(s, dir)
-            .select(col("doc_id"), col("text")))
-          .withColumn("st",
-            Png.pngStats(Png.pngResize(payload, lit(8), lit(6))))
-          .select(col("doc_id"), col("st.width"), col("st.height"),
-            col("st.n_pixels"), col("st.sum_c0"), col("st.sum_c1"),
-            col("st.sum_c2"), col("st.sum_luma_milli"))
-          .orderBy(col("doc_id"))
+        statsRows(mediaDocs(s, dir),
+          Png.pngStats(Png.pngResize(blobOrText(png), lit(8), lit(6))),
+          imageStats.filter(_ != "channels"))
       },
       Some("""WITH d AS (SELECT doc_id, doc_id % 10 + 6 AS w,
              |    doc_id % 7 + 5 AS h, 13 + doc_id % 97 AS sl
@@ -773,15 +745,6 @@ object Round13 {
         graft.operators.Retrieval.bm25TopKFromTfIndex(
           s, outDir.getAbsolutePath, Round13.incrementalQueries, k = 10)
       },
-      Some(s"""WITH ${graft.operators.Retrieval.bm25OracleCtes(
-                incrementalValues, 1.2, 0.75)},
-              |r AS (SELECT query_id, doc_id, score,
-              |    ROW_NUMBER() OVER (PARTITION BY query_id
-              |      ORDER BY score DESC, doc_id) AS rnk
-              |  FROM sc)
-              |SELECT query_id, doc_id, score,
-              |  CAST(rnk AS BIGINT) AS rank
-              |FROM r WHERE rnk <= 10
-              |ORDER BY query_id, rank""".stripMargin)))
+      Some(oBm25Top10(incrementalQueries))))
 
 }

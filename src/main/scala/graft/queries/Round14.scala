@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -11,9 +10,6 @@ import org.apache.spark.sql.functions._
   * quantile twin, and the unigram shrink ladder / raw-text serving.
   */
 object Round14 {
-  private def t(name: String): QueryFn =
-    (s, dir) => Tables.load(s, dir, name)
-
   // ---- q334/q335 oracle helpers: SQL replay of the PINNED JPEG
   // arithmetic (graft.functions.JpegMath — divR is `(x + half) >> n`,
   // an arithmetic shift in both engines; quantR is sign-biased
@@ -112,19 +108,7 @@ object Round14 {
           .orderBy(col("da"), col("db"))
       },
       Some(s"""WITH ${CorpusOps.oShinglesSql},
-              |hs AS (SELECT doc_id, ${CorpusOps.oH60("s")} AS h
-              |  FROM sh),
-              |sz AS (SELECT doc_id, COUNT(*) AS n FROM hs
-              |  GROUP BY doc_id),
-              |p AS (SELECT a.doc_id da, b.doc_id db, COUNT(*) AS inter
-              |  FROM hs a JOIN hs b ON a.h = b.h AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2)
-              |SELECT da, db, inter,
-              |  inter / (x.n + y.n - inter) AS jaccard
-              |FROM p JOIN sz x ON da = x.doc_id JOIN sz y ON db = y.doc_id
-              |WHERE inter / (x.n + y.n - inter) >= 0.5
-              |  AND (da % 4 = 3 OR db % 4 = 3)
-              |ORDER BY da, db""".stripMargin)),
+              |${oIndexJaccardPairs("(da % 4 = 3 OR db % 4 = 3)")}""".stripMargin)),
 
     // ---- dedup-index DELETION (the takedown/GDPR twin of q332 on
     // the shingle index — a takedown must also stop the removed docs
@@ -153,29 +137,8 @@ object Round14 {
             inc.select(col("doc_id")))
           .orderBy(col("da"), col("db"))
       },
-      Some(s"""WITH w AS (SELECT doc_id,
-              |    list_filter(string_split_regex(lower(text), '\\s+'),
-              |      x -> len(x) > 0) AS ws
-              |  FROM documents WHERE doc_id % 5 <> 4),
-              |idx AS (SELECT doc_id, ws,
-              |    unnest(generate_series(1, len(ws) - 2)) AS i
-              |  FROM w WHERE len(ws) >= 3),
-              |sh AS (SELECT DISTINCT doc_id,
-              |    ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-              |  FROM idx),
-              |hs AS (SELECT doc_id, ${CorpusOps.oH60("s")} AS h
-              |  FROM sh),
-              |sz AS (SELECT doc_id, COUNT(*) AS n FROM hs
-              |  GROUP BY doc_id),
-              |p AS (SELECT a.doc_id da, b.doc_id db, COUNT(*) AS inter
-              |  FROM hs a JOIN hs b ON a.h = b.h AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2)
-              |SELECT da, db, inter,
-              |  inter / (x.n + y.n - inter) AS jaccard
-              |FROM p JOIN sz x ON da = x.doc_id JOIN sz y ON db = y.doc_id
-              |WHERE inter / (x.n + y.n - inter) >= 0.5
-              |  AND (da % 4 = 3 OR db % 4 = 3)
-              |ORDER BY da, db""".stripMargin)),
+      Some(s"""WITH ${oIndexShingles("documents WHERE doc_id % 5 <> 4")},
+              |${oIndexJaccardPairs("(da % 4 = 3 OR db % 4 = 3)")}""".stripMargin)),
 
     // ---- TF-index tombstone DELETION (the takedown/GDPR operation
     // the r13 verdict ranked #2 — ingest-only appends can't forget):
@@ -199,18 +162,8 @@ object Round14 {
         graft.operators.Retrieval.bm25TopKFromTfIndex(
           s, outDir.getAbsolutePath, Round13.incrementalQueries, k = 10)
       },
-      Some(s"""WITH ${graft.operators.Retrieval.bm25OracleCtes(
-                Round13.incrementalQueries
-                  .map { case (q, x) => s"($q, '$x')" }.mkString(", "),
-                1.2, 0.75, docsWhere = "doc_id % 3 <> 2")},
-              |r AS (SELECT query_id, doc_id, score,
-              |    ROW_NUMBER() OVER (PARTITION BY query_id
-              |      ORDER BY score DESC, doc_id) AS rnk
-              |  FROM sc)
-              |SELECT query_id, doc_id, score,
-              |  CAST(rnk AS BIGINT) AS rank
-              |FROM r WHERE rnk <= 10
-              |ORDER BY query_id, rank""".stripMargin)),
+      Some(oBm25Top10(Round13.incrementalQueries,
+        docsWhere = "doc_id % 3 <> 2"))),
 
     // ---- small-file COMPACTION through the append path (the classic
     // 100 TB ingest failure mode: N daily appends leave one file per
@@ -239,18 +192,7 @@ object Round14 {
         graft.operators.Retrieval.bm25TopKFromTfIndex(
           s, outDir.getAbsolutePath, Round13.incrementalQueries, k = 10)
       },
-      Some(s"""WITH ${graft.operators.Retrieval.bm25OracleCtes(
-                Round13.incrementalQueries
-                  .map { case (q, x) => s"($q, '$x')" }.mkString(", "),
-                1.2, 0.75)},
-              |r AS (SELECT query_id, doc_id, score,
-              |    ROW_NUMBER() OVER (PARTITION BY query_id
-              |      ORDER BY score DESC, doc_id) AS rnk
-              |  FROM sc)
-              |SELECT query_id, doc_id, score,
-              |  CAST(rnk AS BIGINT) AS rank
-              |FROM r WHERE rnk <= 10
-              |ORDER BY query_id, rank""".stripMargin)),
+      Some(oBm25Top10(Round13.incrementalQueries))),
 
     // ---- streaming windowed quantiles, batch twin (the q272/q322
     // discipline applied to the q326 KLL family): the SAME pipeline
@@ -351,69 +293,13 @@ object Round14 {
         val w = (col("doc_id") % 2 + 1) * 8
         val h = (col("doc_id") % 3 + 1) * 8
         val ch = when(col("doc_id") % 2 === 0, 1L).otherwise(3L)
-        val jpg = graft.functions.Jpeg.jpegEncode(w, h, ch,
-          jpegConstPixels(w, h, ch))
-        val payload = when(col("doc_id") % 7 === 6,
-            graft.operators.Multimodal.syntheticPayload(col("text")))
-          .otherwise(jpg)
-        graft.Tables.rebalance(t("documents")(s, dir)
-            .select(col("doc_id"), col("text")))
-          .withColumn("st", graft.functions.Jpeg.jpegStats(payload))
-          .select(col("doc_id"), col("st.width"), col("st.height"),
-            col("st.channels"), col("st.n_pixels"), col("st.sum_c0"),
-            col("st.sum_c1"), col("st.sum_c2"),
-            col("st.sum_luma_milli"))
-          .orderBy(col("doc_id"))
+        statsRows(mediaDocs(s, dir), graft.functions.Jpeg.jpegStats(
+          blobOrText(graft.functions.Jpeg.jpegEncode(w, h, ch,
+            jpegConstPixels(w, h, ch)))))
       },
-      Some {
-        def v(k: Int) =
-          s"(doc_id * 7 + (by * (w // 8) + bx) * 37 + $k * 11) % 256"
-        val gOut = oDcPipe(v(0), 16)
-        val (yc, cb, cr) = (oRgbY(v(0), v(1), v(2)),
-          oRgbCb(v(0), v(1), v(2)), oRgbCr(v(0), v(1), v(2)))
-        s"""WITH d AS (SELECT doc_id, (doc_id % 2 + 1) * 8 AS w,
-           |    (doc_id % 3 + 1) * 8 AS h,
-           |    CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 3 END AS ch
-           |  FROM documents WHERE doc_id % 7 <> 6),
-           |bx0 AS (SELECT doc_id, w, h, ch,
-           |    unnest(generate_series(0, w // 8 - 1)) AS bx FROM d),
-           |blk AS (SELECT doc_id, w, h, ch, bx,
-           |    unnest(generate_series(0, h // 8 - 1)) AS by FROM bx0),
-           |dcy AS (SELECT doc_id, w, h, ch, bx, by,
-           |    ${oDcPipe(yc, 16)} AS yq,
-           |    ${oDcPipe(cb, 17)} AS cbq,
-           |    ${oDcPipe(cr, 17)} AS crq,
-           |    $gOut AS gq
-           |  FROM blk),
-           |outs AS (SELECT doc_id, ch,
-           |    CASE WHEN ch = 1 THEN gq
-           |      ELSE ${oYcc2R("yq", "crq")} END AS o0,
-           |    CASE WHEN ch = 1 THEN NULL
-           |      ELSE ${oYcc2G("yq", "cbq", "crq")} END AS o1,
-           |    CASE WHEN ch = 1 THEN NULL
-           |      ELSE ${oYcc2B("yq", "cbq")} END AS o2
-           |  FROM dcy),
-           |a AS (SELECT doc_id, MAX(ch) AS ch,
-           |    64 * SUM(o0) AS s0, 64 * SUM(o1) AS s1,
-           |    64 * SUM(o2) AS s2, COUNT(*) AS nblk
-           |  FROM outs GROUP BY 1)
-           |SELECT a.doc_id, CAST(d.w AS BIGINT) AS width,
-           |  CAST(d.h AS BIGINT) AS height,
-           |  CAST(a.ch AS BIGINT) AS channels,
-           |  CAST(d.w * d.h AS BIGINT) AS n_pixels,
-           |  CAST(s0 AS BIGINT) AS sum_c0,
-           |  CAST(s1 AS BIGINT) AS sum_c1,
-           |  CAST(s2 AS BIGINT) AS sum_c2,
-           |  CAST(CASE WHEN a.ch = 1 THEN 1000 * s0
-           |    ELSE 299 * s0 + 587 * s1 + 114 * s2 END AS BIGINT)
-           |    AS sum_luma_milli
-           |FROM a JOIN d USING (doc_id)
-           |UNION ALL
-           |SELECT doc_id, NULL, NULL, NULL, NULL, NULL, NULL, NULL,
-           |  NULL
-           |FROM documents WHERE doc_id % 7 = 6
-           |ORDER BY doc_id""".stripMargin
-      }),
+      Some(oBlockJpeg("(doc_id % 2 + 1) * 8", "(doc_id % 3 + 1) * 8",
+        k => s"(doc_id * 7 + (by * (w // 8) + bx) * 37 + $k * 11) % 256",
+        nblk = true))),
 
     // ---- baseline JPEG with FULL AC content — the staged-integer
     // DCT proven coefficient by coefficient: one 8×8 grayscale block
@@ -427,23 +313,11 @@ object Round14 {
     // layer (ZRL, EOB, magnitude categories) that carries them.
     QueryDef("q335_jpeg_dct_exact",
       (s, dir) => {
-        val n = lit(64L)
-        val px = unhex(array_join(
-          transform(sequence(lit(0L), n - 1), i =>
-            lpad(hex((col("doc_id") * 7 +
-              i * (lit(13) + col("doc_id") % 97)) % 256), 2, "0")), ""))
         val jpg = graft.functions.Jpeg.jpegEncode(lit(8), lit(8),
-          lit(1), px)
-        val payload = when(col("doc_id") % 7 === 6,
-            graft.operators.Multimodal.syntheticPayload(col("text")))
-          .otherwise(jpg)
-        graft.Tables.rebalance(t("documents")(s, dir)
-            .select(col("doc_id"), col("text")))
-          .withColumn("st", graft.functions.Jpeg.jpegStats(payload))
-          .select(col("doc_id"), col("st.width"), col("st.height"),
-            col("st.n_pixels"), col("st.sum_c0"),
-            col("st.sum_luma_milli"))
-          .orderBy(col("doc_id"))
+          lit(1), formulaPixels(lit(64L)))
+        statsRows(mediaDocs(s, dir),
+          graft.functions.Jpeg.jpegStats(blobOrText(jpg)),
+          Seq("width", "height", "n_pixels", "sum_c0", "sum_luma_milli"))
       },
       Some {
         val cosValues = (for (u <- 0 until 8; x <- 0 until 8)
@@ -616,29 +490,7 @@ object Round14 {
             inc.select(col("doc_id")))
           .orderBy(col("da"), col("db"))
       },
-      Some("""WITH nrm AS (SELECT doc_id, array_to_string(list_filter(
-             |    string_split_regex(lower(text), '\s+'),
-             |    x -> len(x) > 0), ' ') AS t FROM documents),
-             |g AS (SELECT doc_id, t FROM nrm WHERE len(t) >= 25),
-             |p0 AS (SELECT doc_id, t,
-             |    unnest(generate_series(1, len(t) - 24)) AS i FROM g),
-             |p AS (SELECT doc_id, i,
-             |    CAST(concat('0x', substr(md5(substr(t, i, 25)), 1, 15))
-             |      AS BIGINT) AS h
-             |  FROM p0),
-             |m AS (SELECT doc_id, i, MIN(h) OVER (PARTITION BY doc_id
-             |    ORDER BY i ROWS BETWEEN CURRENT ROW AND 9 FOLLOWING)
-             |      AS mh,
-             |    COUNT(*) OVER (PARTITION BY doc_id) AS np FROM p),
-             |f AS (SELECT DISTINCT doc_id, mh AS h FROM m
-             |  WHERE i <= greatest(np - 9, 1)),
-             |pairs AS (SELECT a.doc_id AS da, b.doc_id AS db,
-             |    COUNT(*) AS shared
-             |  FROM f a JOIN f b ON a.h = b.h AND a.doc_id < b.doc_id
-             |  GROUP BY 1, 2)
-             |SELECT da, db, CAST(shared AS BIGINT) AS shared FROM pairs
-             |WHERE shared >= 2 AND (da % 4 = 3 OR db % 4 = 3)
-             |ORDER BY da, db""".stripMargin)),
+      Some(oSubstringIncrementPairs)),
 
     // ---- ANN-index DELETION — the takedown lifecycle completed on
     // the THIRD persisted index family (TF q332, shingle q339, now
@@ -668,14 +520,7 @@ object Round14 {
             k = 5, nprobe = 2, dims = 64, m = 8)
           .orderBy(col("query_id"), col("rank"))
       },
-      Some {
-        val base = Round5.defs.find(_.name == "q87_ivfpq_topk")
-          .get.oracle.get
-        val anchor = "WHERE p.query_id != c.id"
-        require(base.contains(anchor),
-          "q87 oracle anchor moved — update q341's exclusion")
-        base.replace(anchor, anchor + " AND c.id % 4 != 1")
-      }),
+      Some(oIvfPqTopK(exclude = " AND c.id % 4 != 1"))),
 
     // ---- ANN index AGING measured in-catalog (the q325 calibration
     // discipline applied to the append contract's documented caveat:

@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import org.apache.spark.sql.functions._
 
 /** Round-15 queries (q344+): the re-crawl round — UPSERT on the
@@ -9,17 +8,6 @@ import org.apache.spark.sql.functions._
   * multimodal extensions.
   */
 object Round15 {
-  private def t(name: String): QueryFn =
-    (s, dir) => Tables.load(s, dir, name)
-
-  /** The q344/q345 re-crawl mutation, shared by the Spark side and the
-    * oracle: doc_id%5=0 docs get this suffix appended — a changed page
-    * body whose stale index facts must die. */
-  private val recrawlSuffix = " recrawl revision fresh tokens"
-  private val oMutatedDocs: String =
-    "(SELECT doc_id, CASE WHEN doc_id % 5 = 0 " +
-      s"THEN text || '$recrawlSuffix' ELSE text END AS text " +
-      "FROM documents)"
 
   /** q344's query batch: query 2/3 carry the mutation's tokens, so
     * the hash only matches if the re-crawled text actually serves. */
@@ -58,18 +46,7 @@ object Round15 {
         graft.operators.Retrieval.bm25TopKFromTfIndex(
           s, outDir.getAbsolutePath, upsertQueries, k = 10)
       },
-      Some(s"""WITH ${graft.operators.Retrieval.bm25OracleCtes(
-                upsertQueries
-                  .map { case (q, x) => s"($q, '$x')" }.mkString(", "),
-                1.2, 0.75, docsFrom = oMutatedDocs)},
-              |r AS (SELECT query_id, doc_id, score,
-              |    ROW_NUMBER() OVER (PARTITION BY query_id
-              |      ORDER BY score DESC, doc_id) AS rnk
-              |  FROM sc)
-              |SELECT query_id, doc_id, score,
-              |  CAST(rnk AS BIGINT) AS rank
-              |FROM r WHERE rnk <= 10
-              |ORDER BY query_id, rank""".stripMargin)),
+      Some(oBm25Top10(upsertQueries, docsFrom = oMutatedDocs))),
 
     // ---- shingle-index UPSERT (the dedup twin of q344): build the
     // shingle index on the FULL corpus, upsert the doc_id%5=0 re-crawl
@@ -95,29 +72,8 @@ object Round15 {
             recrawl.select(col("doc_id")))
           .orderBy(col("da"), col("db"))
       },
-      Some(s"""WITH w AS (SELECT doc_id,
-              |    list_filter(string_split_regex(lower(text), '\\s+'),
-              |      x -> len(x) > 0) AS ws
-              |  FROM $oMutatedDocs d),
-              |idx AS (SELECT doc_id, ws,
-              |    unnest(generate_series(1, len(ws) - 2)) AS i
-              |  FROM w WHERE len(ws) >= 3),
-              |sh AS (SELECT DISTINCT doc_id,
-              |    ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-              |  FROM idx),
-              |hs AS (SELECT doc_id, ${CorpusOps.oH60("s")} AS h
-              |  FROM sh),
-              |sz AS (SELECT doc_id, COUNT(*) AS n FROM hs
-              |  GROUP BY doc_id),
-              |p AS (SELECT a.doc_id da, b.doc_id db, COUNT(*) AS inter
-              |  FROM hs a JOIN hs b ON a.h = b.h AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2)
-              |SELECT da, db, inter,
-              |  inter / (x.n + y.n - inter) AS jaccard
-              |FROM p JOIN sz x ON da = x.doc_id JOIN sz y ON db = y.doc_id
-              |WHERE inter / (x.n + y.n - inter) >= 0.5
-              |  AND (da % 5 = 0 OR db % 5 = 0)
-              |ORDER BY da, db""".stripMargin)),
+      Some(s"""WITH ${oIndexShingles(s"$oMutatedDocs d")},
+              |${oIndexJaccardPairs("(da % 5 = 0 OR db % 5 = 0)")}""".stripMargin)),
 
     // ---- JPEG 4:2:0 + RESTART INTERVALS, hash-gated round trip (the
     // r14 verdict's #1: real-world baseline JPEGs are overwhelmingly
@@ -137,84 +93,15 @@ object Round15 {
     // → all-null (the q334 garbage discipline).
     QueryDef("q346_jpeg_420_roundtrip",
       (s, dir) => {
-        import org.apache.spark.sql.Column
         val w = (col("doc_id") % 2 + 1) * 16
         val h = (col("doc_id") % 3 + 1) * 16
         val ri = col("doc_id") % 4 // restart interval in MCUs; 0=none
-        def mcuVal(mx: Column, my: Column, mw: Column, k: Column) =
-          (col("doc_id") * 7 + (my * mw + mx) * 37 + k * 11) % 256
-        // pixels are MCU-constant, so build each ROW as (w/16)
-        // 16-fold repeats of a 6-hex-char RGB triple — h·(w/16)
-        // hex computations per doc instead of w·h·3 (an 18 s → ~2 s
-        // construction win at sf0.1; the decode under test is
-        // unchanged)
-        def hx(c: Column) = lpad(hex(c), 2, "0")
-        val mw = Round14.idiv(w, lit(16))
-        val px = unhex(array_join(
-          transform(sequence(lit(0L), h - 1), y => {
-            val my = Round14.idiv(y, lit(16))
-            array_join(
-              transform(sequence(lit(0L), mw - 1), mx =>
-                repeat(concat(hx(mcuVal(mx, my, mw, lit(0))),
-                  hx(mcuVal(mx, my, mw, lit(1))),
-                  hx(mcuVal(mx, my, mw, lit(2)))), 16)), "")
-          }), ""))
-        val jpg = graft.functions.Jpeg.jpegEncode420(w, h, px, ri)
-        val payload = when(col("doc_id") % 7 === 6,
-            graft.operators.Multimodal.syntheticPayload(col("text")))
-          .otherwise(jpg)
-        graft.Tables.rebalance(t("documents")(s, dir)
-            .select(col("doc_id"), col("text")))
-          .withColumn("st", graft.functions.Jpeg.jpegStats(payload))
-          .select(col("doc_id"), col("st.width"), col("st.height"),
-            col("st.channels"), col("st.n_pixels"), col("st.sum_c0"),
-            col("st.sum_c1"), col("st.sum_c2"),
-            col("st.sum_luma_milli"))
-          .orderBy(col("doc_id"))
+        val px = mcuConstPixels(w, h, mcuH = 16, 7, 37, 11)
+        statsRows(mediaDocs(s, dir), graft.functions.Jpeg.jpegStats(
+          blobOrText(graft.functions.Jpeg.jpegEncode420(w, h, px, ri))))
       },
-      Some {
-        import Round14.{oDcPipe, oRgbY, oRgbCb, oRgbCr, oYcc2R,
-          oYcc2G, oYcc2B}
-        def v(k: Int) =
-          s"(doc_id * 7 + (my * (w // 16) + mx) * 37 + $k * 11) % 256"
-        val (yc, cb, cr) = (oRgbY(v(0), v(1), v(2)),
-          oRgbCb(v(0), v(1), v(2)), oRgbCr(v(0), v(1), v(2)))
-        s"""WITH d AS (SELECT doc_id, (doc_id % 2 + 1) * 16 AS w,
-           |    (doc_id % 3 + 1) * 16 AS h
-           |  FROM documents WHERE doc_id % 7 <> 6),
-           |mx0 AS (SELECT doc_id, w, h,
-           |    unnest(generate_series(0, w // 16 - 1)) AS mx FROM d),
-           |mcu AS (SELECT doc_id, w, h, mx,
-           |    unnest(generate_series(0, h // 16 - 1)) AS my FROM mx0),
-           |dcy AS (SELECT doc_id, w, h, mx, my,
-           |    ${oDcPipe(yc, 16)} AS yq,
-           |    ${oDcPipe(cb, 17)} AS cbq,
-           |    ${oDcPipe(cr, 17)} AS crq
-           |  FROM mcu),
-           |outs AS (SELECT doc_id,
-           |    ${oYcc2R("yq", "crq")} AS o0,
-           |    ${oYcc2G("yq", "cbq", "crq")} AS o1,
-           |    ${oYcc2B("yq", "cbq")} AS o2
-           |  FROM dcy),
-           |a AS (SELECT doc_id, 256 * SUM(o0) AS s0,
-           |    256 * SUM(o1) AS s1, 256 * SUM(o2) AS s2
-           |  FROM outs GROUP BY 1)
-           |SELECT a.doc_id, CAST(d.w AS BIGINT) AS width,
-           |  CAST(d.h AS BIGINT) AS height,
-           |  CAST(3 AS BIGINT) AS channels,
-           |  CAST(d.w * d.h AS BIGINT) AS n_pixels,
-           |  CAST(s0 AS BIGINT) AS sum_c0,
-           |  CAST(s1 AS BIGINT) AS sum_c1,
-           |  CAST(s2 AS BIGINT) AS sum_c2,
-           |  CAST(299 * s0 + 587 * s1 + 114 * s2 AS BIGINT)
-           |    AS sum_luma_milli
-           |FROM a JOIN d USING (doc_id)
-           |UNION ALL
-           |SELECT doc_id, NULL, NULL, NULL, NULL, NULL, NULL, NULL,
-           |  NULL
-           |FROM documents WHERE doc_id % 7 = 6
-           |ORDER BY doc_id""".stripMargin
-      }),
+      Some(oMcuJpeg("(doc_id % 2 + 1) * 16", "(doc_id % 3 + 1) * 16", 16,
+        k => s"(doc_id * 7 + (my * (w // 16) + mx) * 37 + $k * 11) % 256"))),
 
     // ---- ANN RETRAIN TRIGGER (the r14 verdict's #4 — turn q342's
     // measured 2.5× recall gap into an operator): build the IVF-PQ
@@ -304,18 +191,7 @@ object Round15 {
         graft.operators.Retrieval.bm25TopKFromTfIndex(
           s, p, Round13.incrementalQueries, k = 10)
       },
-      Some(s"""WITH ${graft.operators.Retrieval.bm25OracleCtes(
-                Round13.incrementalQueries
-                  .map { case (q, x) => s"($q, '$x')" }.mkString(", "),
-                1.2, 0.75)},
-              |r AS (SELECT query_id, doc_id, score,
-              |    ROW_NUMBER() OVER (PARTITION BY query_id
-              |      ORDER BY score DESC, doc_id) AS rnk
-              |  FROM sc)
-              |SELECT query_id, doc_id, score,
-              |  CAST(rnk AS BIGINT) AS rank
-              |FROM r WHERE rnk <= 10
-              |ORDER BY query_id, rank""".stripMargin)),
+      Some(oBm25Top10(Round13.incrementalQueries))),
 
     // ---- JPEG 4:2:2 (the second-most-common real-world sampling —
     // q346's discipline on the 2×1-Y MCU grid): per doc an
@@ -327,79 +203,15 @@ object Round15 {
     // block geometry.
     QueryDef("q350_jpeg_422_roundtrip",
       (s, dir) => {
-        import org.apache.spark.sql.Column
         val w = (col("doc_id") % 2 + 1) * 16
         val h = (col("doc_id") % 3 + 1) * 8
         val ri = col("doc_id") % 3 // restart interval in MCUs; 0=none
-        def mcuVal(mx: Column, my: Column, mw: Column, k: Column) =
-          (col("doc_id") * 7 + (my * mw + mx) * 37 + k * 11) % 256
-        def hx(c: Column) = lpad(hex(c), 2, "0")
-        val mw = Round14.idiv(w, lit(16))
-        val px = unhex(array_join(
-          transform(sequence(lit(0L), h - 1), y => {
-            val my = Round14.idiv(y, lit(8))
-            array_join(
-              transform(sequence(lit(0L), mw - 1), mx =>
-                repeat(concat(hx(mcuVal(mx, my, mw, lit(0))),
-                  hx(mcuVal(mx, my, mw, lit(1))),
-                  hx(mcuVal(mx, my, mw, lit(2)))), 16)), "")
-          }), ""))
-        val jpg = graft.functions.Jpeg.jpegEncode422(w, h, px, ri)
-        val payload = when(col("doc_id") % 7 === 6,
-            graft.operators.Multimodal.syntheticPayload(col("text")))
-          .otherwise(jpg)
-        graft.Tables.rebalance(t("documents")(s, dir)
-            .select(col("doc_id"), col("text")))
-          .withColumn("st", graft.functions.Jpeg.jpegStats(payload))
-          .select(col("doc_id"), col("st.width"), col("st.height"),
-            col("st.channels"), col("st.n_pixels"), col("st.sum_c0"),
-            col("st.sum_c1"), col("st.sum_c2"),
-            col("st.sum_luma_milli"))
-          .orderBy(col("doc_id"))
+        val px = mcuConstPixels(w, h, mcuH = 8, 7, 37, 11)
+        statsRows(mediaDocs(s, dir), graft.functions.Jpeg.jpegStats(
+          blobOrText(graft.functions.Jpeg.jpegEncode422(w, h, px, ri))))
       },
-      Some {
-        import Round14.{oDcPipe, oRgbY, oRgbCb, oRgbCr, oYcc2R,
-          oYcc2G, oYcc2B}
-        def v(k: Int) =
-          s"(doc_id * 7 + (my * (w // 16) + mx) * 37 + $k * 11) % 256"
-        val (yc, cb, cr) = (oRgbY(v(0), v(1), v(2)),
-          oRgbCb(v(0), v(1), v(2)), oRgbCr(v(0), v(1), v(2)))
-        s"""WITH d AS (SELECT doc_id, (doc_id % 2 + 1) * 16 AS w,
-           |    (doc_id % 3 + 1) * 8 AS h
-           |  FROM documents WHERE doc_id % 7 <> 6),
-           |mx0 AS (SELECT doc_id, w, h,
-           |    unnest(generate_series(0, w // 16 - 1)) AS mx FROM d),
-           |mcu AS (SELECT doc_id, w, h, mx,
-           |    unnest(generate_series(0, h // 8 - 1)) AS my FROM mx0),
-           |dcy AS (SELECT doc_id, w, h, mx, my,
-           |    ${oDcPipe(yc, 16)} AS yq,
-           |    ${oDcPipe(cb, 17)} AS cbq,
-           |    ${oDcPipe(cr, 17)} AS crq
-           |  FROM mcu),
-           |outs AS (SELECT doc_id,
-           |    ${oYcc2R("yq", "crq")} AS o0,
-           |    ${oYcc2G("yq", "cbq", "crq")} AS o1,
-           |    ${oYcc2B("yq", "cbq")} AS o2
-           |  FROM dcy),
-           |a AS (SELECT doc_id, 128 * SUM(o0) AS s0,
-           |    128 * SUM(o1) AS s1, 128 * SUM(o2) AS s2
-           |  FROM outs GROUP BY 1)
-           |SELECT a.doc_id, CAST(d.w AS BIGINT) AS width,
-           |  CAST(d.h AS BIGINT) AS height,
-           |  CAST(3 AS BIGINT) AS channels,
-           |  CAST(d.w * d.h AS BIGINT) AS n_pixels,
-           |  CAST(s0 AS BIGINT) AS sum_c0,
-           |  CAST(s1 AS BIGINT) AS sum_c1,
-           |  CAST(s2 AS BIGINT) AS sum_c2,
-           |  CAST(299 * s0 + 587 * s1 + 114 * s2 AS BIGINT)
-           |    AS sum_luma_milli
-           |FROM a JOIN d USING (doc_id)
-           |UNION ALL
-           |SELECT doc_id, NULL, NULL, NULL, NULL, NULL, NULL, NULL,
-           |  NULL
-           |FROM documents WHERE doc_id % 7 = 6
-           |ORDER BY doc_id""".stripMargin
-      }),
+      Some(oMcuJpeg("(doc_id % 2 + 1) * 16", "(doc_id % 3 + 1) * 8", 8,
+        k => s"(doc_id * 7 + (my * (w // 16) + mx) * 37 + $k * 11) % 256"))),
 
     // ---- SALVAGE decode of damaged JPEGs (why restart intervals
     // exist): at 100 TB of crawled media, bit rot and truncated
@@ -417,49 +229,11 @@ object Round15 {
     // that something decoded.
     QueryDef("q351_jpeg_salvage",
       (s, dir) => {
-        import org.apache.spark.sql.Column
         val w = (col("doc_id") % 2 + 1) * 16
         val h = (col("doc_id") % 3 + 1) * 16
-        def mcuVal(mx: Column, my: Column, mw: Column, k: Column) =
-          (col("doc_id") * 7 + (my * mw + mx) * 37 + k * 11) % 256
-        def hx(c: Column) = lpad(hex(c), 2, "0")
-        val mw = Round14.idiv(w, lit(16))
-        val px = unhex(array_join(
-          transform(sequence(lit(0L), h - 1), y => {
-            val my = Round14.idiv(y, lit(16))
-            array_join(
-              transform(sequence(lit(0L), mw - 1), mx =>
-                repeat(concat(hx(mcuVal(mx, my, mw, lit(0))),
-                  hx(mcuVal(mx, my, mw, lit(1))),
-                  hx(mcuVal(mx, my, mw, lit(2)))), 16)), "")
-          }), ""))
-        // bind the encode to its OWN projection: the corruption
-        // surgery references the blob four times (2 substrings + 2
-        // lengths), and without the binding each reference re-runs
-        // the encoder (the q89/q346 expression-binding lesson —
-        // measured 5.9 → ~2 s)
-        val withJpg = graft.Tables.rebalance(
-          t("documents")(s, dir).select(col("doc_id"), col("text")))
-          .select(col("doc_id"), col("text"),
-            graft.functions.Jpeg.jpegEncode420(w, h, px, lit(1))
-              .as("jpg"))
-        // bit rot: the two bytes before EOI become an invalid marker
-        // (always inside the last restart segment's entropy data)
-        val damaged = concat(
-          substring(col("jpg"), lit(1), length(col("jpg")) - 4),
-          lit(Array(0xFF.toByte, 0xC0.toByte)),
-          substring(col("jpg"), length(col("jpg")) - 1, lit(2)))
-        val payload = when(col("doc_id") % 7 === 6,
-            graft.operators.Multimodal.syntheticPayload(col("text")))
-          .otherwise(damaged)
-        withJpg
-          .withColumn("st",
-            graft.functions.Jpeg.jpegStatsSalvage(payload))
-          .select(col("doc_id"), col("st.width"), col("st.height"),
-            col("st.n_pixels"), col("st.sum_c0"), col("st.sum_c1"),
-            col("st.sum_c2"), col("st.sum_luma_milli"),
-            col("st.corrupt_mcus"))
-          .orderBy(col("doc_id"))
+        jpegSalvageRows(s, dir, graft.functions.Jpeg.jpegEncode420(w, h,
+            mcuConstPixels(w, h, mcuH = 16, 7, 37, 11), lit(1)),
+          imageStats.filter(_ != "channels") :+ "corrupt_mcus")
       },
       Some {
         import Round14.{oDcPipe, oRgbY, oRgbCb, oRgbCr, oYcc2R,
@@ -501,11 +275,7 @@ object Round15 {
            |    AS sum_luma_milli,
            |  CAST(1 AS BIGINT) AS corrupt_mcus
            |FROM a JOIN d USING (doc_id)
-           |UNION ALL
-           |SELECT doc_id, NULL, NULL, NULL, NULL, NULL, NULL, NULL,
-           |  NULL
-           |FROM documents WHERE doc_id % 7 = 6
-           |ORDER BY doc_id""".stripMargin
+           |${oNullTail(8)}""".stripMargin
       }),
 
     // ---- ANN-index UPSERT (the fourth family — the upsert matrix
@@ -539,68 +309,6 @@ object Round15 {
             k = 5, nprobe = 2, dims = 64, m = 8)
           .orderBy(col("query_id"), col("rank"))
       },
-      Some(
-        s"""WITH e AS MATERIALIZED (SELECT vec_id,
-           |    CAST(embedding AS DOUBLE[]) AS d FROM embeddings),
-           |em AS MATERIALIZED (SELECT vec_id, CASE
-           |    WHEN vec_id % 5 = 0
-           |    THEN list_transform(d, x -> -x) ELSE d END AS d
-           |  FROM e),
-           |s0 AS MATERIALIZED (SELECT vec_id, t.j,
-           |    d[t.j*8+1 : t.j*8+8] AS sv FROM e, range(0, 8) t(j)),
-           |s AS MATERIALIZED (SELECT vec_id, t.j,
-           |    d[t.j*8+1 : t.j*8+8] AS sv FROM em, range(0, 8) t(j)),
-           |qs AS (SELECT vec_id AS query_id, j, sv AS qv FROM s
-           |  WHERE vec_id < 12),
-           |ccen AS MATERIALIZED (SELECT vec_id AS cel_id, d AS cele
-           |  FROM e ORDER BY vec_id LIMIT 8),
-           |ca0 AS (SELECT em.vec_id AS id, cel_id,
-           |    round(list_dot_product(em.d, cele) /
-           |      (sqrt(list_dot_product(em.d, em.d)) *
-           |       sqrt(list_dot_product(cele, cele))), 6) AS csim
-           |  FROM em, ccen),
-           |ca1 AS (SELECT *, row_number() OVER (PARTITION BY id
-           |    ORDER BY csim DESC, cel_id) AS r FROM ca0),
-           |cellof AS MATERIALIZED (SELECT id, cel_id AS cell
-           |  FROM ca1 WHERE r = 1),
-           |qp1 AS (SELECT *, row_number() OVER (PARTITION BY id
-           |    ORDER BY csim DESC, cel_id) AS r FROM ca0
-           |  WHERE id < 12),
-           |probes AS (SELECT id AS query_id, cel_id AS cell
-           |  FROM qp1 WHERE r <= 2),
-           |pcen AS MATERIALIZED (SELECT j, s0.vec_id AS cen_id,
-           |    sv AS cv FROM s0
-           |  WHERE s0.vec_id IN (SELECT vec_id FROM e
-           |    ORDER BY vec_id LIMIT 16)),
-           |pa0 AS (SELECT s.vec_id AS id, s.j, cen_id,
-           |    round(list_dot_product(sv, sv)
-           |      - 2 * list_dot_product(sv, cv)
-           |      + list_dot_product(cv, cv), 6) AS dist2
-           |  FROM s JOIN pcen ON s.j = pcen.j),
-           |pa1 AS (SELECT *, row_number() OVER (PARTITION BY id, j
-           |    ORDER BY dist2, cen_id) AS r FROM pa0),
-           |codes AS MATERIALIZED (SELECT id, j, cen_id AS code
-           |  FROM pa1 WHERE r = 1),
-           |tbl AS (SELECT query_id, qs.j, cen_id AS code,
-           |    CAST(round(list_dot_product(qv, qv)
-           |      - 2 * list_dot_product(qv, cv)
-           |      + list_dot_product(cv, cv), 6)
-           |      AS DECIMAL(20,6)) AS d2
-           |  FROM qs JOIN pcen ON qs.j = pcen.j),
-           |sums AS (SELECT pr.query_id, c.id AS neighbor_id,
-           |    CAST(SUM(d2) AS DOUBLE) AS adist
-           |  FROM codes c
-           |  JOIN cellof co ON c.id = co.id
-           |  JOIN probes pr ON pr.cell = co.cell
-           |  JOIN tbl t ON t.query_id = pr.query_id
-           |    AND t.j = c.j AND t.code = c.code
-           |  WHERE pr.query_id != c.id
-           |  GROUP BY pr.query_id, c.id),
-           |r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-           |    ORDER BY adist, neighbor_id) AS rank FROM sums)
-           |SELECT query_id, neighbor_id, adist,
-           |  CAST(rank AS BIGINT) AS rank
-           |FROM r WHERE rank <= 5
-           |ORDER BY query_id, rank""".stripMargin))
+      Some(oAnnUpsert))
   )
 }

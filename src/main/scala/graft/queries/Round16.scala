@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -9,16 +8,27 @@ import org.apache.spark.sql.functions._
   * layer ([[graft.sink.IndexManifest]]).
   */
 object Round16 {
-  private def t(name: String): QueryFn =
-    (s, dir) => Tables.load(s, dir, name)
-
-  /** The q344/q345/q353 re-crawl mutation, restated for this round's
-    * rows: doc_id%5=0 docs get this suffix appended. */
-  private val recrawlSuffix = " recrawl revision fresh tokens"
-  private val oMutatedDocs: String =
-    "(SELECT doc_id, CASE WHEN doc_id % 5 = 0 " +
-      s"THEN text || '$recrawlSuffix' ELSE text END AS text " +
-      "FROM documents)"
+  /** Block-constant pixels for the progressive rows: each 8×8 block of
+    * the `w` × `h` image is one value per channel k,
+    * `(doc_id·a + (by·bw + bx)·b + k·c) % 256` (`ch` = 1 or 3), built
+    * as 8-fold repeats per block row (the q346 hoisted construction). */
+  private def blockConstPixels(w: Column, h: Column, ch: Column,
+      a: Int, b: Int, c: Int): Column = {
+    def hx(v: Column) = lpad(hex(v), 2, "0")
+    def bv(bx: Column, by: Column, bw: Column, k: Int) =
+      (col("doc_id") * a + (by * bw + bx) * b + lit(k) * c) % 256
+    val bw = Round14.idiv(w, lit(8))
+    unhex(array_join(
+      transform(sequence(lit(0L), h - 1), y => {
+        val by = Round14.idiv(y, lit(8))
+        array_join(
+          transform(sequence(lit(0L), bw - 1), bx =>
+            when(ch === 1, repeat(hx(bv(bx, by, bw, 0)), 8))
+              .otherwise(repeat(concat(hx(bv(bx, by, bw, 0)),
+                hx(bv(bx, by, bw, 1)),
+                hx(bv(bx, by, bw, 2))), 8))), "")
+      }), ""))
+  }
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -71,30 +81,9 @@ object Round16 {
               col("doc_id") % 5 === 0).select(col("doc_id")))
           .orderBy(col("da"), col("db"))
       },
-      Some(s"""WITH w AS (SELECT doc_id,
-              |    list_filter(string_split_regex(lower(text), '\\s+'),
-              |      x -> len(x) > 0) AS ws
-              |  FROM $oMutatedDocs d),
-              |idx AS (SELECT doc_id, ws,
-              |    unnest(generate_series(1, len(ws) - 2)) AS i
-              |  FROM w WHERE len(ws) >= 3),
-              |sh AS (SELECT DISTINCT doc_id,
-              |    ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-              |  FROM idx),
-              |hs AS (SELECT doc_id, ${CorpusOps.oH60("s")} AS h
-              |  FROM sh),
-              |sz AS (SELECT doc_id, COUNT(*) AS n FROM hs
-              |  GROUP BY doc_id),
-              |p AS (SELECT a.doc_id da, b.doc_id db, COUNT(*) AS inter
-              |  FROM hs a JOIN hs b ON a.h = b.h AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2)
-              |SELECT da, db, inter,
-              |  inter / (x.n + y.n - inter) AS jaccard
-              |FROM p JOIN sz x ON da = x.doc_id JOIN sz y ON db = y.doc_id
-              |WHERE inter / (x.n + y.n - inter) >= 0.5
-              |  AND (da % 3 <> 0 OR da % 5 = 0
-              |    OR db % 3 <> 0 OR db % 5 = 0)
-              |ORDER BY da, db""".stripMargin)),
+      Some(s"""WITH ${oIndexShingles(s"$oMutatedDocs d")},
+              |${oIndexJaccardPairs("(da % 3 <> 0 OR da % 5 = 0\n" +
+                "    OR db % 3 <> 0 OR db % 5 = 0)")}""".stripMargin)),
 
     // ---- PROGRESSIVE JPEG (SOF2) — the last double-digit slice of
     // real crawled JPEGs the decoder nulled (r15 verdict #5). Spark
@@ -117,22 +106,7 @@ object Round16 {
         val w = (col("doc_id") % 3 + 1) * 8
         val h = (col("doc_id") % 2 + 1) * 8
         val ch = when(col("doc_id") % 2 === 0, 1L).otherwise(3L)
-        def hx(c: Column) = lpad(hex(c), 2, "0")
-        def bv(bx: Column, by: Column, bw: Column, k: Int) =
-          (col("doc_id") * 11 + (by * bw + bx) * 29 + lit(k) * 13) % 256
-        val bw = Round14.idiv(w, lit(8))
-        // block-constant pixels built as 8-fold repeats per block row
-        // (the q346 hoisted-construction lesson)
-        val px = unhex(array_join(
-          transform(sequence(lit(0L), h - 1), y => {
-            val by = Round14.idiv(y, lit(8))
-            array_join(
-              transform(sequence(lit(0L), bw - 1), bx =>
-                when(ch === 1, repeat(hx(bv(bx, by, bw, 0)), 8))
-                  .otherwise(repeat(concat(hx(bv(bx, by, bw, 0)),
-                    hx(bv(bx, by, bw, 1)),
-                    hx(bv(bx, by, bw, 2))), 8))), "")
-          }), ""))
+        val px = blockConstPixels(w, h, ch, 11, 29, 13)
         val ri = col("doc_id") % 4 // per-scan restart interval; 0=none
         val jpg = when(col("doc_id") % 4 < 2,
             graft.functions.Jpeg.jpegEncodeProgressiveSa(w, h, ch, px,
@@ -140,69 +114,11 @@ object Round16 {
           .otherwise(
             graft.functions.Jpeg.jpegEncodeProgressive(w, h, ch, px,
               ri))
-        val payload = when(col("doc_id") % 7 === 6,
-            graft.operators.Multimodal.syntheticPayload(col("text")))
-          .otherwise(jpg)
-        graft.Tables.rebalance(t("documents")(s, dir)
-            .select(col("doc_id"), col("text")))
-          .withColumn("st", graft.functions.Jpeg.jpegStats(payload))
-          .select(col("doc_id"), col("st.width"), col("st.height"),
-            col("st.channels"), col("st.n_pixels"), col("st.sum_c0"),
-            col("st.sum_c1"), col("st.sum_c2"),
-            col("st.sum_luma_milli"))
-          .orderBy(col("doc_id"))
+        statsRows(mediaDocs(s, dir),
+          graft.functions.Jpeg.jpegStats(blobOrText(jpg)))
       },
-      Some {
-        import Round14.{oDcPipe, oRgbY, oRgbCb, oRgbCr, oYcc2R,
-          oYcc2G, oYcc2B}
-        def v(k: Int) =
-          s"(doc_id * 11 + (by * (w // 8) + bx) * 29 + $k * 13) % 256"
-        val gOut = oDcPipe(v(0), 16)
-        val (yc, cb, cr) = (oRgbY(v(0), v(1), v(2)),
-          oRgbCb(v(0), v(1), v(2)), oRgbCr(v(0), v(1), v(2)))
-        s"""WITH d AS (SELECT doc_id, (doc_id % 3 + 1) * 8 AS w,
-           |    (doc_id % 2 + 1) * 8 AS h,
-           |    CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 3 END AS ch
-           |  FROM documents WHERE doc_id % 7 <> 6),
-           |bx0 AS (SELECT doc_id, w, h, ch,
-           |    unnest(generate_series(0, w // 8 - 1)) AS bx FROM d),
-           |blk AS (SELECT doc_id, w, h, ch, bx,
-           |    unnest(generate_series(0, h // 8 - 1)) AS by FROM bx0),
-           |dcy AS (SELECT doc_id, w, h, ch, bx, by,
-           |    ${oDcPipe(yc, 16)} AS yq,
-           |    ${oDcPipe(cb, 17)} AS cbq,
-           |    ${oDcPipe(cr, 17)} AS crq,
-           |    $gOut AS gq
-           |  FROM blk),
-           |outs AS (SELECT doc_id, ch,
-           |    CASE WHEN ch = 1 THEN gq
-           |      ELSE ${oYcc2R("yq", "crq")} END AS o0,
-           |    CASE WHEN ch = 1 THEN NULL
-           |      ELSE ${oYcc2G("yq", "cbq", "crq")} END AS o1,
-           |    CASE WHEN ch = 1 THEN NULL
-           |      ELSE ${oYcc2B("yq", "cbq")} END AS o2
-           |  FROM dcy),
-           |a AS (SELECT doc_id, MAX(ch) AS ch,
-           |    64 * SUM(o0) AS s0, 64 * SUM(o1) AS s1,
-           |    64 * SUM(o2) AS s2
-           |  FROM outs GROUP BY 1)
-           |SELECT a.doc_id, CAST(d.w AS BIGINT) AS width,
-           |  CAST(d.h AS BIGINT) AS height,
-           |  CAST(a.ch AS BIGINT) AS channels,
-           |  CAST(d.w * d.h AS BIGINT) AS n_pixels,
-           |  CAST(s0 AS BIGINT) AS sum_c0,
-           |  CAST(s1 AS BIGINT) AS sum_c1,
-           |  CAST(s2 AS BIGINT) AS sum_c2,
-           |  CAST(CASE WHEN a.ch = 1 THEN 1000 * s0
-           |    ELSE 299 * s0 + 587 * s1 + 114 * s2 END AS BIGINT)
-           |    AS sum_luma_milli
-           |FROM a JOIN d USING (doc_id)
-           |UNION ALL
-           |SELECT doc_id, NULL, NULL, NULL, NULL, NULL, NULL, NULL,
-           |  NULL
-           |FROM documents WHERE doc_id % 7 = 6
-           |ORDER BY doc_id""".stripMargin
-      }),
+      Some(oBlockJpeg("(doc_id % 3 + 1) * 8", "(doc_id % 2 + 1) * 8",
+        k => s"(doc_id * 11 + (by * (w // 8) + bx) * 29 + $k * 13) % 256"))),
 
     // ---- PROGRESSIVE 4:2:0 — the sampling real web progressive
     // JPEGs actually have (q352 pinned the scan machinery at 4:4:4;
@@ -219,76 +135,13 @@ object Round16 {
         val h = (col("doc_id") % 2 + 1) * 16
         val ri = col("doc_id") % 3 // per-scan restart interval; 0=none
         val sa = col("doc_id") % 2 === 0 // script per doc
-        def mcuVal(mx: Column, my: Column, mw: Column, k: Column) =
-          (col("doc_id") * 13 + (my * mw + mx) * 31 + k * 7) % 256
-        def hx(c: Column) = lpad(hex(c), 2, "0")
-        val mw = Round14.idiv(w, lit(16))
-        val px = unhex(array_join(
-          transform(sequence(lit(0L), h - 1), y => {
-            val my = Round14.idiv(y, lit(16))
-            array_join(
-              transform(sequence(lit(0L), mw - 1), mx =>
-                repeat(concat(hx(mcuVal(mx, my, mw, lit(0))),
-                  hx(mcuVal(mx, my, mw, lit(1))),
-                  hx(mcuVal(mx, my, mw, lit(2)))), 16)), "")
-          }), ""))
         val jpg = graft.functions.Jpeg.jpegEncodeProgressive420(
-          w, h, px, ri, sa)
-        val payload = when(col("doc_id") % 7 === 6,
-            graft.operators.Multimodal.syntheticPayload(col("text")))
-          .otherwise(jpg)
-        graft.Tables.rebalance(t("documents")(s, dir)
-            .select(col("doc_id"), col("text")))
-          .withColumn("st", graft.functions.Jpeg.jpegStats(payload))
-          .select(col("doc_id"), col("st.width"), col("st.height"),
-            col("st.channels"), col("st.n_pixels"), col("st.sum_c0"),
-            col("st.sum_c1"), col("st.sum_c2"),
-            col("st.sum_luma_milli"))
-          .orderBy(col("doc_id"))
+          w, h, mcuConstPixels(w, h, mcuH = 16, 13, 31, 7), ri, sa)
+        statsRows(mediaDocs(s, dir),
+          graft.functions.Jpeg.jpegStats(blobOrText(jpg)))
       },
-      Some {
-        import Round14.{oDcPipe, oRgbY, oRgbCb, oRgbCr, oYcc2R,
-          oYcc2G, oYcc2B}
-        def v(k: Int) =
-          s"(doc_id * 13 + (my * (w // 16) + mx) * 31 + $k * 7) % 256"
-        val (yc, cb, cr) = (oRgbY(v(0), v(1), v(2)),
-          oRgbCb(v(0), v(1), v(2)), oRgbCr(v(0), v(1), v(2)))
-        s"""WITH d AS (SELECT doc_id, (doc_id % 3 + 1) * 16 AS w,
-           |    (doc_id % 2 + 1) * 16 AS h
-           |  FROM documents WHERE doc_id % 7 <> 6),
-           |mx0 AS (SELECT doc_id, w, h,
-           |    unnest(generate_series(0, w // 16 - 1)) AS mx FROM d),
-           |mcu AS (SELECT doc_id, w, h, mx,
-           |    unnest(generate_series(0, h // 16 - 1)) AS my FROM mx0),
-           |dcy AS (SELECT doc_id, w, h, mx, my,
-           |    ${oDcPipe(yc, 16)} AS yq,
-           |    ${oDcPipe(cb, 17)} AS cbq,
-           |    ${oDcPipe(cr, 17)} AS crq
-           |  FROM mcu),
-           |outs AS (SELECT doc_id,
-           |    ${oYcc2R("yq", "crq")} AS o0,
-           |    ${oYcc2G("yq", "cbq", "crq")} AS o1,
-           |    ${oYcc2B("yq", "cbq")} AS o2
-           |  FROM dcy),
-           |a AS (SELECT doc_id, 256 * SUM(o0) AS s0,
-           |    256 * SUM(o1) AS s1, 256 * SUM(o2) AS s2
-           |  FROM outs GROUP BY 1)
-           |SELECT a.doc_id, CAST(d.w AS BIGINT) AS width,
-           |  CAST(d.h AS BIGINT) AS height,
-           |  CAST(3 AS BIGINT) AS channels,
-           |  CAST(d.w * d.h AS BIGINT) AS n_pixels,
-           |  CAST(s0 AS BIGINT) AS sum_c0,
-           |  CAST(s1 AS BIGINT) AS sum_c1,
-           |  CAST(s2 AS BIGINT) AS sum_c2,
-           |  CAST(299 * s0 + 587 * s1 + 114 * s2 AS BIGINT)
-           |    AS sum_luma_milli
-           |FROM a JOIN d USING (doc_id)
-           |UNION ALL
-           |SELECT doc_id, NULL, NULL, NULL, NULL, NULL, NULL, NULL,
-           |  NULL
-           |FROM documents WHERE doc_id % 7 = 6
-           |ORDER BY doc_id""".stripMargin
-      }),
+      Some(oMcuJpeg("(doc_id % 3 + 1) * 16", "(doc_id % 2 + 1) * 16", 16,
+        k => s"(doc_id * 13 + (my * (w // 16) + mx) * 31 + $k * 7) % 256"))),
 
     // ---- PROGRESSIVE SALVAGE — the bit-rot story (q351) extended to
     // SOF2 streams: with per-scan restart intervals a flipped byte
@@ -311,99 +164,19 @@ object Round16 {
         val w = (col("doc_id") % 3 + 1) * 8
         val h = (col("doc_id") % 2 + 2) * 8 // ≥ 2 blocks always
         val ch = when(col("doc_id") % 2 === 0, 1L).otherwise(3L)
-        def hx(c: Column) = lpad(hex(c), 2, "0")
-        def bv(bx: Column, by: Column, bw: Column, k: Int) =
-          (col("doc_id") * 5 + (by * bw + bx) * 43 + lit(k) * 17) % 256
-        val bw = Round14.idiv(w, lit(8))
-        val px = unhex(array_join(
-          transform(sequence(lit(0L), h - 1), y => {
-            val by = Round14.idiv(y, lit(8))
-            array_join(
-              transform(sequence(lit(0L), bw - 1), bx =>
-                when(ch === 1, repeat(hx(bv(bx, by, bw, 0)), 8))
-                  .otherwise(repeat(concat(hx(bv(bx, by, bw, 0)),
-                    hx(bv(bx, by, bw, 1)),
-                    hx(bv(bx, by, bw, 2))), 8))), "")
-          }), ""))
-        val jpgExpr = when(col("doc_id") % 4 < 2,
-            graft.functions.Jpeg.jpegEncodeProgressiveSa(w, h, ch, px,
-              lit(1)))
-          .otherwise(
-            graft.functions.Jpeg.jpegEncodeProgressive(w, h, ch, px,
-              lit(1)))
-        // bind the encode to its OWN projection — the surgery
-        // references the blob four times (the q89/q346/q351 lesson)
-        val withJpg = graft.Tables.rebalance(
-          t("documents")(s, dir).select(col("doc_id"), col("text")))
-          .select(col("doc_id"), col("text"), jpgExpr.as("jpg"))
-        val damaged = concat(
-          substring(col("jpg"), lit(1), length(col("jpg")) - 4),
-          lit(Array(0xFF.toByte, 0xC0.toByte)),
-          substring(col("jpg"), length(col("jpg")) - 1, lit(2)))
-        val payload = when(col("doc_id") % 7 === 6,
-            graft.operators.Multimodal.syntheticPayload(col("text")))
-          .otherwise(damaged)
-        withJpg
-          .withColumn("st",
-            graft.functions.Jpeg.jpegStatsSalvage(payload))
-          .select(col("doc_id"), col("st.width"), col("st.height"),
-            col("st.channels"), col("st.n_pixels"), col("st.sum_c0"),
-            col("st.sum_c1"), col("st.sum_c2"),
-            col("st.sum_luma_milli"), col("st.corrupt_mcus"))
-          .orderBy(col("doc_id"))
+        val px = blockConstPixels(w, h, ch, 5, 43, 17)
+        jpegSalvageRows(s, dir,
+          when(col("doc_id") % 4 < 2,
+              graft.functions.Jpeg.jpegEncodeProgressiveSa(w, h, ch, px,
+                lit(1)))
+            .otherwise(
+              graft.functions.Jpeg.jpegEncodeProgressive(w, h, ch, px,
+                lit(1))),
+          imageStats :+ "corrupt_mcus")
       },
-      Some {
-        import Round14.{oDcPipe, oRgbY, oRgbCb, oRgbCr, oYcc2R,
-          oYcc2G, oYcc2B}
-        def v(k: Int) =
-          s"(doc_id * 5 + (by * (w // 8) + bx) * 43 + $k * 17) % 256"
-        val gOut = oDcPipe(v(0), 16)
-        val (yc, cb, cr) = (oRgbY(v(0), v(1), v(2)),
-          oRgbCb(v(0), v(1), v(2)), oRgbCr(v(0), v(1), v(2)))
-        s"""WITH d AS (SELECT doc_id, (doc_id % 3 + 1) * 8 AS w,
-           |    (doc_id % 2 + 2) * 8 AS h,
-           |    CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 3 END AS ch
-           |  FROM documents WHERE doc_id % 7 <> 6),
-           |bx0 AS (SELECT doc_id, w, h, ch,
-           |    unnest(generate_series(0, w // 8 - 1)) AS bx FROM d),
-           |blk AS (SELECT doc_id, w, h, ch, bx,
-           |    unnest(generate_series(0, h // 8 - 1)) AS by FROM bx0),
-           |dcy AS (SELECT doc_id, w, h, ch, bx, by,
-           |    ${oDcPipe(yc, 16)} AS yq,
-           |    ${oDcPipe(cb, 17)} AS cbq,
-           |    ${oDcPipe(cr, 17)} AS crq,
-           |    $gOut AS gq
-           |  FROM blk),
-           |outs AS (SELECT doc_id, ch,
-           |    CASE WHEN ch = 1 THEN gq
-           |      ELSE ${oYcc2R("yq", "crq")} END AS o0,
-           |    CASE WHEN ch = 1 THEN NULL
-           |      ELSE ${oYcc2G("yq", "cbq", "crq")} END AS o1,
-           |    CASE WHEN ch = 1 THEN NULL
-           |      ELSE ${oYcc2B("yq", "cbq")} END AS o2
-           |  FROM dcy),
-           |a AS (SELECT doc_id, MAX(ch) AS ch,
-           |    64 * SUM(o0) AS s0, 64 * SUM(o1) AS s1,
-           |    64 * SUM(o2) AS s2
-           |  FROM outs GROUP BY 1)
-           |SELECT a.doc_id, CAST(d.w AS BIGINT) AS width,
-           |  CAST(d.h AS BIGINT) AS height,
-           |  CAST(a.ch AS BIGINT) AS channels,
-           |  CAST(d.w * d.h AS BIGINT) AS n_pixels,
-           |  CAST(s0 AS BIGINT) AS sum_c0,
-           |  CAST(s1 AS BIGINT) AS sum_c1,
-           |  CAST(s2 AS BIGINT) AS sum_c2,
-           |  CAST(CASE WHEN a.ch = 1 THEN 1000 * s0
-           |    ELSE 299 * s0 + 587 * s1 + 114 * s2 END AS BIGINT)
-           |    AS sum_luma_milli,
-           |  CAST(1 AS BIGINT) AS corrupt_mcus
-           |FROM a JOIN d USING (doc_id)
-           |UNION ALL
-           |SELECT doc_id, NULL, NULL, NULL, NULL, NULL, NULL, NULL,
-           |  NULL, NULL
-           |FROM documents WHERE doc_id % 7 = 6
-           |ORDER BY doc_id""".stripMargin
-      }),
+      Some(oBlockJpeg("(doc_id % 3 + 1) * 8", "(doc_id % 2 + 2) * 8",
+        k => s"(doc_id * 5 + (by * (w // 8) + bx) * 43 + $k * 17) % 256",
+        salvage = true))),
 
     // ---- ANN RETRAIN, trigger → action → serve, hash-gated (closes
     // the loop q347 opened, on the acceptance shape the r15 verdict
@@ -456,7 +229,7 @@ object Round16 {
             dims = 64, m = 8)
           .orderBy(col("query_id"), col("rank"))
       },
-      Round5.defs.find(_.name == "q87_ivfpq_topk").get.oracle),
+      Some(oIvfPqTopK())),
 
     // ---- STREAMING UPSERT — the crawler lifecycle end to end (r15
     // verdict #7: q348's epoch discipline composed with q344's
@@ -509,20 +282,6 @@ object Round16 {
         graft.operators.Retrieval.bm25TopKFromTfIndex(
           s, p, Round15.upsertQueries, k = 10)
       },
-      Some(s"""WITH ${graft.operators.Retrieval.bm25OracleCtes(
-                Round15.upsertQueries
-                  .map { case (q, x) => s"($q, '$x')" }.mkString(", "),
-                1.2, 0.75,
-                docsFrom = "(SELECT doc_id, CASE WHEN doc_id % 5 = 0" +
-                  " THEN text || ' recrawl revision fresh tokens'" +
-                  " ELSE text END AS text FROM documents)")},
-              |r AS (SELECT query_id, doc_id, score,
-              |    ROW_NUMBER() OVER (PARTITION BY query_id
-              |      ORDER BY score DESC, doc_id) AS rnk
-              |  FROM sc)
-              |SELECT query_id, doc_id, score,
-              |  CAST(rnk AS BIGINT) AS rank
-              |FROM r WHERE rnk <= 10
-              |ORDER BY query_id, rank""".stripMargin))
+      Some(oBm25Top10(Round15.upsertQueries, docsFrom = oMutatedDocs)))
   )
 }

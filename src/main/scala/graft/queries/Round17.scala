@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import org.apache.spark.sql.functions._
 
 /** Round-17 queries (q358+): snapshot pinning / time travel over the
@@ -8,9 +7,6 @@ import org.apache.spark.sql.functions._
   * the round's reader-atomic mutation watermark.
   */
 object Round17 {
-  private def t(name: String): QueryFn =
-    (s, dir) => Tables.load(s, dir, name)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- PINNED BM25 READ — time travel over the retained manifest
@@ -51,18 +47,7 @@ object Round17 {
           pinned = Some(graft.sink.IndexManifest.readAt(s, p,
             snap.seq)))
       },
-      Some(s"""WITH ${graft.operators.Retrieval.bm25OracleCtes(
-                Round15.upsertQueries
-                  .map { case (q, x) => s"($q, '$x')" }.mkString(", "),
-                1.2, 0.75)},
-              |r AS (SELECT query_id, doc_id, score,
-              |    ROW_NUMBER() OVER (PARTITION BY query_id
-              |      ORDER BY score DESC, doc_id) AS rnk
-              |  FROM sc)
-              |SELECT query_id, doc_id, score,
-              |  CAST(rnk AS BIGINT) AS rank
-              |FROM r WHERE rnk <= 10
-              |ORDER BY query_id, rank""".stripMargin)),
+      Some(oBm25Top10(Round15.upsertQueries))),
 
     // ---- STREAMING ANN RE-EMBED — the fourth persisted family gets
     // the q353 streaming discipline (TF q353, shingle q355,
@@ -113,7 +98,7 @@ object Round17 {
             k = 5, nprobe = 2, dims = 64, m = 8)
           .orderBy(col("query_id"), col("rank"))
       },
-      Round15.defs.find(_.name == "q349_ann_upsert").get.oracle),
+      Some(oAnnUpsert)),
 
     // ---- STREAMING FINGERPRINT INGEST — the substring-dedup index
     // streams too: seed on doc%4≠3, the crawler delivers the %4=3
@@ -151,7 +136,6 @@ object Round17 {
             docs.where(col("doc_id") % 4 === 3).select(col("doc_id")))
           .orderBy(col("da"), col("db"))
       },
-      Round14.defs.find(_.name == "q343_substring_incremental")
-        .get.oracle)
+      Some(oSubstringIncrementPairs))
   )
 }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import org.apache.spark.sql.functions._
 
 /** Round-18 queries (q361+): COMPOSED multi-family streaming crash
@@ -10,9 +9,6 @@ import org.apache.spark.sql.functions._
   * a kill BETWEEN two families' ingests of the same micro-batch.
   */
 object Round18 {
-  private def t(name: String): QueryFn =
-    (s, dir) => Tables.load(s, dir, name)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- COMPOSED STREAM RECOVERY — the r17 verdict's top ask as a
@@ -80,8 +76,7 @@ object Round18 {
             docs.where(col("doc_id") % 4 === 3).select(col("doc_id")))
           .orderBy(col("da"), col("db"))
       },
-      Round14.defs.find(_.name == "q343_substring_incremental")
-        .get.oracle),
+      Some(oSubstringIncrementPairs)),
 
     // ---- SNAPSHOT CDC — the incremental-pull primitive: a
     // downstream training job pins the index on each export and asks

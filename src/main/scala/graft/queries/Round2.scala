@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import graft.operators.{Dedup, Scd2, TextOps}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -10,8 +9,6 @@ import org.apache.spark.sql.functions._
   * term scoring, and benchmark decontamination — each oracle-checked.
   */
 object Round2 {
-  private def t(name: String): QueryFn = (s, dir) => Tables.load(s, dir, name)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- explicit GROUPING SETS via the Spark 4 Dataset API (rollup and
@@ -38,12 +35,7 @@ object Round2 {
     // 60-61); here building them is a first-class distributed operator.
     QueryDef("q53_scd2_build",
       (s, dir) => {
-        val ev = t("events")(s, dir)
-        val wTie = Window.partitionBy(col("user_id"), col("ts"))
-          .orderBy(col("event_id").desc)
-        val log = ev.withColumn("_r", row_number().over(wTie))
-          .filter(col("_r") === 1)
-          .select(col("user_id"), col("ts"), col("value"))
+        val log = userValueLog(s, dir)
         // open-end sentinel must stay inside int64 NANOSECOND range
         // (max 2262-04-11): the driver's compare reads the parquet dump
         // at ns precision, and 9999-12-31 silently wraps to 1816
@@ -53,23 +45,7 @@ object Round2 {
             col("valid_from"), col("valid_to"))
           .orderBy(col("user_id"), col("valid_from"))
       },
-      Some("""WITH ev AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
-             |    value, event_id FROM events),
-             |d0 AS (SELECT *, row_number() OVER (PARTITION BY user_id, ts
-             |    ORDER BY event_id DESC) AS r FROM ev),
-             |d AS (SELECT user_id, ts, value FROM d0 WHERE r = 1),
-             |c AS (SELECT *, CASE WHEN value IS NOT DISTINCT FROM
-             |      lag(value) OVER (PARTITION BY user_id ORDER BY ts)
-             |      THEN 0 ELSE 1 END AS chg,
-             |    row_number() OVER (PARTITION BY user_id ORDER BY ts) AS rn
-             |  FROM d),
-             |f AS (SELECT user_id, value, ts AS valid_from FROM c
-             |  WHERE chg = 1 OR rn = 1)
-             |SELECT user_id, value, valid_from,
-             |  coalesce(lead(valid_from) OVER (PARTITION BY user_id
-             |    ORDER BY valid_from),
-             |    TIMESTAMP '2200-01-01 00:00:00') AS valid_to
-             |FROM f ORDER BY user_id, valid_from""".stripMargin)),
+      Some(oScd2History)),
 
     // ---- TF-IDF term scoring, top-5 terms per document. The idf is the
     // LINEAR N/df variant scaled to exact integers ((tf·N·1e6) div df):
@@ -216,38 +192,11 @@ object Round2 {
     // spec-compared to the composed twin
     QueryDef("q58_asof_native",
       (s, dir) => {
-        val ev = t("events")(s, dir)
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"), col("ts"),
-            col("value"))
-        val errW = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("user_id"), col("ts"))
-          .orderBy(col("event_id").desc)
-        val errors = ev.filter(col("event_type") === "error")
-          .withColumn("_r", row_number().over(errW))
-          .filter(col("_r") === 1)
-          .select(col("user_id"), col("ts").as("err_ts"),
-            col("value").as("err_value"))
+        val (clicks, errors) = clicksAndErrors(s, dir)
         graft.operators.AsOf.joinNative(clicks, errors, Seq("user_id"),
             "ts", "err_ts", Seq("err_ts", "err_value"))
           .orderBy(col("event_id"))
       },
-      Some("""WITH ev AS (SELECT event_id, user_id,
-             |    CAST(ts AS TIMESTAMP) AS ts, value, event_type
-             |  FROM events),
-             |clicks AS (SELECT event_id, user_id, ts, value FROM ev
-             |  WHERE event_type = 'click'),
-             |err0 AS (SELECT user_id, ts, value, event_id FROM ev
-             |  WHERE event_type = 'error'),
-             |err1 AS (SELECT *, row_number() OVER (
-             |    PARTITION BY user_id, ts ORDER BY event_id DESC) AS r
-             |  FROM err0),
-             |errors AS (SELECT user_id, ts AS err_ts,
-             |    value AS err_value FROM err1 WHERE r = 1)
-             |SELECT c.event_id, c.user_id, c.ts, c.value,
-             |  e.err_ts, e.err_value
-             |FROM clicks c ASOF LEFT JOIN errors e
-             |  ON c.user_id = e.user_id AND c.ts >= e.err_ts
-             |ORDER BY c.event_id""".stripMargin))
+      Some(oAsOfClickErrors))
   )
 }

@@ -1,14 +1,11 @@
 package graft.queries
 
-import graft.Tables
 import graft.operators.{Dedup, Freq, TextOps}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** Round-3 additions: sketch-based frequency analysis. */
 object Round3 {
-  private def t(name: String): QueryFn = (s, dir) => Tables.load(s, dir, name)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- exact heavy hitters via Misra-Gries candidates + exact
@@ -208,13 +205,7 @@ object Round3 {
       (s, dir) => {
         val cutoff = lit("2024-01-24 00:00:00").cast("timestamp")
         val eot = lit("2200-01-01 00:00:00").cast("timestamp")
-        val ev = t("events")(s, dir)
-        val wTie = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("user_id"), col("ts"))
-          .orderBy(col("event_id").desc)
-        val log = ev.withColumn("_r", row_number().over(wTie))
-          .filter(col("_r") === 1)
-          .select(col("user_id"), col("ts"), col("value"))
+        val log = userValueLog(s, dir)
         val existing = graft.operators.Scd2.build(
           log.filter(col("ts") < cutoff),
           Seq("user_id"), "ts", Seq("value"), eot)
@@ -226,23 +217,7 @@ object Round3 {
           .orderBy(col("user_id"), col("valid_from"))
       },
       // full-rebuild oracle — identical to q53's
-      Some("""WITH ev AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
-             |    value, event_id FROM events),
-             |d0 AS (SELECT *, row_number() OVER (PARTITION BY user_id, ts
-             |    ORDER BY event_id DESC) AS r FROM ev),
-             |d AS (SELECT user_id, ts, value FROM d0 WHERE r = 1),
-             |c AS (SELECT *, CASE WHEN value IS NOT DISTINCT FROM
-             |      lag(value) OVER (PARTITION BY user_id ORDER BY ts)
-             |      THEN 0 ELSE 1 END AS chg,
-             |    row_number() OVER (PARTITION BY user_id ORDER BY ts) AS rn
-             |  FROM d),
-             |f AS (SELECT user_id, value, ts AS valid_from FROM c
-             |  WHERE chg = 1 OR rn = 1)
-             |SELECT user_id, value, valid_from,
-             |  coalesce(lead(valid_from) OVER (PARTITION BY user_id
-             |    ORDER BY valid_from),
-             |    TIMESTAMP '2200-01-01 00:00:00') AS valid_to
-             |FROM f ORDER BY user_id, valid_from""".stripMargin)),
+      Some(oScd2History)),
 
     // ---- the JDBC extraction path under the driver's oracle: nation
     // flows parquet → JdbcTarget (idempotent batch overwrite into
@@ -308,17 +283,6 @@ object Round3 {
           "doc_id", "text", n = 3, threshold = 0.5,
           ranked = Some(Round11.sharedRanked(s, dir)))
         .orderBy(col("da"), col("db")),
-      Some(s"""WITH ${graft.queries.CorpusOps.oShinglesSql},
-              |hs AS (SELECT doc_id,
-              |  ${graft.queries.CorpusOps.oH60("s")} AS h FROM sh),
-              |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-              |p AS (SELECT a.doc_id da, b.doc_id db, COUNT(*) AS inter
-              |  FROM hs a JOIN hs b ON a.h = b.h AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2)
-              |SELECT da, db, inter,
-              |  inter / (x.n + y.n - inter) AS jaccard
-              |FROM p JOIN sz x ON da = x.doc_id JOIN sz y ON db = y.doc_id
-              |WHERE inter / (x.n + y.n - inter) >= 0.5
-              |ORDER BY da, db""".stripMargin))
+      Some(oJaccardPairs))
   )
 }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import graft.operators.{Curation, Dedup, Similarity}
 import org.apache.spark.sql.functions._
 
@@ -11,8 +10,6 @@ import org.apache.spark.sql.functions._
   * cross-corpus incremental near-dup detection.
   */
 object Round5 {
-  private def t(name: String): QueryFn = (s, dir) => Tables.load(s, dir, name)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- Gopher-style repetition metrics, entirely map-side: every
@@ -227,18 +224,7 @@ object Round5 {
       (s, dir) => Curation
         .unigramLogProb(t("documents")(s, dir), "text", "doc_id")
         .orderBy(col("doc_id")),
-      Some("""WITH w AS (SELECT doc_id, unnest(list_filter(
-             |    string_split_regex(lower(text), '\s+'),
-             |    x -> len(x) > 0)) AS word FROM documents),
-             |tf AS (SELECT doc_id, word, COUNT(*) AS tf
-             |  FROM w GROUP BY doc_id, word),
-             |c AS (SELECT word, COUNT(*) AS cnt FROM w GROUP BY word),
-             |n AS (SELECT SUM(cnt) AS n_total FROM c),
-             |lp AS (SELECT word, CAST(round(ln(cnt / n_total), 6)
-             |    AS DECIMAL(20,6)) AS logp FROM c, n),
-             |d AS (SELECT tf.doc_id, SUM(tf.tf) AS n_tokens,
-             |    SUM(lp.logp * tf.tf) AS s
-             |  FROM tf JOIN lp USING (word) GROUP BY tf.doc_id)
+      Some(s"""WITH $oUnigramLogProbs
              |SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
              |  CAST((CASE WHEN s < 0 THEN -1 ELSE 1 END) *
              |    ((CAST(abs(s) * 1000000 AS BIGINT) * 2 + n_tokens)
@@ -439,20 +425,8 @@ object Round5 {
         .pqCodes(t("embeddings")(s, dir), dims = 64, m = 8,
           nCentroids = 16)
         .orderBy(col("vec_id")),
-      Some("""WITH e AS (SELECT vec_id,
-             |    CAST(embedding AS DOUBLE[]) AS d FROM embeddings),
-             |s AS (SELECT vec_id, t.j, d[t.j*8+1 : t.j*8+8] AS sv
-             |  FROM e, range(0, 8) t(j)),
-             |cen AS (SELECT j, s.vec_id AS cen_id, sv AS cv FROM s
-             |  WHERE s.vec_id IN (SELECT vec_id FROM e
-             |    ORDER BY vec_id LIMIT 16)),
-             |a0 AS (SELECT s.vec_id AS id, s.j, cen_id,
-             |    round(list_dot_product(sv, sv)
-             |      - 2 * list_dot_product(sv, cv)
-             |      + list_dot_product(cv, cv), 6) AS dist2
-             |  FROM s JOIN cen ON s.j = cen.j),
-             |a1 AS (SELECT *, row_number() OVER (PARTITION BY id, j
-             |    ORDER BY dist2, cen_id) AS r FROM a0),
+      Some(s"""WITH $oPqSeeds,
+             |${oPqNearest("a", "cen")},
              |c AS (SELECT id, j, cen_id AS code FROM a1 WHERE r = 1)
              |SELECT id AS vec_id,
              |  string_agg(CAST(code AS VARCHAR), ',' ORDER BY j)
@@ -470,39 +444,10 @@ object Round5 {
             dims = 64, m = 8, nCentroids = 16)
           .orderBy(col("query_id"), col("rank"))
       },
-      Some("""WITH e AS (SELECT vec_id,
-             |    CAST(embedding AS DOUBLE[]) AS d FROM embeddings),
-             |s AS (SELECT vec_id, t.j, d[t.j*8+1 : t.j*8+8] AS sv
-             |  FROM e, range(0, 8) t(j)),
-             |cen AS (SELECT j, s.vec_id AS cen_id, sv AS cv FROM s
-             |  WHERE s.vec_id IN (SELECT vec_id FROM e
-             |    ORDER BY vec_id LIMIT 16)),
-             |a0 AS (SELECT s.vec_id AS id, s.j, cen_id,
-             |    round(list_dot_product(sv, sv)
-             |      - 2 * list_dot_product(sv, cv)
-             |      + list_dot_product(cv, cv), 6) AS dist2
-             |  FROM s JOIN cen ON s.j = cen.j),
-             |a1 AS (SELECT *, row_number() OVER (PARTITION BY id, j
-             |    ORDER BY dist2, cen_id) AS r FROM a0),
+      Some(s"""WITH $oPqSeeds,
+             |${oPqNearest("a", "cen")},
              |c AS (SELECT id, j, cen_id AS code FROM a1 WHERE r = 1),
-             |qs AS (SELECT vec_id AS query_id, j, sv AS qv FROM s
-             |  WHERE vec_id < 20),
-             |tbl AS (SELECT query_id, qs.j, cen_id AS code,
-             |    CAST(round(list_dot_product(qv, qv)
-             |      - 2 * list_dot_product(qv, cv)
-             |      + list_dot_product(cv, cv), 6)
-             |      AS DECIMAL(20,6)) AS d2
-             |  FROM qs JOIN cen ON qs.j = cen.j),
-             |sums AS (SELECT query_id, c.id AS neighbor_id,
-             |    CAST(SUM(d2) AS DOUBLE) AS adist
-             |  FROM c JOIN tbl ON c.j = tbl.j AND c.code = tbl.code
-             |  WHERE query_id != c.id GROUP BY query_id, c.id),
-             |r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-             |    ORDER BY adist, neighbor_id) AS rank FROM sums)
-             |SELECT query_id, neighbor_id, adist,
-             |  CAST(rank AS BIGINT) AS rank
-             |FROM r WHERE rank <= 5
-             |ORDER BY query_id, rank""".stripMargin)),
+             |${oPqAdcTop5("cen")}""".stripMargin)),
 
     // ---- PII scrubbing: the corpus carries no PII, so the query
     // synthesizes one email + IP + phone per row FROM data columns
@@ -551,28 +496,7 @@ object Round5 {
         .substringCandidates(t("documents")(s, dir), "doc_id", "text",
           k = 25, w = 10, minShared = 2)
         .orderBy(col("da"), col("db")),
-      Some("""WITH nrm AS (SELECT doc_id, array_to_string(list_filter(
-             |    string_split_regex(lower(text), '\s+'),
-             |    x -> len(x) > 0), ' ') AS t FROM documents),
-             |g AS (SELECT doc_id, t FROM nrm WHERE len(t) >= 25),
-             |p0 AS (SELECT doc_id, t,
-             |    unnest(generate_series(1, len(t) - 24)) AS i FROM g),
-             |p AS (SELECT doc_id, i,
-             |    CAST(concat('0x', substr(md5(substr(t, i, 25)), 1, 15))
-             |      AS BIGINT) AS h
-             |  FROM p0),
-             |m AS (SELECT doc_id, i, MIN(h) OVER (PARTITION BY doc_id
-             |    ORDER BY i ROWS BETWEEN CURRENT ROW AND 9 FOLLOWING)
-             |      AS mh,
-             |    COUNT(*) OVER (PARTITION BY doc_id) AS np FROM p),
-             |f AS (SELECT DISTINCT doc_id, mh AS h FROM m
-             |  WHERE i <= greatest(np - 9, 1)),
-             |pairs AS (SELECT a.doc_id AS da, b.doc_id AS db,
-             |    COUNT(*) AS shared
-             |  FROM f a JOIN f b ON a.h = b.h AND a.doc_id < b.doc_id
-             |  GROUP BY 1, 2)
-             |SELECT da, db, CAST(shared AS BIGINT) AS shared FROM pairs
-             |WHERE shared >= 2 ORDER BY da, db""".stripMargin)),
+      Some(oSubstringPairs(incrementOnly = false))),
 
     // ---- IVF-PQ composite ANN (FAISS-style): coarse cells bound WHICH
     // candidates score (2 of 8 cells probed), PQ-ADC bounds HOW (codes
@@ -586,60 +510,7 @@ object Round5 {
             nCentroids = 16)
           .orderBy(col("query_id"), col("rank"))
       },
-      Some("""WITH e AS (SELECT vec_id,
-             |    CAST(embedding AS DOUBLE[]) AS d FROM embeddings),
-             |ccen AS (SELECT vec_id AS cel_id, d AS cele
-             |  FROM e ORDER BY vec_id LIMIT 8),
-             |ca0 AS (SELECT e.vec_id AS id, cel_id,
-             |    round(list_dot_product(e.d, cele) /
-             |      (sqrt(list_dot_product(e.d, e.d)) *
-             |       sqrt(list_dot_product(cele, cele))), 6) AS csim
-             |  FROM e, ccen),
-             |ca1 AS (SELECT *, row_number() OVER (PARTITION BY id
-             |    ORDER BY csim DESC, cel_id) AS r FROM ca0),
-             |cellof AS (SELECT id, cel_id AS cell FROM ca1 WHERE r = 1),
-             |qp1 AS (SELECT *, row_number() OVER (PARTITION BY id
-             |    ORDER BY csim DESC, cel_id) AS r FROM ca0
-             |  WHERE id < 12),
-             |probes AS (SELECT id AS query_id, cel_id AS cell
-             |  FROM qp1 WHERE r <= 2),
-             |s AS (SELECT vec_id, t.j, d[t.j*8+1 : t.j*8+8] AS sv
-             |  FROM e, range(0, 8) t(j)),
-             |pcen AS (SELECT j, s.vec_id AS cen_id, sv AS cv FROM s
-             |  WHERE s.vec_id IN (SELECT vec_id FROM e
-             |    ORDER BY vec_id LIMIT 16)),
-             |pa0 AS (SELECT s.vec_id AS id, s.j, cen_id,
-             |    round(list_dot_product(sv, sv)
-             |      - 2 * list_dot_product(sv, cv)
-             |      + list_dot_product(cv, cv), 6) AS dist2
-             |  FROM s JOIN pcen ON s.j = pcen.j),
-             |pa1 AS (SELECT *, row_number() OVER (PARTITION BY id, j
-             |    ORDER BY dist2, cen_id) AS r FROM pa0),
-             |codes AS (SELECT id, j, cen_id AS code FROM pa1
-             |  WHERE r = 1),
-             |qs AS (SELECT vec_id AS query_id, j, sv AS qv FROM s
-             |  WHERE vec_id < 12),
-             |tbl AS (SELECT query_id, qs.j, cen_id AS code,
-             |    CAST(round(list_dot_product(qv, qv)
-             |      - 2 * list_dot_product(qv, cv)
-             |      + list_dot_product(cv, cv), 6)
-             |      AS DECIMAL(20,6)) AS d2
-             |  FROM qs JOIN pcen ON qs.j = pcen.j),
-             |sums AS (SELECT p.query_id, c.id AS neighbor_id,
-             |    CAST(SUM(d2) AS DOUBLE) AS adist
-             |  FROM codes c
-             |  JOIN cellof ON c.id = cellof.id
-             |  JOIN probes p ON p.cell = cellof.cell
-             |  JOIN tbl ON tbl.query_id = p.query_id
-             |    AND tbl.j = c.j AND tbl.code = c.code
-             |  WHERE p.query_id != c.id
-             |  GROUP BY p.query_id, c.id),
-             |r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-             |    ORDER BY adist, neighbor_id) AS rank FROM sums)
-             |SELECT query_id, neighbor_id, adist,
-             |  CAST(rank AS BIGINT) AS rank
-             |FROM r WHERE rank <= 5
-             |ORDER BY query_id, rank""".stripMargin)),
+      Some(oIvfPqTopK())),
 
     // ---- column profiling: all statistics in ONE aggregation/scan
     // (exact distincts ⇒ Expand; approx variant documented for scale).

@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import graft.operators.{Curation, Similarity}
 import org.apache.spark.sql.functions._
 
@@ -10,8 +9,6 @@ import org.apache.spark.sql.functions._
   * scrubbing.
   */
 object Round6 {
-  private def t(name: String): QueryFn = (s, dir) => Tables.load(s, dir, name)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- intra-document repeated-block scrub: consecutive 8-word
@@ -62,70 +59,8 @@ object Round6 {
             nCentroids = 16, acknowledgeSeeded = true)
           .orderBy(col("query_id"), col("rank"))
       },
-      Some("""WITH e AS (SELECT vec_id,
-             |    CAST(embedding AS DOUBLE[]) AS d FROM embeddings),
-             |ccen AS (SELECT vec_id AS cel_id, d AS cele
-             |  FROM e ORDER BY vec_id LIMIT 8),
-             |ca0 AS (SELECT e.vec_id AS id, cel_id,
-             |    round(list_dot_product(e.d, cele) /
-             |      (sqrt(list_dot_product(e.d, e.d)) *
-             |       sqrt(list_dot_product(cele, cele))), 6) AS csim
-             |  FROM e, ccen),
-             |ca1 AS (SELECT *, row_number() OVER (PARTITION BY id
-             |    ORDER BY csim DESC, cel_id) AS r FROM ca0),
-             |cellof AS (SELECT id, cel_id AS cell FROM ca1 WHERE r = 1),
-             |res AS (SELECT c.id, c.cell,
-             |    list_transform(list_zip(e.d, cc.cele),
-             |      x -> x[1] - x[2]) AS rv
-             |  FROM cellof c JOIN e ON c.id = e.vec_id
-             |  JOIN ccen cc ON c.cell = cc.cel_id),
-             |s AS (SELECT id, cell, t.j, rv[t.j*8+1 : t.j*8+8] AS sv
-             |  FROM res, range(0, 8) t(j)),
-             |pcen AS (SELECT j, s.id AS cen_id, sv AS cv FROM s
-             |  WHERE s.id IN (SELECT vec_id FROM e
-             |    ORDER BY vec_id LIMIT 16)),
-             |pa0 AS (SELECT s.id, s.j, cen_id,
-             |    round(list_dot_product(sv, sv)
-             |      - 2 * list_dot_product(sv, cv)
-             |      + list_dot_product(cv, cv), 6) AS dist2
-             |  FROM s JOIN pcen ON s.j = pcen.j),
-             |pa1 AS (SELECT *, row_number() OVER (PARTITION BY id, j
-             |    ORDER BY dist2, cen_id) AS r FROM pa0),
-             |codes AS (SELECT id, j, cen_id AS code FROM pa1
-             |  WHERE r = 1),
-             |qp1 AS (SELECT *, row_number() OVER (PARTITION BY id
-             |    ORDER BY csim DESC, cel_id) AS r FROM ca0
-             |  WHERE id < 12),
-             |probes AS (SELECT id AS query_id, cel_id AS cell
-             |  FROM qp1 WHERE r <= 2),
-             |qres AS (SELECT p.query_id, p.cell,
-             |    list_transform(list_zip(e.d, cc.cele),
-             |      x -> x[1] - x[2]) AS qr
-             |  FROM probes p JOIN e ON p.query_id = e.vec_id
-             |  JOIN ccen cc ON p.cell = cc.cel_id),
-             |qs AS (SELECT query_id, cell, t.j,
-             |    qr[t.j*8+1 : t.j*8+8] AS qv
-             |  FROM qres, range(0, 8) t(j)),
-             |tbl AS (SELECT query_id, cell, qs.j, cen_id AS code,
-             |    CAST(round(list_dot_product(qv, qv)
-             |      - 2 * list_dot_product(qv, cv)
-             |      + list_dot_product(cv, cv), 6)
-             |      AS DECIMAL(20,6)) AS d2
-             |  FROM qs JOIN pcen ON qs.j = pcen.j),
-             |sums AS (SELECT t.query_id, c.id AS neighbor_id,
-             |    CAST(SUM(d2) AS DOUBLE) AS adist
-             |  FROM codes c
-             |  JOIN cellof cf ON c.id = cf.id
-             |  JOIN tbl t ON t.cell = cf.cell AND t.j = c.j
-             |    AND t.code = c.code
-             |  WHERE t.query_id != c.id
-             |  GROUP BY t.query_id, c.id),
-             |r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-             |    ORDER BY adist, neighbor_id) AS rank FROM sums)
-             |SELECT query_id, neighbor_id, adist,
-             |  CAST(rank AS BIGINT) AS rank
-             |FROM r WHERE rank <= 5
-             |ORDER BY query_id, rank""".stripMargin)),
+      Some(s"""WITH ${oSeededCells()},
+              |${oResidualSearch("ccen", "cel_id", "cele")}""".stripMargin)),
 
     // ---- packing-efficiency audit over q79's bins: per stratum, how
     // many context windows the greedy packing filled and the fill

@@ -12,8 +12,6 @@ import org.apache.spark.sql.functions._
   * the oracle.
   */
 object Round7 {
-  private def t(name: String): QueryFn = (s, dir) => Tables.load(s, dir, name)
-
   /** Shared by q94 (position-set variant) and q96 (packed-bitmap
     * variant): the two physical shapes are flag-for-flag identical by
     * construction, so one oracle gates both.
@@ -70,45 +68,9 @@ object Round7 {
             .as(Seq("p", "m")))
         .select(col("cen_id"), col("p").cast("bigint").as("p"), col("m"))
         .orderBy(col("cen_id"), col("p")),
-      Some("""WITH e AS (SELECT vec_id,
-             |    CAST(embedding AS DOUBLE[]) AS d FROM embeddings),
-             |en AS (SELECT vec_id, d,
-             |    sqrt(list_dot_product(d, d)) AS nrm FROM e),
-             |c0 AS (SELECT vec_id AS cen_id, d AS ce,
-             |    sqrt(list_dot_product(d, d)) AS cn
-             |  FROM e ORDER BY vec_id LIMIT 8),
-             |a1r AS (SELECT en.vec_id, c0.cen_id,
-             |    round(list_dot_product(en.d, c0.ce) /
-             |      (en.nrm * c0.cn), 6) AS cs
-             |  FROM en, c0),
-             |a1 AS (SELECT vec_id, cen_id AS cell FROM (
-             |    SELECT *, row_number() OVER (PARTITION BY vec_id
-             |      ORDER BY cs DESC, cen_id) AS r FROM a1r)
-             |  WHERE r = 1),
-             |m1 AS (SELECT a1.cell, t.p,
-             |    round(avg(en.d[t.p + 1]), 6) AS m
-             |  FROM a1 JOIN en ON a1.vec_id = en.vec_id,
-             |    range(0, 64) t(p)
-             |  GROUP BY a1.cell, t.p),
-             |c1 AS (SELECT cell AS cen_id, list(m ORDER BY p) AS ce
-             |  FROM m1 GROUP BY cell),
-             |c1n AS (SELECT cen_id, ce,
-             |    sqrt(list_dot_product(ce, ce)) AS cn FROM c1),
-             |a2r AS (SELECT en.vec_id, c1n.cen_id,
-             |    round(list_dot_product(en.d, c1n.ce) /
-             |      (en.nrm * c1n.cn), 6) AS cs
-             |  FROM en, c1n),
-             |a2 AS (SELECT vec_id, cen_id AS cell FROM (
-             |    SELECT *, row_number() OVER (PARTITION BY vec_id
-             |      ORDER BY cs DESC, cen_id) AS r FROM a2r)
-             |  WHERE r = 1),
-             |m2 AS (SELECT a2.cell, t.p,
-             |    round(avg(en.d[t.p + 1]), 6) AS m
-             |  FROM a2 JOIN en ON a2.vec_id = en.vec_id,
-             |    range(0, 64) t(p)
-             |  GROUP BY a2.cell, t.p)
-             |SELECT cell AS cen_id, CAST(p AS BIGINT) AS p, m FROM m2
-             |ORDER BY cen_id, p""".stripMargin)),
+      Some(s"""WITH $oLloyd2Means
+              |SELECT cell AS cen_id, CAST(p AS BIGINT) AS p, m FROM m2
+              |ORDER BY cen_id, p""".stripMargin)),
 
     // ---- packSequences non-numeric-id degradation path under the
     // oracle: a string id ('d' + zero-padded doc_id, so lexicographic
@@ -231,7 +193,7 @@ object Round7 {
       },
       // the persisted index must reproduce the live q87 pipeline
       // bit-for-bit, so the oracle IS q87's
-      Round5.defs.find(_.name == "q87_ivfpq_topk").get.oracle),
+      Some(oIvfPqTopK())),
 
     // ---- real media-metadata probe, hash-gated as parse∘construct ≡
     // identity: Spark BUILDS genuine container headers (PNG big-endian
@@ -360,23 +322,13 @@ object Round7 {
             col("n_members"), round(col("best_score"), 6).as("best_score"))
           .orderBy(col("cluster"))
       },
-      Some(s"""WITH RECURSIVE ${CorpusOps.oShinglesSql},
-              |hs AS (SELECT doc_id, ${CorpusOps.oH60("s")} AS h FROM sh),
-              |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-              |p AS (SELECT a.doc_id da, b.doc_id db, COUNT(*) AS inter
-              |  FROM hs a JOIN hs b ON a.h = b.h AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
+      Some(s"""WITH RECURSIVE $oShinglePairs,
               |prs AS (SELECT da, db FROM p
               |  JOIN sz x ON da = x.doc_id JOIN sz y ON db = y.doc_id
               |  WHERE inter / (x.n + y.n - inter) >= 0.6),
               |edges AS (SELECT da AS src, db AS dst FROM prs
               |  UNION ALL SELECT db, da FROM prs),
-              |walk AS (
-              |  SELECT doc_id AS id, doc_id AS lbl FROM documents
-              |  UNION
-              |  SELECT e.dst AS id, w.lbl
-              |  FROM walk w JOIN edges e ON w.id = e.src
-              |  WHERE w.lbl < e.dst),
+              |$oWalk,
               |cl AS (SELECT id AS doc_id, min(lbl) AS cluster
               |  FROM walk GROUP BY id),
               |tok AS (SELECT doc_id, list_filter(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import graft.operators.{Classifier, Curation, Multimodal, Similarity}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -14,55 +13,6 @@ import org.apache.spark.sql.functions._
   * parser paths under the parse∘construct gate.
   */
 object Round8 {
-  private def t(name: String): QueryFn = (s, dir) => Tables.load(s, dir, name)
-
-  /** The 2-iteration Lloyd replay from q91's oracle, ending in trained
-    * cells `c2n(cen_id, ce, cn)` — shared verbatim by q101 so the
-    * training and search queries can never drift apart.
-    */
-  private[queries] val lloyd2Cte: String =
-    """e AS (SELECT vec_id,
-      |    CAST(embedding AS DOUBLE[]) AS d FROM embeddings),
-      |en AS (SELECT vec_id, d,
-      |    sqrt(list_dot_product(d, d)) AS nrm FROM e),
-      |c0 AS (SELECT vec_id AS cen_id, d AS ce,
-      |    sqrt(list_dot_product(d, d)) AS cn
-      |  FROM e ORDER BY vec_id LIMIT 8),
-      |a1r AS (SELECT en.vec_id, c0.cen_id,
-      |    round(list_dot_product(en.d, c0.ce) /
-      |      (en.nrm * c0.cn), 6) AS cs
-      |  FROM en, c0),
-      |a1 AS (SELECT vec_id, cen_id AS cell FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY vec_id
-      |      ORDER BY cs DESC, cen_id) AS r FROM a1r)
-      |  WHERE r = 1),
-      |m1 AS (SELECT a1.cell, t.p,
-      |    round(avg(en.d[t.p + 1]), 6) AS m
-      |  FROM a1 JOIN en ON a1.vec_id = en.vec_id,
-      |    range(0, 64) t(p)
-      |  GROUP BY a1.cell, t.p),
-      |c1 AS (SELECT cell AS cen_id, list(m ORDER BY p) AS ce
-      |  FROM m1 GROUP BY cell),
-      |c1n AS (SELECT cen_id, ce,
-      |    sqrt(list_dot_product(ce, ce)) AS cn FROM c1),
-      |a2r AS (SELECT en.vec_id, c1n.cen_id,
-      |    round(list_dot_product(en.d, c1n.ce) /
-      |      (en.nrm * c1n.cn), 6) AS cs
-      |  FROM en, c1n),
-      |a2 AS (SELECT vec_id, cen_id AS cell FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY vec_id
-      |      ORDER BY cs DESC, cen_id) AS r FROM a2r)
-      |  WHERE r = 1),
-      |m2 AS (SELECT a2.cell, t.p,
-      |    round(avg(en.d[t.p + 1]), 6) AS m
-      |  FROM a2 JOIN en ON a2.vec_id = en.vec_id,
-      |    range(0, 64) t(p)
-      |  GROUP BY a2.cell, t.p),
-      |c2 AS (SELECT cell AS cen_id, list(m ORDER BY p) AS ce
-      |  FROM m2 GROUP BY cell),
-      |c2n AS (SELECT cen_id, ce,
-      |    sqrt(list_dot_product(ce, ce)) AS cn FROM c2)""".stripMargin
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- IVF-PQ search over TRAINED cells, end-to-end under the
@@ -81,56 +31,8 @@ object Round8 {
             nCentroids = 16, trainIters = 2)
           .orderBy(col("query_id"), col("rank"))
       },
-      Some(s"""WITH $lloyd2Cte,
-              |ca0 AS (SELECT en.vec_id AS id, c2n.cen_id AS cel_id,
-              |    round(list_dot_product(en.d, c2n.ce) /
-              |      (en.nrm * c2n.cn), 6) AS csim
-              |  FROM en, c2n),
-              |ca1 AS (SELECT *, row_number() OVER (PARTITION BY id
-              |    ORDER BY csim DESC, cel_id) AS r FROM ca0),
-              |cellof AS (SELECT id, cel_id AS cell FROM ca1 WHERE r = 1),
-              |qp1 AS (SELECT *, row_number() OVER (PARTITION BY id
-              |    ORDER BY csim DESC, cel_id) AS r FROM ca0
-              |  WHERE id < 12),
-              |probes AS (SELECT id AS query_id, cel_id AS cell
-              |  FROM qp1 WHERE r <= 2),
-              |s AS (SELECT vec_id, t.j, d[t.j*8+1 : t.j*8+8] AS sv
-              |  FROM e, range(0, 8) t(j)),
-              |pcen AS (SELECT j, s.vec_id AS cen_id, sv AS cv FROM s
-              |  WHERE s.vec_id IN (SELECT vec_id FROM e
-              |    ORDER BY vec_id LIMIT 16)),
-              |pa0 AS (SELECT s.vec_id AS id, s.j, cen_id,
-              |    round(list_dot_product(sv, sv)
-              |      - 2 * list_dot_product(sv, cv)
-              |      + list_dot_product(cv, cv), 6) AS dist2
-              |  FROM s JOIN pcen ON s.j = pcen.j),
-              |pa1 AS (SELECT *, row_number() OVER (PARTITION BY id, j
-              |    ORDER BY dist2, cen_id) AS r FROM pa0),
-              |codes AS (SELECT id, j, cen_id AS code FROM pa1
-              |  WHERE r = 1),
-              |qs AS (SELECT vec_id AS query_id, j, sv AS qv FROM s
-              |  WHERE vec_id < 12),
-              |tbl AS (SELECT query_id, qs.j, cen_id AS code,
-              |    CAST(round(list_dot_product(qv, qv)
-              |      - 2 * list_dot_product(qv, cv)
-              |      + list_dot_product(cv, cv), 6)
-              |      AS DECIMAL(20,6)) AS d2
-              |  FROM qs JOIN pcen ON qs.j = pcen.j),
-              |sums AS (SELECT p.query_id, c.id AS neighbor_id,
-              |    CAST(SUM(d2) AS DOUBLE) AS adist
-              |  FROM codes c
-              |  JOIN cellof ON c.id = cellof.id
-              |  JOIN probes p ON p.cell = cellof.cell
-              |  JOIN tbl ON tbl.query_id = p.query_id
-              |    AND tbl.j = c.j AND tbl.code = c.code
-              |  WHERE p.query_id != c.id
-              |  GROUP BY p.query_id, c.id),
-              |r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-              |    ORDER BY adist, neighbor_id) AS rank FROM sums)
-              |SELECT query_id, neighbor_id, adist,
-              |  CAST(rank AS BIGINT) AS rank
-              |FROM r WHERE rank <= 5
-              |ORDER BY query_id, rank""".stripMargin)),
+      Some(s"""WITH $oTrainedCells,
+              |${oIvfPqSearch()}""".stripMargin)),
 
     // ---- persisted Bloom-filter round-trip: build the packed bitmap
     // from the benchmark split, WRITE the one-row artifact (bitmap +
@@ -216,21 +118,7 @@ object Round8 {
         Classifier.hashedLinearScore(t("documents")(s, dir),
             "text", "doc_id", seed = "cls", buckets = 1 << 18)
           .orderBy(col("doc_id")),
-      Some("""WITH w AS (SELECT doc_id,
-             |    list_filter(string_split_regex(lower(text), '\s+'),
-             |      x -> len(x) > 0) AS ws FROM documents),
-             |f AS (SELECT doc_id, list_concat(ws,
-             |    list_transform(generate_series(1, len(ws) - 1),
-             |      i -> ws[i] || ' ' || ws[i+1])) AS feats FROM w),
-             |e AS (SELECT doc_id, unnest(feats) AS feat FROM f),
-             |b AS (SELECT doc_id,
-             |    CAST(concat('0x', substr(md5('cls|' || feat), 1, 15))
-             |      AS BIGINT) % 262144 AS bucket FROM e),
-             |s AS (SELECT doc_id, COUNT(*) AS n_feats,
-             |    SUM(CAST(concat('0x',
-             |        substr(md5('w|cls|' || CAST(bucket AS VARCHAR)),
-             |          1, 15)) AS BIGINT) % 2001 - 1000) AS w_milli
-             |  FROM b GROUP BY doc_id)
+      Some(s"""WITH $oHashedWeights
              |SELECT d.doc_id,
              |  CAST(coalesce(s.n_feats, 0) AS BIGINT) AS n_feats,
              |  CAST(coalesce(s.w_milli, 0) AS BIGINT) AS w_milli,

@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import graft.operators.{Anomaly, Cardinality, Curation, Dedup, Freq, Funnel, Graph, Quantiles, Retrieval, TextOps}
 import org.apache.spark.sql.functions._
 
@@ -14,8 +13,6 @@ import org.apache.spark.sql.functions._
   * analysis.
   */
 object Round9b {
-  private def t(name: String): QueryFn = (s, dir) => Tables.load(s, dir, name)
-
   /** The catalog's fixed BM25 query set. 'planner' appears in no
     * document (a zero-posting term must contribute nothing — the oracle
     * proves it), the others are corpus vocabulary.
@@ -24,9 +21,6 @@ object Round9b {
     1 -> "hash join planner",
     2 -> "window merge batch stream",
     3 -> "vector scan")
-
-  private val bm25Values: String = bm25Queries
-    .map { case (qid, txt) => s"($qid, '$txt')" }.mkString(", ")
 
   /** Shared BM25 posting frame per (session, dataset) — the q105/q129
     * artifact-registration discipline. q115 is the unconditional,
@@ -97,15 +91,8 @@ object Round9b {
       (s, dir) => Retrieval.bm25TopK(t("documents")(s, dir),
         "doc_id", "text", bm25Queries, k = 10,
         tf = Some(buildTf(s, dir))),
-      Some(s"""WITH ${Retrieval.bm25OracleCtes(bm25Values, 1.2, 0.75)},
-              |r AS (SELECT query_id, doc_id, score,
-              |    ROW_NUMBER() OVER (PARTITION BY query_id
-              |      ORDER BY score DESC, doc_id) AS rnk
-              |  FROM sc)
-              |SELECT CAST(query_id AS BIGINT) AS query_id, doc_id,
-              |  score, CAST(rnk AS BIGINT) AS rank
-              |FROM r WHERE rnk <= 10
-              |ORDER BY query_id, rank""".stripMargin)),
+      Some(oBm25Top10(bm25Queries, cols = "CAST(query_id AS BIGINT) AS" +
+        " query_id, doc_id,\n  score, CAST(rnk AS BIGINT) AS rank"))),
 
     // ---- count-min sketch frequency estimates over the corpus token
     // stream: the sketch is 4×32 counters built by one aggregation
@@ -378,20 +365,7 @@ object Round9b {
       (s, dir) => Funnel.funnelCounts(t("events")(s, dir),
         "user_id", "event_type", "ts",
         Seq("view", "click", "purchase")),
-      Some("""WITH ev AS (SELECT user_id, event_type,
-             |    CAST(ts AS TIMESTAMP) AS ts FROM events),
-             |s1 AS (SELECT user_id, MIN(ts) AS t1 FROM ev
-             |  WHERE event_type = 'view' GROUP BY 1),
-             |s2 AS (SELECT s1.user_id, s1.t1,
-             |    MIN(CASE WHEN e.ts > s1.t1 THEN e.ts END) AS t2
-             |  FROM s1 LEFT JOIN ev e ON e.user_id = s1.user_id
-             |    AND e.event_type = 'click'
-             |  GROUP BY 1, 2),
-             |s3 AS (SELECT s2.user_id, s2.t1, s2.t2,
-             |    MIN(CASE WHEN e.ts > s2.t2 THEN e.ts END) AS t3
-             |  FROM s2 LEFT JOIN ev e ON e.user_id = s2.user_id
-             |    AND e.event_type = 'purchase'
-             |  GROUP BY 1, 2, 3)
+      Some(s"""WITH $oFunnelTimes
              |SELECT stage, stage_type, n_entities FROM (
              |  SELECT CAST(1 AS BIGINT) AS stage, 'view' AS stage_type,
              |    COUNT(t1) AS n_entities FROM s3

@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import graft.operators.{Bpe, Funnel, Quantiles, Series, Skyline}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -17,7 +16,26 @@ import org.apache.spark.sql.functions._
   * iteration's choice.
   */
 object Round9c {
-  private def t(name: String): QueryFn = (s, dir) => Tables.load(s, dir, name)
+  /** Oracle CTE of the exact-moment rows: the decimal moments
+    * `m(n, sx, sy, sxy, sxx, syy)` of (l_quantity, l_extendedprice). */
+  private val oQtyPriceMoments: String =
+    """m AS (SELECT COUNT(*) AS n,
+      |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)))
+      |      AS DOUBLE) AS sx,
+      |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)))
+      |      AS DOUBLE) AS sy,
+      |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)) *
+      |      CAST(l_extendedprice AS DECIMAL(18,2)))
+      |      AS DOUBLE) AS sxy,
+      |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)) *
+      |      CAST(l_quantity AS DECIMAL(18,2)))
+      |      AS DOUBLE) AS sxx,
+      |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
+      |      CAST(l_extendedprice AS DECIMAL(18,2)))
+      |      AS DOUBLE) AS syy
+      |  FROM lineitem
+      |  WHERE l_quantity IS NOT NULL
+      |    AND l_extendedprice IS NOT NULL)""".stripMargin
 
   /** Learned merges per catalog config (k=3 over documents.text). Like
     * the q105 pair-set artifact: q129 is the unconditional, timed,
@@ -185,15 +203,7 @@ object Round9c {
           "event_type", "ts")
         .withColumnRenamed("k", "event_type")
         .orderBy(col("event_type"), col("day")),
-      Some("""WITH e AS (SELECT event_type, CAST(ts AS DATE) AS day
-             |  FROM events),
-             |c AS (SELECT event_type, day, COUNT(*) AS n FROM e
-             |  GROUP BY 1, 2),
-             |sp AS (SELECT event_type, MIN(day) AS d0, MAX(day) AS d1
-             |  FROM e GROUP BY 1),
-             |cal AS (SELECT event_type,
-             |    CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY))
-             |      AS DATE) AS day FROM sp),
+      Some(s"""WITH $oDailyCalendar,
              |f AS (SELECT cal.event_type, cal.day,
              |    COALESCE(c.n, 0) AS n_events
              |  FROM cal LEFT JOIN c ON cal.event_type = c.event_type
@@ -230,12 +240,7 @@ object Round9c {
           CorpusOps.sharedJaccardPairs(s, dir), "da", "db")
         .withColumnRenamed("node", "doc_id")
         .orderBy(col("doc_id")),
-      Some(s"""WITH ${CorpusOps.oShinglesSql},
-              |hs AS (SELECT doc_id, ${CorpusOps.oH60("s")} AS h FROM sh),
-              |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-              |p AS (SELECT a.doc_id da, b.doc_id db, COUNT(*) AS inter
-              |  FROM hs a JOIN hs b ON a.h = b.h AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
+      Some(s"""WITH $oShinglePairs,
               |pairs AS (SELECT da, db FROM p
               |  JOIN sz x ON da = x.doc_id JOIN sz y ON db = y.doc_id
               |  WHERE inter / (x.n + y.n - inter) >= 0.6),
@@ -255,19 +260,7 @@ object Round9c {
           t("events")(s, dir), "event_type", "ts", windowDays = 7)
         .withColumnRenamed("k", "event_type")
         .orderBy(col("event_type"), col("day")),
-      Some("""WITH e AS (SELECT event_type, CAST(ts AS DATE) AS day
-             |  FROM events),
-             |c AS (SELECT event_type, day, COUNT(*) AS n FROM e
-             |  GROUP BY 1, 2),
-             |sp AS (SELECT event_type, MIN(day) AS d0, MAX(day) AS d1
-             |  FROM e GROUP BY 1),
-             |cal AS (SELECT event_type,
-             |    CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY))
-             |      AS DATE) AS day FROM sp),
-             |f AS (SELECT cal.event_type, cal.day,
-             |    CAST(COALESCE(c.n, 0) AS BIGINT) AS n_events
-             |  FROM cal LEFT JOIN c ON cal.event_type = c.event_type
-             |    AND cal.day = c.day),
+      Some(s"""WITH $oDailyFilled,
              |m AS (SELECT event_type, day, n_events,
              |    CAST(SUM(n_events) OVER w AS BIGINT) AS w_sum,
              |    CAST(COUNT(*) OVER w AS BIGINT) AS w_n
@@ -356,20 +349,7 @@ object Round9c {
           "user_id", "event_type", "ts",
           Seq("view", "click", "purchase"))
         .orderBy(col("leg")),
-      Some("""WITH ev AS (SELECT user_id, event_type,
-             |    CAST(ts AS TIMESTAMP) AS ts FROM events),
-             |s1 AS (SELECT user_id, MIN(ts) AS t1 FROM ev
-             |  WHERE event_type = 'view' GROUP BY 1),
-             |s2 AS (SELECT s1.user_id, s1.t1,
-             |    MIN(CASE WHEN e.ts > s1.t1 THEN e.ts END) AS t2
-             |  FROM s1 LEFT JOIN ev e ON e.user_id = s1.user_id
-             |    AND e.event_type = 'click'
-             |  GROUP BY 1, 2),
-             |s3 AS (SELECT s2.user_id, s2.t1, s2.t2,
-             |    MIN(CASE WHEN e.ts > s2.t2 THEN e.ts END) AS t3
-             |  FROM s2 LEFT JOIN ev e ON e.user_id = s2.user_id
-             |    AND e.event_type = 'purchase'
-             |  GROUP BY 1, 2, 3),
+      Some(s"""WITH $oFunnelTimes,
              |legs AS (
              |  SELECT 'view->click' AS leg,
              |    epoch_us(t2) - epoch_us(t1) AS lat_us FROM s3
@@ -565,12 +545,7 @@ object Round9c {
           CorpusOps.sharedJaccardPairs(s, dir), "da", "db")
         .withColumnRenamed("node", "doc_id")
         .orderBy(col("doc_id")),
-      Some(s"""WITH ${CorpusOps.oShinglesSql},
-              |hs AS (SELECT doc_id, ${CorpusOps.oH60("s")} AS h FROM sh),
-              |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-              |p AS (SELECT a.doc_id da, b.doc_id db, COUNT(*) AS inter
-              |  FROM hs a JOIN hs b ON a.h = b.h AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
+      Some(s"""WITH $oShinglePairs,
               |pairs AS (SELECT da, db FROM p
               |  JOIN sz x ON da = x.doc_id JOIN sz y ON db = y.doc_id
               |  WHERE inter / (x.n + y.n - inter) >= 0.6),
@@ -672,19 +647,7 @@ object Round9c {
               col("n_events")),
           Seq("event_type"), "n_events", k = 3)
         .orderBy(col("event_type"), col("day")),
-      Some("""WITH e AS (SELECT event_type, CAST(ts AS DATE) AS day
-             |  FROM events),
-             |c AS (SELECT event_type, day, COUNT(*) AS n FROM e
-             |  GROUP BY 1, 2),
-             |sp AS (SELECT event_type, MIN(day) AS d0, MAX(day) AS d1
-             |  FROM e GROUP BY 1),
-             |cal AS (SELECT event_type,
-             |    CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY))
-             |      AS DATE) AS day FROM sp),
-             |f AS (SELECT cal.event_type, cal.day,
-             |    CAST(COALESCE(c.n, 0) AS BIGINT) AS n_events
-             |  FROM cal LEFT JOIN c ON cal.event_type = c.event_type
-             |    AND cal.day = c.day),
+      Some(s"""WITH $oDailyFilled,
              |m AS (SELECT event_type,
              |    quantile_cont(n_events, 0.5) AS med
              |  FROM f GROUP BY 1),
@@ -728,23 +691,7 @@ object Round9c {
     QueryDef("q151_correlation",
       (s, dir) => graft.operators.Stats.pearson(
         t("lineitem")(s, dir), "l_quantity", "l_extendedprice"),
-      Some("""WITH m AS (SELECT COUNT(*) AS n,
-             |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)))
-             |      AS DOUBLE) AS sx,
-             |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)))
-             |      AS DOUBLE) AS sy,
-             |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)) *
-             |      CAST(l_extendedprice AS DECIMAL(18,2)))
-             |      AS DOUBLE) AS sxy,
-             |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)) *
-             |      CAST(l_quantity AS DECIMAL(18,2)))
-             |      AS DOUBLE) AS sxx,
-             |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
-             |      CAST(l_extendedprice AS DECIMAL(18,2)))
-             |      AS DOUBLE) AS syy
-             |  FROM lineitem
-             |  WHERE l_quantity IS NOT NULL
-             |    AND l_extendedprice IS NOT NULL)
+      Some(s"""WITH $oQtyPriceMoments
              |SELECT n, round((n * sxy - sx * sy) /
              |  sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)), 6)
              |  AS corr
@@ -799,23 +746,7 @@ object Round9c {
     QueryDef("q154_ols",
       (s, dir) => graft.operators.Stats.olsFit(
         t("lineitem")(s, dir), "l_quantity", "l_extendedprice"),
-      Some("""WITH m AS (SELECT COUNT(*) AS n,
-             |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)))
-             |      AS DOUBLE) AS sx,
-             |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)))
-             |      AS DOUBLE) AS sy,
-             |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)) *
-             |      CAST(l_extendedprice AS DECIMAL(18,2)))
-             |      AS DOUBLE) AS sxy,
-             |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)) *
-             |      CAST(l_quantity AS DECIMAL(18,2)))
-             |      AS DOUBLE) AS sxx,
-             |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
-             |      CAST(l_extendedprice AS DECIMAL(18,2)))
-             |      AS DOUBLE) AS syy
-             |  FROM lineitem
-             |  WHERE l_quantity IS NOT NULL
-             |    AND l_extendedprice IS NOT NULL)
+      Some(s"""WITH $oQtyPriceMoments
              |SELECT n,
              |  round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6)
              |    AS slope,
@@ -902,22 +833,7 @@ object Round9c {
           t("documents")(s, dir), "doc_id", "text", n = 3,
           threshold = 0.8)
         .orderBy(col("contained"), col("container")),
-      Some(s"""WITH ${CorpusOps.oShinglesSql},
-              |hs AS (SELECT doc_id, ${CorpusOps.oH60("s")} AS h FROM sh),
-              |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-              |p AS (SELECT a.doc_id da, b.doc_id db, COUNT(*) AS inter
-              |  FROM hs a JOIN hs b ON a.h = b.h AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2)
-              |SELECT CASE WHEN x.n <= y.n THEN da ELSE db END
-              |    AS contained,
-              |  CASE WHEN x.n <= y.n THEN db ELSE da END AS container,
-              |  inter, LEAST(x.n, y.n) AS n_small,
-              |  GREATEST(x.n, y.n) AS n_big,
-              |  inter / LEAST(x.n, y.n) AS containment
-              |FROM p JOIN sz x ON da = x.doc_id
-              |JOIN sz y ON db = y.doc_id
-              |WHERE inter / LEAST(x.n, y.n) >= 0.8
-              |ORDER BY contained, container""".stripMargin)),
+      Some(oContainmentPairs)),
 
     // ---- per-doc novelty rate in ingestion order (diversity decay):
     // fraction of a doc's shingles never seen in any earlier doc —

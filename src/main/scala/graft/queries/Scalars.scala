@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import org.apache.spark.sql.functions._
 
 /** Scalar-function batteries (SURVEY.md §2.5: "string/date/math/array/map/
@@ -15,8 +14,6 @@ import org.apache.spark.sql.functions._
   * json_extract_string) but semantics align on the subset used.
   */
 object Scalars {
-  private def t(name: String): QueryFn = (s, dir) => Tables.load(s, dir, name)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- string battery over part

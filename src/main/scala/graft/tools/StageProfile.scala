@@ -7,7 +7,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   * session bootstrap and warm-up ([[graft.EntryPoint]]) with a stage
   * listener and prints every completed stage's wall time, task count,
   * and shuffle/input volumes, so "where do the seconds go" is a read
-  * instead of a guess.
+  * instead of a guess. Each rep's summary line also counts the jobs
+  * the row submitted (`jobs=`), eager work while building the frame
+  * included.
   *
   * `runMain graft.tools.StageProfile <q1,q2,...> [sfDir] [reps]` —
   * names select as `SPARK_GRAFT_ONLY` does ([[graft.EntryPoint.select]]).
@@ -31,12 +33,12 @@ object StageProfile {
     // SQL stages' own details only show the execution thread pool
     val stageSite =
       new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
       override def onJobStart(
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val site = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short")))
-          .getOrElse("")
+        val site = callSite(e)
+        jobs.incrementAndGet()
         e.stageIds.foreach(sid => stageSite.put(sid, site))
       }
       override def onStageCompleted(
@@ -61,33 +63,20 @@ object StageProfile {
       val fn = all(name)
       (1 to reps).foreach { r =>
         stages.clear()
+        jobs.set(0)
         spark.sparkContext.addSparkListener(listener)
         spark.sparkContext.setJobDescription(s"$name rep$r")
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val dt = (System.nanoTime() - t0) / 1e9
         spark.catalog.clearCache()
-        // drain listener events before reading (the bus is async; the
-        // private waitUntilEmpty is not accessible). A fixed sleep
-        // silently dropped late stage-completed events on loaded
-        // boxes, understating stage-sum vs wall — poll until the
-        // stage count stabilizes instead, with a generous bound
-        // (round-20 hardening, ADVICE).
-        var lastN = -1
-        var settledPolls = 0
-        var waitedMs = 0
-        while (settledPolls < 3 && waitedMs < 5000) {
-          Thread.sleep(100); waitedMs += 100
-          val n = stages.size()
-          if (n == lastN) settledPolls += 1
-          else { settledPolls = 0; lastN = n }
-        }
+        settle(() => stages.size())
         spark.sparkContext.removeSparkListener(listener)
         import scala.jdk.CollectionConverters._
         val ss = stages.asScala.toSeq.sortBy(-_.ms)
         val sumMs = ss.map(_.ms).sum
         println(f"%n[stageprofile] $name rep$r wall=$dt%.3f s  " +
-          f"stage-sum=${sumMs / 1000.0}%.3f s  stages=${ss.size}")
+          f"stage-sum=${sumMs / 1000.0}%.3f s  stages=${ss.size}  jobs=${jobs.get}")
         if (r == reps) ss.take(22).foreach { s =>
           println(f"  stage ${s.id}%4d ${s.ms}%6d ms cpu=${s.cpuMs}%6d ms " +
             f"tasks=${s.tasks}%3d in=${s.inMb}%8.2f MB sr=${s.srMb}%8.2f " +
