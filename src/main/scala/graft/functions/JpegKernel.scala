@@ -1998,14 +1998,6 @@ object Jpeg {
       inputTypes = Seq(BinaryType),
       propagateNull = false, returnNullable = false))
 
-  /** Raw decoded pixel bytes (null for undecodable payloads). */
-  def jpegPixels(payload: Column): Column =
-    ColumnBridge.column(StaticInvoke(
-      JpegDecodeKernel.getClass, BinaryType, "decodePixels",
-      Seq(ColumnBridge.expression(payload)),
-      inputTypes = Seq(BinaryType),
-      propagateNull = false, returnNullable = true))
-
   /** Baseline JFIF JPEG bytes from raw pixels (see
     * [[JpegEncodeKernel.encode]]). */
   def jpegEncode(width: Column, height: Column, channels: Column,

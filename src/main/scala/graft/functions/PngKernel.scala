@@ -381,14 +381,6 @@ object Png {
       inputTypes = Seq(BinaryType),
       propagateNull = false, returnNullable = false))
 
-  /** Raw decoded pixel bytes (null for undecodable payloads). */
-  def pngPixels(payload: Column): Column =
-    ColumnBridge.column(StaticInvoke(
-      PngDecodeKernel.getClass, BinaryType, "decodePixels",
-      Seq(ColumnBridge.expression(payload)),
-      inputTypes = Seq(BinaryType),
-      propagateNull = false, returnNullable = true))
-
   /** 60-bit pixel dHash (null for undecodable payloads). */
   def pngDhash60(payload: Column): Column =
     ColumnBridge.column(StaticInvoke(

@@ -502,8 +502,8 @@ object Dedup {
     * mirrors [[Retrieval.writeTfIndex]]: `path/postings` holds the
     * distinct `(doc_id, s)` hashed-shingle rows PARTITIONED by
     * `sbucket = pmod(s, shingleBuckets)`, `path/docs` the per-doc
-    * distinct-shingle counts `(doc_id, n)`, `path/meta` one row of
-    * `(n_buckets, shingle_n)`.
+    * distinct-shingle counts `(doc_id, n)`; the build's manifest commit
+    * carries `(n_buckets, shingle_n)`.
     *
     * Per-document FACTS only: a document's shingle set and size never
     * change when the corpus grows, so [[shingleFamily]]'s `append`
@@ -534,12 +534,8 @@ object Dedup {
     // query overhead at sf0.01 ×32)
     // the two fact trees are independent jobs off one checkpointed
     // shingle frame — overlap them (guide §2.6; IndexLayout
-    // .inParallel). The one-row META write lands LAST and outside the
-    // group: the initial build has no reserve/publish protection, so
-    // meta doubles as the build-complete marker — written
-    // concurrently, a crash mid-build could leave a readable meta
-    // beside partial gen-0 facts (and metaRow would cache the orphan);
-    // serializing a one-row job costs nothing (round-20 hardening).
+    // .inParallel); the manifest commit after both is the
+    // build-complete marker
     graft.sink.IndexLayout.inParallel(
       () => graft.sink.IndexLayout.writeFacts(
         sh.withColumn("sbucket",
@@ -548,10 +544,8 @@ object Dedup {
       () => graft.sink.IndexLayout.writeFlatFacts(
         sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n")),
         path, "docs"))
-    docs.sparkSession.range(1)
-      .select(lit(shingleBuckets).as("n_buckets"),
-        lit(n).as("shingle_n"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    graft.sink.IndexLayout.commitBuild(docs.sparkSession, path,
+      "n_buckets" -> shingleBuckets, "shingle_n" -> n)
   }
 
   /** The shingle family of [[graft.sink.IndexFamily]] — append,
@@ -574,10 +568,9 @@ object Dedup {
   private def appendShingleFacts(path: String,
       newDocs: DataFrame, idCol: String, textCol: String,
       gen: Long): Unit = {
-    val spark = newDocs.sparkSession
-    val meta = graft.sink.IndexLayout.metaRow(spark, path)
-    val (nBuckets, n) =
-      (meta.getAs[Int]("n_buckets"), meta.getAs[Int]("shingle_n"))
+    val params = graft.sink.IndexManifest.latest(newDocs.sparkSession,
+      path).params
+    val (nBuckets, n) = (params("n_buckets"), params("shingle_n"))
     val sh = hashedShingleSet(newDocs.select(col(idCol), col(textCol)),
         idCol, textCol, n, cache = false)
       .withColumnRenamed("h", "s")
@@ -628,9 +621,8 @@ object Dedup {
     // facts and drops their stale generations. One manifest snapshot
     // (caller-pinned or latest) resolves postings + tombstones +
     // visibility watermark together; visibleFacts keeps only
-    // PUBLISHED generations (reader-atomic mutations) and defaults
-    // gen to 0 on pre-generation-era artifacts.
-    val man = pinned.orElse(graft.sink.IndexManifest.read(spark, path))
+    // PUBLISHED generations (reader-atomic mutations).
+    val man = pinned.getOrElse(graft.sink.IndexManifest.latest(spark, path))
     // NOTE (optimization rounds 19/20): this live posting frame
     // feeds THREE evaluations (rarest-first df aggregation, its
     // re-join, the exact-verify array build). A blanket
@@ -711,16 +703,6 @@ object Dedup {
       graft.functions.SketchAggs.minhash(col("h"), minhashConstants(k))
         .as("sig"))
   }
-
-  /** MinHash signatures as columns m0..m{k−1} (column-per-hash view of
-    * [[minhashSignatureArray]]).
-    */
-  def minhashSignatures(
-      df: DataFrame, idCol: String, textCol: String,
-      n: Int, k: Int, cache: Boolean = true): DataFrame =
-    minhashSignatureArray(df, idCol, textCol, n, k, cache)
-      .select(col("doc_id") +:
-        (0 until k).map(i => element_at(col("sig"), i + 1).as(s"m$i")): _*)
 
   /** MinHash LSH candidate pairs: documents sharing ≥1 of `bands` bands
     * (r = k/bands rows per band), with the signature-estimated similarity
@@ -921,8 +903,8 @@ object Dedup {
     * ingest is a pure parquet append and the expensive per-character
     * md5 winnow kernel runs over the INCREMENT only. Layout mirrors
     * the shingle index: `path/postings` `(doc_id, h)` partitioned by
-    * `fbucket = pmod(h, fpBuckets)`, `path/meta` one row of
-    * `(n_buckets, k, w)`.
+    * `fbucket = pmod(h, fpBuckets)`; the build's manifest commit
+    * carries `(n_buckets, k, w)`.
     */
   def writeFingerprintIndex(docs: DataFrame, path: String,
       k: Int = 25, w: Int = 10, fpBuckets: Int = 64,
@@ -934,14 +916,8 @@ object Dedup {
     graft.sink.IndexLayout.writeFacts(
       fp.withColumn("fbucket", pmod(col("h"), lit(fpBuckets.toLong))),
       path, "postings", "fbucket")
-    // one-row META last — the build-complete marker (the initial
-    // build has no reserve/publish protection; a crash mid-build must
-    // not leave a readable meta beside partial gen-0 facts — round-20
-    // hardening; the former overlap saved nothing on a one-row job)
-    docs.sparkSession.range(1)
-      .select(lit(fpBuckets).as("n_buckets"), lit(k).as("k"),
-        lit(w).as("w"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    graft.sink.IndexLayout.commitBuild(docs.sparkSession, path,
+      "n_buckets" -> fpBuckets, "k" -> k, "w" -> w)
   }
 
   /** The fingerprint family of [[graft.sink.IndexFamily]] — the
@@ -958,13 +934,13 @@ object Dedup {
 
   private def appendFingerprintFacts(path: String, newDocs: DataFrame,
       idCol: String, textCol: String, gen: Long): Unit = {
-    val spark = newDocs.sparkSession
-    val meta = graft.sink.IndexLayout.metaRow(spark, path)
+    val params = graft.sink.IndexManifest.latest(newDocs.sparkSession,
+      path).params
     graft.sink.IndexLayout.appendFacts(
       winnowedFingerprints(newDocs.select(col(idCol), col(textCol)),
-          idCol, textCol, meta.getAs[Int]("k"), meta.getAs[Int]("w"))
+          idCol, textCol, params("k"), params("w"))
         .withColumn("fbucket",
-          pmod(col("h"), lit(meta.getAs[Int]("n_buckets").toLong))),
+          pmod(col("h"), lit(params("n_buckets").toLong))),
       path, "postings", "fbucket", gen)
   }
 
@@ -989,7 +965,7 @@ object Dedup {
       pinned: Option[graft.sink.IndexManifest] = None): DataFrame = {
     val inc = incrementIds.select(col(incrementIds.columns.head)
       .cast("long").as("doc_id"))
-    val man = pinned.orElse(graft.sink.IndexManifest.read(spark, path))
+    val man = pinned.getOrElse(graft.sink.IndexManifest.latest(spark, path))
     val fp1 = graft.sink.IndexLayout.applyTombstones(
         graft.sink.IndexLayout.visibleFacts(spark.read.parquet(
             graft.sink.IndexLayout.dir(path, man, "postings")), man)

@@ -372,8 +372,8 @@ object Retrieval {
 
   /** Persist an INCREMENTAL-friendly TF inverted index: `(word,
     * doc_id, tf)` postings partitioned by word bucket plus a
-    * `path/docs` length table `(doc_id, dl)` and a one-row
-    * `path/meta` carrying the bucket count. Unlike [[writeBm25Index]]
+    * `path/docs` length table `(doc_id, dl)`; the build's manifest
+    * commit carries the bucket count. Unlike [[writeBm25Index]]
     * nothing global is baked into the rows — TF and document length
     * are per-document FACTS that never change when the corpus grows,
     * which is what makes [[tfFamily]]'s `append` a pure parquet
@@ -393,12 +393,8 @@ object Retrieval {
     val tfF = termFrequencies(
       docs.select(col(idCol), col(textCol)), idCol, textCol)
     // the two fact trees are independent jobs off one checkpointed tf
-    // frame — overlap them (guide §2.6; IndexLayout.inParallel). The
-    // one-row META write lands LAST and outside the group: the
-    // initial build has no reserve/publish protection, so meta
-    // doubles as the build-complete marker — a crash mid-build must
-    // not leave a readable meta beside partial gen-0 facts
-    // (round-20 hardening; serializing a one-row job costs nothing).
+    // frame — overlap them (guide §2.6; IndexLayout.inParallel); the
+    // manifest commit after both is the build-complete marker
     graft.sink.IndexLayout.inParallel(
       () => graft.sink.IndexLayout.writeFacts(
         tfF.withColumn("wbucket",
@@ -407,9 +403,8 @@ object Retrieval {
       () => graft.sink.IndexLayout.writeFlatFacts(
         tfF.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")),
         path, "docs"))
-    docs.sparkSession.range(1)
-      .select(lit(wordBuckets).as("n_buckets"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    graft.sink.IndexLayout.commitBuild(docs.sparkSession, path,
+      "n_buckets" -> wordBuckets)
   }
 
   /** The TF family of [[graft.sink.IndexFamily]] — append, upsert,
@@ -431,9 +426,8 @@ object Retrieval {
 
   private def appendTfFacts(path: String, newDocs: DataFrame,
       idCol: String, textCol: String, gen: Long): Unit = {
-    val spark = newDocs.sparkSession
-    val nBuckets = graft.sink.IndexLayout.metaRow(spark, path)
-      .getAs[Int]("n_buckets")
+    val nBuckets = graft.sink.IndexManifest.latest(newDocs.sparkSession,
+      path).params("n_buckets")
     val tfF = termFrequencies(
       newDocs.select(col(idCol), col(textCol)), idCol, textCol)
     graft.sink.IndexLayout.inParallel(
@@ -474,10 +468,9 @@ object Retrieval {
     // ONE manifest read, every subtree resolved from the same snapshot
     // — a concurrent purge/compaction commit can never hand this query
     // a mixed pre/post view ([[graft.sink.IndexManifest]])
-    val man = pinned.orElse(graft.sink.IndexManifest.read(spark, path))
+    val man = pinned.getOrElse(graft.sink.IndexManifest.latest(spark, path))
     def sub(l: String) = graft.sink.IndexLayout.dir(path, man, l)
-    val nBuckets = graft.sink.IndexLayout.metaRow(spark, path)
-      .getAs[Int]("n_buckets")
+    val nBuckets = man.params("n_buckets")
     val qt = queryTerms(spark, queries)
     val words = queries.flatMap(_._2.toLowerCase.split("\\s+"))
       .filter(_.nonEmpty).distinct

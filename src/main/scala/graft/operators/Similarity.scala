@@ -1334,7 +1334,9 @@ object Similarity {
     * build-once/search-many deployment shape: `build` writes them as
     * parquet (one subdirectory each), a search job [[IvfPqIndex.read]]s
     * them back and runs [[ivfPqSearch]] without touching the corpus
-    * embeddings at all. Sizes: cells = nCells rows, codebook =
+    * embeddings at all. `dims` and `m` are the geometry the codes were
+    * encoded with; `write` records them in the build's manifest
+    * commit. Sizes: cells = nCells rows, codebook =
     * m·nCentroids rows (both broadcast at search time), codes = one
     * (id, j, code, cell) row per (vector, subspace) — the only
     * corpus-sized artifact, m·log₂(nCentroids) bits of payload per
@@ -1343,7 +1345,7 @@ object Similarity {
     * doubles round-trip parquet exactly).
     */
   final case class IvfPqIndex(cells: DataFrame, codebook: DataFrame,
-      codes: DataFrame) {
+      codes: DataFrame, dims: Int, m: Int) {
     def write(dir: String): Unit = {
       // a rebuild must not inherit a previous incarnation's
       // tombstones, counters, versioned-dir pointers — or its drift
@@ -1358,6 +1360,8 @@ object Similarity {
       // appends/upserts stamp later generations) — in-memory search
       // never reads it, `read` strips it after the kill floor
       graft.sink.IndexLayout.writeFlatFacts(codes, dir, "codes")
+      graft.sink.IndexLayout.commitBuild(cells.sparkSession, dir,
+        "dims" -> dims, "m" -> m)
     }
 
     /** Add new vectors WITHOUT rebuilding — FAISS `add()` semantics,
@@ -1371,8 +1375,7 @@ object Similarity {
       * touched. (Quantization error drifts as the distribution moves —
       * re-train/rebuild on your retraining cadence, not per ingest.)
       */
-    def append(newVecs: DataFrame, dims: Int, m: Int,
-        idCol: String = "vec_id",
+    def append(newVecs: DataFrame, idCol: String = "vec_id",
         embCol: String = "embedding"): IvfPqIndex =
       copy(codes = codes.unionByName(
         ivfPqCodes(cells, codebook, newVecs, dims, m, idCol, embCol)))
@@ -1392,9 +1395,8 @@ object Similarity {
       // one manifest snapshot (caller-pinned or latest) resolves
       // every artifact — a concurrent purge/compaction/retrain commit
       // can never hand this reader a mixed pre/post view; visibleFacts
-      // keeps only PUBLISHED code generations (reader-atomic
-      // mutations) and defaults gen to 0 on pre-generation-era streams
-      val man = pinned.orElse(graft.sink.IndexManifest.read(spark, dir))
+      // keeps only PUBLISHED code generations (reader-atomic mutations)
+      val man = pinned.getOrElse(graft.sink.IndexManifest.latest(spark, dir))
       def sub(l: String) = graft.sink.IndexLayout.dir(dir, man, l)
       val codes = graft.sink.IndexLayout.applyTombstones(
           graft.sink.IndexLayout.visibleFacts(
@@ -1405,7 +1407,7 @@ object Similarity {
       IvfPqIndex(
         spark.read.parquet(sub("cells")),
         spark.read.parquet(sub("codebook")),
-        codes)
+        codes, man.params("dims"), man.params("m"))
     }
   }
 
@@ -1423,24 +1425,24 @@ object Similarity {
     * are FAISS `remove_ids`: [[IvfPqIndex.read]] filters the `id`
     * tombstones out of the code stream, cells and codebook stay
     * frozen. There is no postings tree: purge, compaction and CDC
-    * work on the flat `codes` table. */
-  def ivfPqFamily(dims: Int, m: Int, idCol: String = "vec_id",
+    * work on the flat `codes` table. The geometry (`dims`, `m`) comes
+    * from the index's manifest. */
+  def ivfPqFamily(idCol: String = "vec_id",
       embCol: String = "embedding"): graft.sink.IndexFamily =
     graft.sink.IndexFamily("ivfpq", key = "id", idCol = idCol,
       bucketCol = None, flats = Seq("codes"), cdcTable = "codes",
       appendFacts = (path, vecs, g) =>
-        appendIvfPqCodes(path, vecs, dims, m, idCol, embCol, g))
+        appendIvfPqCodes(path, vecs, idCol, embCol, g))
 
   private def appendIvfPqCodes(path: String, newVecs: DataFrame,
-      dims: Int, m: Int, idCol: String, embCol: String,
-      gen: Long): Unit = {
+      idCol: String, embCol: String, gen: Long): Unit = {
     val spark = newVecs.sparkSession
-    val man = graft.sink.IndexManifest.read(spark, path)
+    val man = graft.sink.IndexManifest.latest(spark, path)
     def sub(l: String) = graft.sink.IndexLayout.dir(path, man, l)
     graft.sink.IndexLayout.appendFlatFacts(
       ivfPqCodes(spark.read.parquet(sub("cells")),
-        spark.read.parquet(sub("codebook")), newVecs, dims, m, idCol,
-        embCol),
+        spark.read.parquet(sub("codebook")), newVecs,
+        man.params("dims"), man.params("m"), idCol, embCol),
       path, "codes", gen)
   }
 
@@ -1524,7 +1526,7 @@ object Similarity {
       path: String, appended: DataFrame, dims: Int, m: Int,
       idCol: String = "vec_id", embCol: String = "embedding")
       : DataFrame = {
-    val man = graft.sink.IndexManifest.read(spark, path)
+    val man = graft.sink.IndexManifest.latest(spark, path)
     def sub(l: String) = graft.sink.IndexLayout.dir(path, man, l)
     val base = spark.read.parquet(sub("drift_meta"))
       .select(col("n_vecs").as("n_train"),
@@ -1568,7 +1570,7 @@ object Similarity {
       embCol: String = "embedding", trainIters: Int = 0): Unit = {
     val idx = ivfPqIndex(corpusVecs, nCells, dims, m, nCentroids,
       idCol, embCol, trainIters)
-    val g = graft.sink.IndexManifest.readOrInit(spark, path).gen + 1
+    val g = graft.sink.IndexManifest.latest(spark, path).gen + 1
     val drift = pqDistortionStats(corpusVecs, idx.codebook, dims, m,
       idCol, embCol)
     graft.sink.IndexLayout.commitVersions(spark, path, Seq(
@@ -1584,8 +1586,10 @@ object Similarity {
       // the re-encoded corpus is stamped gen = g: reserve AND publish
       // it in the same pointer commit, so the new geometry serves the
       // instant the snapshot flips — never a window where the codes
-      // exist but the watermark hides them
-      mm => mm.copy(gen = g, visibleGen = math.max(mm.visibleGen, g))
+      // exist but the watermark hides them; the new geometry's dims
+      // and m land in the same commit
+      mm => mm.copy(gen = g, visibleGen = math.max(mm.visibleGen, g),
+          params = mm.params ++ Map("dims" -> dims, "m" -> m))
         .withDir("tombstones", s"tombstones-v${mm.seq + 1}"))
   }
 
@@ -1601,7 +1605,8 @@ object Similarity {
     val codebook = pqCentroids(candidates, dims, m, nCentroids,
       idCol, embCol)
     IvfPqIndex(cells, codebook,
-      ivfPqCodes(cells, codebook, candidates, dims, m, idCol, embCol))
+      ivfPqCodes(cells, codebook, candidates, dims, m, idCol, embCol),
+      dims, m)
   }
 
   /** The IVF-PQ code stream of `vecs` under a given geometry: one

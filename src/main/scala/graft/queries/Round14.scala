@@ -510,7 +510,7 @@ object Round14 {
         graft.operators.Similarity.ivfPqIndex(emb, nCells = 8,
             dims = 64, m = 8, nCentroids = 16)
           .write(outDir.getAbsolutePath)
-        graft.operators.Similarity.ivfPqFamily(dims = 64, m = 8).delete(
+        graft.operators.Similarity.ivfPqFamily().delete(
           outDir.getAbsolutePath,
           emb.where(col("vec_id") % 4 === 1).select(col("vec_id")))
         val index = graft.operators.Similarity.IvfPqIndex.read(
@@ -539,7 +539,7 @@ object Round14 {
         val frozen = graft.operators.Similarity.ivfPqIndex(
             emb.where(col("vec_id") % 2 === 0), nCells = 8, dims = 64,
             m = 8, nCentroids = 16)
-          .append(emb.where(col("vec_id") % 2 === 1), dims = 64, m = 8)
+          .append(emb.where(col("vec_id") % 2 === 1))
         val rebuilt = graft.operators.Similarity.ivfPqIndex(
           emb, nCells = 8, dims = 64, m = 8, nCentroids = 16)
         val queries = emb.filter(col("vec_id") < 12)

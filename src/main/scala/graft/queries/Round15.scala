@@ -166,8 +166,8 @@ object Round15 {
     // [[graft.sink.IndexFamily.ingestBatch]] — the REAL sink body,
     // including its exactly-once guard — and batch 0 is REDELIVERED
     // (an at-least-once transport's failure replay, the q272
-    // discipline). The guard skips it via the committed-epoch marker
-    // in `path/ingest_meta`; a double-ingest would shift tf/df/dl and
+    // discipline). The guard skips it via the committed epoch in the
+    // index manifest; a double-ingest would shift tf/df/dl and
     // hash-fail, so the green row gates the guard, not just the
     // append. Oracle = exhaustive BM25 over the full corpus
     // (EventStreamsSpec pins the same parity through a genuine
@@ -300,7 +300,7 @@ object Round15 {
           when(col("vec_id") % 5 === 0,
             transform(col("embedding"), x => -x))
             .otherwise(col("embedding")))
-        graft.operators.Similarity.ivfPqFamily(dims = 64, m = 8).upsert(
+        graft.operators.Similarity.ivfPqFamily().upsert(
           outDir.getAbsolutePath, mutated.where(col("vec_id") % 5 === 0))
         graft.operators.Similarity.ivfPqSearch(
             mutated.filter(col("vec_id") < 12),

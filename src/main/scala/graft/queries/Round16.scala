@@ -65,7 +65,7 @@ object Round16 {
         require(ok0, "epoch 0 must ingest")
         // epoch 1 first delivery crashes after its facts append
         val b1 = mutated.where(col("doc_id") % 3 === 2)
-        val m0 = graft.sink.IndexManifest.readOrInit(s, p)
+        val m0 = graft.sink.IndexManifest.latest(s, p)
         graft.sink.IndexManifest.commit(s, p,
           m0.copy(pendingEpoch = 1L))
         val g = graft.sink.IndexLayout.reserveGen(s, p)
@@ -207,7 +207,7 @@ object Round16 {
           nCentroids = 16).write(p)
         Similarity.writeIvfPqDriftBaseline(s, p, even, dims = 64,
           m = 8)
-        val ivf = Similarity.ivfPqFamily(dims = 64, m = 8)
+        val ivf = Similarity.ivfPqFamily()
         ivf.append(p, odd)
         ivf.delete(p, odd.where(col("vec_id") === 3).select(col("vec_id")))
         // the trigger: the appended half's distortion under yesterday's
@@ -268,7 +268,7 @@ object Round16 {
         // epoch 1 first delivery CRASHES after its facts append —
         // simulate by running ingestBatch's exact prefix
         val b1 = mutated.where(col("doc_id") % 3 === 2)
-        val m0 = graft.sink.IndexManifest.readOrInit(s, p)
+        val m0 = graft.sink.IndexManifest.latest(s, p)
         graft.sink.IndexManifest.commit(s, p,
           m0.copy(pendingEpoch = 1L))
         val g = graft.sink.IndexLayout.reserveGen(s, p)

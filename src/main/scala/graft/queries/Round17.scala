@@ -32,7 +32,7 @@ object Round17 {
         val docs = t("documents")(s, dir)
         graft.operators.Retrieval.writeTfIndex(docs, p,
           wordBuckets = 16)
-        val snap = graft.sink.IndexManifest.pin(s, p)
+        val snap = graft.sink.IndexManifest.latest(s, p)
         // the crawler moves on: re-crawl, takedown, physical purge
         val recrawl = docs.where(col("doc_id") % 5 === 0)
           .withColumn("text",
@@ -77,13 +77,13 @@ object Round17 {
             transform(col("embedding"), x => -x))
             .otherwise(col("embedding")))
         val b0 = mutated.where(col("vec_id") % 10 === 0)
-        val ivf = graft.operators.Similarity.ivfPqFamily(dims = 64, m = 8)
+        val ivf = graft.operators.Similarity.ivfPqFamily()
         val ok0 = ivf.ingestBatch(p, b0, 0L, upsert = true)
         require(ok0, "epoch 0 must ingest")
         // epoch 1 first delivery crashes after its code append (no
         // tombstones, no publish — the double-serve window)
         val b1 = mutated.where(col("vec_id") % 10 === 5)
-        val m0 = graft.sink.IndexManifest.readOrInit(s, p)
+        val m0 = graft.sink.IndexManifest.latest(s, p)
         graft.sink.IndexManifest.commit(s, p,
           m0.copy(pendingEpoch = 1L))
         val g = graft.sink.IndexLayout.reserveGen(s, p)
@@ -122,7 +122,7 @@ object Round17 {
         val ok0 = fp.ingestBatch(p, b0, 0L)
         require(ok0, "epoch 0 must ingest")
         val b1 = docs.where(col("doc_id") % 8 === 7)
-        val m0 = graft.sink.IndexManifest.readOrInit(s, p)
+        val m0 = graft.sink.IndexManifest.latest(s, p)
         graft.sink.IndexManifest.commit(s, p,
           m0.copy(pendingEpoch = 1L))
         val g = graft.sink.IndexLayout.reserveGen(s, p)

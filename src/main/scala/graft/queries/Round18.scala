@@ -98,7 +98,7 @@ object Round18 {
         val docs = t("documents")(s, dir)
         graft.operators.Retrieval.writeTfIndex(docs, p,
           wordBuckets = 16)
-        val a = graft.sink.IndexManifest.pin(s, p)
+        val a = graft.sink.IndexManifest.latest(s, p)
         val tf = graft.operators.Retrieval.tfFamily()
         tf.upsert(p,
           docs.where(col("doc_id") % 5 === 0)
@@ -106,7 +106,7 @@ object Round18 {
               concat(col("text"), lit(" recrawl revision"))))
         tf.delete(p,
           docs.where(col("doc_id") % 7 === 3).select(col("doc_id")))
-        val b = graft.sink.IndexManifest.pin(s, p)
+        val b = graft.sink.IndexManifest.latest(s, p)
         tf.changesBetween(s, p, a, b)
           .orderBy(col("doc_id"))
       },

@@ -249,7 +249,7 @@ object Round9 {
         val fresh = emb.filter(col("vec_id") % 5 === 0)
         val idx = Similarity.ivfPqIndex(old, nCells = 8, dims = 64,
             m = 8, nCentroids = 16)
-          .append(fresh, dims = 64, m = 8)
+          .append(fresh)
         Similarity.ivfPqSearch(emb.filter(col("vec_id") < 12), idx,
             k = 5, nprobe = 2, dims = 64, m = 8)
           .orderBy(col("query_id"), col("rank"))

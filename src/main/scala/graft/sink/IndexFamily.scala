@@ -15,7 +15,10 @@ import org.apache.spark.sql.functions.col
   * publish generation protocol here and nowhere else. Builds
   * (`writeTfIndex`, `writeShingleIndex`, `writeFingerprintIndex`,
   * `IvfPqIndex.write`, `retrainIvfPqIndex`) and reads stay with their
-  * family.
+  * family; a build's one manifest commit holds the parameters its
+  * family's appends read back. Every mutation rejects a path with no
+  * committed manifest (an unbuilt index or a crashed build) with an
+  * error naming the path ([[IndexManifest.latest]]).
   *
   * @param name        family name the multi-index sink reports
   *                    ([[graft.streaming.EventStreams.ingestFamiliesBatch]])
@@ -31,7 +34,8 @@ import org.apache.spark.sql.functions.col
   *                    `(path, input, g)`. Package-visible as the
   *                    crash-simulation seam — specs and catalog rows
   *                    reserve a generation, append, and stop before
-  *                    the publish.
+  *                    the publish. It reads the build parameters from
+  *                    the latest manifest.
   */
 final case class IndexFamily(name: String, key: String, idCol: String,
     bucketCol: Option[String], flats: Seq[String], cdcTable: String,
@@ -43,10 +47,17 @@ final case class IndexFamily(name: String, key: String, idCol: String,
     * append's replay reserves a higher one and its tombstones can
     * self-heal it; it is PUBLISHED after, so readers never see a
     * partial append. */
-  def append(path: String, input: DataFrame): Unit = {
-    val spark = input.sparkSession
+  def append(path: String, input: DataFrame): Unit =
+    mutate(input.sparkSession, path)(g => appendFacts(path, input, g))
+
+  /** The reserve → write → publish bracket of every mutation, on a
+    * BUILT index only: the check runs before the reserve, so a
+    * rejected mutation commits nothing. */
+  private def mutate(spark: SparkSession, path: String)(
+      write: Long => Unit): Unit = {
+    IndexManifest.latest(spark, path)
     val g = IndexLayout.reserveGen(spark, path)
-    appendFacts(path, input, g)
+    write(g)
     IndexLayout.publishGen(spark, path, g)
   }
 
@@ -60,15 +71,13 @@ final case class IndexFamily(name: String, key: String, idCol: String,
     * publish-last makes it reader-atomic. The tombstone and fact
     * writes land in distinct dirs between the same reserve/publish
     * pair, so they overlap (guide §2.6). */
-  def upsert(path: String, input: DataFrame): Unit = {
-    val spark = input.sparkSession
-    val g = IndexLayout.reserveGen(spark, path)
-    IndexLayout.inParallel(
-      () => IndexLayout.appendTombstones(input.select(col(idCol)), path,
-        key, g),
-      () => appendFacts(path, input, g))
-    IndexLayout.publishGen(spark, path, g)
-  }
+  def upsert(path: String, input: DataFrame): Unit =
+    mutate(input.sparkSession, path) { g =>
+      IndexLayout.inParallel(
+        () => IndexLayout.appendTombstones(input.select(col(idCol)),
+          path, key, g),
+        () => appendFacts(path, input, g))
+    }
 
   /** DELETE the ids in `ids`' first column — the takedown/GDPR
     * operation: `(key, below_gen)` tombstones kill every CURRENT
@@ -76,12 +85,9 @@ final case class IndexFamily(name: String, key: String, idCol: String,
     * Reads filter the killed facts before anything aggregates, so
     * read-time statistics recompute as if they never existed.
     * Physical removal is [[purgeTombstones]]. */
-  def delete(path: String, ids: DataFrame): Unit = {
-    val spark = ids.sparkSession
-    val g = IndexLayout.reserveGen(spark, path)
-    IndexLayout.appendTombstones(ids, path, key, g)
-    IndexLayout.publishGen(spark, path, g)
-  }
+  def delete(path: String, ids: DataFrame): Unit =
+    mutate(ids.sparkSession, path)(
+      g => IndexLayout.appendTombstones(ids, path, key, g))
 
   /** CDC between two PINNED snapshots: `(key, change)` with change ∈
     * {'upsert', 'delete'} ([[IndexLayout.changedKeysBetween]] on
@@ -113,19 +119,18 @@ final case class IndexFamily(name: String, key: String, idCol: String,
     * crashes at each. */
   def purgeTombstones(spark: SparkSession, path: String,
       hook: String => Unit = _ => ()): Unit = {
-    val m0 = IndexManifest.readOrInit(spark, path)
-    val mOpt = Some(m0)
-    IndexLayout.tombstoneFloor(spark, path, key, mOpt).foreach { floor0 =>
+    val m0 = IndexManifest.latest(spark, path)
+    IndexLayout.tombstoneFloor(spark, path, key, m0).foreach { floor0 =>
       val floor = floor0.localCheckpoint()
       // keep exactly the PUBLISHED facts a reader keeps — a crashed
       // unpublished mutation's partial rows are dropped here too (its
       // replay reserves a fresh generation and rewrites them whole)
       def keep(logical: String) = IndexLayout.applyTombstones(
         IndexLayout.visibleFacts(
-          spark.read.parquet(IndexLayout.dir(path, mOpt, logical)), mOpt),
+          spark.read.parquet(IndexLayout.dir(path, m0, logical)), m0),
         Some(floor), key)
       val builds = bucketCol.toSeq.map { bc =>
-        val postings = new Path(IndexLayout.dir(path, mOpt, "postings"))
+        val postings = new Path(IndexLayout.dir(path, m0, "postings"))
         val fs = postings.getFileSystem(spark.sessionState.newHadoopConf())
         require(fs.listStatus(postings)
             .exists(st => st.isDirectory && st.getPath.getName
@@ -143,7 +148,7 @@ final case class IndexFamily(name: String, key: String, idCol: String,
         }
       } ++ flats
         .filter(l => IndexLayout.dirExists(spark,
-          IndexLayout.dir(path, mOpt, l)))
+          IndexLayout.dir(path, m0, l)))
         .map { l =>
           l -> { (st: String) =>
             val remaining = keep(l)
@@ -209,8 +214,8 @@ final case class IndexFamily(name: String, key: String, idCol: String,
     * job, each flat table to ⌈bytes / targetBytes⌉ files, each into a
     * NEW physical version committed by pointer
     * ([[IndexLayout.compactVersioned]]); then the manifest history is
-    * pruned and legacy metadata logs dropped. Row values are
-    * untouched: reads are bit-identical before and after.
+    * pruned. Row values are untouched: reads are bit-identical before
+    * and after.
     * @return (filesBefore, filesAfter) summed over the rewritten
     *         tables. */
   def compact(spark: SparkSession, path: String,
@@ -220,7 +225,7 @@ final case class IndexFamily(name: String, key: String, idCol: String,
         "postings", Some(bc))) ++
       flats.map(l => IndexLayout.compactVersioned(spark, path, l, None,
         targetBytes))
-    IndexLayout.compactMetadata(spark, path)
+    IndexManifest.pruneHistory(spark, path)
     (counts.map(_._1).sum, counts.map(_._2).sum)
   }
 
@@ -256,7 +261,7 @@ final case class IndexFamily(name: String, key: String, idCol: String,
   def ingestBatch(path: String, batch: DataFrame, epochId: Long,
       upsert: Boolean = false): Boolean = {
     val spark = batch.sparkSession
-    val m0 = IndexManifest.readOrInit(spark, path)
+    val m0 = IndexManifest.latest(spark, path)
     if (epochId <= m0.epoch) false
     else {
       val suspectReplay = m0.pendingEpoch == epochId
@@ -279,9 +284,7 @@ object IndexFamily {
 
   /** The index's max committed streaming epoch (−1 when nothing has
     * been ingested) — the same for every family: an [[IndexManifest]]
-    * field, a driver-side FS read (legacy `path/ingest_meta`
-    * parquet-log fallback for pre-manifest artifacts). */
+    * field, a driver-side FS read. */
   def committedEpoch(spark: SparkSession, path: String): Long =
-    IndexManifest.read(spark, path).map(_.epoch)
-      .getOrElse(IndexManifest.legacyEpoch(spark, path))
+    IndexManifest.latest(spark, path).epoch
 }

@@ -72,10 +72,9 @@ import org.apache.spark.sql.functions._
   *    ([[gcUnreferenced]] with an empty keep set) reclaims the rest
   *    once in-flight readers have drained.
   *
-  * Format note: fact trees written before the generation era carry no
-  * `gen` column; [[withGen]] defaults it to 0 so those artifacts stay
-  * READABLE (they hold only generation-0 facts by definition). Mutating
-  * them is fine too: the first mutation starts at generation 1.
+  * A build ends with ONE manifest commit ([[commitBuild]]) that holds
+  * its parameters; until that commit lands, every reader and mutation
+  * rejects the path ([[IndexManifest.latest]]).
   */
 object IndexLayout {
 
@@ -101,79 +100,35 @@ object IndexLayout {
     ()
   }
 
-  /** The one-row `path/meta` table of an index layout, cached
-    * driver-side by canonical path: meta is immutable for the life of
-    * a layout (written once by the family's write*Index right after
-    * [[freshLayout]], never by mutations), but every micro-batch
-    * append was re-reading it as a one-task Spark job — pure per-batch
-    * overhead at streaming cadence (optimization round 19).
-    * [[freshLayout]] invalidates this JVM's entry; a rebuild by
-    * ANOTHER driver/process (the manifest protocol tolerates racing
-    * mutators) is caught by the fingerprint check below: the cached
-    * row is served only while the meta directory's file listing
-    * (name, length, modTime) is unchanged — one driver-side
-    * listStatus, orders of magnitude cheaper than the Spark job it
-    * replaces, and a foreign rebuild (freshLayout deletes + rewrites
-    * meta) always changes it (round-20 hardening, ADVICE). A listing
-    * failure yields the empty fingerprint, which never validates a
-    * cached row: two failed listings around a foreign rebuild would
-    * otherwise compare equal and serve the stale row. */
-  private[sink] val metaCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (String, org.apache.spark.sql.Row)]()
-
-  /** Cache keys resolve through Hadoop (same resolution the reads and
-    * [[freshLayout]] use): java.io.File canonicalization mapped
-    * `file:/x` and `/x` (or any non-local URI) to DISTINCT keys, so a
-    * freshLayout given one form failed to invalidate a row cached
-    * under the other (round-20 hardening, ADVICE). */
-  private[sink] def canonical(spark: SparkSession, path: String): String =
-    try {
-      val p = new Path(path)
-      p.getFileSystem(spark.sessionState.newHadoopConf())
-        .makeQualified(p).toString
-    } catch { case _: Throwable => path }
-
-  /** Fingerprint of the meta dir's file listing — the layout
-    * incarnation marker the cached row is validated against. */
-  private def metaFingerprint(spark: SparkSession,
-      path: String): String =
-    try {
-      val p = new Path(s"$path/meta")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      fs.listStatus(p).map(st =>
-          s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-        .sorted.mkString("|")
-    } catch { case _: Throwable => "" }
-
-  def metaRow(spark: SparkSession, path: String)
-      : org.apache.spark.sql.Row = {
-    val key = canonical(spark, path)
-    val fp = metaFingerprint(spark, path)
-    metaCache.compute(key, (_, cached) =>
-      if (cached != null && fp.nonEmpty && cached._1 == fp) cached
-      else (fp, spark.read.parquet(s"$path/meta").collect()(0)))._2
-  }
-
   /** Resolve a logical subtree against an already-read manifest
     * snapshot (readers read the manifest ONCE and resolve everything
     * from it — piecemeal resolution could mix two snapshots across a
     * concurrent commit). */
-  def dir(path: String, m: Option[IndexManifest],
-      logical: String): String =
-    s"$path/${m.map(_.dirFor(logical)).getOrElse(logical)}"
+  def dir(path: String, m: IndexManifest, logical: String): String =
+    s"$path/${m.dirFor(logical)}"
 
   /** One-off resolve (fresh manifest read) — for writers and tests. */
   def resolve(spark: SparkSession, path: String,
       logical: String): String =
-    dir(path, IndexManifest.read(spark, path), logical)
+    dir(path, IndexManifest.latest(spark, path), logical)
 
   /** Current generation — manifest field (driver-side read, no job);
-    * legacy parquet-log fallback for pre-manifest layouts; 0 for a
-    * freshly built index. */
+    * 0 for a freshly built index. */
   def currentGen(spark: SparkSession, path: String): Long =
-    IndexManifest.read(spark, path).map(_.gen)
-      .getOrElse(IndexManifest.legacyGen(spark, path))
+    IndexManifest.latest(spark, path).gen
+
+  /** Seal a build: the ONE manifest commit, holding the build's
+    * parameters, that makes the plain layout [[freshLayout]] cleared
+    * and the build wrote readable and mutable. A sealed
+    * create-if-absent file is atomic, so a build that crashes before
+    * this commit leaves a path every reader and mutation rejects,
+    * never partial generation-0 facts that serve. */
+  def commitBuild(spark: SparkSession, path: String,
+      params: (String, Int)*): Unit = {
+    IndexManifest.commit(spark, path,
+      IndexManifest.Fresh.copy(params = params.toMap))
+    ()
+  }
 
   /** RESERVE the next generation: commit `gen = current + 1` to the
     * manifest BEFORE the caller writes any tombstone or fact. A
@@ -205,34 +160,12 @@ object IndexLayout {
     ()
   }
 
-  /** Default a missing `gen` column to 0 — keeps pre-generation-era
-    * fact trees readable (everything they hold IS generation 0). A
-    * MIXED tree (a legacy artifact that later mutations appended
-    * gen-stamped files into) surfaces the legacy rows as NULL gen, so
-    * present columns are null-coalesced to 0 too — otherwise the
-    * visibility watermark would silently drop every pre-migration
-    * fact. */
-  def withGen(df: DataFrame): DataFrame =
-    if (df.columns.contains("gen"))
-      df.withColumn("gen", coalesce(col("gen"), lit(0L)))
-    else df.withColumn("gen", lit(0L))
-
   /** The PUBLISHED slice of a fact table under a caller-held snapshot:
-    * rows at `gen <= visibleGen`. The filter goes on the RAW column —
-    * `IsNull OR <=` is a pushable parquet predicate over a
+    * rows at `gen <= visibleGen` — a pushable parquet predicate over a
     * per-file-constant RLE column, so unpublished files are skipped
-    * from row-group stats (a coalesce-wrapped filter would scan them);
-    * NULL gen = a legacy row in a mixed tree = generation 0, always
-    * published. [[withGen]] then normalizes the value for the
-    * kill-floor join. No manifest (pre-manifest layout) ⇒ everything
-    * is published by definition. */
-  def visibleFacts(df: DataFrame,
-      m: Option[IndexManifest]): DataFrame = m match {
-    case Some(mm) if df.columns.contains("gen") =>
-      withGen(df.filter(col("gen").isNull ||
-        col("gen") <= lit(mm.visibleGen)))
-    case _ => withGen(df)
-  }
+    * from row-group stats. */
+  def visibleFacts(df: DataFrame, m: IndexManifest): DataFrame =
+    df.filter(col("gen") <= lit(m.visibleGen))
 
   /** Append `(keyName, below_gen)` tombstones: kill these keys' facts
     * with `gen < belowGen`. `Long.MaxValue` is deliberately NOT used
@@ -251,35 +184,26 @@ object IndexLayout {
         .parquet(resolve(ids.sparkSession, path, "tombstones"))
   }
 
-  /** Per-key kill floor `(keyName, below_gen)` — None when nothing is
-    * tombstoned. */
-  def tombstoneFloor(spark: SparkSession, path: String,
-      keyName: String): Option[DataFrame] =
-    tombstoneFloor(spark, path, keyName,
-      IndexManifest.read(spark, path))
-
-  /** [[tombstoneFloor]] resolved against a caller-held manifest
-    * snapshot. Deliberately NO broadcast hint: measured (round 16,
+  /** Per-key kill floor `(keyName, below_gen)` under a caller-held
+    * manifest snapshot — None when nothing is tombstoned. Deliberately
+    * NO broadcast hint: measured (round 16,
     * isolated same-JVM alternating A/B at 256k docs) Catalyst's size
     * estimate on the max-aggregated floor already selects
     * BroadcastHashJoin with or without the hint — plans identical,
     * timing deltas inside box noise — and past broadcastable sizes a
     * GDPR-scale purge list needs AQE's stats-based choice anyway. */
   def tombstoneFloor(spark: SparkSession, path: String,
-      keyName: String, m: Option[IndexManifest]): Option[DataFrame] = {
+      keyName: String, m: IndexManifest): Option[DataFrame] = {
     val d = dir(path, m, "tombstones")
     if (!dirExists(spark, d)) None
     else {
       // only PUBLISHED tombstones count (below_gen <= visibleGen) —
       // an in-flight upsert's tombstones must not delete the doc for
       // readers before its facts publish (reader-atomicity's other
-      // half; pre-manifest layouts have no watermark and skip the
-      // filter)
-      val raw = spark.read.parquet(d)
-      val pub = m.map(mm =>
-        raw.filter(col("below_gen") <= lit(mm.visibleGen)))
-        .getOrElse(raw)
-      Some(pub.groupBy(col(keyName))
+      // half)
+      Some(spark.read.parquet(d)
+        .filter(col("below_gen") <= lit(m.visibleGen))
+        .groupBy(col(keyName))
         .agg(max(col("below_gen")).as("below_gen")))
     }
   }
@@ -306,7 +230,7 @@ object IndexLayout {
     * repartitioned ON the bucket column (one file per bucket per write
     * instead of #tasks × #buckets tiny files — the listing-cost lesson
     * of PLANS.md round 14, "ScaleShingleIndex"), overwrite into the
-    * resolved physical dir.
+    * plain dir [[freshLayout]] left.
     * Callers compute the bucket column (each family hashes its own
     * key). */
   def writeFacts(facts: DataFrame, path: String, logical: String,
@@ -314,7 +238,7 @@ object IndexLayout {
     facts.withColumn("gen", lit(0L))
       .repartition(col(bucketCol))
       .write.mode("overwrite").partitionBy(bucketCol)
-      .parquet(resolve(facts.sparkSession, path, logical))
+      .parquet(s"$path/$logical")
 
   /** Append one mutation's facts at `gen` into the resolved bucketed
     * tree — same one-file-per-bucket shape as [[writeFacts]]. */
@@ -329,8 +253,7 @@ object IndexLayout {
   def writeFlatFacts(facts: DataFrame, path: String,
       logical: String): Unit =
     facts.withColumn("gen", lit(0L))
-      .write.mode("overwrite")
-      .parquet(resolve(facts.sparkSession, path, logical))
+      .write.mode("overwrite").parquet(s"$path/$logical")
 
   /** [[appendFacts]] for a flat (unbucketed) side table. */
   def appendFlatFacts(facts: DataFrame, path: String, logical: String,
@@ -341,23 +264,22 @@ object IndexLayout {
 
   /** Reset `path` for a FRESH BUILD: delete the manifest (pointers
     * revert to plain names), every physical dir it referenced, any
-    * plain tombstones, the legacy gen/epoch parquet logs, and — via
+    * plain tombstones, and — via
     * `sideLogicals` — the family's side tables the build itself does
     * not rewrite (e.g. the IVF-PQ drift baseline: a rebuilt index must
     * not serve the previous incarnation's baseline against a new
     * codebook). A rebuild must not inherit a previous incarnation's
     * kill floor, counters, or stale side state. Deletion is by logical
     * NAME: the plain dir and every versioned `<name>-v*` variant, so
-    * pre-manifest leftovers and orphaned staging trees go too. */
+    * orphaned staging trees go too. */
   def freshLayout(spark: SparkSession, path: String,
       sideLogicals: Seq[String] = Nil): Unit = {
-    metaCache.remove(canonical(spark, path)) // rebuilds may change meta
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(root)) {
       val logicals = IndexManifest.readHistory(spark, path)
         .flatMap(_.dirs.keysIterator).toSet ++
-        sideLogicals ++ Seq("tombstones", "gen", "ingest_meta")
+        sideLogicals + "tombstones"
       val versioned = logicals.map { l =>
         l -> s"^${java.util.regex.Pattern.quote(l)}-v\\d+(-[0-9a-f]+)?$$".r
       }.toMap
@@ -383,10 +305,9 @@ object IndexLayout {
     * state. */
   def liveKeyGens(spark: SparkSession, path: String, keyName: String,
       factLogical: String, m: IndexManifest): DataFrame = {
-    val mOpt = Some(m)
     val facts = visibleFacts(
-      spark.read.parquet(dir(path, mOpt, factLogical)), mOpt)
-    applyTombstones(facts, tombstoneFloor(spark, path, keyName, mOpt),
+      spark.read.parquet(dir(path, m, factLogical)), m)
+    applyTombstones(facts, tombstoneFloor(spark, path, keyName, m),
       keyName)
       .groupBy(col(keyName)).agg(max(col("gen")).as("gen"))
   }
@@ -519,7 +440,7 @@ object IndexLayout {
     * predecessors). Call with an empty `keep` for a full sweep once
     * in-flight readers have drained. Only names derived from a
     * pointed logical (`logical` itself or `logical-v<k>[-tok]`) are
-    * candidates — `meta`, `_manifest`, and anything else untracked is
+    * candidates — `_manifest` and anything else untracked is
     * never touched. Versions AT or ABOVE the committed sequence are
     * also never touched: an unreferenced `-v{m.seq}` tree is a racing
     * (or just-crashed) rewriter's staging for THIS commit slot — the
@@ -575,7 +496,7 @@ object IndexLayout {
       builds: Seq[(String, String => Unit)],
       mutate: IndexManifest => IndexManifest = identity)
       : IndexManifest = {
-    val m0 = IndexManifest.readOrInit(spark, path)
+    val m0 = IndexManifest.read(spark, path).getOrElse(IndexManifest.Fresh)
     val staged = scala.collection.mutable.ListBuffer.empty[String]
     var m = m0
     builds.foreach { case (logical, build) =>
@@ -601,8 +522,8 @@ object IndexLayout {
   def compactVersioned(spark: SparkSession, path: String,
       logical: String, partitionCol: Option[String],
       targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val m = IndexManifest.readOrInit(spark, path)
-    val cur = dir(path, Some(m), logical)
+    val m = IndexManifest.latest(spark, path)
+    val cur = dir(path, m, logical)
     require(dirExists(spark, cur), s"$cur does not exist")
     val before = countParquet(spark, cur)
     val newName = buildVersion(spark, path, m, logical, { st =>
@@ -623,21 +544,5 @@ object IndexLayout {
       abortStaged(spark, path, Seq(newName), e) }
     gcWithGrace(spark, path)
     (before, countParquet(spark, s"$path/$newName"))
-  }
-
-  /** Metadata housekeeping for the compaction entry points: prune the
-    * manifest history to its tail and drop the legacy gen/epoch parquet
-    * logs once a manifest carries their values (they were folded in on
-    * the first post-upgrade mutation). */
-  def compactMetadata(spark: SparkSession, path: String): Unit = {
-    if (IndexManifest.read(spark, path).isDefined) {
-      val root = new Path(path)
-      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-      Seq("gen", "ingest_meta").foreach { n =>
-        val p = new Path(root, n)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
-    }
-    IndexManifest.pruneHistory(spark, path)
   }
 }

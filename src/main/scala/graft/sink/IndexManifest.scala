@@ -2,7 +2,6 @@ package graft.sink
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** A manifest commit lost a race to a concurrent committer: the
   * sequence number it tried to claim was taken by a SEALED commit, or
@@ -59,9 +58,8 @@ final class ManifestCommitRaceException(msg: String)
   * the state is a tiny text file under `path/_manifest/`, named
   * `m-<seq>` with a zero-padded, strictly increasing sequence number.
   * The first line is a `len=<bytes>` seal over the `key=value` body
-  * that follows — a file whose body is shorter than its seal is a torn
-  * write and is IGNORED by readers (pre-seal files from older rounds
-  * were rename-committed, hence complete, and stay readable). `read` =
+  * that follows — a file whose body does not match its seal (or that
+  * has no seal) is a torn write and is IGNORED by readers. `read` =
   * list the directory, parse the highest-numbered SEALED file.
   * `commit` = claim the next sequence number with an atomic
   * create-if-absent (`File.createNewFile` on local filesystems —
@@ -88,17 +86,22 @@ final class ManifestCommitRaceException(msg: String)
   * fresh generation and its tombstones kill a crashed predecessor's
   * partial facts (the at-least-once self-heal). `visibleGen` is the
   * highest PUBLISHED generation — the reader-visibility watermark
-  * (face 2 above; legacy manifests without the field read as
-  * `visibleGen = gen`, which is exactly the pre-watermark semantics).
+  * (face 2 above).
   * `epoch` is the highest COMMITTED streaming ingest epoch;
   * `pendingEpoch` marks an epoch whose fact write may be in flight,
   * letting a replay detect the half-committed case and route through
   * the self-healing upsert path ([[IndexFamily.ingestBatch]]).
   * `dirs` maps logical subtree names
   * (`postings`, `docs`, `codes`, `tombstones`, …) to their current
-  * physical directory name; unlisted names resolve to themselves,
-  * which is also how pre-manifest (round-15 and older) layouts stay
-  * readable unchanged.
+  * physical directory name; unlisted names resolve to themselves (the
+  * plain layout a build writes). `params` holds the build parameters
+  * the family's appends and reads need (`n_buckets`, `shingle_n`, `k`,
+  * `w`, `dims`, `m`); the build's own commit writes them, and every
+  * later commit carries them forward.
+  *
+  * A path with no committed manifest is an unbuilt index or a build
+  * that crashed before its commit: [[latest]] rejects it, naming the
+  * path, and so does every reader and mutation.
   *
   * Snapshot pinning: any retained manifest ([[readAt]]) can be handed
   * to the query entry points (`bm25TopKFromTfIndex`,
@@ -126,6 +129,7 @@ final case class IndexManifest(
     epoch: Long,
     pendingEpoch: Long,
     dirs: Map[String, String],
+    params: Map[String, Int] = Map.empty,
     retainCommits: Int = IndexManifest.HistoryKeep,
     retainMs: Long = 0L) {
   def dirFor(logical: String): String = dirs.getOrElse(logical, logical)
@@ -164,8 +168,8 @@ object IndexManifest {
   }
 
   /** The file's body if it is SEALED (its `len=` header matches the
-    * byte count that follows) or legacy (no header — complete by the
-    * old rename protocol); None for a torn in-flight/crashed write. */
+    * byte count that follows); None for a torn in-flight/crashed write
+    * or a file with no header. */
   private def readSealed(fs: FileSystem, p: Path): Option[String] = {
     // a file listed a beat ago may have been pruned (history tail) or
     // recovered aside (torn claim) by the time we open it — absent ≡
@@ -181,32 +185,22 @@ object IndexManifest {
     // torn claim can be cut mid-multibyte (or be plain binary junk)
     // and must read as "unsealed", never as an exception
     val text = new String(bytes, "UTF-8")
-    if (!text.startsWith("len=")) {
-      // legacy (pre-seal) files were rename-committed whole, and their
-      // render always carried these keys and a trailing newline — a
-      // torn claim cut shorter than its own header must not
-      // masquerade as one
-      if (text.endsWith("\n") && text.contains("gen=") &&
-          text.contains("epoch=")) Some(text)
+    val nl = text.indexOf('\n')
+    if (!text.startsWith("len=") || nl < 0) None
+    else {
+      val body = text.substring(nl + 1)
+      val want = text.substring(4, nl)
+      if (want.nonEmpty && want.forall(_.isDigit) &&
+          body.getBytes("UTF-8").length == want.toLong) Some(body)
       else None
-    } else {
-      val nl = text.indexOf('\n')
-      if (nl < 0) None
-      else {
-        val body = text.substring(nl + 1)
-        val want = text.substring(4, nl)
-        if (want.nonEmpty && want.forall(_.isDigit) &&
-            body.getBytes("UTF-8").length == want.toLong) Some(body)
-        else None
-      }
     }
   }
 
-  /** Latest committed (sealed) manifest, or None for a pre-manifest /
-    * freshly built layout. Driver-side FS listing + one tiny file read
-    * — no Spark job. Readers call this ONCE per operation and resolve
-    * every subtree from the same snapshot (resolving piecemeal could
-    * mix two snapshots across a concurrent commit). */
+  /** Latest committed (sealed) manifest, or None when the path has
+    * none. Driver-side FS listing + one tiny file read — no Spark
+    * job. Readers call this (through [[latest]]) ONCE per operation
+    * and resolve every subtree from the same snapshot (resolving
+    * piecemeal could mix two snapshots across a concurrent commit). */
   def read(spark: SparkSession, path: String): Option[IndexManifest] = {
     val (fs, root) = fsOf(spark, path)
     val mdir = new Path(root, MDIR)
@@ -266,72 +260,32 @@ object IndexManifest {
     }
   }
 
-  /** PIN the current state for later [[readAt]] / pinned-read use:
-    * the latest committed snapshot — or, for a freshly built / legacy
-    * layout with no manifest yet, commit one first (its empty `dirs`
-    * resolve every logical to its plain name), so the pinned snapshot
-    * is a RETAINED history entry and the GC grace window keeps its
-    * trees alive through the next [[HistoryKeep]] rewrites. An
-    * in-memory manifest value would pin nothing: GC only honors
-    * snapshots it can list. The bootstrap commit is COMMUTABLE (any
-    * committed manifest satisfies pin's contract), so it rides the
-    * retrying [[commitWith]] — a pin racing a concurrent first commit
-    * (another pinner, a mutation's reserveGen) returns the winner's
-    * snapshot instead of throwing. */
-  def pin(spark: SparkSession, path: String): IndexManifest =
-    read(spark, path)
-      .getOrElse(commitWith(spark, path, identity))
-
-  /** [[read]], falling back to the pre-manifest on-disk state for a
-    * legacy layout: gen from the old `path/gen` parquet log, epoch
-    * from the old `path/ingest_meta` log (each a one-time, one-row
-    * Spark read — only ever paid on the FIRST mutation of an index
-    * built by older code). Everything a legacy layout holds is
-    * published by definition, so `visibleGen` starts at its gen. */
-  def readOrInit(spark: SparkSession, path: String): IndexManifest =
-    read(spark, path).getOrElse {
-      val g = legacyGen(spark, path)
-      Fresh.copy(gen = g, visibleGen = g,
-        epoch = legacyEpoch(spark, path))
-    }
-
-  /** Max of the legacy `path/gen` parquet log (0 when absent). */
-  def legacyGen(spark: SparkSession, path: String): Long =
-    legacyMax(spark, s"$path/gen", "gen").getOrElse(0L)
-
-  /** Max of the legacy `path/ingest_meta` log (−1 when absent). */
-  def legacyEpoch(spark: SparkSession, path: String): Long =
-    legacyMax(spark, s"$path/ingest_meta", "epoch").getOrElse(-1L)
-
-  private def legacyMax(spark: SparkSession, dir: String,
-      colName: String): Option[Long] = {
-    val p = new Path(dir)
-    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
-      None
-    else {
-      // max over zero rows is null — a crashed legacy writer can leave
-      // the log dir existing but empty
-      val row = spark.read.parquet(dir)
-        .agg(max(col(colName))).collect()(0)
-      if (row.isNullAt(0)) None else Some(row.getLong(0))
-    }
-  }
+  /** The latest committed snapshot of a BUILT index — what every
+    * reader resolves when the caller pins nothing, what every mutation
+    * starts from, and what a caller holds as a pin for later [[readAt]]
+    * / pinned-read use (it is a retained history entry, so the GC grace
+    * window keeps its trees alive through the next [[HistoryKeep]]
+    * rewrites). A path with no committed manifest is an unbuilt index
+    * or a build that crashed before its commit, and is rejected. */
+  def latest(spark: SparkSession, path: String): IndexManifest =
+    read(spark, path).getOrElse(throw new IllegalStateException(
+      s"$path has no committed index manifest — it was never built, " +
+        "or its build crashed before committing; rebuild it"))
 
   private def parse(seq: Long, text: String): IndexManifest = {
     val kv = text.linesIterator.filter(_.contains('=')).map { l =>
       val i = l.indexOf('=')
       (l.substring(0, i), l.substring(i + 1))
     }.toMap
-    val gen = kv.getOrElse("gen", "0").toLong
+    def prefixed(p: String) = kv.collect { case (k, v)
+      if k.startsWith(p) => (k.stripPrefix(p), v) }
     IndexManifest(seq,
-      gen,
-      // pre-watermark manifests: every reserved generation was visible
-      kv.get("visible_gen").map(_.toLong).getOrElse(gen),
-      kv.getOrElse("epoch", "-1").toLong,
-      kv.getOrElse("pending_epoch", "-1").toLong,
-      kv.collect { case (k, v) if k.startsWith("dir.") =>
-        (k.stripPrefix("dir."), v)
-      },
+      kv("gen").toLong,
+      kv("visible_gen").toLong,
+      kv("epoch").toLong,
+      kv("pending_epoch").toLong,
+      prefixed("dir."),
+      prefixed("param.").map { case (k, v) => (k, v.toInt) },
       kv.get("retain_commits").map(_.toInt).getOrElse(HistoryKeep),
       kv.get("retain_ms").map(_.toLong).getOrElse(0L))
   }
@@ -342,7 +296,8 @@ object IndexManifest {
       (if (m.retainCommits != HistoryKeep)
         Seq(s"retain_commits=${m.retainCommits}") else Nil) ++
       (if (m.retainMs != 0L) Seq(s"retain_ms=${m.retainMs}") else Nil) ++
-      m.dirs.toSeq.sorted.map { case (k, v) => s"dir.$k=$v" })
+      m.dirs.toSeq.sorted.map { case (k, v) => s"dir.$k=$v" } ++
+      m.params.toSeq.sorted.map { case (k, v) => s"param.$k=$v" })
       .mkString("", "\n", "\n")
 
   /** Set this index's PIN/GC retention, carried in the manifest
@@ -501,7 +456,8 @@ object IndexManifest {
 
   /** Retrying commit for COMMUTABLE updates (generation reserve,
     * visibility publish, epoch moves — anything re-derivable from the
-    * latest snapshot): read the newest manifest, apply `update`, try
+    * latest snapshot): read the newest manifest ([[Fresh]] on a path
+    * with none yet), apply `update`, try
     * to claim the next sequence; on a lost race, re-derive against the
     * winner's snapshot and try again. Bounded — pathological
     * contention still fails loudly rather than spinning. Dir-pointer
@@ -513,7 +469,8 @@ object IndexManifest {
       maxAttempts: Int = 64): IndexManifest = {
     var attempt = 1
     while (true) {
-      try return commit(spark, path, update(readOrInit(spark, path)))
+      try return commit(spark, path,
+        update(read(spark, path).getOrElse(Fresh)))
       catch {
         case e: ManifestCommitRaceException =>
           if (attempt >= maxAttempts) throw new

@@ -237,7 +237,7 @@ class QuantizeSpec extends SparkSpec {
     val fresh = emb.filter(col("vec_id") >= half)
     val appended = Similarity.ivfPqIndex(old, nCells = 8, dims = 64,
         m = 8, nCentroids = 16)
-      .append(fresh, dims = 64, m = 8)
+      .append(fresh)
     val full = Similarity.ivfPqIndex(emb, nCells = 8, dims = 64,
       m = 8, nCentroids = 16)
     val q = emb.filter(col("vec_id") < 6)

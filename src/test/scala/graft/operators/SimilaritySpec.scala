@@ -296,7 +296,7 @@ class SimilaritySpec extends SparkSpec {
   // 30 vectors in 8 dims, no duplicates, spread over the sphere
   /** The IVF-PQ family of the 8-dim, 2-subspace persisted-index
     * tests. */
-  private val ivf = Similarity.ivfPqFamily(dims = 8, m = 2)
+  private val ivf = Similarity.ivfPqFamily()
 
   private def corpus30 = {
     import spark.implicits._
@@ -654,10 +654,8 @@ class SimilaritySpec extends SparkSpec {
       // corpus), codes over the mutated corpus — in-memory twin
       val frozen = Similarity.ivfPqIndex(orig, nCells = 4, dims = 8,
         m = 2, nCentroids = 4)
-      val twinIdx = Similarity.IvfPqIndex(frozen.cells, frozen.codebook,
-        Similarity.IvfPqIndex(frozen.cells, frozen.codebook,
-          frozen.codes.limit(0))
-          .append(mutated, dims = 8, m = 2).codes)
+      val twinIdx = frozen.copy(codes = frozen.codes.limit(0))
+        .append(mutated)
       def twin() = Similarity.ivfPqSearch(
           mutated.filter(col("vec_id") < 6), twinIdx,
           k = 4, nprobe = 2, dims = 8, m = 2)
@@ -709,8 +707,8 @@ class SimilaritySpec extends SparkSpec {
           vecs(0 until 4),
           Similarity.ivfPqIndex(vecs(0 until 16), nCells = 4,
               dims = 8, m = 2, nCentroids = 4)
-            .append(vecs(16 until 24), dims = 8, m = 2)
-            .append(vecs(24 until 32), dims = 8, m = 2),
+            .append(vecs(16 until 24))
+            .append(vecs(24 until 32)),
           k = 4, nprobe = 2, dims = 8, m = 2)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),

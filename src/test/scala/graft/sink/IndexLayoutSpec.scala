@@ -1,7 +1,6 @@
 package graft.sink
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** The shared generation plumbing's own edges — the per-family specs
   * (RetrievalSpec/DedupSpec/SimilaritySpec) pin the lifecycle laws;
@@ -51,9 +50,10 @@ class IndexLayoutSpec extends SparkSpec {
         graft.operators.Retrieval.tfFamily().append(dir,
           Seq((i, s"doc $i common")).toDF("doc_id", "text"))
       assert(IndexLayout.currentGen(spark, dir) == 15L)
-      // two commits per mutation: the generation RESERVE before the
-      // facts and the visibility PUBLISH after them (reader-atomicity)
-      assert(manifestFiles() == 30)
+      // the build's one commit, then two per mutation: the generation
+      // RESERVE before the facts and the visibility PUBLISH after them
+      // (reader-atomicity)
+      assert(manifestFiles() == 31)
       graft.operators.Retrieval.tfFamily().compact(spark, dir)
       // compaction prunes the manifest history to its tail...
       assert(manifestFiles() <= IndexManifest.HistoryKeep)
@@ -65,55 +65,5 @@ class IndexLayoutSpec extends SparkSpec {
       assert(IndexLayout.currentGen(spark, dir) == 16L)
     } finally org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(dir))
-  }
-
-  test("legacy (pre-manifest) layouts stay readable and mutable: gen " +
-      "log and gen-less fact trees migrate on first touch") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("legacy").toString
-    try {
-      // hand-build the r15-era layout: plain dirs, parquet gen log,
-      // NO manifest, and postings/docs WITHOUT a gen column (the
-      // pre-generation-era format)
-      val docs = Seq((1L, "needle common words"), (2L, "other common"))
-        .toDF("doc_id", "text")
-      val tf = graft.operators.Retrieval.termFrequencies(
-        docs, "doc_id", "text")
-      tf.withColumn("wbucket",
-          pmod(xxhash64(col("word")), lit(4L)))
-        .write.mode("overwrite").partitionBy("wbucket")
-        .parquet(s"$dir/postings")
-      tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-        .write.mode("overwrite").parquet(s"$dir/docs")
-      spark.range(1).select(lit(4).as("n_buckets"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-      spark.range(1).select(lit(3L).as("gen"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/gen")
-      // reads work with no gen column and no manifest (ADVICE: a
-      // pre-generation artifact must not throw on read)
-      val got = graft.operators.Retrieval.bm25TopKFromTfIndex(
-        spark, dir, Seq(1 -> "needle common"), 10)
-      assert(got.count() == 2)
-      // first mutation folds the legacy gen log into a fresh manifest
-      graft.operators.Retrieval.tfFamily().append(dir,
-        Seq((3L, "third common doc")).toDF("doc_id", "text"))
-      assert(IndexManifest.read(spark, dir).map(_.gen) == Some(4L))
-      assert(graft.operators.Retrieval.bm25TopKFromTfIndex(
-        spark, dir, Seq(1 -> "common"), 10).count() == 3)
-    } finally org.apache.commons.io.FileUtils
-      .deleteQuietly(new java.io.File(dir))
-  }
-
-  test("metaRow: a failed meta listing never counts as a cache hit") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("idxmeta").toString
-    Seq(7L).toDF("n_buckets").write.parquet(s"$root/idx1/meta")
-    // a glob path: the Hadoop listing takes it literally and fails (the
-    // "" fingerprint), while the parquet read expands it to idx1/meta
-    val path = s"$root/idx[1]"
-    val stale = org.apache.spark.sql.Row(3L)
-    IndexLayout.metaCache.put(IndexLayout.canonical(spark, path),
-      ("", stale))
-    assert(IndexLayout.metaRow(spark, path).getLong(0) == 7L)
   }
 }

@@ -13,7 +13,9 @@ import org.apache.spark.sql.DataFrame
   * geometry), and the surviving keys must be exactly the expected
   * ones. Purge and compaction must leave reads bit-identical, and a
   * purge of every key must leave a readable empty index that later
-  * appends extend.
+  * appends extend. A build that dies before its manifest commit must
+  * be rejected by the reader and every mutation, and a rebuild must
+  * serve.
   */
 class IndexLifecycleSpec extends SparkSpec {
   import graft.operators.{Dedup, Retrieval, Similarity}
@@ -120,7 +122,7 @@ class IndexLifecycleSpec extends SparkSpec {
     val seedIdx = Similarity.ivfPqIndex(vecs(vecSeed), nCells = 2, dims,
       m, nCentroids = 4)
     vqRows(seedIdx.copy(codes = seedIdx.codes.limit(0))
-      .append(live, dims, m).codes)
+      .append(live).codes)
   }
 
   private val table = Seq(
@@ -130,7 +132,7 @@ class IndexLifecycleSpec extends SparkSpec {
       rebuilt(shBuild, shRead)),
     Row("fingerprint", Dedup.fingerprintFamily(), docs, fpBuild, fpRead,
       rebuilt(fpBuild, fpRead)),
-    Row("ivfpq", Similarity.ivfPqFamily(dims, m), vecs, vqBuild, vqRead,
+    Row("ivfpq", Similarity.ivfPqFamily(), vecs, vqBuild, vqRead,
       vqTwin))
 
   table.foreach { row =>
@@ -153,7 +155,7 @@ class IndexLifecycleSpec extends SparkSpec {
         row.build(row.input(seed), dir)
         live ++= seed
         check("build")
-        val a = IndexManifest.pin(spark, dir)
+        val a = IndexManifest.latest(spark, dir)
 
         val inc = (8L until 12L).map(_ -> 0)
         f.append(dir, row.input(inc))
@@ -171,7 +173,7 @@ class IndexLifecycleSpec extends SparkSpec {
         f.delete(dir, Seq(3L, 10L, 99L).toDF(f.idCol))
         live --= Seq(3L, 10L)
         val afterDelete = check("delete")
-        val b = IndexManifest.pin(spark, dir)
+        val b = IndexManifest.latest(spark, dir)
 
         val cdc = f.changesBetween(spark, dir, a, b).collect()
           .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -220,5 +222,73 @@ class IndexLifecycleSpec extends SparkSpec {
         assert(got == row.twin(row.input(inc)), "append after purge ≠ twin")
       } finally delete(dir)
     }
+
+    test(s"${row.name}: a build that dies after its fact writes but " +
+        "before its manifest commit is rejected, naming the path, by " +
+        "the reader and every mutation; a rebuild then serves") {
+      val f = row.family
+      val dir = tmp(s"lc_crash_${row.name}")
+      try {
+        val seed = (0L until 8L).map(_ -> 0)
+        row.build(row.input(seed), dir)
+        // the fact trees are on disk; the build's commit never landed
+        IndexManifest.reset(spark, dir)
+        import spark.implicits._
+        val more = row.input(Seq(20L -> 0))
+        val unpinned = IndexManifest.Fresh
+        val calls: Seq[(String, () => Any)] = Seq(
+          "read" -> (() => row.read(dir)),
+          "append" -> (() => f.append(dir, more)),
+          "upsert" -> (() => f.upsert(dir, more)),
+          "delete" -> (() => f.delete(dir, Seq(1L).toDF(f.idCol))),
+          "changesBetween" -> (() =>
+            f.changesBetween(spark, dir, unpinned, unpinned)),
+          "purgeTombstones" -> (() => f.purgeTombstones(spark, dir)),
+          "compact" -> (() => f.compact(spark, dir)),
+          "ingestBatch" -> (() => f.ingestBatch(dir, more, 0L)))
+        calls.foreach { case (op, call) =>
+          val e = intercept[IllegalStateException](call())
+          assert(e.getMessage.contains(dir), s"$op: ${e.getMessage}")
+        }
+        assert(IndexManifest.read(spark, dir).isEmpty,
+          "a rejected call committed a manifest")
+        row.build(row.input(seed), dir)
+        assert(row.read(dir) == row.twin(row.input(seed)),
+          "rebuild ≠ twin")
+      } finally delete(dir)
+    }
+  }
+
+  test("tf: a rebuild with 32 word buckets over a 16-bucket index in " +
+      "the same session — the append and the read use 32, and both " +
+      "equal a fresh 32-bucket build's") {
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    val dir = tmp("lc_rebucket")
+    val fresh = tmp("lc_rebucket_fresh")
+    val query = "alpha beta gamma delta even odd words here there version1"
+    def read(d: String) = rowsOf(Retrieval.bm25TopKFromTfIndex(spark, d,
+      Seq(1 -> query), k = 100))
+    try {
+      val seed = docs((0L until 8L).map(_ -> 0))
+      val inc = docs((8L until 12L).map(_ -> 0))
+      Retrieval.writeTfIndex(seed, dir, wordBuckets = 16)
+      Retrieval.tfFamily().append(dir, inc)
+      assert(read(dir).nonEmpty)
+      Seq(dir, fresh).foreach { d =>
+        Retrieval.writeTfIndex(seed, d, wordBuckets = 32)
+        Retrieval.tfFamily().append(d, inc)
+      }
+      assert(IndexManifest.latest(spark, dir).params("n_buckets") == 32)
+      // teeth: some query word lands in a bucket a 16-bucket read
+      // would never prune to
+      val s = spark
+      import s.implicits._
+      assert(query.split(" ").toSeq.toDF("word")
+        .select(pmod(xxhash64(col("word")), lit(32L))).as[Long]
+        .collect().exists(_ >= 16))
+      assert(rowsOf(idxDf(dir, "postings")) ==
+        rowsOf(idxDf(fresh, "postings")), "append used a stale bucket count")
+      assert(read(dir) == read(fresh), "read used a stale bucket count")
+    } finally { delete(dir); delete(fresh) }
   }
 }

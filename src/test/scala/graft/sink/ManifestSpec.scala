@@ -200,9 +200,9 @@ class ManifestSpec extends SparkSpec {
       "(single-writer violation), history pruning keeps the tail") {
     val dir = java.nio.file.Files.createTempDirectory("mmech").toString
     try {
-      val m0 = IndexManifest.readOrInit(spark, dir)
-      assert(m0 == IndexManifest.Fresh)
-      val m1 = IndexManifest.commit(spark, dir, m0.copy(gen = 1L))
+      assert(IndexManifest.read(spark, dir).isEmpty)
+      val m1 = IndexManifest.commit(spark, dir,
+        IndexManifest.Fresh.copy(gen = 1L))
       assert(m1.seq == 1L)
       // a torn commit (temp file never renamed) is ignored by read
       val tmp = new java.io.File(s"$dir/_manifest/.tmp-torn")
@@ -439,7 +439,7 @@ class ManifestSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("mtorn").toString
     try {
       val m1 = IndexManifest.commit(spark, dir,
-        IndexManifest.readOrInit(spark, dir).copy(gen = 1L))
+        IndexManifest.Fresh.copy(gen = 1L))
       // a crashed committer claimed m-2 but died mid-write (len seal
       // does not match the body) — stale mtime says it's abandoned
       val torn = new java.io.File(
@@ -478,8 +478,7 @@ class ManifestSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("mfuzz").toString
     try {
       val m1 = IndexManifest.commit(spark, dir,
-        IndexManifest.readOrInit(spark, dir)
-          .copy(gen = 5L, visibleGen = 5L))
+        IndexManifest.Fresh.copy(gen = 5L, visibleGen = 5L))
       val good = IndexManifest.read(spark, dir).get
       assert(good.gen == 5L && good.visibleGen == 5L)
       val rnd = new scala.util.Random(42)
@@ -503,23 +502,19 @@ class ManifestSpec extends SparkSpec {
           s"$dir/_manifest/m-${"%020d".format(100 + i)}")
         java.nio.file.Files.write(f.toPath, bytes)
         // read never throws; a torn higher-sequence file never serves
-        // — neither a bad seal nor a short prefix masquerading as a
-        // headerless legacy file (legacy acceptance requires the
-        // complete-render shape: gen= + epoch= keys, trailing newline)
         val got = IndexManifest.read(spark, dir).get
         assert(got.gen == 5L && got.seq == m1.seq,
           s"torn payload $i served: $got")
         assert(f.delete())
       }
-      // a COMPLETE legacy render (the r16 on-disk format) still serves
-      val legacy = new java.io.File(
+      // a complete render WITHOUT the `len=` seal (the pre-seal on-disk
+      // format) is ignored like any other torn file
+      val headerless = new java.io.File(
         s"$dir/_manifest/m-${"%020d".format(150)}")
-      java.nio.file.Files.write(legacy.toPath,
-        "gen=9\nepoch=3\npending_epoch=-1\n".getBytes)
-      val viaLegacy = IndexManifest.read(spark, dir).get
-      assert(viaLegacy.gen == 9L && viaLegacy.epoch == 3L &&
-        viaLegacy.visibleGen == 9L) // pre-watermark: visible = gen
-      assert(legacy.delete())
+      java.nio.file.Files.write(headerless.toPath,
+        "gen=9\nvisible_gen=9\nepoch=3\npending_epoch=-1\n".getBytes)
+      assert(IndexManifest.read(spark, dir).get.seq == m1.seq)
+      assert(headerless.delete())
       // history and readAt survive garbage too
       val junk = new java.io.File(
         s"$dir/_manifest/m-${"%020d".format(200)}")
@@ -606,33 +601,6 @@ class ManifestSpec extends SparkSpec {
           IndexManifest.HistoryKeep)
       } finally org.apache.commons.io.FileUtils
         .deleteQuietly(new java.io.File(dir2))
-    } finally org.apache.commons.io.FileUtils
-      .deleteQuietly(new java.io.File(dir))
-  }
-
-  test("pin bootstrap is race-tolerant: pins racing first commits on " +
-      "a fresh layout all return a committed snapshot instead of " +
-      "throwing (commutable commits ride commitWith)") {
-    val dir = java.nio.file.Files.createTempDirectory("mpinrace")
-      .toString
-    try {
-      val errors = new java.util.concurrent
-        .ConcurrentLinkedQueue[Throwable]
-      val barrier = new java.util.concurrent.CyclicBarrier(4)
-      val threads = (1 to 4).map { i =>
-        new Thread(() => {
-          try {
-            barrier.await()
-            if (i % 2 == 0) { IndexManifest.pin(spark, dir); () }
-            else { IndexLayout.reserveGen(spark, dir); () }
-          } catch { case t: Throwable => errors.add(t); () }
-        })
-      }
-      threads.foreach(_.start()); threads.foreach(_.join())
-      assert(errors.isEmpty, s"pin/reserve race threw: ${errors}")
-      // and a pin on the settled layout is a retained snapshot
-      val snap = IndexManifest.pin(spark, dir)
-      assert(IndexManifest.readAt(spark, dir, snap.seq) == snap)
     } finally org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(dir))
   }

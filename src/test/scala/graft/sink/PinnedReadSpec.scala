@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Snapshot pinning / time travel over the manifest history the GC
   * grace window already retains ([[IndexManifest.readAt]] /
-  * [[IndexManifest.pin]] + the `pinned` parameter of the query entry
+  * [[IndexManifest.latest]] + the `pinned` parameter of the query entry
   * points): a report pinned at sequence N keeps answering
   * bit-identically to the pre-mutation state while the crawler keeps
   * upserting, deleting, purging and compacting — until the snapshot
@@ -33,7 +33,7 @@ class PinnedReadSpec extends SparkSpec {
         s"common words doc$i " + (if (i % 4 == 1) "needle" else "hay")))
         .toDF("doc_id", "text")
       Retrieval.writeTfIndex(docs, dir, wordBuckets = 8)
-      val snap = IndexManifest.pin(spark, dir)
+      val snap = IndexManifest.latest(spark, dir)
       val expected = canon(Retrieval.bm25TopKFromTfIndex(
         spark, dir, queries, 10))
       // the crawler keeps going: re-crawl, takedown, physical purge,
@@ -94,7 +94,7 @@ class PinnedReadSpec extends SparkSpec {
       // compaction + housekeeping ≈ 21 commits — inside 24, far
       // outside the default 8)
       IndexManifest.setRetention(spark, dir, commits = 24)
-      val snap = IndexManifest.pin(spark, dir)
+      val snap = IndexManifest.latest(spark, dir)
       val expected = canon(Retrieval.bm25TopKFromTfIndex(
         spark, dir, queries, 10))
       (0 until 8).foreach { i =>
@@ -137,7 +137,7 @@ class PinnedReadSpec extends SparkSpec {
       Retrieval.writeTfIndex(docs.toDF("doc_id", "text"), dir,
         wordBuckets = 8)
       IndexManifest.setRetention(spark, dir, commits = 40)
-      val snap = IndexManifest.pin(spark, dir)
+      val snap = IndexManifest.latest(spark, dir)
       val expected = canon(Retrieval.bm25TopKFromTfIndex(
         spark, dir, queries, 10))
       (0 until 6).foreach { e =>
@@ -175,7 +175,7 @@ class PinnedReadSpec extends SparkSpec {
         (3L, "totally different content here now"))
         .toDF("doc_id", "text")
       Dedup.writeShingleIndex(docs, sdir, n = 3, shingleBuckets = 4)
-      val snap = IndexManifest.pin(spark, sdir)
+      val snap = IndexManifest.latest(spark, sdir)
       val ids = docs.select(col("doc_id"))
       val before = canon(Dedup.jaccardPairsAgainstIndex(spark, sdir,
         0.3, ids).orderBy(col("da"), col("db")))
@@ -202,7 +202,7 @@ class PinnedReadSpec extends SparkSpec {
           .toDF("doc_id", "text")
         Dedup.writeFingerprintIndex(fdocs, fdir, k = 10, w = 4,
           fpBuckets = 4)
-        val fsnap = IndexManifest.pin(spark, fdir)
+        val fsnap = IndexManifest.latest(spark, fdir)
         val fIds = Seq(1L, 2L).toDF("doc_id")
         val fBefore = canon(Dedup.substringCandidatesAgainstIndex(
           spark, fdir, 1, fIds).orderBy(col("da"), col("db")))
@@ -226,10 +226,10 @@ class PinnedReadSpec extends SparkSpec {
         .toDF("vec_id", "embedding")
       Similarity.ivfPqIndex(vecs, nCells = 2, dims = 4, m = 2,
         nCentroids = 4).write(vdir)
-      val vsnap = IndexManifest.pin(spark, vdir)
+      val vsnap = IndexManifest.latest(spark, vdir)
       val nBefore = Similarity.IvfPqIndex.read(spark, vdir)
         .codes.select(col("id")).distinct().count()
-      Similarity.ivfPqFamily(dims = 4, m = 2).delete(vdir,
+      Similarity.ivfPqFamily().delete(vdir,
         Seq(3L, 4L).toDF("vec_id"))
       val pinnedIdx = Similarity.IvfPqIndex.read(spark, vdir,
         pinned = Some(IndexManifest.readAt(spark, vdir, vsnap.seq)))

@@ -30,7 +30,7 @@ class SnapshotCdcSpec extends SparkSpec {
       Retrieval.writeTfIndex(docs, dir, wordBuckets = 8)
       // retention must cover the window's mutations (2 commits each)
       IndexManifest.setRetention(spark, dir, commits = 24)
-      val a = IndexManifest.pin(spark, dir)
+      val a = IndexManifest.latest(spark, dir)
       // the window: one of every mutation class
       Retrieval.tfFamily().append(dir,
         Seq((20L, "brand new doc twenty"), (21L, "brand new doc21"))
@@ -48,7 +48,7 @@ class SnapshotCdcSpec extends SparkSpec {
       Retrieval.tfFamily().delete(dir, Seq(7L).toDF("doc_id"))
       // no-op tombstone: an id that was never live
       Retrieval.tfFamily().delete(dir, Seq(999L).toDF("doc_id"))
-      val b = IndexManifest.pin(spark, dir)
+      val b = IndexManifest.latest(spark, dir)
       val expected = Map(20L -> "upsert", 21L -> "upsert",
         1L -> "upsert", 3L -> "upsert",
         5L -> "delete", 9L -> "delete", 7L -> "delete")
@@ -59,7 +59,7 @@ class SnapshotCdcSpec extends SparkSpec {
       // the diff across them is IDENTICAL — and (b, c) is empty
       Retrieval.tfFamily().purgeTombstones(spark, dir)
       Retrieval.tfFamily().compact(spark, dir)
-      val c = IndexManifest.pin(spark, dir)
+      val c = IndexManifest.latest(spark, dir)
       assert(changes(dir, a, c) == expected,
         "physical rewrites disturbed the logical diff")
       assert(changes(dir, b, c).isEmpty)
@@ -92,23 +92,23 @@ class SnapshotCdcSpec extends SparkSpec {
         (i, s"alpha beta gamma doc$i delta epsilon body words here"))
         .toDF("doc_id", "text")
       Dedup.writeShingleIndex(docs, sh, n = 3, shingleBuckets = 4)
-      val sa = IndexManifest.pin(spark, sh)
+      val sa = IndexManifest.latest(spark, sh)
       Dedup.shingleFamily().upsert(sh,
         Seq((2L, "totally new replacement body")).toDF("doc_id", "text"))
       Dedup.shingleFamily().delete(sh, Seq(5L).toDF("doc_id"))
-      val sb = IndexManifest.pin(spark, sh)
+      val sb = IndexManifest.latest(spark, sh)
       assert(Dedup.shingleFamily().changesBetween(spark, sh, sa, sb)
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
         == Map(2L -> "upsert", 5L -> "delete"))
 
       Dedup.writeFingerprintIndex(docs, fp, k = 10, w = 4,
         fpBuckets = 4)
-      val fa = IndexManifest.pin(spark, fp)
+      val fa = IndexManifest.latest(spark, fp)
       Dedup.fingerprintFamily().upsert(fp,
         Seq((3L, "substrings rewritten entirely anew"))
           .toDF("doc_id", "text"))
       Dedup.fingerprintFamily().delete(fp, Seq(6L).toDF("doc_id"))
-      val fb = IndexManifest.pin(spark, fp)
+      val fb = IndexManifest.latest(spark, fp)
       assert(Dedup.fingerprintFamily().changesBetween(spark, fp, fa, fb)
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
         == Map(3L -> "upsert", 6L -> "delete"))
@@ -119,13 +119,13 @@ class SnapshotCdcSpec extends SparkSpec {
         .toDF("vec_id", "embedding")
       Similarity.ivfPqIndex(vecs, nCells = 2, dims, m, nCentroids = 4)
         .write(vq)
-      val va = IndexManifest.pin(spark, vq)
-      val ivf = Similarity.ivfPqFamily(dims, m)
+      val va = IndexManifest.latest(spark, vq)
+      val ivf = Similarity.ivfPqFamily()
       ivf.upsert(vq,
         Seq((1L, Array.tabulate(dims)(d => -(d + 1).toFloat)))
           .toDF("vec_id", "embedding"))
       ivf.delete(vq, Seq(4L).toDF("vec_id"))
-      val vb = IndexManifest.pin(spark, vq)
+      val vb = IndexManifest.latest(spark, vq)
       assert(ivf.changesBetween(spark, vq, va, vb)
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
         == Map(1L -> "upsert", 4L -> "delete"))
@@ -137,7 +137,7 @@ class SnapshotCdcSpec extends SparkSpec {
           .toDF("vec_id", "embedding"))
       Similarity.retrainIvfPqIndex(spark, vq, liveVecs, nCells = 2,
         dims = dims, m = m, nCentroids = 4)
-      val vc = IndexManifest.pin(spark, vq)
+      val vc = IndexManifest.latest(spark, vq)
       val afterRetrain = ivf.changesBetween(spark, vq,
         vb, vc).collect().map(r => r.getLong(0) -> r.getString(1))
         .toMap
@@ -158,7 +158,7 @@ class SnapshotCdcSpec extends SparkSpec {
           .toDF("doc_id", "text"), dir, wordBuckets = 8)
       IndexManifest.setRetention(spark, dir, commits = 32)
       var mirror = (0L until 10L).toSet // downstream's copy after pin
-      var last = IndexManifest.pin(spark, dir)
+      var last = IndexManifest.latest(spark, dir)
       val cycles = Seq(
         Seq("add" -> Seq(10L, 11L), "del" -> Seq(2L)),
         Seq("add" -> Seq(12L), "del" -> Seq(10L, 4L)),
@@ -170,7 +170,7 @@ class SnapshotCdcSpec extends SparkSpec {
           case (_, ids) =>
             Retrieval.tfFamily().delete(dir, ids.toDF("doc_id"))
         }
-        val now = IndexManifest.pin(spark, dir)
+        val now = IndexManifest.latest(spark, dir)
         changes(dir, last, now).foreach {
           case (id, "upsert") => mirror += id
           case (id, _) => mirror -= id

@@ -537,7 +537,7 @@ class EventStreamsSpec extends SparkSpec {
       // simulate epoch 1 dying between its fact append and its epoch
       // commit — exactly ingestBatch's prefix, in append mode:
       // pending marker, generation reservation, fact append... crash.
-      val m0 = graft.sink.IndexManifest.readOrInit(spark, dir)
+      val m0 = graft.sink.IndexManifest.latest(spark, dir)
       graft.sink.IndexManifest.commit(spark, dir,
         m0.copy(pendingEpoch = 1L))
       val g = graft.sink.IndexLayout.reserveGen(spark, dir)
@@ -686,7 +686,7 @@ class EventStreamsSpec extends SparkSpec {
       def run(): Unit = {
         val q = EventStreams.startIndexSink(
           in.toDS().toDF("vec_id", "embedding"), ckpt,
-          Seq(Similarity.ivfPqFamily(dims, m) -> dir), upsert = true)
+          Seq(Similarity.ivfPqFamily() -> dir), upsert = true)
         q.awaitTermination()
       }
       // two runs, two re-embed batches (ids 1,2 then 3)
@@ -707,7 +707,7 @@ class EventStreamsSpec extends SparkSpec {
             corpus.toDF("vec_id", "embedding"), nCells = 2, dims, m,
             nCentroids = 4)
           .write(twinDir)
-        Similarity.ivfPqFamily(dims, m).upsert(twinDir,
+        Similarity.ivfPqFamily().upsert(twinDir,
           Seq((1L, vec(1, true)), (2L, vec(2, true)),
             (3L, vec(3, true))).toDF("vec_id", "embedding"))
         assert(search(dir) == search(twinDir))
@@ -775,7 +775,7 @@ class EventStreamsSpec extends SparkSpec {
         tfFam -> tfDir,
         Dedup.shingleFamily() -> shDir,
         fpFam -> fpDir,
-        Similarity.ivfPqFamily(dims, m, idCol = "doc_id") -> vqDir)
+        Similarity.ivfPqFamily(idCol = "doc_id") -> vqDir)
       def epochs() = Seq(tfDir, shDir, fpDir, vqDir)
         .map(IndexFamily.committedEpoch(spark, _))
       val in = MemoryStream[(Long, String, Array[Float])]
@@ -850,7 +850,7 @@ class EventStreamsSpec extends SparkSpec {
             .select($"doc_id".as("vec_id"), $"embedding"),
           nCells = 2, dims, m, nCentroids = 4)
         .write(vqTwin)
-      Similarity.ivfPqFamily(dims, m, idCol = "doc_id").append(vqTwin,
+      Similarity.ivfPqFamily(idCol = "doc_id").append(vqTwin,
         (b0 ++ b1).toDF("doc_id", "text", "embedding"))
       def search(d: String) = graft.operators.Similarity.ivfPqSearch(
           seed.map(t => (t._1, t._3)).toDF("vec_id", "embedding"),
@@ -895,7 +895,7 @@ class EventStreamsSpec extends SparkSpec {
       // composed loop never reached any later family
       val b1df = b1.toDF("doc_id", "text")
       assert(tfFam.ingestBatch(tfDir, b1df, 1L))
-      val m0 = graft.sink.IndexManifest.readOrInit(spark, fpDir)
+      val m0 = graft.sink.IndexManifest.latest(spark, fpDir)
       graft.sink.IndexManifest.commit(spark, fpDir,
         m0.copy(pendingEpoch = 1L))
       val g = graft.sink.IndexLayout.reserveGen(spark, fpDir)
@@ -958,7 +958,7 @@ class EventStreamsSpec extends SparkSpec {
       // (without the heal, doc 4's fingerprints double and every
       // shared count inflates)
       val b1 = inc1.toDF("doc_id", "text")
-      val m0 = graft.sink.IndexManifest.readOrInit(spark, dir)
+      val m0 = graft.sink.IndexManifest.latest(spark, dir)
       graft.sink.IndexManifest.commit(spark, dir,
         m0.copy(pendingEpoch = 1L))
       val g = graft.sink.IndexLayout.reserveGen(spark, dir)
