@@ -233,7 +233,7 @@ object CorpusCuration {
     // max_by partial aggregation — "keep one, not drop all", and not
     // the blind min-id representative either (q99's operator)
     val pairs = Dedup.minhashCandidates(exact, "doc_id", "text",
-        n = 3, k = 16, bands = 4, minEst = minEst, cache = false)
+        n = 3, k = 16, bands = 4, minEst = minEst)
       .select(col("da"), col("db"))
     val clusters = Dedup.connectedComponents(
       pairs, exact.select(col("doc_id")), "doc_id")

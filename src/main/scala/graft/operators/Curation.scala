@@ -868,15 +868,13 @@ object Curation {
       TextOps.hash60(concat(h.cast("string"), lit(":"),
         k.cast("string"))) % mBits
     val ks = explode(sequence(lit(0), lit(kHashes - 1)))
-    val bits = Dedup.hashedShingleSet(bench, idCol, textCol, n,
-        cache = false)
+    val bits = Dedup.hashedShingleSet(bench, idCol, textCol, n)
       .select(col("h")).distinct()
       .select(col("h"), ks.as("k"))
       .select(posOf(col("h"), col("k")).as("pos"))
       .distinct()
       .withColumn("_set", lit(1))
-    val perDoc = Dedup.hashedShingleSet(docs, idCol, textCol, n,
-        cache = false)
+    val perDoc = Dedup.hashedShingleSet(docs, idCol, textCol, n)
       .select(col("doc_id"), col("h"), ks.as("k"))
       .select(col("doc_id"), col("h"),
         posOf(col("h"), col("k")).as("pos"))
@@ -916,8 +914,7 @@ object Curation {
       kHashes: Int): DataFrame = {
     require(n > 0 && mBits > 0 && kHashes > 0,
       "need positive n, mBits, kHashes")
-    val bitmap = Dedup.hashedShingleSet(bench, idCol, textCol, n,
-        cache = false)
+    val bitmap = Dedup.hashedShingleSet(bench, idCol, textCol, n)
       .agg(graft.functions.Bloom.bloomAgg(col("h"), mBits, kHashes)
         .as("_bm"))
     bloomProbe(docs, bitmap, textCol, idCol, n, mBits, kHashes)
@@ -931,8 +928,7 @@ object Curation {
   private def bloomProbe(docs: DataFrame, bitmap: DataFrame,
       textCol: String, idCol: String, n: Int, mBits: Long,
       kHashes: Int): DataFrame = {
-    val perDoc = Dedup.hashedShingleSet(docs, idCol, textCol, n,
-        cache = false)
+    val perDoc = Dedup.hashedShingleSet(docs, idCol, textCol, n)
       .crossJoin(broadcast(bitmap))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shingles"),
@@ -975,8 +971,7 @@ object Curation {
         n: Int, mBits: Long, kHashes: Int): BloomFilter = {
       require(n > 0 && mBits > 0 && kHashes > 0,
         "need positive n, mBits, kHashes")
-      val bm = Dedup.hashedShingleSet(bench, idCol, textCol, n,
-          cache = false)
+      val bm = Dedup.hashedShingleSet(bench, idCol, textCol, n)
         .agg(graft.functions.Bloom.bloomAgg(col("h"), mBits, kHashes)
           .as("_bm"))
       BloomFilter(bm, mBits, kHashes, n)

@@ -19,11 +19,12 @@ import org.apache.spark.storage.StorageLevel
   *  - per-doc facts (shingle count, MinHash signature) are carried
   *    *through* the explode/banding instead of re-joined afterwards, so
   *    each operator is a single join + single aggregation;
-  *  - the shingle set is persisted (spillable MEMORY_AND_DISK): Spark's
-  *    CacheManager keys on the canonicalized plan, so every operator over
-  *    the same corpus shares one shingle computation — including the two
-  *    sides of each self-join. Pass `cache = false` when the corpus is too
-  *    large to spill profitably and recompute is preferred;
+  *  - one caching rule: the builders ([[shingleSet]], [[hashedShingleSet]])
+  *    are pure plans and persist nothing; each operator persists the
+  *    frame it shares (spillable MEMORY_AND_DISK). Spark's CacheManager
+  *    keys on the canonicalized plan, so every operator over the same
+  *    corpus shares one shingle computation — including the two sides of
+  *    each self-join — and `spark.catalog.clearCache()` releases it;
   *  - all hash families derive from md5 ([[TextOps.hash60]]) with
   *    XOR-mixed constants so the DuckDB oracle can replay them exactly.
   */
@@ -56,31 +57,35 @@ object Dedup {
     * post-rebalance (parallel) stage rather than the possibly
     * single-task scan stage.
     */
-  def shingleSet(df: DataFrame, idCol: String, textCol: String, n: Int,
-      cache: Boolean = true): DataFrame = {
+  def shingleSet(df: DataFrame, idCol: String, textCol: String,
+      n: Int): DataFrame =
     // the native Generator emits (doc_id, s) rows straight off the
     // kernel's distinct set — measured ~30% faster than
     // explode(shingle_set(...)) at sf0.1, which packages the set into
     // an array column the explode then copies back out row by row
-    val sh = graft.Tables.rebalance(df.select(col(idCol), col(textCol)))
+    graft.Tables.rebalance(df.select(col(idCol), col(textCol)))
       .select(col(idCol).as("doc_id"),
         graft.functions.ShingleExplode.expand(col(textCol), n).as("s"))
-    if (cache) sh.persist(StorageLevel.MEMORY_AND_DISK) else sh
-  }
 
   /** Distinct (doc_id, h) pairs where h = 60-bit md5 hash of the
     * n-gram shingle — the 8-byte-key form of [[shingleSet]] for
-    * joins/aggregations that don't need the shingle STRING. The hash is
-    * projected BEFORE the persist, so md5 runs once per row and the
-    * cached frame holds longs (~4× narrower than the string form); the
-    * DuckDB-oracle twin is `hash60(s)` over the same shingle CTE.
+    * joins/aggregations that don't need the shingle STRING. The
+    * operators that share it persist this frame, so md5 runs once per
+    * row and the cached frame holds longs (~4× narrower than the string
+    * form); the DuckDB-oracle twin is `hash60(s)` over the same shingle
+    * CTE.
     */
   def hashedShingleSet(df: DataFrame, idCol: String, textCol: String,
-      n: Int, cache: Boolean = true): DataFrame = {
-    val hashed = shingleSet(df, idCol, textCol, n, cache = false)
+      n: Int): DataFrame =
+    shingleSet(df, idCol, textCol, n)
       .select(col("doc_id"), TextOps.hash60(col("s")).as("h"))
-    if (cache) hashed.persist(StorageLevel.MEMORY_AND_DISK) else hashed
-  }
+
+  /** [[hashedShingleSet]] persisted — the frame every hashed-shingle
+    * operator over one corpus shares. */
+  private def sharedHashedShingles(df: DataFrame, idCol: String,
+      textCol: String, n: Int): DataFrame =
+    hashedShingleSet(df, idCol, textCol, n)
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
   /** Exact n-gram Jaccard similarity join: all pairs with J ≥ threshold.
     *
@@ -101,8 +106,7 @@ object Dedup {
   def jaccardPairs(
       df: DataFrame, idCol: String, textCol: String,
       n: Int, threshold: Double,
-      maxShingleDf: Option[Int] = None,
-      cache: Boolean = true): DataFrame = {
+      maxShingleDf: Option[Int] = None): DataFrame = {
     // key the self-join and pair aggregation on the 8-byte 60-bit md5
     // hash via [[hashedShingleSet]] — a 3-5× cut in shuffle width on
     // the hottest exchange (the n-gram string is 20-60 bytes) plus
@@ -111,7 +115,7 @@ object Dedup {
     // below ~10^8) inflates an intersection count deterministically;
     // the DuckDB oracle replays the same hash family, so results stay
     // engine-identical.
-    val sh0 = hashedShingleSet(df, idCol, textCol, n, cache)
+    val sh0 = sharedHashedShingles(df, idCol, textCol, n)
       .withColumnRenamed("h", "s")
     val sh = maxShingleDf match {
       case Some(cap) =>
@@ -139,7 +143,7 @@ object Dedup {
     // the pair set is tiny (near-dups are rare by definition) and is
     // consumed repeatedly downstream (clustering, curation) — persist it
     // so CacheManager shares one pair computation across identical calls
-    if (cache) out.persist(StorageLevel.MEMORY_AND_DISK) else out
+    out.persist(StorageLevel.MEMORY_AND_DISK)
   }
 
   /** ASYMMETRIC containment join: pairs where the SMALLER document's
@@ -154,9 +158,9 @@ object Dedup {
     * sizes and the containment ratio of two exact integers.
     */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int, threshold: Double, maxShingleDf: Option[Int] = None,
-      cache: Boolean = true): DataFrame = {
-    val sh0 = hashedShingleSet(df, idCol, textCol, n, cache)
+      n: Int, threshold: Double,
+      maxShingleDf: Option[Int] = None): DataFrame = {
+    val sh0 = sharedHashedShingles(df, idCol, textCol, n)
     // stop-shingle hatch — the same skew escape every sibling
     // inverted-index join carries (jaccardPairs/winnowed/editDistance):
     // drop shingles present in > cap docs from CANDIDATE GENERATION
@@ -216,7 +220,6 @@ object Dedup {
     */
   def containmentPairsPrefix(df: DataFrame, idCol: String,
       textCol: String, n: Int, threshold: Double,
-      cache: Boolean = true,
       nativePrefix: Boolean = true,
       rankedIn: Option[DataFrame] = None): DataFrame = {
     require(threshold > 0 && threshold <= 1,
@@ -229,7 +232,7 @@ object Dedup {
     // (q105/q115 artifact discipline; DedupSpec pins ≡)
     val sh = rankedIn
       .map(_.select(col("doc_id"), col("s").as("h")))
-      .getOrElse(hashedShingleSet(df, idCol, textCol, n, cache))
+      .getOrElse(sharedHashedShingles(df, idCol, textCol, n))
     lazy val shs = sh.withColumnRenamed("h", "s")
     // contained-side prefix: first |d| − ⌈t·|d|⌉ + 1 rarest shingles
     // (ceil slack lengthens the prefix — the safe side); the container
@@ -294,8 +297,8 @@ object Dedup {
     * is resolved entirely by the min aggregation.
     */
   def noveltyRates(df: DataFrame, idCol: String, textCol: String,
-      n: Int, cache: Boolean = true): DataFrame = {
-    val sh = hashedShingleSet(df, idCol, textCol, n, cache)
+      n: Int): DataFrame = {
+    val sh = sharedHashedShingles(df, idCol, textCol, n)
     val first = sh.groupBy(col("h")).agg(min(col("doc_id")).as("first_id"))
     sh.join(first, Seq("h"))
       .groupBy(col("doc_id"))
@@ -382,9 +385,8 @@ object Dedup {
     * exactly what each consumer would otherwise pay privately.
     */
   def rankedShingleRows(df: DataFrame, idCol: String, textCol: String,
-      n: Int, cache: Boolean = true,
-      nativePrefix: Boolean = true): DataFrame =
-    rankedRows(hashedShingleSet(df, idCol, textCol, n, cache)
+      n: Int, nativePrefix: Boolean = true): DataFrame =
+    rankedRows(sharedHashedShingles(df, idCol, textCol, n)
       .withColumnRenamed("h", "s"), None, nativePrefix)
 
   /** The PPJoin prefix of a [[rankedShingleRows]] frame at `t`: the
@@ -430,7 +432,6 @@ object Dedup {
   def jaccardPairsPrefix(
       df: DataFrame, idCol: String, textCol: String,
       n: Int, threshold: Double,
-      cache: Boolean = true,
       nativePrefix: Boolean = true,
       ranked: Option[DataFrame] = None): DataFrame = {
     require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
@@ -442,7 +443,7 @@ object Dedup {
     // registered artifact removes every corpus pass from this operator
     // (values identical by construction; DedupSpec pins ≡)
     val sh = ranked.map(_.select(col("doc_id"), col("s")))
-      .getOrElse(hashedShingleSet(df, idCol, textCol, n, cache)
+      .getOrElse(sharedHashedShingles(df, idCol, textCol, n)
         .withColumnRenamed("h", "s"))
     // prefix = first |d| − ⌈t·|d|⌉ + 1 ranked shingles (ceil slack
     // shortens the ceiling, i.e. lengthens the prefix — the safe side)
@@ -524,7 +525,7 @@ object Dedup {
     require(shingleBuckets >= 1)
     graft.sink.IndexLayout.freshLayout(docs.sparkSession, path)
     val sh = hashedShingleSet(docs.select(col(idCol), col(textCol)),
-        idCol, textCol, n, cache = false)
+        idCol, textCol, n)
       .withColumnRenamed("h", "s")
       .localCheckpoint() // postings + docs derive from ONE shingle pass
     // writeFacts repartitions ON the bucket column before the
@@ -572,7 +573,7 @@ object Dedup {
       path).params
     val (nBuckets, n) = (params("n_buckets"), params("shingle_n"))
     val sh = hashedShingleSet(newDocs.select(col(idCol), col(textCol)),
-        idCol, textCol, n, cache = false)
+        idCol, textCol, n)
       .withColumnRenamed("h", "s")
       .localCheckpoint()
     graft.sink.IndexLayout.inParallel(
@@ -696,8 +697,9 @@ object Dedup {
     */
   def minhashSignatureArray(
       df: DataFrame, idCol: String, textCol: String,
-      n: Int, k: Int, cache: Boolean = true): DataFrame = {
-    val h = shingleSet(df, idCol, textCol, n, cache)
+      n: Int, k: Int): DataFrame = {
+    val h = shingleSet(df, idCol, textCol, n)
+      .persist(StorageLevel.MEMORY_AND_DISK)
       .withColumn("h", TextOps.hash60(col("s")))
     h.groupBy("doc_id").agg(
       graft.functions.SketchAggs.minhash(col("h"), minhashConstants(k))
@@ -717,10 +719,10 @@ object Dedup {
     */
   private def bandedSignatures(
       df: DataFrame, idCol: String, textCol: String,
-      n: Int, k: Int, bands: Int, cache: Boolean): DataFrame = {
+      n: Int, k: Int, bands: Int): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     val r = k / bands
-    val sig = minhashSignatureArray(df, idCol, textCol, n, k, cache)
+    val sig = minhashSignatureArray(df, idCol, textCol, n, k)
     val bandStructs = (0 until bands).map { b =>
       struct(lit(b).as("band"),
         concat_ws(",", (b * r until b * r + r).map(j =>
@@ -751,9 +753,8 @@ object Dedup {
     * contributes inter = 0 straight from the kernel.
     */
   def lshCalibration(df: DataFrame, idCol: String, textCol: String,
-      n: Int, k: Int, bands: Int, cache: Boolean = true): DataFrame = {
-    val banded = bandedSignatures(df, idCol, textCol, n, k, bands,
-      cache)
+      n: Int, k: Int, bands: Int): DataFrame = {
+    val banded = bandedSignatures(df, idCol, textCol, n, k, bands)
     val m = size(filter(
       zip_with(col("a.sig"), col("b.sig"), (x, y) => x === y), b => b))
     val cand = banded.as("a").join(banded.as("b"), Seq("band", "bv"))
@@ -761,7 +762,7 @@ object Dedup {
       .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"),
         m.cast("bigint").as("mm"))
       .distinct()
-    val sh = hashedShingleSet(df, idCol, textCol, n, cache)
+    val sh = sharedHashedShingles(df, idCol, textCol, n)
     // exact verification via sorted per-doc arrays + the native
     // merge-count kernel (the jaccardPairsPrefix shape — join-
     // multiplicity-identical to the two-sided shingle join it
@@ -792,9 +793,8 @@ object Dedup {
 
   def minhashCandidates(
       df: DataFrame, idCol: String, textCol: String,
-      n: Int, k: Int, bands: Int, minEst: Double,
-      cache: Boolean = true): DataFrame = {
-    val banded = bandedSignatures(df, idCol, textCol, n, k, bands, cache)
+      n: Int, k: Int, bands: Int, minEst: Double): DataFrame = {
+    val banded = bandedSignatures(df, idCol, textCol, n, k, bands)
     // compute the estimate BEFORE the distinct: est is a function of
     // (da, db), so deduping on (da, db, est_sim) is equivalent while the
     // dedup shuffle carries 3 scalars instead of two k-element arrays
@@ -824,10 +824,9 @@ object Dedup {
   def minhashCrossCandidates(
       newDocs: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String,
-      n: Int, k: Int, bands: Int, minEst: Double,
-      cache: Boolean = true): DataFrame = {
-    val bn = bandedSignatures(newDocs, idCol, textCol, n, k, bands, cache)
-    val bc = bandedSignatures(corpus, idCol, textCol, n, k, bands, cache)
+      n: Int, k: Int, bands: Int, minEst: Double): DataFrame = {
+    val bn = bandedSignatures(newDocs, idCol, textCol, n, k, bands)
+    val bc = bandedSignatures(corpus, idCol, textCol, n, k, bands)
     val est = size(filter(
       zip_with(col("a.sig"), col("b.sig"), (x, y) => x === y), b => b))
     broadcast(bn).as("a").join(bc.as("b"), Seq("band", "bv"))
@@ -871,15 +870,13 @@ object Dedup {
     */
   def substringCandidates(df: DataFrame, idCol: String, textCol: String,
       k: Int = 25, w: Int = 10, minShared: Int = 2,
-      maxFpDf: Option[Int] = None, cache: Boolean = true): DataFrame = {
+      maxFpDf: Option[Int] = None): DataFrame = {
     // persist the fingerprint stream like every self-joining sibling
-    // here (module-header contract): the per-character md5 winnow is
+    // here (module-header rule): the per-character md5 winnow is
     // the most expensive kernel in the file and feeds up to three
     // consumers (df cap + both join sides)
-    val fp1 = winnowedFingerprints(df, idCol, textCol, k, w)
-    val fp0 = if (cache)
-      fp1.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else fp1
+    val fp0 = winnowedFingerprints(df, idCol, textCol, k, w)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val fp = maxFpDf match {
       case Some(cap) =>
         val hot = fp0.groupBy(col("h"))
@@ -998,9 +995,10 @@ object Dedup {
   /** 32-bit SimHash per document over the shingle set: bit b is the sign
     * of Σ_shingles (±1 by hash bit b). One integer per document.
     */
-  def simhash32(df: DataFrame, idCol: String, textCol: String, n: Int,
-      cache: Boolean = true): DataFrame = {
-    val h = shingleSet(df, idCol, textCol, n, cache)
+  def simhash32(df: DataFrame, idCol: String, textCol: String,
+      n: Int): DataFrame = {
+    val h = shingleSet(df, idCol, textCol, n)
+      .persist(StorageLevel.MEMORY_AND_DISK)
       .withColumn("h", TextOps.hash60(col("s")))
     // one TypedImperativeAggregate buffer per doc replaces 32 codegen'd
     // sum columns (graft.functions.SimHashAgg) — identical result
@@ -1171,8 +1169,8 @@ object Dedup {
     */
   def simhashPairs(
       df: DataFrame, idCol: String, textCol: String,
-      n: Int, maxHamming: Int, cache: Boolean = true): DataFrame = {
-    val sh = simhash32(df, idCol, textCol, n, cache)
+      n: Int, maxHamming: Int): DataFrame = {
+    val sh = simhash32(df, idCol, textCol, n)
     val chunks = simhashBlocks(32, maxHamming + 1).zipWithIndex.map {
       case ((shift, mask), j) => struct(lit(j).as("j"),
         shiftright(col("simhash"), shift).bitwiseAND(lit(mask)).as("c"))

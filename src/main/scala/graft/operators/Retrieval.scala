@@ -572,8 +572,7 @@ object Retrieval {
     * than k seed candidates take θ = −∞ (nothing pruned for them).
     */
   def bm25TopKPrunedFromIndex(spark: SparkSession, path: String,
-      queries: Seq[(Int, String)], k: Int,
-      thetaExact: Boolean = true): DataFrame = {
+      queries: Seq[(Int, String)], k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     val qWords: Map[Long, Seq[String]] = queries.map { case (q, t) =>
@@ -614,45 +613,32 @@ object Retrieval {
     val topPairsDf = topPairs.toDF("query_id", "word")
     val wSeed = Window.partitionBy(col("query_id"))
       .orderBy(col("contrib").desc, col("doc_id"))
-    val candRows0 = readPostings(topPairs.map(_._2))
+    val candRows = readPostings(topPairs.map(_._2))
       .join(broadcast(topPairsDf), "word")
       .withColumn("_r", row_number().over(wSeed))
       .filter(col("_r") <= k)
-      .select(col("query_id"), col("doc_id"), col("contrib"),
-        col("_r")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDecimal(2),
-        r.getInt(3)))
-    val candRows = candRows0.map(t => (t._1, t._2))
-    // (3) θ — two strategies, both exact LOWER bounds of the true
-    // k-th score (pruning with a lower bound is always lossless):
-    //  - thetaExact: the k-th best FULL candidate score, from one
-    //    doc-filtered read over the query buckets (tightest θ, one
-    //    extra read);
-    //  - free θ: the k-th best TOP-TERM contribution, already in the
-    //    seed collect (a doc's full score ≥ its top-term contrib —
-    //    weaker θ, zero extra reads; the right trade when the query
-    //    buckets are large and selectivity is high anyway).
+      .select(col("query_id"), col("doc_id")).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    // (3) θ = the k-th best FULL candidate score, from one
+    // doc-filtered read over the query buckets — an exact LOWER bound
+    // of the true k-th score (pruning with a lower bound is lossless)
     val candIds = candRows.map(_._2).distinct.toSeq
     val candPairsDf = candRows.toSeq.toDF("query_id", "doc_id")
     val qtAll = queryTerms(spark, queries)
     val wTheta = Window.partitionBy(col("query_id"))
       .orderBy(col("cscore").desc, col("doc_id"))
     val thetaRows: Map[Long, java.math.BigDecimal] =
-      if (thetaExact)
-        readPostings(words)
-          .where(col("doc_id").isin(candIds: _*))
-          .join(broadcast(qtAll), "word")
-          .join(broadcast(candPairsDf), Seq("query_id", "doc_id"),
-            "left_semi")
-          .groupBy(col("query_id"), col("doc_id"))
-          .agg(sum(col("contrib")).as("cscore"))
-          .withColumn("_r", row_number().over(wTheta))
-          .filter(col("_r") === k)
-          .select(col("query_id"), col("cscore")).collect()
-          .map(r => r.getLong(0) -> r.getDecimal(1)).toMap
-      else
-        candRows0.collect { case (q, _, c, r) if r == k => q -> c }
-          .toMap
+      readPostings(words)
+        .where(col("doc_id").isin(candIds: _*))
+        .join(broadcast(qtAll), "word")
+        .join(broadcast(candPairsDf), Seq("query_id", "doc_id"),
+          "left_semi")
+        .groupBy(col("query_id"), col("doc_id"))
+        .agg(sum(col("contrib")).as("cscore"))
+        .withColumn("_r", row_number().over(wTheta))
+        .filter(col("_r") === k)
+        .select(col("query_id"), col("cscore")).collect()
+        .map(r => r.getLong(0) -> r.getDecimal(1)).toMap
     // (4) essential terms per query — exact BigDecimal suffix sums
     val essPairs: Seq[(Long, String)] = termsByQ.toSeq.flatMap {
       case (q, ts) =>

@@ -592,12 +592,6 @@ object Similarity {
     marginTail(simMicro(crossScores(left, right, idCol, embCol))
       .persist(StorageLevel.MEMORY_AND_DISK), k)
 
-  /** `df` persisted MEMORY_AND_DISK when `cache` — the operators'
-    * shared-frame contract: a frame read by several plan branches is
-    * computed once. */
-  private def persistIf(cache: Boolean)(df: DataFrame): DataFrame =
-    if (cache) df.persist(StorageLevel.MEMORY_AND_DISK) else df
-
   /** `(left_id, right_id, sim_micro)` of a scored cross-corpus pair
     * stream `(left_id, right_id, sim)`. */
   private def simMicro(scored: DataFrame): DataFrame =
@@ -1228,32 +1222,16 @@ object Similarity {
   def semDedup(
       df: DataFrame, threshold: Double, nCentroids: Int,
       idCol: String = "vec_id", embCol: String = "embedding",
-      cache: Boolean = true, trainIters: Int = 0): DataFrame =
-    semDedupReleasable(df, threshold, nCentroids, idCol, embCol,
-      cache, trainIters)._1
-
-  /** [[semDedup]] plus a [[CacheHandle]] that unpersists the operator's
-    * cached assignment frame — the enforceable form of the cache
-    * contract for long-lived sessions streaming many corpora: consume
-    * the result, then `close()` the handle (idempotent) instead of
-    * relying on session-level `clearCache()`.
-    */
-  def semDedupReleasable(
-      df: DataFrame, threshold: Double, nCentroids: Int,
-      idCol: String = "vec_id", embCol: String = "embedding",
-      cache: Boolean = true,
-      trainIters: Int = 0): (DataFrame, CacheHandle) = {
+      trainIters: Int = 0): DataFrame = {
     val cen = coarseCentroids(df, nCentroids, trainIters, idCol, embCol)
     // the assignment frame feeds both self-join branches and the final
     // verdict join — persist so the centroid scoring runs once, not 3×.
     // CacheManager keys on the canonical plan, so repeat calls over the
-    // SAME corpus share the entry — but distinct corpora each add one,
-    // so long-lived sessions streaming many corpora through should pass
-    // cache=false and own persist/unpersist themselves (the release-
-    // point discipline Freq.heavyHitterCounts documents). With the
-    // default, spark.catalog.clearCache() after consuming the result
-    // releases the entry (what Bench/Verify do between queries).
-    val a = persistIf(cache)(assignCells(df, cen, idCol, embCol))
+    // SAME corpus share the entry; each distinct corpus adds one, and
+    // spark.catalog.clearCache() after consuming the result releases
+    // them (what Bench/Verify do between queries)
+    val a = assignCells(df, cen, idCol, embCol)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val np = df.sparkSession.sparkContext.defaultParallelism
     val ap = a.repartition(np, col("cell"))
     // "y has a lower-id near-identical neighbor x in its cell" ⇒ y is
@@ -1267,11 +1245,9 @@ object Similarity {
       .filter(cos6("x._ed", "y._ed", "x.nrm", "y.nrm") >= threshold)
       .select(col("y.id").as("id")).distinct()
       .withColumn("semdup", lit(true))
-    val result = a.join(dups, Seq("id"), "left")
+    a.join(dups, Seq("id"), "left")
       .select(col("id").as(idCol), col("cell"),
         coalesce(col("semdup"), lit(false)).as("semdup"))
-    (result,
-      if (cache) new CacheHandle(Seq(a)) else CacheHandle.empty)
   }
 
   /** kNN label propagation (auto-labeling): classify each query vector
@@ -1328,7 +1304,7 @@ object Similarity {
     ivfPqSearch(queries,
       ivfPqIndex(candidates, nCells, dims, m, nCentroids, idCol, embCol,
         trainIters),
-      k, nprobe, dims, m, idCol, embCol)
+      k, nprobe, idCol, embCol)
 
   /** The three materializable artifacts of an IVF-PQ index — the
     * build-once/search-many deployment shape: `build` writes them as
@@ -1482,14 +1458,15 @@ object Similarity {
     * [[IvfPqIndex]] (`path/drift_meta`, one row): the build corpus's
     * [[pqDistortionStats]] under the index's own codebook. Written
     * once at build; [[ivfPqDriftStats]] compares every append batch
-    * against it. */
+    * against it. The geometry (`dims`, `m`) comes from the index's
+    * manifest. */
   def writeIvfPqDriftBaseline(spark: org.apache.spark.sql.SparkSession,
-      path: String, trainVecs: DataFrame, dims: Int, m: Int,
+      path: String, trainVecs: DataFrame,
       idCol: String = "vec_id", embCol: String = "embedding"): Unit = {
+    val man = graft.sink.IndexManifest.latest(spark, path)
     val stats = pqDistortionStats(trainVecs,
-      spark.read.parquet(
-        graft.sink.IndexLayout.resolve(spark, path, "codebook")),
-      dims, m, idCol, embCol)
+      spark.read.parquet(graft.sink.IndexLayout.dir(path, man, "codebook")),
+      man.params("dims"), man.params("m"), idCol, embCol)
     // versioned rewrite like every other subtree (build beside, commit
     // by pointer): an in-place overwrite would hand a concurrent
     // ivfPqDriftStats reader a missing/partial dir, and after a
@@ -1521,9 +1498,10 @@ object Similarity {
     * corpora the way an absolute distortion cannot. The stat is cheap
     * enough to run on EVERY append (increment-sized), which is the
     * point: the expensive alternative — q342's dual-index recall
-    * measurement — is the calibration run, not the nightly check. */
+    * measurement — is the calibration run, not the nightly check. The
+    * geometry (`dims`, `m`) comes from the index's manifest. */
   def ivfPqDriftStats(spark: org.apache.spark.sql.SparkSession,
-      path: String, appended: DataFrame, dims: Int, m: Int,
+      path: String, appended: DataFrame,
       idCol: String = "vec_id", embCol: String = "embedding")
       : DataFrame = {
     val man = graft.sink.IndexManifest.latest(spark, path)
@@ -1531,8 +1509,8 @@ object Similarity {
     val base = spark.read.parquet(sub("drift_meta"))
       .select(col("n_vecs").as("n_train"),
         col("mean_distortion_micro").as("base_mean_micro"))
-    pqDistortionStats(appended,
-        spark.read.parquet(sub("codebook")), dims, m, idCol, embCol)
+    pqDistortionStats(appended, spark.read.parquet(sub("codebook")),
+        man.params("dims"), man.params("m"), idCol, embCol)
       .select(col("n_vecs").as("n_appended"),
         col("mean_distortion_micro").as("appended_mean_micro"))
       .crossJoin(broadcast(base))
@@ -1626,12 +1604,12 @@ object Similarity {
     * parquet-read).
     */
   def ivfPqSearch(queries: DataFrame, index: IvfPqIndex, k: Int,
-      nprobe: Int, dims: Int, m: Int, idCol: String = "vec_id",
+      nprobe: Int, idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
     val probes = probeCells(queries, idCol, embCol, index.cells, nprobe)
       .select(col("query_id"), col("cell"))
-    val table = adcTable(pqSubvectors(queries, dims, m, idCol, embCol,
-      "query_id", "qv"), index.codebook, "query_id", "j")
+    val table = adcTable(pqSubvectors(queries, index.dims, index.m, idCol,
+      embCol, "query_id", "qv"), index.codebook, "query_id", "j")
     adcTopK(index.codes
       .join(broadcast(probes), Seq("cell"))
       .filter(col("query_id") =!= col("id"))
@@ -1730,30 +1708,18 @@ object Similarity {
   def lshNearDupPairs(
       df: DataFrame, threshold: Double, tables: Int, planesPerTable: Int,
       dims: Int, idCol: String = "vec_id",
-      embCol: String = "embedding", cache: Boolean = true): DataFrame =
-    lshNearDupPairsReleasable(df, threshold, tables, planesPerTable,
-      dims, idCol, embCol, cache)._1
-
-  /** [[lshNearDupPairs]] plus a [[CacheHandle]] over the two persisted
-    * frames (vector frame + bucket assignments) — the enforceable
-    * release point for long-lived sessions; see [[semDedupReleasable]].
-    */
-  def lshNearDupPairsReleasable(
-      df: DataFrame, threshold: Double, tables: Int, planesPerTable: Int,
-      dims: Int, idCol: String = "vec_id",
-      embCol: String = "embedding",
-      cache: Boolean = true): (DataFrame, CacheHandle) = {
+      embCol: String = "embedding"): DataFrame = {
     // Both the (id, e, nrm) frame and the bucket assignments are read
     // multiple times by the self-join diamond below; persisting them (one
     // small row per vector / per vector×table) means the `tables × planes`
     // dot products against the hyperplanes run once, not once per plan
-    // branch. Cached entries live until session end (CacheManager keys
-    // on the canonical plan, so repeat calls reuse rather than pile up);
-    // pass cache=false in long-lived sessions that stream many distinct
-    // corpora through this operator.
-    val b = persistIf(cache)(graft.Tables.rebalance(
+    // branch. Cached entries live until spark.catalog.clearCache() or
+    // session end (CacheManager keys on the canonical plan, so repeat
+    // calls over one corpus reuse rather than pile up).
+    val b = graft.Tables.rebalance(
       df.select(col(idCol).as("id"), col(embCol).as("e")))
-      .withColumn("nrm", sqrt(norm2(col("e")))))
+      .withColumn("nrm", sqrt(norm2(col("e"))))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // The explicit fixed-width repartition on the join key is load-bearing
     // at scale: the bucket rows themselves are tiny, so AQE would coalesce
     // the self-join's input shuffles down to one partition — and the join
@@ -1764,10 +1730,10 @@ object Similarity {
     // single-task stage to seconds). The join reuses this partitioning,
     // so no extra exchange is introduced.
     val np = df.sparkSession.sparkContext.defaultParallelism
-    val bucketed = persistIf(cache)(
-      lshBuckets(b, "id", "e", tables, planesPerTable, dims)
-        .repartition(np, col("t"), col("bk")))
-    val result = bucketed.as("a").join(bucketed.as("b"), Seq("t", "bk"))
+    val bucketed = lshBuckets(b, "id", "e", tables, planesPerTable, dims)
+      .repartition(np, col("t"), col("bk"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    bucketed.as("a").join(bucketed.as("b"), Seq("t", "bk"))
       .filter(col("a.id") < col("b.id"))
       .select(col("a.id").as("da"), col("b.id").as("db"))
       .distinct()
@@ -1776,8 +1742,6 @@ object Similarity {
       .select(col("da"), col("db"),
         cos6("ea.e", "eb.e", "ea.nrm", "eb.nrm").as("sim"))
       .filter(col("sim") >= threshold)
-    (result,
-      if (cache) new CacheHandle(Seq(b, bucketed)) else CacheHandle.empty)
   }
 
   /** Simplified silhouette per cell (Hruschka et al.: centroid

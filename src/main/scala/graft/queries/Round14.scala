@@ -517,7 +517,7 @@ object Round14 {
           s, outDir.getAbsolutePath)
         graft.operators.Similarity.ivfPqSearch(
             emb.filter(col("vec_id") < 12), index,
-            k = 5, nprobe = 2, dims = 64, m = 8)
+            k = 5, nprobe = 2)
           .orderBy(col("query_id"), col("rank"))
       },
       Some(oIvfPqTopK(exclude = " AND c.id % 4 != 1"))),
@@ -549,7 +549,7 @@ object Round14 {
         def arm(name: String,
             idx: graft.operators.Similarity.IvfPqIndex) =
           graft.operators.Similarity.ivfPqSearch(queries, idx, k = 5,
-              nprobe = 2, dims = 64, m = 8)
+              nprobe = 2)
             .select(col("query_id").as("qid"), col("neighbor_id"))
             .join(broadcast(truth),
               col("qid") === col("query_id") &&

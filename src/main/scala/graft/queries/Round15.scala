@@ -126,10 +126,10 @@ object Round15 {
           .write(outDir.getAbsolutePath)
         graft.operators.Similarity.writeIvfPqDriftBaseline(
           s, outDir.getAbsolutePath,
-          emb.where(col("vec_id") % 2 === 0), dims = 64, m = 8)
+          emb.where(col("vec_id") % 2 === 0))
         graft.operators.Similarity.ivfPqDriftStats(
           s, outDir.getAbsolutePath,
-          emb.where(col("vec_id") % 2 === 1), dims = 64, m = 8)
+          emb.where(col("vec_id") % 2 === 1))
       },
       Some(
         s"""WITH e AS MATERIALIZED (SELECT vec_id,
@@ -306,7 +306,7 @@ object Round15 {
             mutated.filter(col("vec_id") < 12),
             graft.operators.Similarity.IvfPqIndex.read(
               s, outDir.getAbsolutePath),
-            k = 5, nprobe = 2, dims = 64, m = 8)
+            k = 5, nprobe = 2)
           .orderBy(col("query_id"), col("rank"))
       },
       Some(oAnnUpsert))

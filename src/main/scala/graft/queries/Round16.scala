@@ -205,28 +205,26 @@ object Round16 {
         val odd = emb.where(col("vec_id") % 2 === 1)
         Similarity.ivfPqIndex(even, nCells = 8, dims = 64, m = 8,
           nCentroids = 16).write(p)
-        Similarity.writeIvfPqDriftBaseline(s, p, even, dims = 64,
-          m = 8)
+        Similarity.writeIvfPqDriftBaseline(s, p, even)
         val ivf = Similarity.ivfPqFamily()
         ivf.append(p, odd)
         ivf.delete(p, odd.where(col("vec_id") === 3).select(col("vec_id")))
         // the trigger: the appended half's distortion under yesterday's
         // codebook (q347 measured 1.084M ppm on this exact split —
         // past the calibrated 1.04M alert threshold)
-        Similarity.ivfPqDriftStats(s, p, odd, dims = 64, m = 8)
+        Similarity.ivfPqDriftStats(s, p, odd)
           .collect()
         // the action: retrain over the LIVE corpus, atomic swap
         Similarity.retrainIvfPqIndex(s, p, emb, nCells = 8, dims = 64,
           m = 8, nCentroids = 16)
         // the refreshed baseline must be exact
-        val after = Similarity.ivfPqDriftStats(s, p, emb, dims = 64,
-          m = 8).collect()(0).getLong(4)
+        val after = Similarity.ivfPqDriftStats(s, p, emb)
+          .collect()(0).getLong(4)
         require(after == 1000000L,
           s"retrain did not reset the drift baseline: $after ppm")
         // serve from the swapped artifacts: ≡ a fresh q87 build
         Similarity.ivfPqSearch(emb.filter(col("vec_id") < 12),
-            Similarity.IvfPqIndex.read(s, p), k = 5, nprobe = 2,
-            dims = 64, m = 8)
+            Similarity.IvfPqIndex.read(s, p), k = 5, nprobe = 2)
           .orderBy(col("query_id"), col("rank"))
       },
       Some(oIvfPqTopK())),

@@ -95,7 +95,7 @@ object Round17 {
         graft.operators.Similarity.ivfPqSearch(
             mutated.filter(col("vec_id") < 12),
             graft.operators.Similarity.IvfPqIndex.read(s, p),
-            k = 5, nprobe = 2, dims = 64, m = 8)
+            k = 5, nprobe = 2)
           .orderBy(col("query_id"), col("rank"))
       },
       Some(oAnnUpsert)),

@@ -100,12 +100,12 @@ object Round2 {
     QueryDef("q55_decontaminate",
       (s, dir) => {
         // The bench and candidate branches both read the shingle set —
-        // persisted (inside hashedShingleSet), the corpus is shingled
-        // once, not twice, the join/count key is an 8-byte long
-        // (smaller broadcast table, cheaper probes), and the oracle
-        // replays the same hash family.
+        // persisted, the corpus is shingled once, not twice, the
+        // join/count key is an 8-byte long (smaller broadcast table,
+        // cheaper probes), and the oracle replays the same hash family.
         val sh = Dedup.hashedShingleSet(t("documents")(s, dir),
-          "doc_id", "text", n = 8, cache = true)
+            "doc_id", "text", n = 8)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val bench = sh.filter(col("doc_id") % 7 === 0)
           .select(col("doc_id").as("bench_id"), col("h"))
         val cand = sh.filter(col("doc_id") % 7 =!= 0)

@@ -188,7 +188,7 @@ object Round7 {
           .write(outDir.getAbsolutePath)
         val index = Similarity.IvfPqIndex.read(s, outDir.getAbsolutePath)
         Similarity.ivfPqSearch(emb.filter(col("vec_id") < 12), index,
-            k = 5, nprobe = 2, dims = 64, m = 8)
+            k = 5, nprobe = 2)
           .orderBy(col("query_id"), col("rank"))
       },
       // the persisted index must reproduce the live q87 pipeline

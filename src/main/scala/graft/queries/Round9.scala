@@ -251,7 +251,7 @@ object Round9 {
             m = 8, nCentroids = 16)
           .append(fresh)
         Similarity.ivfPqSearch(emb.filter(col("vec_id") < 12), idx,
-            k = 5, nprobe = 2, dims = 64, m = 8)
+            k = 5, nprobe = 2)
           .orderBy(col("query_id"), col("rank"))
       },
       Some(s"""WITH ${oSeededCells("WHERE vec_id % 5 != 0 ")},

@@ -29,6 +29,12 @@ object Sources {
     * `spark.sql.caseSensitive`), or the scan fails — a misnamed, missing
     * or extra column never silently shifts values into the wrong column.
     * Empty (the default) reads the names from the header at plan time.
+    *
+    * UTF-16 files are read in multiLine mode: the default line split
+    * happens on raw 0x0A bytes, which shears the two-byte UTF-16 code
+    * units (a UTF-16LE file then fails the FAILFAST read, a UTF-16BE one
+    * gains a U+FFFD at the end of every row) before decoding; multiLine
+    * decodes the stream with the charset first.
     */
   def csv(
       spark: SparkSession,
@@ -36,12 +42,15 @@ object Sources {
       delimiter: String = ",",
       encoding: String = "UTF-8",
       columns: Seq[String] = Nil): DataFrame = {
-    val r = spark.read
+    val utf16 = java.nio.charset.Charset.forName(encoding).name
+      .startsWith("UTF-16")
+    val r0 = spark.read
       .option("header", "true")
       .option("inferSchema", "false")
       .option("delimiter", delimiter)
       .option("encoding", encoding)
       .option("mode", "FAILFAST")
+    val r = if (utf16) r0.option("multiLine", "true") else r0
     (if (columns.isEmpty) r
      else r.option("enforceSchema", "false")
        .schema(StructType(columns.map(StructField(_, StringType)))))
@@ -125,23 +134,10 @@ object Sources {
 
   /** [[csv]] with the encoding auto-detected from the file head — the
     * full CsvRowSource contract (S2) including chardet-style detection.
-    * UTF-16 files are read in multiLine mode: the default line-split
-    * happens on raw 0x0A bytes, which would shear the two-byte UTF-16
-    * code units (and strand the BOM) before decoding; multiLine decodes
-    * the stream with the charset first.
     */
   def csvAutoDetect(spark: SparkSession, path: String,
-      delimiter: String = ","): DataFrame = {
-    val enc = detectEncoding(path)
-    val base = spark.read
-      .option("header", "true")
-      .option("inferSchema", "false")
-      .option("delimiter", delimiter)
-      .option("encoding", enc)
-      .option("mode", "FAILFAST")
-    (if (enc.startsWith("UTF-16")) base.option("multiLine", "true")
-     else base).csv(path)
-  }
+      delimiter: String = ","): DataFrame =
+    csv(spark, path, delimiter, detectEncoding(path))
 
   /** Parquet scan — the native columnar source for this engine. */
   def parquet(spark: SparkSession, path: String): DataFrame =

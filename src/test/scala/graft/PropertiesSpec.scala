@@ -281,9 +281,9 @@ class PropertiesSpec extends SparkSpec {
           .map(_.toSeq).toSeq
       assert(
         canon(operators.Dedup.containmentPairsPrefix(docs, "doc_id",
-          "text", 3, t, cache = false)) ==
+          "text", 3, t)) ==
         canon(operators.Dedup.containmentPairs(docs, "doc_id",
-          "text", 3, t, cache = false)), s"t=$t texts=$texts")
+          "text", 3, t)), s"t=$t texts=$texts")
     }
   }
 

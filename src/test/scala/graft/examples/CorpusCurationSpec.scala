@@ -38,8 +38,7 @@ class CorpusCurationSpec extends SparkSpec {
     assert(curated.count() < docs.count())
     // and no surviving pair is >= threshold-similar
     val resid = graft.operators.Dedup.jaccardPairs(
-      curated.select("doc_id", "text"), "doc_id", "text", 3, 0.6,
-      cache = false)
+      curated.select("doc_id", "text"), "doc_id", "text", 3, 0.6)
     assert(resid.count() == 0)
   }
 

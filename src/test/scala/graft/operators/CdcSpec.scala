@@ -68,7 +68,7 @@ class CdcSpec extends SparkSpec {
       (3L, "completely different words entirely here now today")
     ).toDF("doc_id", "text")
     val cal = Dedup.lshCalibration(docs, "doc_id", "text", n = 3,
-        k = 16, bands = 4, cache = false)
+        k = 16, bands = 4)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     assert(cal.contains(10L), cal.toString) // the exact dup bucket

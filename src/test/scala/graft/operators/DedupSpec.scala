@@ -27,8 +27,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("jaccardPairs finds near and exact dups above threshold only") {
-    val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5,
-        cache = false)
+    val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5)
       .orderBy("da", "db").collect()
     val keys = pairs.map(r => (r.getLong(0), r.getLong(1))).toSeq
     // 9 words -> 7 3-shingles; docs 1/2 share 6 of 8 distinct -> J = 0.75
@@ -42,7 +41,7 @@ class DedupSpec extends SparkSpec {
 
   test("minhash signature of identical docs is identical; est_sim = 1") {
     val cand = Dedup.minhashCandidates(docs, "doc_id", "text",
-        n = 3, k = 16, bands = 4, minEst = 0.9, cache = false)
+        n = 3, k = 16, bands = 4, minEst = 0.9)
       .collect()
     val exact = cand.find(r => r.getLong(0) == 1L && r.getLong(1) == 4L)
     assert(exact.isDefined && exact.get.getAs[Double]("est_sim") == 1.0)
@@ -56,8 +55,7 @@ class DedupSpec extends SparkSpec {
       (101L, "nothing like anything in this corpus at all")
     ).toDF("doc_id", "text")
     val out = Dedup.minhashCrossCandidates(newShard, docs,
-      "doc_id", "text", n = 3, k = 16, bands = 4, minEst = 0.9,
-      cache = false)
+      "doc_id", "text", n = 3, k = 16, bands = 4, minEst = 0.9)
     val got = out.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     // doc 100 ≡ corpus docs 1 and 4 (identical text → est 1.0);
@@ -93,7 +91,7 @@ class DedupSpec extends SparkSpec {
 
   test("simhash: identical docs at hamming 0; near-dups within budget") {
     val pairs = Dedup.simhashPairs(docs, "doc_id", "text", 3,
-        maxHamming = 10, cache = false)
+        maxHamming = 10)
       .orderBy("da", "db").collect()
     val h14 = pairs.find(r => r.getLong(0) == 1L && r.getLong(1) == 4L).get
     assert(h14.getAs[Long]("hamming") == 0L)
@@ -199,7 +197,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("shingleSet: per-doc distinct, correct count, no duplicates") {
-    val sh = Dedup.shingleSet(docs, "doc_id", "text", 3, cache = false)
+    val sh = Dedup.shingleSet(docs, "doc_id", "text", 3)
     val counts = sh.groupBy("doc_id").count().orderBy("doc_id").collect()
     // "the quick brown fox jumps over the lazy dog": 7 shingles, all
     // distinct
@@ -309,7 +307,7 @@ class DedupSpec extends SparkSpec {
       c == 1L && big == 2L && v == 1.0 })
     // symmetric Jaccard at the same bar finds NOTHING for this pair
     val jac = Dedup.jaccardPairs(docs, "doc_id", "text", n = 3,
-      threshold = 0.9, cache = false).collect()
+      threshold = 0.9).collect()
     assert(!jac.exists(r => r.getLong(0) == 1L && r.getLong(1) == 2L))
   }
 
@@ -343,9 +341,9 @@ class DedupSpec extends SparkSpec {
           r.getLong(3), r.getLong(4), r.getDouble(5))).toSeq
     for (t <- Seq(0.5, 0.8, 0.95)) {
       val naive = canon(Dedup.containmentPairs(quoteCorpus, "doc_id",
-        "text", n = 3, threshold = t, cache = false))
+        "text", n = 3, threshold = t))
       val pfx = canon(Dedup.containmentPairsPrefix(quoteCorpus,
-        "doc_id", "text", n = 3, threshold = t, cache = false))
+        "doc_id", "text", n = 3, threshold = t))
       assert(pfx == naive, s"prefix != naive at t=$t")
       assert(naive.nonEmpty, s"degenerate fixture at t=$t")
     }
@@ -364,17 +362,15 @@ class DedupSpec extends SparkSpec {
     for (t <- Seq(0.5, 0.8)) {
       assert(
         canonJ(Dedup.jaccardPairsPrefix(quoteCorpus, "doc_id", "text",
-          n = 3, threshold = t, cache = false, nativePrefix = true)) ==
+          n = 3, threshold = t, nativePrefix = true)) ==
         canonJ(Dedup.jaccardPairsPrefix(quoteCorpus, "doc_id", "text",
-          n = 3, threshold = t, cache = false, nativePrefix = false)),
+          n = 3, threshold = t, nativePrefix = false)),
         s"jaccard native != declarative at t=$t")
       assert(
         canonC(Dedup.containmentPairsPrefix(quoteCorpus, "doc_id",
-          "text", n = 3, threshold = t, cache = false,
-          nativePrefix = true)) ==
+          "text", n = 3, threshold = t, nativePrefix = true)) ==
         canonC(Dedup.containmentPairsPrefix(quoteCorpus, "doc_id",
-          "text", n = 3, threshold = t, cache = false,
-          nativePrefix = false)),
+          "text", n = 3, threshold = t, nativePrefix = false)),
         s"containment native != declarative at t=$t")
     }
   }
@@ -390,21 +386,19 @@ class DedupSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4), r.getDouble(5))).toSeq
     val ranked = Dedup.rankedShingleRows(quoteCorpus, "doc_id", "text",
-      n = 3, cache = false).localCheckpoint()
+      n = 3).localCheckpoint()
     for (t <- Seq(0.5, 0.8)) {
       assert(
         canonJ(Dedup.jaccardPairsPrefix(quoteCorpus, "doc_id", "text",
-          n = 3, threshold = t, cache = false,
-          ranked = Some(ranked))) ==
+          n = 3, threshold = t, ranked = Some(ranked))) ==
         canonJ(Dedup.jaccardPairsPrefix(quoteCorpus, "doc_id", "text",
-          n = 3, threshold = t, cache = false)),
+          n = 3, threshold = t)),
         s"jaccard artifact != self-built at t=$t")
       assert(
         canonC(Dedup.containmentPairsPrefix(quoteCorpus, "doc_id",
-          "text", n = 3, threshold = t, cache = false,
-          rankedIn = Some(ranked))) ==
+          "text", n = 3, threshold = t, rankedIn = Some(ranked))) ==
         canonC(Dedup.containmentPairsPrefix(quoteCorpus, "doc_id",
-          "text", n = 3, threshold = t, cache = false)),
+          "text", n = 3, threshold = t)),
         s"containment artifact != self-built at t=$t")
     }
     // the artifact itself: pos is a 1..n permutation per doc, n is the
@@ -422,14 +416,14 @@ class DedupSpec extends SparkSpec {
   test("containmentPairs maxShingleDf: capped run reports lower-bound " +
       "containment over exact sizes; drops only stop-shingle overlap") {
     val un = Dedup.containmentPairs(quoteCorpus, "doc_id", "text",
-        n = 3, threshold = 0.5, cache = false)
+        n = 3, threshold = 0.5)
       .collect().map(r => ((r.getLong(0), r.getLong(1)),
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5))))
       .toMap
     // cap at 3: the 6-doc boilerplate header shingles are dropped from
     // candidate generation/intersection; quote shingles (df ≤ 3) stay
     val capped = Dedup.containmentPairs(quoteCorpus, "doc_id", "text",
-        n = 3, threshold = 0.5, maxShingleDf = Some(3), cache = false)
+        n = 3, threshold = 0.5, maxShingleDf = Some(3))
       .collect().map(r => ((r.getLong(0), r.getLong(1)),
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5))))
       .toMap
@@ -456,8 +450,7 @@ class DedupSpec extends SparkSpec {
       (2L, "a b c d e f g h"),      // exact copy → novelty 0
       (3L, "a b c d x y z w v u"))  // shares prefix shingles
       .toDF("doc_id", "text")
-    val got = Dedup.noveltyRates(docs, "doc_id", "text", n = 3,
-        cache = false)
+    val got = Dedup.noveltyRates(docs, "doc_id", "text", n = 3)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got(1L) == ((6L, 6L, 1000000L)))
@@ -597,7 +590,7 @@ class DedupSpec extends SparkSpec {
     val inc = all.where(col("doc_id") >= 5)
     // full-rebuild truth, restricted to pairs touching the increment
     val truth = Dedup.jaccardPairsPrefix(all, "doc_id", "text",
-        n = 3, threshold = 0.5, cache = false)
+        n = 3, threshold = 0.5)
       .where(col("da") >= 5 || col("db") >= 5)
       .orderBy("da", "db").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -637,7 +630,7 @@ class DedupSpec extends SparkSpec {
     assert(got.forall { case (a, b) => a >= 5 || b >= 5 })
     // and the increment-touching set matches the full-rebuild truth
     val truth = Dedup.jaccardPairsPrefix(all, "doc_id", "text",
-        n = 3, threshold = 0.5, cache = false)
+        n = 3, threshold = 0.5)
       .where(col("da") >= 5 || col("db") >= 5)
       .orderBy("da", "db").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -658,7 +651,7 @@ class DedupSpec extends SparkSpec {
       all.where(col("doc_id") === 2).select(col("doc_id")))
     val truth = Dedup.jaccardPairsPrefix(
         all.where(col("doc_id") =!= 2), "doc_id", "text",
-        n = 3, threshold = 0.5, cache = false)
+        n = 3, threshold = 0.5)
       .where(col("da") >= 5 || col("db") >= 5)
       .orderBy("da", "db").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -696,7 +689,7 @@ class DedupSpec extends SparkSpec {
       Dedup.shingleFamily().upsert(dir, recrawl)
       val mutated = all.where(col("doc_id") =!= 3).unionAll(recrawl)
       val truth = Dedup.jaccardPairsPrefix(mutated, "doc_id", "text",
-          n = 3, threshold = 0.5, cache = false)
+          n = 3, threshold = 0.5)
         .where(col("da") === 3 || col("db") === 3)
         .orderBy("da", "db").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -740,7 +733,7 @@ class DedupSpec extends SparkSpec {
         df.orderBy("da", "db").collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
       val truth = canon(Dedup.substringCandidates(mutated, "doc_id",
-          "text", k = 25, w = 10, minShared = 1, cache = false)
+          "text", k = 25, w = 10, minShared = 1)
         .where(col("da") === 6 || col("db") === 6))
       assert(truth.nonEmpty)
       assert(canon(Dedup.substringCandidatesAgainstIndex(spark, dir,
@@ -761,7 +754,7 @@ class DedupSpec extends SparkSpec {
         df.orderBy("da", "db").collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
       val truth = canon(Dedup.substringCandidates(all, "doc_id",
-          "text", k = 25, w = 10, minShared = 1, cache = false)
+          "text", k = 25, w = 10, minShared = 1)
         .where(col("da") >= 5 || col("db") >= 5))
       assert(truth.nonEmpty) // 2 and 5 share a long substring
       val got = canon(Dedup.substringCandidatesAgainstIndex(spark, dir,
@@ -773,7 +766,7 @@ class DedupSpec extends SparkSpec {
         all.where(col("doc_id") === 2).select(col("doc_id")))
       val truth2 = canon(Dedup.substringCandidates(
           all.where(col("doc_id") =!= 2), "doc_id", "text",
-          k = 25, w = 10, minShared = 1, cache = false)
+          k = 25, w = 10, minShared = 1)
         .where(col("da") >= 5 || col("db") >= 5))
       assert(canon(Dedup.substringCandidatesAgainstIndex(spark, dir,
         minShared = 1, all.where(col("doc_id") >= 5)

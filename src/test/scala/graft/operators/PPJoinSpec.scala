@@ -29,10 +29,9 @@ class PPJoinSpec extends SparkSpec {
   test("prefix-pruned join ≡ unpruned join on the hand corpus, all thresholds") {
     for (t <- Seq(0.3, 0.5, 0.6, 0.75, 1.0)) {
       val naive = collectPairs(
-        Dedup.jaccardPairs(docs, "doc_id", "text", 3, t, cache = false))
+        Dedup.jaccardPairs(docs, "doc_id", "text", 3, t))
       val pruned = collectPairs(
-        Dedup.jaccardPairsPrefix(docs, "doc_id", "text", 3, t,
-          cache = false))
+        Dedup.jaccardPairsPrefix(docs, "doc_id", "text", 3, t))
       assert(pruned == naive, s"threshold $t")
     }
   }
@@ -40,15 +39,15 @@ class PPJoinSpec extends SparkSpec {
   test("prefix-pruned join ≡ unpruned join on real documents at sf0.001") {
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val naive = collectPairs(
-      Dedup.jaccardPairs(d, "doc_id", "text", 3, 0.5, cache = false))
+      Dedup.jaccardPairs(d, "doc_id", "text", 3, 0.5))
     val pruned = collectPairs(
-      Dedup.jaccardPairsPrefix(d, "doc_id", "text", 3, 0.5, cache = false))
+      Dedup.jaccardPairsPrefix(d, "doc_id", "text", 3, 0.5))
     assert(pruned.nonEmpty && pruned == naive)
   }
 
   test("threshold 1.0 still finds exact duplicates (prefix collapses to 1)") {
     val out = collectPairs(Dedup.jaccardPairsPrefix(
-      docs, "doc_id", "text", 3, 1.0, cache = false))
+      docs, "doc_id", "text", 3, 1.0))
     assert(out.map(p => (p._1, p._2)) == Seq((1L, 4L)))
     assert(out.head._4 == 1.0)
   }
@@ -77,8 +76,7 @@ class PPJoinSpec extends SparkSpec {
       if j >= t
     } yield (ia, ib, inter.toLong)).sorted
     val got = collectPairs(Dedup.jaccardPairsPrefix(
-        corpus.toDF("doc_id", "text"), "doc_id", "text", 3, t,
-        cache = false))
+        corpus.toDF("doc_id", "text"), "doc_id", "text", 3, t))
       .map(p => (p._1, p._2, p._3)).sorted
     assert(got == expected)
   }

@@ -180,8 +180,7 @@ class QuantizeSpec extends SparkSpec {
       Similarity.ivfPqIndex(emb, nCells = 8, dims = 64, m = 8,
         nCentroids = 16).write(dir.getAbsolutePath)
       val idx = Similarity.IvfPqIndex.read(spark, dir.getAbsolutePath)
-      val persisted = Similarity.ivfPqSearch(q, idx, k = 5, nprobe = 2,
-          dims = 64, m = 8)
+      val persisted = Similarity.ivfPqSearch(q, idx, k = 5, nprobe = 2)
         .orderBy("query_id", "rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
           r.getLong(3)))
@@ -241,10 +240,10 @@ class QuantizeSpec extends SparkSpec {
     val full = Similarity.ivfPqIndex(emb, nCells = 8, dims = 64,
       m = 8, nCentroids = 16)
     val q = emb.filter(col("vec_id") < 6)
-    val a = Similarity.ivfPqSearch(q, appended, k = 5, nprobe = 2,
-      dims = 64, m = 8).orderBy("query_id", "rank").collect()
-    val b = Similarity.ivfPqSearch(q, full, k = 5, nprobe = 2,
-      dims = 64, m = 8).orderBy("query_id", "rank").collect()
+    val a = Similarity.ivfPqSearch(q, appended, k = 5, nprobe = 2)
+      .orderBy("query_id", "rank").collect()
+    val b = Similarity.ivfPqSearch(q, full, k = 5, nprobe = 2)
+      .orderBy("query_id", "rank").collect()
     assert(a.toSeq == b.toSeq)
     // and the appended code stream covers the whole corpus
     assert(appended.codes.select("id").distinct().count() == emb.count())

@@ -426,8 +426,6 @@ class RetrievalSpec extends SparkSpec {
       assert(canonTopK(
         Retrieval.bm25TopKPrunedFromIndex(spark, dir, queries, k))
         == adhoc)
-      assert(canonTopK(Retrieval.bm25TopKPrunedFromIndex(
-        spark, dir, queries, k, thetaExact = false)) == adhoc)
       // partition pruning evidence: the postings scan in the FromIndex
       // plan carries literal wbucket partition filters
       val plan = Retrieval.bm25TopKFromIndex(spark, dir, queries, k)

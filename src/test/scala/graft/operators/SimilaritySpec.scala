@@ -141,29 +141,6 @@ class SimilaritySpec extends SparkSpec {
     assert(top.nonEmpty && top.head.getAs[Long]("rank") == 1L)
   }
 
-  test("releasable variants return a CacheHandle that unpersists " +
-      "(idempotent close)") {
-    import org.apache.spark.storage.StorageLevel
-    val (sd, h1) = Similarity.semDedupReleasable(vecs, 0.99, 2)
-    sd.count()
-    assert(h1.frames.nonEmpty &&
-      h1.frames.forall(_.storageLevel != StorageLevel.NONE))
-    h1.close()
-    assert(h1.frames.forall(_.storageLevel == StorageLevel.NONE))
-    h1.close() // double-close is a no-op
-    val (pairs, h2) = Similarity.lshNearDupPairsReleasable(
-      vecs, 0.99, tables = 2, planesPerTable = 4, dims = 4)
-    pairs.count()
-    assert(h2.frames.size == 2 &&
-      h2.frames.forall(_.storageLevel != StorageLevel.NONE))
-    h2.close()
-    assert(h2.frames.forall(_.storageLevel == StorageLevel.NONE))
-    // cache=false → empty handle, nothing persisted
-    val (_, h3) = Similarity.semDedupReleasable(vecs, 0.99, 2,
-      cache = false)
-    assert(h3.frames.isEmpty)
-  }
-
   test("knnClassify takes the majority label, ties to the smaller") {
     import spark.implicits._
     val labeled = vecs.join(
@@ -603,7 +580,7 @@ class SimilaritySpec extends SparkSpec {
         emb.where(col("vec_id") % 3 === 1).select(col("vec_id")))
       def search() = Similarity.ivfPqSearch(
           emb.filter(col("vec_id") < 6), Similarity.IvfPqIndex.read(
-            spark, dir), k = 4, nprobe = 2, dims = 8, m = 2)
+            spark, dir), k = 4, nprobe = 2)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
           r.getLong(3))).sortBy(t => (t._1, t._4)).toSeq
@@ -646,7 +623,7 @@ class SimilaritySpec extends SparkSpec {
       def search() = Similarity.ivfPqSearch(
           mutated.filter(col("vec_id") < 6),
           Similarity.IvfPqIndex.read(spark, dir),
-          k = 4, nprobe = 2, dims = 8, m = 2)
+          k = 4, nprobe = 2)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
           r.getLong(3))).sortBy(t => (t._1, t._4)).toSeq
@@ -658,7 +635,7 @@ class SimilaritySpec extends SparkSpec {
         .append(mutated)
       def twin() = Similarity.ivfPqSearch(
           mutated.filter(col("vec_id") < 6), twinIdx,
-          k = 4, nprobe = 2, dims = 8, m = 2)
+          k = 4, nprobe = 2)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
           r.getLong(3))).sortBy(t => (t._1, t._4)).toSeq
@@ -697,7 +674,7 @@ class SimilaritySpec extends SparkSpec {
       ivf.append(dir, vecs(24 until 32))
       def search() = Similarity.ivfPqSearch(
           vecs(0 until 4), Similarity.IvfPqIndex.read(spark, dir),
-          k = 4, nprobe = 2, dims = 8, m = 2)
+          k = 4, nprobe = 2)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
           r.getLong(3))).sortBy(t => (t._1, t._4)).toSeq
@@ -709,7 +686,7 @@ class SimilaritySpec extends SparkSpec {
               dims = 8, m = 2, nCentroids = 4)
             .append(vecs(16 until 24))
             .append(vecs(24 until 32)),
-          k = 4, nprobe = 2, dims = 8, m = 2)
+          k = 4, nprobe = 2)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
           r.getLong(3))).sortBy(t => (t._1, t._4)).toSeq
@@ -739,23 +716,22 @@ class SimilaritySpec extends SparkSpec {
     try {
       Similarity.ivfPqIndex(train, nCells = 4, dims = 8, m = 2,
         nCentroids = 8).write(dir)
-      Similarity.writeIvfPqDriftBaseline(spark, dir, train,
-        dims = 8, m = 2)
+      Similarity.writeIvfPqDriftBaseline(spark, dir, train)
       // an append drawn from the SAME distribution barely drifts
       val same = Similarity.ivfPqDriftStats(spark, dir,
-        vecs(1 until 512 by 2, 0.0), dims = 8, m = 2).collect()(0)
+        vecs(1 until 512 by 2, 0.0)).collect()(0)
       val rSame = same.getLong(4)
       assert(rSame > 800000L && rSame < 1300000L,
         s"same-distribution ratio $rSame")
       // a distribution SHIFT quantizes much worse under frozen codes
       val shifted = Similarity.ivfPqDriftStats(spark, dir,
-        vecs(1 until 512 by 2, 3.0), dims = 8, m = 2).collect()(0)
+        vecs(1 until 512 by 2, 3.0)).collect()(0)
       val rShift = shifted.getLong(4)
       assert(rShift > 2 * rSame,
         s"shifted ratio $rShift vs same $rSame")
       // sanity: the baseline itself reads back exactly ratio = 1M
-      val self = Similarity.ivfPqDriftStats(spark, dir, train,
-        dims = 8, m = 2).collect()(0)
+      val self = Similarity.ivfPqDriftStats(spark, dir, train)
+        .collect()(0)
       assert(self.getLong(4) == 1000000L)
     } finally org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(dir))
@@ -780,8 +756,7 @@ class SimilaritySpec extends SparkSpec {
       val drifted = vecs(16 until 24, 2.0)
       Similarity.ivfPqIndex(old, nCells = 4, dims = 8, m = 2,
         nCentroids = 4).write(dir)
-      Similarity.writeIvfPqDriftBaseline(spark, dir, old, dims = 8,
-        m = 2)
+      Similarity.writeIvfPqDriftBaseline(spark, dir, old)
       ivf.append(dir, drifted)
       ivf.delete(dir, Seq(3L).toDF("vec_id"))
       val genBefore = graft.sink.IndexLayout.currentGen(spark, dir)
@@ -790,8 +765,7 @@ class SimilaritySpec extends SparkSpec {
       Similarity.retrainIvfPqIndex(spark, dir, live, nCells = 4,
         dims = 8, m = 2, nCentroids = 4)
       def search(idx: Similarity.IvfPqIndex) = Similarity.ivfPqSearch(
-          vecs(0 until 6, 0.0), idx, k = 4, nprobe = 2, dims = 8,
-          m = 2)
+          vecs(0 until 6, 0.0), idx, k = 4, nprobe = 2)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
           r.getLong(3))).sortBy(t => (t._1, t._4)).toSeq
@@ -813,8 +787,8 @@ class SimilaritySpec extends SparkSpec {
         .forall(_._2 != 5L))
       // the drift baseline was rewritten from the retrain corpus:
       // the live rows under the NEW codebook read exactly 1.0M ppm
-      val self = Similarity.ivfPqDriftStats(spark, dir, live,
-        dims = 8, m = 2).collect()(0)
+      val self = Similarity.ivfPqDriftStats(spark, dir, live)
+        .collect()(0)
       assert(self.getLong(4) == 1000000L,
         s"baseline not reset: ${self.getLong(4)} ppm")
     } finally org.apache.commons.io.FileUtils

@@ -77,6 +77,21 @@ class SourcesSpec extends SparkSpec {
     assert(df16.collect().map(_.getString(0)).toSeq == Seq("alpha", "beta"))
   }
 
+  test("csv scan: a declared UTF-16 encoding reads BOM-less BE and LE " +
+      "files into clean values") {
+    import java.nio.file.Files
+    for (enc <- Seq("UTF-16BE", "UTF-16LE")) {
+      val f = Files.createTempFile("graft-utf16", ".csv")
+      try {
+        Files.write(f, "name,val\nalpha,1\nbeta,2\n".getBytes(enc))
+        val df = Sources.csv(spark, f.toString, encoding = enc,
+          columns = Seq("name", "val"))
+        assert(df.collect().map(r => (r.getString(0), r.getString(1)))
+          .toSeq == Seq(("alpha", "1"), ("beta", "2")), enc)
+      } finally Files.delete(f)
+    }
+  }
+
   test("in-memory list source (sources/generic.py:30-42)") {
     val df = Sources.fromRows(spark, Seq("a", "b"),
       Seq(Seq("1", "x"), Seq("2", "y")))

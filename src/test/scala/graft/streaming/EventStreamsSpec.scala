@@ -697,7 +697,7 @@ class EventStreamsSpec extends SparkSpec {
       def search(d: String) = graft.operators.Similarity.ivfPqSearch(
           corpus.take(6).toDF("vec_id", "embedding"),
           graft.operators.Similarity.IvfPqIndex.read(spark, d),
-          k = 3, nprobe = 2, dims = dims, m = m)
+          k = 3, nprobe = 2)
         .collect().map(_.toSeq).toSeq
       // twin: the same three re-embeds as ONE batch upsert
       val twinDir = java.nio.file.Files
@@ -855,7 +855,7 @@ class EventStreamsSpec extends SparkSpec {
       def search(d: String) = graft.operators.Similarity.ivfPqSearch(
           seed.map(t => (t._1, t._3)).toDF("vec_id", "embedding"),
           graft.operators.Similarity.IvfPqIndex.read(spark, d),
-          k = 3, nprobe = 2, dims = dims, m = m)
+          k = 3, nprobe = 2)
         .collect().map(_.toSeq).toSeq
       assert(search(vqDir) == search(vqTwin))
     } finally (Seq(tfDir, shDir, fpDir, vqDir, ckpt) ++ twins)
