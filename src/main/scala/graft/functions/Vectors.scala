@@ -57,7 +57,7 @@ object VectorKernel {
     * must round per-pair scores identically to the declarative
     * `round(.., 6)` they replace, or a score on a rounding boundary
     * would flip an assignment. */
-  private def round6(v: Double): Double =
+  private[graft] def round6(v: Double): Double =
     if (java.lang.Double.isNaN(v) || java.lang.Double.isInfinite(v)) v
     else java.math.BigDecimal.valueOf(v)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()

@@ -1,9 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.math.{BigDecimal => JDecimal}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 
 /** Similarity search over embedding columns (`array<float>`).
   *
@@ -244,51 +247,59 @@ object Similarity {
     * as [[pqCentroids]]; empty codes drop (standard Lloyd), so a
     * subspace may end with fewer than `nCentroids` rows.
     *
-    * Scale shape: the subvector explode runs ONCE
-    * (`localCheckpoint`'d — m·N rows of dims/m-length arrays, the
-    * same width as the corpus); each iteration is one broadcast-
-    * assign pass (map-side min_by carrying the subvector through the
-    * buffer, the [[assignCells]] pattern) plus an
-    * (m·nCentroids·dims/m)-sized mean aggregation. The refreshed
-    * codebook COLLECTS to the driver — model-sized (m·nCentroids
-    * rows), like any k-means library — so the next iteration
-    * broadcasts literal centroids instead of growing a lineage chain.
-    * 6-decimal per-dimension rounding each iteration pins cross-
-    * engine float drift below the assignment's own rounding, so the
-    * DuckDB oracle replays every iteration (the q91 discipline).
+    * Scale shape: corpus-sized reductions run in Spark, model-sized
+    * iteration runs on the driver. The subvector explode runs ONCE
+    * (`localCheckpoint`'d — m·N rows of dims/m-length arrays); each
+    * iteration is one broadcast-assign pass plus the per-(subspace,
+    * code, dimension) mean aggregation of [[lloydMeans]], whose
+    * m·nCentroids·dims/m rows collect to the driver and come back as
+    * the literal codebook the next iteration broadcasts. 6-decimal
+    * per-dimension rounding each iteration pins cross-engine float
+    * drift below the assignment's own rounding, so the DuckDB oracle
+    * replays every iteration (the q91 discipline).
     */
   def trainedPqCentroids(df: DataFrame, dims: Int, m: Int,
       nCentroids: Int, iters: Int,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
     require(iters >= 0, "iters must be non-negative")
-    val spark = df.sparkSession
     val sub = graft.Tables.rebalance(
         pqSubvectors(df, dims, m, idCol, embCol, "id", "sv"))
       .localCheckpoint()
-    var cen = pqCentroids(df, dims, m, nCentroids, idCol, embCol)
-    for (_ <- 1 to iters) {
-      // fused argmin per (vector, subspace) row — no ×nCentroids
-      // fan-out and no min_by whose buffers carried the subvector
-      // array through the aggregation (the iteration's former
-      // dominant cost; guide §4, optimization round 20)
-      val assigned = sub.join(broadcast(packCodebook(cen)), Seq("j"))
+    (1 to iters).foldLeft(pqCentroids(df, dims, m, nCentroids, idCol,
+        embCol)) { (cen, _) =>
+      // fused argmin per (vector, subspace) row against the packed
+      // codebook (guide §4, optimization round 20)
+      lloydMeans(sub.join(broadcast(packCodebook(cen)), Seq("j"))
         .select(col("j"),
           graft.functions.Vectors.bestCodeL2(col("sv"), col("cen_ids"),
             col("cvs"), col("cvvs")).as("cen_id"),
-          col("sv"))
-      val means = assigned
-        .select(col("j"), col("cen_id"),
-          posexplode(col("sv")).as(Seq("p", "v")))
-        .groupBy(col("j"), col("cen_id"), col("p"))
-        .agg(round(avg(col("v")), 6).as("mv"))
-        .groupBy(col("j"), col("cen_id"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("p"), col("mv")))),
-          x => x.getField("mv")).as("cv"))
-      cen = spark.createDataFrame(
-        java.util.Arrays.asList(means.collect(): _*), means.schema)
+          col("sv")), Seq("j", "cen_id"), col("sv"), "cv")
     }
-    cen
+  }
+
+  /** The means step of every Lloyd loop: over `assigned` rows
+    * `(keys…, vec…)`, the per-(keys, dimension) mean rounded to 6
+    * decimals — aggregated in Spark, then collected (model-sized: one
+    * row per centroid and dimension) and rebuilt on the driver as one
+    * `(keys…, out)` row per centroid, `out` in dimension order. The
+    * schema is what the SQL array rebuild
+    * `transform(array_sort(collect_list(struct(p, m))), _.m)` gave:
+    * the key fields as aggregated and a non-null `array<double>` of
+    * nullable means. */
+  private def lloydMeans(assigned: DataFrame, keys: Seq[String],
+      vec: Column, out: String): DataFrame = {
+    val means = assigned
+      .select(keys.map(col) :+ posexplode(vec).as(Seq("p", "v")): _*)
+      .groupBy((keys :+ "p").map(col): _*)
+      .agg(round(avg(col("v")), 6).as("m"))
+    val n = keys.size
+    val rows = means.collect().toSeq.groupBy(_.toSeq.take(n)).map {
+      case (key, ms) =>
+        Row.fromSeq(key :+ ms.sortBy(_.getInt(n)).map(_.get(n + 1)))
+    }
+    assigned.sparkSession.createDataFrame(rows.toSeq.asJava,
+      StructType(keys.map(means.schema(_)) :+ StructField(out,
+        ArrayType(DoubleType, containsNull = true), nullable = false)))
   }
 
   /** [[pqAssign]] packed to one row per vector: `(idCol, codes)` with
@@ -848,23 +859,21 @@ object Similarity {
     *    normalization touches doubles (IEEE sqrt + division + round —
     *    the cross-engine pair every cosine already relies on).
     *
-    * Scale shape: one component explode (corpus-reduced to N·dims
-    * rows), ONE self-join building the dims²-sized covariance
-    * (materialized once — iterations never touch the corpus again),
-    * then `iters` model-sized (dims-row) matvecs with driver collects
-    * (the trainedCentroids pattern). At 100 TB: covariance state is
-    * dims², independent of N; train on a sample if dims is huge.
+    * Scale shape: corpus-sized reductions run in Spark, model-sized
+    * iteration runs on the driver. One component explode
+    * (corpus-reduced to N·dims rows) and ONE self-join build the
+    * dims² covariance, which collects to the driver; the `iters`
+    * matvecs are driver arithmetic on it ([[powerIterate]]) and never
+    * touch Spark. At 100 TB: covariance state is dims², independent
+    * of N; train on a sample if dims is huge.
     */
   def topPrincipalComponent(df: DataFrame, dims: Int, iters: Int,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.types.{StructField, StructType}
     val (_, v) = pcaCore(df, dims, iters, idCol, embCol)
     df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(v.map { case (p, d) =>
-        org.apache.spark.sql.Row(p.toLong, d.doubleValue) }: _*),
-      StructType(Seq(
-        StructField("dim", org.apache.spark.sql.types.LongType),
-        StructField("v", org.apache.spark.sql.types.DoubleType))))
+      v.indices.map(p => Row(p.toLong, v(p).doubleValue)).asJava,
+      StructType(Seq(StructField("dim", LongType),
+        StructField("v", DoubleType))))
   }
 
   /** Project every vector onto the learned top principal component —
@@ -879,22 +888,15 @@ object Similarity {
     */
   def pcaProject(df: DataFrame, dims: Int, iters: Int,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val spark = df.sparkSession
     val (cen, v) = pcaCore(df, dims, iters, idCol, embCol)
-    val vDf = spark.createDataFrame(
-      java.util.Arrays.asList(v.map { case (q, d) =>
-        org.apache.spark.sql.Row(q, new java.math.BigDecimal(
-          d.unscaledValue, 6)) }: _*), pcaVSchema)
+    val vDf = df.sparkSession.createDataFrame(
+      v.indices.map(q => Row(q, v(q))).asJava,
+      StructType(Seq(StructField("q", IntegerType),
+        StructField("v", DecimalType(12, 6)))))
     cen.join(broadcast(vDf), col("p") === col("q"))
       .groupBy(col("id"))
       .agg(round(sum(col("x") * col("v")), 6).cast("double").as("proj"))
       .select(col("id").as(idCol), col("proj"))
-  }
-
-  private def pcaVSchema = {
-    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-    StructType(Seq(StructField("q", IntegerType),
-      StructField("v", org.apache.spark.sql.types.DecimalType(12, 6))))
   }
 
   /** Top `nComponents` principal components by power iteration +
@@ -904,70 +906,52 @@ object Similarity {
     * `u = C v = λ v`, so ‖u‖ IS the eigenvalue) and re-iterate on the
     * deflated matrix. Every deflation product rounds to 6 decimals in
     * two exact-decimal steps (`round₆(λ·v_p)` then `round₆(·v_q)`),
-    * and λ itself is rounded to 6 IN SQL on both engines, so the
-    * deflated matrices — and therefore all components — replay
-    * exactly (oracle q114 for nComponents = 2). Orthogonality of the
-    * results is approximate (finite iterations + 6-decimal rounding),
-    * pinned by spec bound, not assumed.
+    * and λ itself is rounded to 6, exactly as the oracle's SQL rounds
+    * it, so the deflated matrices — and therefore all components —
+    * replay exactly (oracle q114 for nComponents = 2). Orthogonality
+    * of the results is approximate (finite iterations + 6-decimal
+    * rounding), pinned by spec bound, not assumed.
     *
     * Returns `(component, dim, v)` with components numbered from 0 in
-    * decreasing-eigenvalue order. Cost: the one corpus-reduced
-    * covariance build plus nComponents · iters model-sized matvecs —
-    * deflation never touches the corpus.
+    * decreasing-eigenvalue order. Cost: corpus-sized reductions run in
+    * Spark, model-sized iteration runs on the driver — the one
+    * corpus-reduced covariance build is the only Spark work; the
+    * nComponents · iters matvecs and every deflation ([[deflate]]) are
+    * driver arithmetic on the collected dims² matrix.
     */
   def principalComponents(df: DataFrame, dims: Int, iters: Int,
       nComponents: Int, idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
     require(nComponents >= 1, "nComponents must be >= 1")
-    val spark = df.sparkSession
-    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-    val (_, cov0) = pcaCovariance(df, dims, idCol, embCol)
-    var cov = cov0
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, Int, Double)]
-    for (comp <- 0 until nComponents) {
-      val (v, lam6) = powerIterate(spark, cov, dims, iters)
-      v.foreach { case (p, d) => out += ((comp, p, d.doubleValue)) }
-      if (comp < nComponents - 1) {
-        val vDf = spark.createDataFrame(
-          java.util.Arrays.asList(v.map { case (q, d) =>
-            org.apache.spark.sql.Row(q, new java.math.BigDecimal(
-              d.unscaledValue, 6)) }: _*), pcaVSchema)
-        cov = cov
-          .join(broadcast(vDf.select(col("q").as("p"),
-            col("v").as("vp"))), Seq("p"))
-          .join(broadcast(vDf.select(col("q"), col("v").as("vq"))),
-            Seq("q"))
-          .select(col("p"), col("q"),
-            (col("c") - round(round(lit(lam6) * col("vp"), 6)
-              .cast("decimal(18,6)") * col("vq"), 6)
-              .cast("decimal(18,6)"))
-              .cast("decimal(18,6)").as("c"))
-          .localCheckpoint()
-      }
+    var cov = pcaCovariance(df, dims, idCol, embCol)._2
+    val rows = (0 until nComponents).flatMap { comp =>
+      val (v, lam6) = powerIterate(cov, iters)
+      if (comp < nComponents - 1) cov = deflate(cov, v, lam6)
+      v.indices.map(p => Row(comp.toLong, p.toLong, v(p).doubleValue))
     }
-    spark.createDataFrame(
-      java.util.Arrays.asList(out.map { case (c, p, d) =>
-        org.apache.spark.sql.Row(c.toLong, p.toLong, d) }.toSeq: _*),
+    df.sparkSession.createDataFrame(rows.asJava,
       StructType(Seq(StructField("component", LongType),
         StructField("dim", LongType), StructField("v", DoubleType))))
   }
 
   /** Shared power-iteration core: the materialized centered-component
     * frame `(id, p, x)` and the final eigenvector as exact
-    * 6-decimal values. */
+    * 6-decimal values, indexed by dimension. */
   private def pcaCore(df: DataFrame, dims: Int, iters: Int,
       idCol: String, embCol: String)
-      : (DataFrame, IndexedSeq[(Int, java.math.BigDecimal)]) = {
+      : (DataFrame, IndexedSeq[JDecimal]) = {
     val (cen, cov) = pcaCovariance(df, dims, idCol, embCol)
-    val (v, _) = powerIterate(df.sparkSession, cov, dims, iters)
-    (cen, v)
+    (cen, powerIterate(cov, iters)._1)
   }
 
-  /** Centered components + exact-decimal covariance, both
-    * materialized. */
+  /** A covariance on the driver: `cov(p)(q)` is the exact
+    * `decimal(18,6)` entry `c_pq`. */
+  private[graft] type Cov = IndexedSeq[IndexedSeq[JDecimal]]
+
+  /** Centered components (materialized) + the exact-decimal
+    * covariance, collected to the driver. */
   private def pcaCovariance(df: DataFrame, dims: Int, idCol: String,
-      embCol: String): (DataFrame, DataFrame) = {
+      embCol: String): (DataFrame, Cov) = {
     val comp = graft.Tables.rebalance(
         df.select(col(idCol).as("id"), darr(col(embCol)).as("e")))
       .select(col("id"), posexplode(col("e")).as(Seq("p", "val")))
@@ -977,56 +961,83 @@ object Similarity {
       .select(col("id"), col("p"),
         (col("val").cast("decimal(12,6)") - col("m")).as("x"))
       .localCheckpoint()
-    val cov = cen.as("a")
+    val c = cen.as("a")
       .join(cen.as("b"), col("a.id") === col("b.id"))
       .select(col("a.p").as("p"), col("b.p").as("q"),
         (col("a.x") * col("b.x")).as("xx"))
       .groupBy(col("p"), col("q"))
       .agg(round(sum(col("xx")), 6).cast("decimal(18,6)").as("c"))
-      .localCheckpoint()
-    (cen, cov)
+      .collect()
+      .map(r => (r.getInt(0), r.getInt(1)) -> r.getDecimal(2)).toMap
+    require(c.size == dims * dims && c.values.forall(_ != null),
+      s"the covariance is not $dims×$dims: every embedding needs $dims " +
+        "components, and no dimension may be all null")
+    (cen, IndexedSeq.tabulate(dims, dims)((p, q) => c((p, q))))
   }
 
-  /** Power iteration on a materialized covariance: the converged unit
-    * eigenvector (exact 6-decimal values) and the final matvec norm
-    * rounded to 6 IN SQL (`round(sqrt(Σu²), 6)`) — the eigenvalue
-    * estimate deflation subtracts, computed with the same
-    * engine-rounding pair the oracle uses. */
-  private def powerIterate(spark: org.apache.spark.sql.SparkSession,
-      cov: DataFrame, dims: Int, iters: Int)
-      : (IndexedSeq[(Int, java.math.BigDecimal)], java.math.BigDecimal) = {
-    require(iters >= 1, "iters must be >= 1")
-    val v0 = java.math.BigDecimal.valueOf(
-      Math.round(1e6 / math.sqrt(dims.toDouble)), 6)
-    var v: IndexedSeq[(Int, java.math.BigDecimal)] =
-      (0 until dims).map(_ -> v0)
-    var lam6 = java.math.BigDecimal.ZERO
-    for (_ <- 1 to iters) {
-      val vDf = spark.createDataFrame(
-        java.util.Arrays.asList(v.map { case (q, d) =>
-          org.apache.spark.sql.Row(q, new java.math.BigDecimal(
-            d.unscaledValue, 6)) }: _*), pcaVSchema)
-      val u = cov.join(broadcast(vDf), Seq("q"))
-        .groupBy(col("p"))
-        .agg(round(sum(col("c") * col("v")), 6).cast("decimal(18,6)")
-          .as("u"))
-        .localCheckpoint()
-      val nr = u
-        .agg(sqrt(sum(col("u") * col("u")).cast("double")).as("n"),
-          round(sqrt(sum(col("u") * col("u")).cast("double")), 6)
-            .cast("decimal(18,6)").as("l"))
-        .head()
-      val nrm = nr.getDouble(0)
-      lam6 = nr.getDecimal(1).setScale(6)
-      v = u.select(col("p"),
-          round(col("u").cast("double") / nrm, 6).cast("decimal(12,6)")
-            .as("v"))
-        .collect()
-        .map(r => r.getInt(0) -> r.getDecimal(1).setScale(6))
-        .toIndexedSeq.sortBy(_._1)
-    }
-    (v, lam6)
+  /** `x` as Spark's ANSI cast to `decimal(precision, scale)` leaves it:
+    * rounded HALF_UP to `scale` (what SQL `round(x, 6)` and the cast
+    * both do), and an overflow raises, as Spark's cast does. */
+  private def ansiDecimal(x: JDecimal, precision: Int,
+      scale: Int = 6): JDecimal = {
+    val r = x.setScale(scale, java.math.RoundingMode.HALF_UP)
+    if (r.precision - r.scale > precision - scale)
+      throw new ArithmeticException(
+        s"$r overflows decimal($precision,$scale)")
+    r
   }
+
+  /** A double as Spark's cast to `decimal(precision, 6)` reads it:
+    * through its shortest decimal string (`Decimal(double)`). */
+  private def ansiDecimal(d: Double, precision: Int): JDecimal =
+    ansiDecimal(JDecimal.valueOf(d), precision)
+
+  /** Power iteration: the converged unit eigenvector (exact 6-decimal
+    * values, indexed by dimension) and λ₆, the final matvec norm
+    * rounded to 6 — the eigenvalue estimate [[deflate]] subtracts.
+    * Cost: corpus-sized reductions run in Spark, model-sized iteration
+    * runs on the driver — this is the model-sized part, so it runs no
+    * Spark job. Each step is the SQL the oracle replays, computed
+    * exactly as Spark computes it (PcaArithmeticSpec pins every step
+    * against Spark itself):
+    *  - `u_p = round₆(Σ_q c_pq·v_q)` as `decimal(18,6)` — exact decimal;
+    *  - `nrm = sqrt(Σu²)`, the exact `decimal(38,12)` sum through
+    *    Spark's decimal → double conversion;
+    *  - `λ₆ = round₆(nrm)` as `decimal(18,6)`;
+    *  - `v_p = round₆(u_p / nrm)` in double, as `decimal(12,6)`.
+    * A zero norm divides by zero, and raises as ANSI Spark does. */
+  private[graft] def powerIterate(cov: Cov, iters: Int)
+      : (IndexedSeq[JDecimal], JDecimal) = {
+    require(iters >= 1, "iters must be >= 1")
+    import graft.functions.VectorKernel.round6
+    val zero = JDecimal.ZERO
+    val v0 = JDecimal.valueOf(
+      Math.round(1e6 / math.sqrt(cov.size.toDouble)), 6)
+    (1 to iters).foldLeft((cov.map(_ => v0), zero)) { case ((v, _), _) =>
+      val u = cov.map(row => ansiDecimal(
+        row.indices.foldLeft(zero)((s, q) => s.add(row(q).multiply(v(q)))),
+        18))
+      // Spark's Decimal.toDouble is this same BigDecimal.doubleValue
+      val nrm = math.sqrt(ansiDecimal(
+        u.foldLeft(zero)((s, x) => s.add(x.multiply(x))), 38, 12).doubleValue)
+      if (nrm == 0.0)
+        throw new ArithmeticException("power iteration: division by zero " +
+          "(the matvec norm is 0)")
+      (u.map(x => ansiDecimal(round6(x.doubleValue / nrm), 12)),
+        ansiDecimal(round6(nrm), 18))
+    }
+  }
+
+  /** Spectral deflation on the driver, `C ← C − λ₆ v vᵀ` as the oracle
+    * writes it: `c_pq − round₆(round₆(λ₆·v_p)·v_q)`, every step exact
+    * decimal cast to `decimal(18,6)`. */
+  private[graft] def deflate(cov: Cov, v: IndexedSeq[JDecimal],
+      lam6: JDecimal): Cov =
+    cov.indices.map { p =>
+      val lv = ansiDecimal(lam6.multiply(v(p)), 18)
+      cov(p).indices.map(q => ansiDecimal(
+        cov(p)(q).subtract(ansiDecimal(lv.multiply(v(q)), 18)), 18))
+    }
 
   /** The `nCentroids` lowest-id vectors as coarse-quantizer seeds —
     * `(cen_id, cen_e, cen_nrm)`. Seed selection affects recall, not
@@ -1054,12 +1065,13 @@ object Similarity {
     * centroids the plan broadcasts — never the plan shape.
     * PLANS.md round 6 records the measured recall delta.
     *
-    * Scale shape: each iteration is one broadcast-assign pass
-    * (map-side max_by, no shuffle of the corpus beyond the partial
-    * aggregation) plus a (nCentroids × dims)-sized mean aggregation of
-    * exploded components; the refreshed model COLLECTS to the driver —
-    * model-sized, like any k-means library — so the next iteration
-    * broadcasts literal centroids instead of growing a lineage chain.
+    * Scale shape: corpus-sized reductions run in Spark, model-sized
+    * iteration runs on the driver. Each iteration is one broadcast-
+    * assign pass (the fused argmax of [[assignCells]], no shuffle of
+    * the corpus) plus the (nCentroids × dims)-sized mean aggregation
+    * of [[lloydMeans]], which collects to the driver — model-sized,
+    * like any k-means library — so the next iteration broadcasts
+    * literal centroids instead of growing a lineage chain.
     * Per-dimension means round to 6 decimals each iteration, pinning
     * run-to-run float drift below the assignment's own 6-decimal
     * rounding. For very large corpora, train on a sample: recall needs
@@ -1068,24 +1080,14 @@ object Similarity {
   def trainedCentroids(df: DataFrame, nCentroids: Int, iters: Int,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
     require(iters >= 0, "iters must be non-negative")
-    val spark = df.sparkSession
-    var cen = seedCentroids(df, nCentroids, idCol, embCol)
-    for (_ <- 1 to iters) {
-      val means = assignCells(df, cen, idCol, embCol)
-        .select(col("cell"), posexplode(darr(col("e"))).as(Seq("p", "v")))
-        .groupBy(col("cell"), col("p"))
-        .agg(round(avg(col("v")), 6).as("m"))
-        .groupBy(col("cell"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("p"), col("m")))),
-          x => x.getField("m")).as("cen_e"))
-        .select(col("cell").as("cen_id"), col("cen_e"))
-      cen = spark.createDataFrame(
-          java.util.Arrays.asList(means.collect(): _*), means.schema)
-        .select(col("cen_id"), col("cen_e"),
-          sqrt(norm2(col("cen_e"))).as("cen_nrm"))
+    (1 to iters).foldLeft(seedCentroids(df, nCentroids, idCol, embCol)) {
+      (cen, _) =>
+        lloydMeans(assignCells(df, cen, idCol, embCol)
+            .withColumnRenamed("cell", "cen_id"),
+          Seq("cen_id"), darr(col("e")), "cen_e")
+          .select(col("cen_id"), col("cen_e"),
+            sqrt(norm2(col("cen_e"))).as("cen_nrm"))
     }
-    cen
   }
 
   /** The coarse quantizer of every IVF arm: `trainIters` rounds of

@@ -112,11 +112,6 @@ object IndexLayout {
       logical: String): String =
     dir(path, IndexManifest.latest(spark, path), logical)
 
-  /** Current generation — manifest field (driver-side read, no job);
-    * 0 for a freshly built index. */
-  def currentGen(spark: SparkSession, path: String): Long =
-    IndexManifest.latest(spark, path).gen
-
   /** Seal a build: the ONE manifest commit, holding the build's
     * parameters, that makes the plain layout [[freshLayout]] cleared
     * and the build wrote readable and mutable. A sealed

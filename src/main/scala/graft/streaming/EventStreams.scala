@@ -455,18 +455,4 @@ object EventStreams {
       }
       .trigger(Trigger.AvailableNow())
       .start()
-
-  /** Start an idempotent append to partitioned parquet: exactly-once via
-    * the checkpoint's file-sink log, partitioned so downstream reads
-    * prune by event date.
-    */
-  def startParquetSink(df: DataFrame, path: String,
-      checkpoint: String, tsCol: String = "bucket_start"): StreamingQuery =
-    df.withColumn("event_date", to_date(col(tsCol)))
-      .writeStream.format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .partitionBy("event_date")
-      .outputMode(OutputMode.Append)
-      .start()
 }

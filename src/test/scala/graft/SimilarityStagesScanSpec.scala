@@ -22,7 +22,9 @@ class SimilarityStagesScanSpec extends AnyFunSuite {
     "cell-probe window ordered on `psim`" ->
       """orderBy\(col\("psim"\)\.desc""".r,
     "`trainIters > 0` → trainedCentroids coarse-centroid choice" ->
-      """if\s*\(trainIters\s*>\s*0\)\s*trainedCentroids\(""".r)
+      """if\s*\(trainIters\s*>\s*0\)\s*trainedCentroids\(""".r,
+    "Lloyd means step `round(avg(v), 6)` per centroid and dimension" ->
+      """round\(avg\(col\("v"\)\),\s*6\)""".r)
 
   stages.foreach { case (decision, pattern) =>
     test(s"Similarity writes the $decision once") {

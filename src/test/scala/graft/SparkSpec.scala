@@ -3,18 +3,20 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one per suite via lazy
-  * val): the [[EntryPoint]] bootstrap on a fixed 4 cores, so plan and
-  * partition assertions do not depend on the host, with a private
-  * warehouse directory. */
+/** Shared local SparkSession for all suites: the [[EntryPoint]]
+  * bootstrap on a fixed 4 cores, so plan and partition assertions do
+  * not depend on the host, with a temporary warehouse directory. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = EntryPoint.session(
     cores = SparkSpec.cores,
-    conf = Map("spark.sql.warehouse.dir" ->
-      java.nio.file.Files.createTempDirectory("graft-wh").toString))
+    conf = Map("spark.sql.warehouse.dir" -> SparkSpec.warehouse))
 
   def fixture(name: String): String =
     getClass.getResource(s"/fixtures/$name").getPath
+
+  /** A persisted index's current generation (0 for a fresh build). */
+  def idxGen(path: String): Long =
+    graft.sink.IndexManifest.latest(spark, path).gen
 
   /** Read a persisted-index logical subtree through its manifest
     * pointer (rewrites move the physical dir — [[graft.sink
@@ -33,4 +35,14 @@ trait SparkSpec extends AnyFunSuite {
 object SparkSpec {
   /** Cores (and shuffle partitions) of the test session. */
   val cores = 4
+
+  /** The test JVM's one warehouse directory: [[EntryPoint.session]] is
+    * getOrCreate, so only the first suite's conf ever applies. Created
+    * once, and deleted with its contents when the JVM exits. */
+  lazy val warehouse: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-wh")
+    sys.addShutdownHook(
+      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile))
+    dir.toString
+  }
 }

@@ -120,6 +120,32 @@ class SimilaritySpec extends SparkSpec {
       .map(_.getAs[Long]("vec_id")).toSeq == Seq(1L, 4L))
   }
 
+  test("Lloyd loops keep the schema and values of the SQL-rebuilt means") {
+    import org.apache.spark.sql.types._
+    // the centroid arrays were rebuilt in SQL by
+    // transform(array_sort(collect_list(struct(p, m))), _.m); the
+    // driver rebuild must give the same frame, nullability included
+    val means = ArrayType(DoubleType, containsNull = true)
+    val km = Similarity.trainedCentroids(vecs, 2, 2)
+    assert(km.schema == StructType(Seq(StructField("cen_id", LongType),
+      StructField("cen_e", means, nullable = false),
+      StructField("cen_nrm", DoubleType))))
+    assert(km.orderBy("cen_id").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1)).toSeq ==
+      Seq(0L -> Seq(0.966667, 0.036667, 0.0, 0.0),
+        1L -> Seq(-0.5, 0.5, 0.0, 0.0)))
+    val pq = Similarity.trainedPqCentroids(vecs, dims = 4, m = 2,
+      nCentroids = 2, iters = 2)
+    assert(pq.schema == StructType(Seq(
+      StructField("j", IntegerType, nullable = false),
+      StructField("cen_id", LongType),
+      StructField("cv", means, nullable = false))))
+    assert(pq.orderBy("j", "cen_id").collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2))).toSeq ==
+      Seq((0, 0L, Seq(0.966667, 0.036667)), (0, 1L, Seq(-0.5, 0.5)),
+        (1, 0L, Seq(0.0, 0.0))))
+  }
+
   test("ivfPqResidualTopK warns on the seeded (trainIters=0) path only") {
     // the measured recall trap (PLANS.md round 6): seeded residual PQ
     // underperforms the global codebook; the warning nudges production
@@ -759,7 +785,7 @@ class SimilaritySpec extends SparkSpec {
       Similarity.writeIvfPqDriftBaseline(spark, dir, old)
       ivf.append(dir, drifted)
       ivf.delete(dir, Seq(3L).toDF("vec_id"))
-      val genBefore = graft.sink.IndexLayout.currentGen(spark, dir)
+      val genBefore = idxGen(dir)
       // the LIVE corpus: everything except the takedown
       val live = old.unionAll(drifted).where(col("vec_id") =!= 3)
       Similarity.retrainIvfPqIndex(spark, dir, live, nCells = 4,
@@ -780,7 +806,7 @@ class SimilaritySpec extends SparkSpec {
       assert(!idxDirExists(dir, "tombstones"))
       // generations stay monotone: the re-encoded corpus took the
       // next gen, and a post-retrain takedown works as usual
-      assert(graft.sink.IndexLayout.currentGen(spark, dir) ==
+      assert(idxGen(dir) ==
         genBefore + 1)
       ivf.delete(dir, Seq(5L).toDF("vec_id"))
       assert(search(Similarity.IvfPqIndex.read(spark, dir))

@@ -45,11 +45,11 @@ class IndexLayoutSpec extends SparkSpec {
       graft.operators.Retrieval.writeTfIndex(
         Seq((1L, "common words here")).toDF("doc_id", "text"),
         dir, wordBuckets = 4)
-      assert(IndexLayout.currentGen(spark, dir) == 0L) // fresh build
+      assert(idxGen(dir) == 0L) // fresh build
       for (i <- 2L to 16L)
         graft.operators.Retrieval.tfFamily().append(dir,
           Seq((i, s"doc $i common")).toDF("doc_id", "text"))
-      assert(IndexLayout.currentGen(spark, dir) == 15L)
+      assert(idxGen(dir) == 15L)
       // the build's one commit, then two per mutation: the generation
       // RESERVE before the facts and the visibility PUBLISH after them
       // (reader-atomicity)
@@ -58,11 +58,11 @@ class IndexLayoutSpec extends SparkSpec {
       // compaction prunes the manifest history to its tail...
       assert(manifestFiles() <= IndexManifest.HistoryKeep)
       // ...with the counter preserved
-      assert(IndexLayout.currentGen(spark, dir) == 15L)
+      assert(idxGen(dir) == 15L)
       // and the counter keeps counting after compaction
       graft.operators.Retrieval.tfFamily().append(dir,
         Seq((77L, "doc 77 common")).toDF("doc_id", "text"))
-      assert(IndexLayout.currentGen(spark, dir) == 16L)
+      assert(idxGen(dir) == 16L)
     } finally org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(dir))
   }

@@ -2,7 +2,10 @@
 """Local replica of the driver's correctness gate: for each query dumped
 by graft.Verify, run its oracle SQL in DuckDB over the same parquet
 tables and compare rows/schema/value-hash (columns sorted by name, rows
-sorted by all columns, floats rounded)."""
+sorted by all columns, floats rounded).
+
+    compare_oracle.py [sf_dir] [out_dir] [name1,name2,...]
+"""
 import json, sys, hashlib
 import duckdb
 import pandas as pd
