@@ -81,9 +81,12 @@ object Tables {
     }
   }
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
+  /** One table, its schema resolved on the driver
+    * ([[graft.sink.Parquet.read]]): building the plan runs no job. */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
     if (name == "events")
-      withNanosAsLong(spark)(
-        normalizeTs(spark.read.parquet(s"$sfDir/$name.parquet")))
-    else spark.read.parquet(s"$sfDir/$name.parquet")
+      withNanosAsLong(spark)(normalizeTs(graft.sink.Parquet.read(spark, path)))
+    else graft.sink.Parquet.read(spark, path)
+  }
 }

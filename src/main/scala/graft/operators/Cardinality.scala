@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sink.Parquet
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -69,7 +70,7 @@ object Cardinality {
     * p = 12 — the serving shape regardless of corpus size).
     */
   def writeSketch(regs: DataFrame, path: String): Unit =
-    regs.write.mode("overwrite").parquet(path)
+    Parquet.writer(regs).mode("overwrite").parquet(path)
 
   /** Read a persisted sketch, failing loudly if its `p` does not match
     * the serving configuration (the [[Curation.BloomFilter]] contract:
@@ -77,7 +78,7 @@ object Cardinality {
     */
   def readSketch(spark: SparkSession, path: String,
       expectP: Int): DataFrame = {
-    val df = spark.read.parquet(path)
+    val df = Parquet.read(spark, path)
     val ps = df.select(col("p")).distinct().collect().map(_.getInt(0))
     require(ps.length == 1 && ps.head == expectP,
       s"sketch p=[${ps.mkString(",")}] does not match expected p=$expectP")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sink.Parquet
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -957,10 +958,10 @@ object Curation {
   final case class BloomFilter(bitmap: DataFrame, mBits: Long,
       kHashes: Int, shingleN: Int) {
     def write(dir: String): Unit =
-      bitmap.select(col("_bm").as("bitmap"),
+      Parquet.writer(bitmap.select(col("_bm").as("bitmap"),
           lit(mBits).as("m_bits"), lit(kHashes).as("k_hashes"),
           lit(shingleN).as("shingle_n"))
-        .coalesce(1).write.mode("overwrite").parquet(dir)
+        .coalesce(1)).mode("overwrite").parquet(dir)
   }
 
   object BloomFilter {
@@ -986,7 +987,7 @@ object Curation {
       */
     def read(spark: org.apache.spark.sql.SparkSession,
         dir: String): BloomFilter = {
-      val df = spark.read.parquet(dir).select(col("bitmap").as("_bm"),
+      val df = Parquet.read(spark, dir).select(col("bitmap").as("_bm"),
         col("m_bits"), col("k_hashes"), col("shingle_n"))
       val row = df.head()
       val bm = spark.createDataFrame(

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sink.Parquet
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -640,7 +641,7 @@ object Dedup {
     // multi-query session until serve rows degraded 2-3×. DECLINED
     // as well: both evaluations keep the parquet scan.
     val sh = graft.sink.IndexLayout.applyTombstones(
-        graft.sink.IndexLayout.visibleFacts(spark.read.parquet(
+        graft.sink.IndexLayout.visibleFacts(Parquet.read(spark,
             graft.sink.IndexLayout.dir(path, man, "postings")), man)
           .select(col("doc_id"), col("s"), col("gen")),
         graft.sink.IndexLayout.tombstoneFloor(spark, path, "doc_id",
@@ -964,7 +965,7 @@ object Dedup {
       .cast("long").as("doc_id"))
     val man = pinned.getOrElse(graft.sink.IndexManifest.latest(spark, path))
     val fp1 = graft.sink.IndexLayout.applyTombstones(
-        graft.sink.IndexLayout.visibleFacts(spark.read.parquet(
+        graft.sink.IndexLayout.visibleFacts(Parquet.read(spark,
             graft.sink.IndexLayout.dir(path, man, "postings")), man)
           .select(col("doc_id"), col("h"), col("gen")),
         graft.sink.IndexLayout.tombstoneFloor(spark, path, "doc_id",

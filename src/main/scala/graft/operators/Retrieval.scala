@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sink.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -325,14 +326,14 @@ object Retrieval {
     val withB = index.withColumn("wbucket",
         pmod(xxhash64(col("word")), lit(wordBuckets.toLong)))
       .localCheckpoint()
-    withB.repartition(col("wbucket"))
-      .write.mode("overwrite").partitionBy("wbucket")
+    Parquet.writer(withB.repartition(col("wbucket")))
+      .mode("overwrite").partitionBy("wbucket")
       .parquet(s"$path/postings")
-    withB.groupBy(col("word"), col("wbucket"))
-      .agg(max(col("contrib")).as("ub"))
-      .withColumn("n_buckets", lit(wordBuckets))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/ub")
+    Parquet.writer(withB.groupBy(col("word"), col("wbucket"))
+        .agg(max(col("contrib")).as("ub"))
+        .withColumn("n_buckets", lit(wordBuckets))
+        .coalesce(1))
+      .mode("overwrite").parquet(s"$path/ub")
   }
 
   /** The partition-pruned posting read under both FromIndex query
@@ -351,15 +352,15 @@ object Retrieval {
     // vocabulary-sized metadata: per-word ub AND the word→bucket
     // mapping; the bucket ids collect driver-side (query-batch-
     // bounded) to become LITERAL partition filters on the postings
-    val ubTable = spark.read.parquet(s"$path/ub")
+    val ubTable = Parquet.read(spark, s"$path/ub")
       .filter(col("word").isin(words: _*))
     val buckets = ubTable.select(col("wbucket")).distinct()
       .collect().map(_.getLong(0)).toSeq
     val postings =
       if (buckets.isEmpty)
-        spark.read.parquet(s"$path/postings")
+        Parquet.read(spark, s"$path/postings")
           .where(lit(false)) // no query term exists in the corpus
-      else spark.read.parquet(s"$path/postings")
+      else Parquet.read(spark, s"$path/postings")
         .where(col("wbucket").isin(buckets: _*) &&
           col("word").isin(words: _*))
     val contribs = postings.join(broadcast(qt), "word")
@@ -497,11 +498,11 @@ object Retrieval {
         .drop("gen")
     val postings = minusTomb(
       if (words.isEmpty)
-        spark.read.parquet(sub("postings")).where(lit(false))
-      else spark.read.parquet(sub("postings"))
+        Parquet.read(spark, sub("postings")).where(lit(false))
+      else Parquet.read(spark, sub("postings"))
         .where(col("wbucket").isin(buckets: _*) &&
           col("word").isin(words: _*)))
-    val dl = minusTomb(spark.read.parquet(sub("docs")))
+    val dl = minusTomb(Parquet.read(spark, sub("docs")))
     val stats = dl.agg(count(lit(1)).as("n_docs"),
       (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
     val dfreq = postings.groupBy(col("word")).agg(count(lit(1)).as("df"))
@@ -581,7 +582,7 @@ object Retrieval {
     }.toMap
     val words = qWords.values.flatten.toSeq.distinct
     // (1) metadata: word → (bucket, ub) — query-batch-sized collect
-    val ubRows = spark.read.parquet(s"$path/ub")
+    val ubRows = Parquet.read(spark, s"$path/ub")
       .filter(col("word").isin(words: _*))
       .select(col("word"), col("wbucket"), col("ub")).collect()
       .map(r => r.getString(0) ->
@@ -594,8 +595,8 @@ object Retrieval {
     def readPostings(ws: Iterable[String]): DataFrame = {
       val present = ws.filter(ubRows.contains).toSeq.distinct
       if (present.isEmpty)
-        spark.read.parquet(s"$path/postings").where(lit(false))
-      else spark.read.parquet(s"$path/postings")
+        Parquet.read(spark, s"$path/postings").where(lit(false))
+      else Parquet.read(spark, s"$path/postings")
         .where(col("wbucket").isin(bucketsOf(present): _*) &&
           col("word").isin(present: _*))
     }

@@ -1,6 +1,8 @@
 package graft.operators
 
 import java.math.{BigDecimal => JDecimal}
+
+import graft.sink.Parquet
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1332,8 +1334,8 @@ object Similarity {
       // silently mis-calibrate the retrain trigger)
       graft.sink.IndexLayout.freshLayout(cells.sparkSession, dir,
         sideLogicals = Seq("drift_meta"))
-      cells.write.mode("overwrite").parquet(s"$dir/cells")
-      codebook.write.mode("overwrite").parquet(s"$dir/codebook")
+      Parquet.writer(cells).mode("overwrite").parquet(s"$dir/cells")
+      Parquet.writer(codebook).mode("overwrite").parquet(s"$dir/codebook")
       // persisted codes carry the IndexLayout generation (0 at build;
       // appends/upserts stamp later generations) — in-memory search
       // never reads it, `read` strips it after the kill floor
@@ -1378,13 +1380,13 @@ object Similarity {
       def sub(l: String) = graft.sink.IndexLayout.dir(dir, man, l)
       val codes = graft.sink.IndexLayout.applyTombstones(
           graft.sink.IndexLayout.visibleFacts(
-            spark.read.parquet(sub("codes")), man),
+            Parquet.read(spark, sub("codes")), man),
           graft.sink.IndexLayout.tombstoneFloor(spark, dir, "id", man),
           "id")
         .drop("gen")
       IvfPqIndex(
-        spark.read.parquet(sub("cells")),
-        spark.read.parquet(sub("codebook")),
+        Parquet.read(spark, sub("cells")),
+        Parquet.read(spark, sub("codebook")),
         codes, man.params("dims"), man.params("m"))
     }
   }
@@ -1418,8 +1420,8 @@ object Similarity {
     val man = graft.sink.IndexManifest.latest(spark, path)
     def sub(l: String) = graft.sink.IndexLayout.dir(path, man, l)
     graft.sink.IndexLayout.appendFlatFacts(
-      ivfPqCodes(spark.read.parquet(sub("cells")),
-        spark.read.parquet(sub("codebook")), newVecs,
+      ivfPqCodes(Parquet.read(spark, sub("cells")),
+        Parquet.read(spark, sub("codebook")), newVecs,
         man.params("dims"), man.params("m"), idCol, embCol),
       path, "codes", gen)
   }
@@ -1467,7 +1469,7 @@ object Similarity {
       idCol: String = "vec_id", embCol: String = "embedding"): Unit = {
     val man = graft.sink.IndexManifest.latest(spark, path)
     val stats = pqDistortionStats(trainVecs,
-      spark.read.parquet(graft.sink.IndexLayout.dir(path, man, "codebook")),
+      Parquet.read(spark, graft.sink.IndexLayout.dir(path, man, "codebook")),
       man.params("dims"), man.params("m"), idCol, embCol)
     // versioned rewrite like every other subtree (build beside, commit
     // by pointer): an in-place overwrite would hand a concurrent
@@ -1476,7 +1478,7 @@ object Similarity {
     // retained history snapshots
     graft.sink.IndexLayout.commitVersions(spark, path, Seq(
       "drift_meta" -> ((st: String) =>
-        stats.coalesce(1).write.mode("overwrite").parquet(st))))
+        Parquet.writer(stats.coalesce(1)).mode("overwrite").parquet(st))))
     ()
   }
 
@@ -1508,10 +1510,10 @@ object Similarity {
       : DataFrame = {
     val man = graft.sink.IndexManifest.latest(spark, path)
     def sub(l: String) = graft.sink.IndexLayout.dir(path, man, l)
-    val base = spark.read.parquet(sub("drift_meta"))
+    val base = Parquet.read(spark, sub("drift_meta"))
       .select(col("n_vecs").as("n_train"),
         col("mean_distortion_micro").as("base_mean_micro"))
-    pqDistortionStats(appended, spark.read.parquet(sub("codebook")),
+    pqDistortionStats(appended, Parquet.read(spark, sub("codebook")),
         man.params("dims"), man.params("m"), idCol, embCol)
       .select(col("n_vecs").as("n_appended"),
         col("mean_distortion_micro").as("appended_mean_micro"))
@@ -1555,14 +1557,14 @@ object Similarity {
       idCol, embCol)
     graft.sink.IndexLayout.commitVersions(spark, path, Seq(
         "cells" -> ((st: String) =>
-          idx.cells.write.mode("overwrite").parquet(st)),
+          Parquet.writer(idx.cells).mode("overwrite").parquet(st)),
         "codebook" -> ((st: String) =>
-          idx.codebook.write.mode("overwrite").parquet(st)),
+          Parquet.writer(idx.codebook).mode("overwrite").parquet(st)),
         "codes" -> ((st: String) =>
-          idx.codes.withColumn("gen", lit(g))
-            .write.mode("overwrite").parquet(st)),
+          Parquet.writer(idx.codes.withColumn("gen", lit(g)))
+            .mode("overwrite").parquet(st)),
         "drift_meta" -> ((st: String) =>
-          drift.coalesce(1).write.mode("overwrite").parquet(st))),
+          Parquet.writer(drift.coalesce(1)).mode("overwrite").parquet(st))),
       // the re-encoded corpus is stamped gen = g: reserve AND publish
       // it in the same pointer commit, so the new geometry serves the
       // instant the snapshot flips — never a window where the codes

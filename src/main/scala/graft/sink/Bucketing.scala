@@ -21,10 +21,9 @@ object Bucketing {
   /** Write `df` as a bucketed+sorted managed table. */
   def writeBucketed(df: DataFrame, table: String, buckets: Int,
       keys: Seq[String]): Unit =
-    df.write
+    Parquet.tableWriter(df)
       .bucketBy(buckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)
       .mode("overwrite")
-      .format("parquet")
       .saveAsTable(table)
 }

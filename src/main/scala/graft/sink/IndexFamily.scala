@@ -127,20 +127,19 @@ final case class IndexFamily(name: String, key: String, idCol: String,
       // replay reserves a fresh generation and rewrites them whole)
       def keep(logical: String) = IndexLayout.applyTombstones(
         IndexLayout.visibleFacts(
-          spark.read.parquet(IndexLayout.dir(path, m0, logical)), m0),
+          Parquet.read(spark, IndexLayout.dir(path, m0, logical)), m0),
         Some(floor), key)
       val builds = bucketCol.toSeq.map { bc =>
         val postings = new Path(IndexLayout.dir(path, m0, "postings"))
-        val fs = postings.getFileSystem(spark.sessionState.newHadoopConf())
-        require(fs.listStatus(postings)
+        require(Parquet.fs(spark, postings).listStatus(postings)
             .exists(st => st.isDirectory && st.getPath.getName
               .startsWith(s"$bc=")),
           s"$postings has no $bc= leaves — wrong index layout for " +
             s"the $name family")
         "postings" -> { (st: String) =>
           val remaining = keep("postings")
-          remaining.repartition(col(bc))
-            .write.mode("overwrite").partitionBy(bc).parquet(st)
+          Parquet.writer(remaining.repartition(col(bc)))
+            .mode("overwrite").partitionBy(bc).parquet(st)
           ensureReadable(spark, st,
             org.apache.spark.sql.types.StructType(
               remaining.schema.filterNot(_.name == bc)),
@@ -152,7 +151,7 @@ final case class IndexFamily(name: String, key: String, idCol: String,
         .map { l =>
           l -> { (st: String) =>
             val remaining = keep(l)
-            remaining.write.mode("overwrite").parquet(st)
+            Parquet.writer(remaining).mode("overwrite").parquet(st)
             ensureReadable(spark, st, remaining.schema, None)
           }
         }
@@ -190,7 +189,7 @@ final case class IndexFamily(name: String, key: String, idCol: String,
       schema: org.apache.spark.sql.types.StructType,
       partitionSubdir: Option[String]): Unit = {
     val staging = new Path(dir)
-    val fs = staging.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = Parquet.fs(spark, staging)
     val hasParquet = fs.exists(staging) && {
       val it = fs.listFiles(staging, true)
       var found = false
@@ -202,9 +201,9 @@ final case class IndexFamily(name: String, key: String, idCol: String,
       val target = partitionSubdir.map(d => new Path(staging, d))
         .getOrElse(staging)
       // a 0-partition plan writes exactly one schema-only file
-      spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        .write.mode("overwrite").parquet(target.toString)
+      Parquet.writer(spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
+        .mode("overwrite").parquet(target.toString)
     }
   }
 

@@ -80,7 +80,7 @@ object IndexLayout {
 
   def dirExists(spark: SparkSession, dir: String): Boolean = {
     val p = new Path(dir)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+    Parquet.fs(spark, p).exists(p)
   }
 
   /** Run independent Spark write jobs CONCURRENTLY from driver
@@ -175,7 +175,7 @@ object IndexLayout {
       .withColumn("below_gen", lit(belowGen))
       .localCheckpoint() // one materialization: emptiness check + write
     if (!t.isEmpty)
-      t.write.mode("append")
+      Parquet.writer(t).mode("append")
         .parquet(resolve(ids.sparkSession, path, "tombstones"))
   }
 
@@ -196,7 +196,7 @@ object IndexLayout {
       // an in-flight upsert's tombstones must not delete the doc for
       // readers before its facts publish (reader-atomicity's other
       // half)
-      Some(spark.read.parquet(d)
+      Some(Parquet.read(spark, d)
         .filter(col("below_gen") <= lit(m.visibleGen))
         .groupBy(col(keyName))
         .agg(max(col("below_gen")).as("below_gen")))
@@ -230,31 +230,31 @@ object IndexLayout {
     * key). */
   def writeFacts(facts: DataFrame, path: String, logical: String,
       bucketCol: String): Unit =
-    facts.withColumn("gen", lit(0L))
-      .repartition(col(bucketCol))
-      .write.mode("overwrite").partitionBy(bucketCol)
+    Parquet.writer(facts.withColumn("gen", lit(0L))
+        .repartition(col(bucketCol)))
+      .mode("overwrite").partitionBy(bucketCol)
       .parquet(s"$path/$logical")
 
   /** Append one mutation's facts at `gen` into the resolved bucketed
     * tree — same one-file-per-bucket shape as [[writeFacts]]. */
   def appendFacts(facts: DataFrame, path: String, logical: String,
       bucketCol: String, gen: Long): Unit =
-    facts.withColumn("gen", lit(gen))
-      .repartition(col(bucketCol))
-      .write.mode("append").partitionBy(bucketCol)
+    Parquet.writer(facts.withColumn("gen", lit(gen))
+        .repartition(col(bucketCol)))
+      .mode("append").partitionBy(bucketCol)
       .parquet(resolve(facts.sparkSession, path, logical))
 
   /** [[writeFacts]] for a flat (unbucketed) side table. */
   def writeFlatFacts(facts: DataFrame, path: String,
       logical: String): Unit =
-    facts.withColumn("gen", lit(0L))
-      .write.mode("overwrite").parquet(s"$path/$logical")
+    Parquet.writer(facts.withColumn("gen", lit(0L)))
+      .mode("overwrite").parquet(s"$path/$logical")
 
   /** [[appendFacts]] for a flat (unbucketed) side table. */
   def appendFlatFacts(facts: DataFrame, path: String, logical: String,
       gen: Long): Unit =
-    facts.withColumn("gen", lit(gen))
-      .write.mode("append")
+    Parquet.writer(facts.withColumn("gen", lit(gen)))
+      .mode("append")
       .parquet(resolve(facts.sparkSession, path, logical))
 
   /** Reset `path` for a FRESH BUILD: delete the manifest (pointers
@@ -270,7 +270,7 @@ object IndexLayout {
   def freshLayout(spark: SparkSession, path: String,
       sideLogicals: Seq[String] = Nil): Unit = {
     val root = new Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = Parquet.fs(spark, root)
     if (fs.exists(root)) {
       val logicals = IndexManifest.readHistory(spark, path)
         .flatMap(_.dirs.keysIterator).toSet ++
@@ -301,7 +301,7 @@ object IndexLayout {
   def liveKeyGens(spark: SparkSession, path: String, keyName: String,
       factLogical: String, m: IndexManifest): DataFrame = {
     val facts = visibleFacts(
-      spark.read.parquet(dir(path, m, factLogical)), m)
+      Parquet.read(spark, dir(path, m, factLogical)), m)
     applyTombstones(facts, tombstoneFloor(spark, path, keyName, m),
       keyName)
       .groupBy(col(keyName)).agg(max(col("gen")).as("gen"))
@@ -361,7 +361,7 @@ object IndexLayout {
 
   private def countParquet(spark: SparkSession, d: String): Int = {
     val p = new Path(d)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = Parquet.fs(spark, p)
     if (!fs.exists(p)) 0
     else {
       val it = fs.listFiles(p, true)
@@ -374,7 +374,7 @@ object IndexLayout {
 
   private def parquetBytes(spark: SparkSession, d: String): Long = {
     val p = new Path(d)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = Parquet.fs(spark, p)
     val it = fs.listFiles(p, true)
     var b = 0L
     while (it.hasNext) {
@@ -400,7 +400,7 @@ object IndexLayout {
       .replace("-", "").substring(0, 8)
     val next = s"$logical-v${m.seq + 1}-$token"
     val staging = new Path(s"$path/$next")
-    val fs = staging.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = Parquet.fs(spark, staging)
     if (fs.exists(staging)) fs.delete(staging, true)
     build(staging.toString)
     next
@@ -415,7 +415,7 @@ object IndexLayout {
       staged: Seq[String],
       e: ManifestCommitRaceException): Nothing = {
     val root = new Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = Parquet.fs(spark, root)
     staged.foreach { n =>
       val p = new Path(root, n)
       if (fs.exists(p)) fs.delete(p, true)
@@ -445,7 +445,7 @@ object IndexLayout {
   def gcUnreferenced(spark: SparkSession, path: String,
       m: IndexManifest, keep: Set[String] = Set.empty): Unit = {
     val root = new Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = Parquet.fs(spark, root)
     if (!fs.exists(root)) return
     val children = fs.listStatus(root).filter(_.isDirectory)
       .map(_.getPath.getName).toSet
@@ -522,16 +522,16 @@ object IndexLayout {
     require(dirExists(spark, cur), s"$cur does not exist")
     val before = countParquet(spark, cur)
     val newName = buildVersion(spark, path, m, logical, { st =>
-      val df = spark.read.parquet(cur)
+      val df = Parquet.read(spark, cur)
       partitionCol match {
         case Some(pc) =>
-          df.repartition(col(pc))
-            .write.mode("overwrite").partitionBy(pc).parquet(st)
+          Parquet.writer(df.repartition(col(pc)))
+            .mode("overwrite").partitionBy(pc).parquet(st)
         case None =>
           val nFiles = math.max(1L,
             (parquetBytes(spark, cur) + targetBytes - 1) / targetBytes)
-          df.repartition(nFiles.toInt)
-            .write.mode("overwrite").parquet(st)
+          Parquet.writer(df.repartition(nFiles.toInt))
+            .mode("overwrite").parquet(st)
       }
     })
     try IndexManifest.commit(spark, path, m.withDir(logical, newName))

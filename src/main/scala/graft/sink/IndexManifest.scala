@@ -164,7 +164,7 @@ object IndexManifest {
   private def fsOf(spark: SparkSession, path: String)
       : (FileSystem, Path) = {
     val p = new Path(path)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+    (Parquet.fs(spark, p), p)
   }
 
   /** The file's body if it is SEALED (its `len=` header matches the

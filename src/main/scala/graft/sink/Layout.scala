@@ -22,9 +22,9 @@ object Layout {
 
   def writeRangeClustered(df: DataFrame, path: String,
       clusterCols: Seq[String], numFiles: Int): Unit =
-    df.repartitionByRange(numFiles, clusterCols.map(col): _*)
-      .sortWithinPartitions(clusterCols.map(col): _*)
-      .write.mode(SaveMode.Overwrite).parquet(path)
+    Parquet.writer(df.repartitionByRange(numFiles, clusterCols.map(col): _*)
+        .sortWithinPartitions(clusterCols.map(col): _*))
+      .mode(SaveMode.Overwrite).parquet(path)
 
   /** Morton (Z-order) interleave of two bucketized dimensions — bit i of
     * `a` lands at output bit 2i+1, bit i of `b` at 2i.
@@ -63,7 +63,7 @@ object Layout {
     if (r.isNullAt(0) || r.isNullAt(2)) {
       // empty input (or all-NULL cluster column): nothing to cluster —
       // write as-is rather than NPE on the missing min/max
-      df.write.mode(SaveMode.Overwrite).parquet(path)
+      Parquet.writer(df).mode(SaveMode.Overwrite).parquet(path)
       return
     }
     val (loA, hiA, loB, hiB) =
@@ -76,11 +76,11 @@ object Layout {
           .cast("long")))
     val z = zValue(bucket(col(colA), loA, hiA),
       bucket(col(colB), loB, hiB), bits)
-    df.withColumn("_z", z)
-      .repartitionByRange(numFiles, col("_z"))
-      .sortWithinPartitions(col("_z"))
-      .drop("_z")
-      .write.mode(SaveMode.Overwrite).parquet(path)
+    Parquet.writer(df.withColumn("_z", z)
+        .repartitionByRange(numFiles, col("_z"))
+        .sortWithinPartitions(col("_z"))
+        .drop("_z"))
+      .mode(SaveMode.Overwrite).parquet(path)
   }
 
   /** Per-row-group parquet FOOTER statistics of one long-backed

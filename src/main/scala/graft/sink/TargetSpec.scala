@@ -72,7 +72,7 @@ final case class ParquetTarget(basePath: String) extends TargetSpec {
   def path(spec: TableSpec): String = s"$basePath/${spec.name}"
 
   override def overwriteBatch(df: DataFrame, spec: TableSpec): Unit = {
-    val writer = df.write
+    val writer = Parquet.writer(df)
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
     (if (spec.batchColumns.nonEmpty)
@@ -82,7 +82,7 @@ final case class ParquetTarget(basePath: String) extends TargetSpec {
   }
 
   override def append(df: DataFrame, spec: TableSpec): Unit = {
-    val writer = df.write.mode(SaveMode.Append)
+    val writer = Parquet.writer(df).mode(SaveMode.Append)
     (if (spec.batchColumns.nonEmpty)
        writer.partitionBy(spec.batchColumns: _*)
      else writer)

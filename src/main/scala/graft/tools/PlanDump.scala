@@ -4,14 +4,16 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Optimization-round plan dumper + per-query timer.
   *
-  * `runMain graft.tools.PlanDump <suffix> <q1,q2,...> [sfDir] [outDir]`
+  * `runMain graft.tools.PlanDump <suffix> <q1,q2,...> [sfDir] [outDir] [reps]`
   *
   * For each selected catalog query (names select as `SPARK_GRAFT_ONLY`
   * does, [[graft.EntryPoint.select]]): writes `.explain("formatted")`
   * to `<outDir>/<name>_<suffix>.txt` (the plan evidence) under a
   * `== Build jobs: <n> ==` header that lists the call site of each job
   * the row ran while building its frame, and times the noop-sink
-  * evaluation (`reps` timed, min reported).
+  * evaluation (`reps` timed, default 4, min reported). The summary line
+  * also counts the jobs of one untimed execution of the frame whose
+  * build jobs the header lists (`exec_jobs=`).
   * Session bootstrap and warm-up are Bench's own
   * ([[graft.EntryPoint]]), so the numbers are comparable to the bench
   * floors.
@@ -44,7 +46,7 @@ object PlanDump {
       }
     }
 
-    val reps = 4
+    val reps = args.lift(4).map(_.toInt).getOrElse(4)
     resolved.foreach { name =>
       val fn = all(name)
       spark.sparkContext.setJobDescription(name)
@@ -66,6 +68,13 @@ object PlanDump {
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
           header + plan)
+        buildJobs.clear()
+        spark.sparkContext.addSparkListener(jobListener)
+        try df.write.format("noop").mode("overwrite").save() finally {
+          settle(() => buildJobs.size())
+          spark.sparkContext.removeSparkListener(jobListener)
+        }
+        val execJobs = buildJobs.size()
         spark.catalog.clearCache()
         // timed passes: rebuild the frame each time (same as Bench)
         val ts = (1 to reps).map { _ =>
@@ -76,7 +85,9 @@ object PlanDump {
           dt
         }
         val all3 = ts.map(t => f"$t%.3f").mkString(" ")
-        println(f"[plandump] $name%-34s min=${ts.min}%7.3f s  reps=[$all3]  plan=$outDir/${name}_$suffix.txt")
+        println(f"[plandump] $name%-34s min=${ts.min}%7.3f s  reps=[$all3]  " +
+          s"build_jobs=${jobs.size} exec_jobs=$execJobs  " +
+          s"plan=$outDir/${name}_$suffix.txt")
       } catch {
         case e: Throwable =>
           println(s"[plandump] $name FAILED: ${e.getMessage}")

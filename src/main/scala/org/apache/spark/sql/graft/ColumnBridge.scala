@@ -10,8 +10,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * helpers live in `org.apache.spark.sql.classic.ExpressionUtils`, which
   * is package-private. Extensions that define native Catalyst
   * expressions conventionally expose them via a shim in the sql package
-  * namespace — this object is that shim, and the only graft code living
-  * outside the `graft` package.
+  * namespace — this object is that shim. Such shims (this one,
+  * [[PlanBridge]] and the parquet package's `FooterSchema`) are the only
+  * graft code living outside the `graft` package.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

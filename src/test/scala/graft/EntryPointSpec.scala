@@ -45,7 +45,7 @@ class EntryPointSpec extends SparkSpec {
 
   test("warm-up directory: the sf0.001 sibling, never the timed dir") {
     assume(sys.env.get("SPARK_GRAFT_WARM_DIR").isEmpty)
-    val root = java.nio.file.Files.createTempDirectory("warmdir").toFile
+    val root = tempDir("warmdir").toFile
     val sf = new java.io.File(root, "sf0.1")
     val warm = new java.io.File(root, "sf0.001")
     sf.mkdir()

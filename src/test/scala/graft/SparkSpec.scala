@@ -11,6 +11,9 @@ trait SparkSpec extends AnyFunSuite {
     cores = SparkSpec.cores,
     conf = Map("spark.sql.warehouse.dir" -> SparkSpec.warehouse))
 
+  /** [[SparkSpec.tempDir]]. */
+  def tempDir(prefix: String): java.nio.file.Path = SparkSpec.tempDir(prefix)
+
   def fixture(name: String): String =
     getClass.getResource(s"/fixtures/$name").getPath
 
@@ -36,13 +39,21 @@ object SparkSpec {
   /** Cores (and shuffle partitions) of the test session. */
   val cores = 4
 
-  /** The test JVM's one warehouse directory: [[EntryPoint.session]] is
-    * getOrCreate, so only the first suite's conf ever applies. Created
-    * once, and deleted with its contents when the JVM exits. */
-  lazy val warehouse: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-wh")
-    sys.addShutdownHook(
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile))
-    dir.toString
+  private val created =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  sys.addShutdownHook(created.forEach { dir =>
+    org.apache.commons.io.FileUtils.deleteQuietly(dir); ()
+  })
+
+  /** A new temp directory, deleted with its contents when the test JVM
+    * exits. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    created.add(dir.toFile)
+    dir
   }
+
+  /** The test JVM's one warehouse directory: [[EntryPoint.session]] is
+    * getOrCreate, so only the first suite's conf ever applies. */
+  lazy val warehouse: String = tempDir("graft-wh").toString
 }

@@ -17,7 +17,7 @@ import java.sql.Date
 class FactCustomerGoldenSpec extends SparkSpec {
 
   test("golden fact_customer + fact_customer_dq, idempotent re-run") {
-    val base = Files.createTempDirectory("graft_golden").toString
+    val base = tempDir("graft_golden").toString
     val target = ParquetTarget(base)
     val task = new FactCustomerTask(spark, Date.valueOf("2019-06-30"),
       fixture("customers.csv"), fixture("customer_blood_groups.csv"),

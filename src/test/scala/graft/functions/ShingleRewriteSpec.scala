@@ -20,7 +20,7 @@ class ShingleRewriteSpec extends SparkSpec {
   // extra rules run, leaving nothing to rewrite
   private def docs = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-rw").toString
+    val dir = tempDir("graft-rw").toString
     Seq("A quick brown fox", "one two", "x y z x y z").toDF("text")
       .write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir)
@@ -41,7 +41,7 @@ class ShingleRewriteSpec extends SparkSpec {
   test("NULL text still yields [] after the rewrite (CASE semantics kept)") {
     assert(enabled)
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-rwn").toString
+    val dir = tempDir("graft-rwn").toString
     Seq(Some("a b c"), None).toDF("text")
       .write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)

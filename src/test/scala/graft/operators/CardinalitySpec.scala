@@ -48,8 +48,7 @@ class CardinalitySpec extends SparkSpec {
   }
 
   test("hll: persisted sketch round-trips; wrong p fails loudly") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-hll-spec").toString
+    val dir = tempDir("graft-hll-spec").toString
     val regs = Cardinality.hllRegisters(
       (1 to 1000).map(_.toLong).toDF("id"), "id")
     Cardinality.writeSketch(regs, dir)

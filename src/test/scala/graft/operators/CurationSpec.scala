@@ -505,7 +505,7 @@ class CurationSpec extends SparkSpec {
       (i, (0 until 12).map(j => s"w${i % 4}_$j").mkString(" ")))
       .toDF("doc_id", "text")
     val bench = docs.filter($"doc_id" % 5 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloom_rt")
+    val dir = tempDir("graft_bloom_rt")
       .toFile
     try {
       Curation.BloomFilter

@@ -597,8 +597,7 @@ class DedupSpec extends SparkSpec {
         r.getDouble(3))).toSeq
     assert(truth.nonEmpty) // live branch: 2–5 share most shingles
     for (buckets <- Seq(1, 4, 16)) {
-      val dir = java.nio.file.Files
-        .createTempDirectory("shidx").toString
+      val dir = tempDir("shidx").toString
       Dedup.writeShingleIndex(corpus, dir, n = 3,
         shingleBuckets = buckets)
       Dedup.shingleFamily().append(dir, inc)
@@ -616,7 +615,7 @@ class DedupSpec extends SparkSpec {
   test("shingle index: two successive appends ≡ one; corpus-internal " +
       "pairs never re-emitted") {
     val all = shingleIndexCorpus
-    val dir = java.nio.file.Files.createTempDirectory("shidx2").toString
+    val dir = tempDir("shidx2").toString
     Dedup.writeShingleIndex(all.where(col("doc_id") <= 2), dir, n = 3,
       shingleBuckets = 4)
     Dedup.shingleFamily().append(dir, all.where(col("doc_id").isin(3L, 4L)))
@@ -642,7 +641,7 @@ class DedupSpec extends SparkSpec {
   test("shingle index DELETE: tombstoned docs vanish from pair sets " +
       "(ranks recomputed as if they never existed); purge ≡ logical") {
     val all = shingleIndexCorpus
-    val dir = java.nio.file.Files.createTempDirectory("shidx3").toString
+    val dir = tempDir("shidx3").toString
     Dedup.writeShingleIndex(all.where(col("doc_id") <= 4), dir, n = 3,
       shingleBuckets = 4)
     Dedup.shingleFamily().append(dir, all.where(col("doc_id") >= 5))
@@ -679,7 +678,7 @@ class DedupSpec extends SparkSpec {
       "upsert-twice ≡ once; purge ≡ logical") {
     import spark.implicits._
     val all = shingleIndexCorpus
-    val dir = java.nio.file.Files.createTempDirectory("shidxup").toString
+    val dir = tempDir("shidxup").toString
     try {
       Dedup.writeShingleIndex(all, dir, n = 3, shingleBuckets = 4)
       // doc 3 (matched nothing) is re-crawled INTO the dup family
@@ -718,7 +717,7 @@ class DedupSpec extends SparkSpec {
       "fingerprints dead — ≡ rebuild with mutated corpus") {
     import spark.implicits._
     val all = shingleIndexCorpus
-    val dir = java.nio.file.Files.createTempDirectory("fpidxup").toString
+    val dir = tempDir("fpidxup").toString
     try {
       Dedup.writeFingerprintIndex(all, dir, k = 25, w = 10,
         fpBuckets = 4)
@@ -745,7 +744,7 @@ class DedupSpec extends SparkSpec {
   test("fingerprint index: build∘append∘query ≡ substringCandidates " +
       "restricted to increment-touching pairs; tombstones respected") {
     val all = shingleIndexCorpus
-    val dir = java.nio.file.Files.createTempDirectory("fpidx").toString
+    val dir = tempDir("fpidx").toString
     try {
       Dedup.writeFingerprintIndex(all.where(col("doc_id") <= 4), dir,
         k = 25, w = 10, fpBuckets = 4)
@@ -787,7 +786,7 @@ class DedupSpec extends SparkSpec {
   test("fingerprint index COMPACTION: file count shrinks after two " +
       "appends, candidate pairs bit-identical through the rewrite") {
     val all = shingleIndexCorpus
-    val dir = java.nio.file.Files.createTempDirectory("fpidxc").toString
+    val dir = tempDir("fpidxc").toString
     def parquetFiles(): Int = {
       def walk(f: java.io.File): Int = {
         val kids = Option(f.listFiles()).getOrElse(Array.empty)
@@ -822,7 +821,7 @@ class DedupSpec extends SparkSpec {
   test("shingle index COMPACTION: file count shrinks after two " +
       "appends, pair results bit-identical through the rewrite") {
     val all = shingleIndexCorpus
-    val dir = java.nio.file.Files.createTempDirectory("shidx4").toString
+    val dir = tempDir("shidx4").toString
     def parquetFiles(): Int = {
       def walk(f: java.io.File): Int = {
         val kids = Option(f.listFiles()).getOrElse(Array.empty)

@@ -170,8 +170,7 @@ class QuantizeSpec extends SparkSpec {
   test("IvfPqIndex parquet round-trip searches bit-identically to the " +
     "live pipeline") {
     val q = emb.filter(col("vec_id") < 5)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_idx").toFile
+    val dir = tempDir("graft_ivfpq_idx").toFile
     def rm(f: java.io.File): Unit = {
       val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
       f.delete(): Unit

@@ -130,8 +130,7 @@ class RetrievalSpec extends SparkSpec {
     }.toDF("doc_id", "text")
     val queries = Seq(1 -> "needle common", 2 -> "words here needle",
       3 -> "zzzabsent common")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tfidx").toString
+    val dir = tempDir("graft_tfidx").toString
     try {
       Retrieval.writeTfIndex(
         docs.where(col("doc_id") % 3 =!= 2), dir, wordBuckets = 8)
@@ -168,8 +167,7 @@ class RetrievalSpec extends SparkSpec {
       "deleted docs; purge ≡ logical; delete∘append commutes") {
     val docs = tfIdxDocs
     val queries = Seq(1 -> "needle common", 2 -> "words here needle")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tfdel").toString
+    val dir = tempDir("graft_tfdel").toString
     try {
       Retrieval.writeTfIndex(docs, dir, wordBuckets = 8)
       Retrieval.tfFamily().delete(dir,
@@ -190,8 +188,7 @@ class RetrievalSpec extends SparkSpec {
         Retrieval.bm25TopKFromTfIndex(spark, dir, queries, 10)) == truth2)
       // the commuted order (append then delete) on a fresh index
       // reaches the same state
-      val dir2 = java.nio.file.Files
-        .createTempDirectory("graft_tfdel2").toString
+      val dir2 = tempDir("graft_tfdel2").toString
       try {
         Retrieval.writeTfIndex(docs, dir2, wordBuckets = 8)
         Retrieval.tfFamily().append(dir2, more)
@@ -227,8 +224,7 @@ class RetrievalSpec extends SparkSpec {
       when(col("doc_id") % 5 === 0,
         concat(col("text"), lit(" updated revision")))
         .otherwise(col("text")))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tfup").toString
+    val dir = tempDir("graft_tfup").toString
     try {
       Retrieval.writeTfIndex(docs, dir, wordBuckets = 8)
       val crawl = mutated.where(col("doc_id") % 5 === 0)
@@ -270,8 +266,7 @@ class RetrievalSpec extends SparkSpec {
       "later purge still removes exactly them)") {
     val docs = tfIdxDocs
     val queries = Seq(1 -> "needle common", 2 -> "words here updated")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tfupcomp").toString
+    val dir = tempDir("graft_tfupcomp").toString
     try {
       Retrieval.writeTfIndex(docs, dir, wordBuckets = 8)
       val crawl = docs.where(col("doc_id") % 5 === 0)
@@ -301,8 +296,7 @@ class RetrievalSpec extends SparkSpec {
       "query results bit-identical through the rewrite") {
     val docs = tfIdxDocs
     val queries = Seq(1 -> "needle common", 2 -> "words here")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tfcompact").toString
+    val dir = tempDir("graft_tfcompact").toString
     def parquetFiles(): Int = {
       def walk(f: java.io.File): Int = {
         val kids = Option(f.listFiles()).getOrElse(Array.empty)
@@ -418,7 +412,7 @@ class RetrievalSpec extends SparkSpec {
       == adhoc)
     assert(canonTopK(Retrieval.bm25TopKPrunedIndexed(index, queries, k))
       == adhoc)
-    val dir = java.nio.file.Files.createTempDirectory("bm25idx").toString
+    val dir = tempDir("bm25idx").toString
     try {
       Retrieval.writeBm25Index(index, dir, wordBuckets = 8)
       assert(canonTopK(

@@ -598,7 +598,7 @@ class SimilaritySpec extends SparkSpec {
       (i, Array.tabulate(8)(d =>
         (math.sin(i * 3.0 + d) * 0.5 + 0.5).toFloat))
     }.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("annidx").toString
+    val dir = tempDir("annidx").toString
     try {
       Similarity.ivfPqIndex(emb, nCells = 4, dims = 8, m = 2,
         nCentroids = 4).write(dir)
@@ -636,7 +636,7 @@ class SimilaritySpec extends SparkSpec {
         (math.sin(i * 3.0 + d) * 0.5 + 0.5)).toFloat)
     val orig = (0L until 24L).map(i => (i, vec(i, flip = false)))
       .toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("annup").toString
+    val dir = tempDir("annup").toString
     try {
       Similarity.ivfPqIndex(orig, nCells = 4, dims = 8, m = 2,
         nCentroids = 4).write(dir)
@@ -692,7 +692,7 @@ class SimilaritySpec extends SparkSpec {
       (i.toLong, Array.tabulate(8)(d =>
         (math.sin(i * 3.0 + d) * 0.5 + 0.5).toFloat))
     }.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("annapp").toString
+    val dir = tempDir("annapp").toString
     try {
       Similarity.ivfPqIndex(vecs(0 until 16), nCells = 4, dims = 8,
         m = 2, nCentroids = 4).write(dir)
@@ -737,7 +737,7 @@ class SimilaritySpec extends SparkSpec {
     // enough that the zero-distortion codebook seeds (8 lowest train
     // ids) don't bias the train-side mean visibly
     val train = vecs(0 until 512 by 2, 0.0)
-    val dir = java.nio.file.Files.createTempDirectory("anndrift")
+    val dir = tempDir("anndrift")
       .toString
     try {
       Similarity.ivfPqIndex(train, nCells = 4, dims = 8, m = 2,
@@ -772,7 +772,7 @@ class SimilaritySpec extends SparkSpec {
       (i.toLong, Array.tabulate(8)(d =>
         (math.sin(i * 3.0 + d) * 0.5 + 0.5 + shift).toFloat))
     }.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("annretrain")
+    val dir = tempDir("annretrain")
       .toString
     try {
       // yesterday's geometry: trained on the old slice, then a

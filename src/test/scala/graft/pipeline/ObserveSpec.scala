@@ -34,13 +34,13 @@ class ObserveSpec extends SparkSpec {
     }
 
   test("metrics ride the write action and pass") {
-    val dir = java.nio.file.Files.createTempDirectory("obs1").toString
+    val dir = tempDir("obs1").toString
     mkTask(spark, dir, minRows = 2).execute()
     assert(spark.read.parquet(s"$dir/obs_t").count() == 2)
   }
 
   test("failing check aborts; rerun with relaxed gate overwrites batch") {
-    val dir = java.nio.file.Files.createTempDirectory("obs2").toString
+    val dir = tempDir("obs2").toString
     intercept[TooFewRowsException] {
       mkTask(spark, dir, minRows = 5).execute()
     }

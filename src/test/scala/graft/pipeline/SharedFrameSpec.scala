@@ -91,7 +91,7 @@ class SharedFrameSpec extends SparkSpec with BeforeAndAfterAll {
     override def transform(): Unit = inGroup(s"$dir/transform")(super.transform())
   }
 
-  private def tmp(): String = Files.createTempDirectory("graft_shared").toString
+  private def tmp(): String = tempDir("graft_shared").toString
 
   /** Nothing of `task`'s is left in the cache manager or the block
     * manager's persisted RDDs. */

@@ -11,7 +11,7 @@ class IndexLayoutSpec extends SparkSpec {
   test("empty-id tombstone append is a no-op (a zero-row dynamic " +
       "write would leave an unreadable tombstones dir)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("idxlay").toString
+    val dir = tempDir("idxlay").toString
     try {
       graft.operators.Retrieval.writeTfIndex(
         Seq((1L, "some common words"), (2L, "needle common"))
@@ -36,7 +36,7 @@ class IndexLayoutSpec extends SparkSpec {
   test("generation counter: manifest-backed, monotone across " +
       "mutations, preserved through compaction, history pruned") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("genlog").toString
+    val dir = tempDir("genlog").toString
     def manifestFiles(): Int =
       Option(new java.io.File(s"$dir/_manifest").listFiles())
         .getOrElse(Array.empty)

@@ -33,7 +33,7 @@ class IndexLifecycleSpec extends SparkSpec {
       twin: DataFrame => (Set[Seq[Any]], Set[Long]))
 
   private def tmp(p: String) =
-    java.nio.file.Files.createTempDirectory(p).toString
+    tempDir(p).toString
 
   private def delete(d: String): Unit =
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d))

@@ -13,7 +13,7 @@ class LayoutSpec extends SparkSpec {
     import spark.implicits._
     val df = new scala.util.Random(7).shuffle((1 to 20000).toList)
       .map(i => (i.toLong, s"v$i")).toDF("k", "v")
-    val dir = java.nio.file.Files.createTempDirectory("layout").toString
+    val dir = tempDir("layout").toString
 
     Layout.writeRangeClustered(df, s"$dir/clustered", Seq("k"), 8)
 
@@ -51,7 +51,7 @@ class LayoutSpec extends SparkSpec {
     val df = (1 to 20000)
       .map(_ => (rnd.nextInt(100000).toLong, rnd.nextInt(100000).toLong))
       .toDF("x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
+    val dir = tempDir("zorder").toString
 
     def extents(path: String): Seq[(Double, Double)] =
       new java.io.File(path).listFiles()
@@ -88,7 +88,7 @@ class LayoutSpec extends SparkSpec {
     assume(src.exists(), "driver testdata not present")
     val li = spark.read.parquet(src.toString)
       .select(col("l_orderkey"), col("l_shipdate"), col("l_quantity"))
-    val dir = java.nio.file.Files.createTempDirectory("footers").toString
+    val dir = tempDir("footers").toString
     // small row groups so pruning granularity is sub-file (the
     // row-group reality the 128MB default hides at this tiny SF)
     li.repartition(4).write.option("parquet.block.size", 32 * 1024)

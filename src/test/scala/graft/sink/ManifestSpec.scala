@@ -29,7 +29,7 @@ class ManifestSpec extends SparkSpec {
       "committed / gc) succeeds and sees exactly the pre- or " +
       "post-purge snapshot") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("msnap").toString
+    val dir = tempDir("msnap").toString
     val queries = Seq(1 -> "needle common", 2 -> "doc7 hay")
     try {
       val docs = tfDocs(spark)
@@ -71,7 +71,7 @@ class ManifestSpec extends SparkSpec {
       "snapshot fully readable; dying after the commit (before GC) " +
       "leaves the NEW one; the retry completes and GCs the garbage") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mcrash").toString
+    val dir = tempDir("mcrash").toString
     val queries = Seq(1 -> "needle common", 2 -> "doc7 hay")
     try {
       val docs = tfDocs(spark)
@@ -123,7 +123,7 @@ class ManifestSpec extends SparkSpec {
       "(rewrites keep the previous snapshot's trees; only " +
       "two-generations-old versions are collected)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mrace").toString
+    val dir = tempDir("mrace").toString
     val queries = Seq(1 -> "needle common", 2 -> "revised fresh")
     try {
       val docs = tfDocs(spark)
@@ -198,7 +198,7 @@ class ManifestSpec extends SparkSpec {
   test("commit mechanics: sequence strictly increases, torn temp " +
       "files are invisible, a stale-sequence double-commit is refused " +
       "(single-writer violation), history pruning keeps the tail") {
-    val dir = java.nio.file.Files.createTempDirectory("mmech").toString
+    val dir = tempDir("mmech").toString
     try {
       assert(IndexManifest.read(spark, dir).isEmpty)
       val m1 = IndexManifest.commit(spark, dir,
@@ -234,7 +234,7 @@ class ManifestSpec extends SparkSpec {
       "upsert's tombstone and fact appends flip visible in ONE " +
       "publish commit)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mmut").toString
+    val dir = tempDir("mmut").toString
     try {
       // twin docs 101/102 always carry IDENTICAL text of constant
       // length, alternating tf("pair") between revisions (2 vs 1), so
@@ -303,7 +303,7 @@ class ManifestSpec extends SparkSpec {
       "generation are INVISIBLE — tombstones and facts alike — and " +
       "the publish commit flips the whole mutation visible at once") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mpub").toString
+    val dir = tempDir("mpub").toString
     val queries = Seq(1 -> "needle stale", 2 -> "revised fresh")
     try {
       val docs = Seq((0L, "common base corpus"),
@@ -340,7 +340,7 @@ class ManifestSpec extends SparkSpec {
       "DISTINCT generations (commitWith re-derives and retries); a " +
       "stale direct commit loses LOUDLY even on the local filesystem " +
       "(atomic create-if-absent claim, not rename-clobber)") {
-    val dir = java.nio.file.Files.createTempDirectory("mcas").toString
+    val dir = tempDir("mcas").toString
     try {
       val threads = 4
       val perThread = 5
@@ -383,7 +383,7 @@ class ManifestSpec extends SparkSpec {
       "unmoved for it, its staged trees deleted) and a rerun " +
       "succeeds against the winner's snapshot") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mdirrace").toString
+    val dir = tempDir("mdirrace").toString
     try {
       Seq((1L, 10L), (2L, 20L)).toDF("doc_id", "n")
         .write.parquet(s"$dir/docs")
@@ -436,7 +436,7 @@ class ManifestSpec extends SparkSpec {
       "older than the grace is moved aside and its sequence reclaimed; " +
       "a YOUNG unsealed claim (in-flight writer) makes a racer lose, " +
       "not recover; pruneHistory sweeps the recovered torn files") {
-    val dir = java.nio.file.Files.createTempDirectory("mtorn").toString
+    val dir = tempDir("mtorn").toString
     try {
       val m1 = IndexManifest.commit(spark, dir,
         IndexManifest.Fresh.copy(gen = 1L))
@@ -475,7 +475,7 @@ class ManifestSpec extends SparkSpec {
   test("manifest parse fuzz: arbitrary torn/garbage bytes in m-files " +
       "never throw and never serve — readers fall back to the newest " +
       "SEALED snapshot") {
-    val dir = java.nio.file.Files.createTempDirectory("mfuzz").toString
+    val dir = tempDir("mfuzz").toString
     try {
       val m1 = IndexManifest.commit(spark, dir,
         IndexManifest.Fresh.copy(gen = 5L, visibleGen = 5L))
@@ -531,7 +531,7 @@ class ManifestSpec extends SparkSpec {
       "facts at its reserved generation is KILLED by the replay's " +
       "tombstones — upsert replay ≡ upsert once") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mres").toString
+    val dir = tempDir("mres").toString
     val queries = Seq(1 -> "needle common", 2 -> "revised fresh")
     try {
       val docs = Seq((0L, "common base corpus"),
@@ -550,8 +550,7 @@ class ManifestSpec extends SparkSpec {
       Retrieval.tfFamily().upsert(dir, crawl)
       val got = canon(Retrieval.bm25TopKFromTfIndex(
         spark, dir, queries, 10))
-      val cleanDir = java.nio.file.Files
-        .createTempDirectory("mres2").toString
+      val cleanDir = tempDir("mres2").toString
       try {
         Retrieval.writeTfIndex(docs, cleanDir, wordBuckets = 8)
         Retrieval.tfFamily().upsert(cleanDir, crawl)
@@ -570,7 +569,7 @@ class ManifestSpec extends SparkSpec {
       "retain_commits and retain_ms (age by the filesystem's clock), " +
       "the listing stays O(retention), and the fields round-trip " +
       "through unrelated commits") {
-    val dir = java.nio.file.Files.createTempDirectory("mret").toString
+    val dir = tempDir("mret").toString
     def mFiles() = new java.io.File(s"$dir/_manifest").listFiles()
       .count(_.getName.matches("m-\\d{20}"))
     try {
@@ -590,7 +589,7 @@ class ManifestSpec extends SparkSpec {
       assert(mFiles() == 2, s"count-retention kept ${mFiles()}")
       assert(IndexManifest.read(spark, dir).get.gen == 12L)
       // default retention (no setRetention) remains HistoryKeep
-      val dir2 = java.nio.file.Files.createTempDirectory("mret2")
+      val dir2 = tempDir("mret2")
         .toString
       try {
         (1 to IndexManifest.HistoryKeep + 5).foreach(_ =>

@@ -16,7 +16,7 @@ class ParquetTargetSpec extends SparkSpec {
     batchColumns = Seq("batch_id"))
 
   test("batch overwrite is idempotent and scoped to the batch (§1.4)") {
-    val base = Files.createTempDirectory("graft_sink").toString
+    val base = tempDir("graft_sink").toString
     val target = ParquetTarget(base)
     // write batch 1 and batch 2
     target.overwriteBatch(Seq((1, 10), (1, 11)).toDF("batch_id", "v"), spec)

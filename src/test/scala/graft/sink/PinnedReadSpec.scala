@@ -26,7 +26,7 @@ class PinnedReadSpec extends SparkSpec {
       "+ purge + compaction; the LATEST read moves on; past the " +
       "retention window readAt refuses with a clear error") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pin").toString
+    val dir = tempDir("pin").toString
     val queries = Seq(1 -> "needle common", 2 -> "revised fresh")
     try {
       val docs = (0L until 20L).map(i => (i,
@@ -80,7 +80,7 @@ class PinnedReadSpec extends SparkSpec {
       "a compaction — the listing stays O(N), and lowering retention " +
       "ages the pin out loudly") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pinret").toString
+    val dir = tempDir("pinret").toString
     val queries = Seq(1 -> "needle common")
     def mFiles() = new java.io.File(s"$dir/_manifest").listFiles()
       .count(_.getName.matches("m-\\d{20}"))
@@ -128,7 +128,7 @@ class PinnedReadSpec extends SparkSpec {
       "streamed micro-batches + pruning where the default window " +
       "would have aged it out") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pinstream")
+    val dir = tempDir("pinstream")
       .toString
     val queries = Seq(1 -> "needle common")
     try {
@@ -164,8 +164,8 @@ class PinnedReadSpec extends SparkSpec {
   test("pinned shingle-index pair queries and pinned IVF-PQ reads " +
       "resolve every subtree from the caller-held snapshot") {
     import spark.implicits._
-    val sdir = java.nio.file.Files.createTempDirectory("pinsh").toString
-    val vdir = java.nio.file.Files.createTempDirectory("pinvq").toString
+    val sdir = tempDir("pinsh").toString
+    val vdir = tempDir("pinvq").toString
     try {
       // shingle family: near-dup pairs pinned across an upsert that
       // would otherwise break the pair
@@ -193,8 +193,7 @@ class PinnedReadSpec extends SparkSpec {
 
       // fingerprint family: pinned substring candidates survive a
       // later upsert that rewrites the shared substring away
-      val fdir = java.nio.file.Files
-        .createTempDirectory("pinfp").toString
+      val fdir = tempDir("pinfp").toString
       try {
         val fdocs = Seq(
           (1L, "the quick brown fox jumps over the lazy dog today"),

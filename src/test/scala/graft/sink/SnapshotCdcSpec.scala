@@ -23,7 +23,7 @@ class SnapshotCdcSpec extends SparkSpec {
       "takedown and upsert-then-delete → delete; unchanged docs and " +
       "no-op tombstones → no row; purge/compaction change NOTHING") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("cdc").toString
+    val dir = tempDir("cdc").toString
     try {
       val docs = (0L until 20L).map(i => (i, s"base words doc$i body"))
         .toDF("doc_id", "text")
@@ -84,9 +84,9 @@ class SnapshotCdcSpec extends SparkSpec {
       "upserts because every stored code really changed)") {
     import spark.implicits._
     import graft.operators.{Dedup, Similarity}
-    val sh = java.nio.file.Files.createTempDirectory("cdcsh").toString
-    val fp = java.nio.file.Files.createTempDirectory("cdcfp").toString
-    val vq = java.nio.file.Files.createTempDirectory("cdcvq").toString
+    val sh = tempDir("cdcsh").toString
+    val fp = tempDir("cdcfp").toString
+    val vq = tempDir("cdcvq").toString
     try {
       val docs = (0L until 8L).map(i =>
         (i, s"alpha beta gamma doc$i delta epsilon body words here"))
@@ -151,7 +151,7 @@ class SnapshotCdcSpec extends SparkSpec {
   test("the incremental-pull loop: each cycle's delta applied to a " +
       "mirror reproduces the index's live doc set exactly") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("cdcloop").toString
+    val dir = tempDir("cdcloop").toString
     try {
       Retrieval.writeTfIndex(
         (0L until 10L).map(i => (i, s"seed doc$i words"))

@@ -41,7 +41,7 @@ class SourcesSpec extends SparkSpec {
   test("charset auto-detection: BOM, valid UTF-8, single-byte fallback") {
     import java.nio.file.Files
     def tmp(bytes: Array[Byte]): String = {
-      val f = Files.createTempFile("graft-enc", ".csv")
+      val f = Files.createTempFile(tempDir("graft-enc"), "enc", ".csv")
       Files.write(f, bytes)
       f.toString
     }
@@ -100,7 +100,7 @@ class SourcesSpec extends SparkSpec {
 
   test("json-lines scan: schema-first skips inference, FAILFAST on garbage") {
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft-json")
+    val dir = tempDir("graft-json")
     val f = dir.resolve("rows.json")
     java.nio.file.Files.writeString(f,
       """{"id": 1, "name": "a"}

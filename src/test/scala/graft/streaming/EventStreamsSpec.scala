@@ -380,7 +380,7 @@ class EventStreamsSpec extends SparkSpec {
     import spark.implicits._
     import graft.core.{ColumnDef, TableSpec}
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft-fb").toString
+    val dir = tempDir("graft-fb").toString
     val target = graft.sink.ParquetTarget(s"$dir/tables")
     val spec = TableSpec("stream_out", Seq(
       ColumnDef("epoch", LongType),
@@ -447,8 +447,7 @@ class EventStreamsSpec extends SparkSpec {
       (i, s"${"common words " * ((i % 3) + 1).toInt}doc$i " +
         (if (i < 5) "needle" else "hay"))
     }
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tfstream").toString
+    val dir = tempDir("graft_tfstream").toString
     val queries = Seq(1 -> "needle common", 2 -> "doc7 hay")
     try {
       // seed the index with the first third (the batch-built base)
@@ -480,8 +479,7 @@ class EventStreamsSpec extends SparkSpec {
       "mixing new docs and re-crawls of known ids lands the LATEST " +
       "text; replays still skipped") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tfupstream").toString
+    val dir = tempDir("graft_tfupstream").toString
     val queries = Seq(1 -> "needle common", 2 -> "revised fresh")
     try {
       graft.operators.Retrieval.writeTfIndex(
@@ -520,8 +518,7 @@ class EventStreamsSpec extends SparkSpec {
       "replay through the upsert path, whose fresh-generation " +
       "tombstones kill the partial facts)") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tfcrash").toString
+    val dir = tempDir("graft_tfcrash").toString
     val queries = Seq(1 -> "needle common", 2 -> "doc17 hay")
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
@@ -566,10 +563,8 @@ class EventStreamsSpec extends SparkSpec {
       "the new data") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tfsink").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_tfsink_ckpt").toString
+    val dir = tempDir("graft_tfsink").toString
+    val ckpt = tempDir("graft_tfsink_ckpt").toString
     val queries = Seq(1 -> "needle common")
     try {
       graft.operators.Retrieval.writeTfIndex(
@@ -612,10 +607,8 @@ class EventStreamsSpec extends SparkSpec {
       "ingests only the new data; pairs ≡ a batch-built index") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_shsink").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_shsink_ckpt").toString
+    val dir = tempDir("graft_shsink").toString
+    val ckpt = tempDir("graft_shsink_ckpt").toString
     val corpus = Seq(
       (0L, "alpha beta gamma delta epsilon zeta"),
       (1L, "alpha beta gamma delta epsilon eta"),
@@ -644,8 +637,7 @@ class EventStreamsSpec extends SparkSpec {
       run()
       val got = pairs(Seq(1L, 2L, 3L))
       // twin: batch-built index over the same corpus, same increment
-      val twinDir = java.nio.file.Files
-        .createTempDirectory("graft_shsink_twin").toString
+      val twinDir = tempDir("graft_shsink_twin").toString
       try {
         graft.operators.Dedup.writeShingleIndex(
           corpus.toDF("doc_id", "text"), twinDir, n = 3,
@@ -669,10 +661,8 @@ class EventStreamsSpec extends SparkSpec {
       "batch upsert of everything") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_annsink").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_annsink_ckpt").toString
+    val dir = tempDir("graft_annsink").toString
+    val ckpt = tempDir("graft_annsink_ckpt").toString
     val dims = 8; val m = 2
     def vec(seed: Long, flip: Boolean) = Array.tabulate(dims)(d =>
       (if (flip) -1 else 1) * ((seed * 13 + d * 7) % 17).toFloat)
@@ -700,8 +690,7 @@ class EventStreamsSpec extends SparkSpec {
           k = 3, nprobe = 2)
         .collect().map(_.toSeq).toSeq
       // twin: the same three re-embeds as ONE batch upsert
-      val twinDir = java.nio.file.Files
-        .createTempDirectory("graft_annsink_twin").toString
+      val twinDir = tempDir("graft_annsink_twin").toString
       try {
         graft.operators.Similarity.ivfPqIndex(
             corpus.toDF("vec_id", "embedding"), nCells = 2, dims, m,
@@ -750,8 +739,7 @@ class EventStreamsSpec extends SparkSpec {
       doc(6L, "alpha beta gamma delta epsilon theta common needle"),
       doc(7L, "the quick brown fox jumps over the lazy dog sometimes"))
     val all = seed ++ b0 ++ b1
-    val mk = (p: String) => java.nio.file.Files
-      .createTempDirectory(p).toString
+    val mk = (p: String) => tempDir(p).toString
     val (tfDir, shDir, fpDir, vqDir, ckpt) =
       (mk("cmp_tf"), mk("cmp_sh"), mk("cmp_fp"), mk("cmp_vq"),
         mk("cmp_ckpt"))
@@ -868,12 +856,9 @@ class EventStreamsSpec extends SparkSpec {
       "B died INSIDE its ingest after its facts landed — the " +
       "composed replay skips A and self-heals B as an upsert") {
     import spark.implicits._
-    val tfDir = java.nio.file.Files
-      .createTempDirectory("cmp2_tf").toString
-    val fpDir = java.nio.file.Files
-      .createTempDirectory("cmp2_fp").toString
-    val clean = java.nio.file.Files
-      .createTempDirectory("cmp2_clean").toString
+    val tfDir = tempDir("cmp2_tf").toString
+    val fpDir = tempDir("cmp2_fp").toString
+    val clean = tempDir("cmp2_clean").toString
     val seed = Seq(
       (0L, "the quick brown fox jumps over the lazy dog daily"),
       (1L, "completely unrelated text with nothing shared zq"))
@@ -929,10 +914,8 @@ class EventStreamsSpec extends SparkSpec {
       "crashed-after-facts delivery self-heals on an append-mode " +
       "replay (candidates ≡ a cleanly appended index)") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_fpsink").toString
-    val clean = java.nio.file.Files
-      .createTempDirectory("graft_fpsink_clean").toString
+    val dir = tempDir("graft_fpsink").toString
+    val clean = tempDir("graft_fpsink_clean").toString
     val corpus = Seq(
       (0L, "the quick brown fox jumps over the lazy dog repeatedly"),
       (1L, "the quick brown fox jumps over the lazy dog sometimes"),

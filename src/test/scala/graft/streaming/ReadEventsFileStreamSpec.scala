@@ -18,7 +18,7 @@ class ReadEventsFileStreamSpec extends SparkSpec {
       "with the session flag restored") {
     val src = Paths.get("/root/testdata/sf0.001/events.parquet")
     assume(Files.exists(src), "driver testdata not present")
-    val dir = Files.createTempDirectory("graft-evstream")
+    val dir = tempDir("graft-evstream")
     // two copies -> two files -> maxFilesPerTrigger=1 gives 2 batches
     Files.copy(src, dir.resolve("f1.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
@@ -51,7 +51,7 @@ class ReadEventsFileStreamSpec extends SparkSpec {
 
   test("readEvents starts on an EMPTY directory via the eventSchema " +
       "fallback and processes a later-arriving instant-layout file") {
-    val dir = Files.createTempDirectory("graft-evempty")
+    val dir = tempDir("graft-evempty")
     // empty directory: the probe cannot infer a schema; the logical
     // µs-timestamp fallback lets the stream START before data arrives
     val events = EventStreams.readEvents(spark, dir.toString)
@@ -66,7 +66,7 @@ class ReadEventsFileStreamSpec extends SparkSpec {
       // a file arriving AFTER start, in the fallback's own (instant
       // timestamp) layout, flows through the already-running stream
       import org.apache.spark.sql.functions._
-      val stage = Files.createTempDirectory("graft-evempty-stage")
+      val stage = tempDir("graft-evempty-stage")
       spark.range(1).select(lit(1L).as("event_id"),
           expr("TIMESTAMP '2024-01-01 00:00:00'").as("ts"),
           lit(7L).as("user_id"), lit("click").as("event_type"),
@@ -124,7 +124,7 @@ class ReadEventsFileStreamSpec extends SparkSpec {
   private def stageWithSentinel(): java.nio.file.Path = {
     val src = Paths.get("/root/testdata/sf0.001/events.parquet")
     assume(Files.exists(src), "driver testdata not present")
-    val dir = Files.createTempDirectory("graft-evparity")
+    val dir = tempDir("graft-evparity")
     Files.copy(src, dir.resolve("a_data.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     import org.apache.spark.sql.functions._
@@ -150,7 +150,7 @@ class ReadEventsFileStreamSpec extends SparkSpec {
         case None =>
           spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
       }
-    val sentDir = Files.createTempDirectory("graft-evsent")
+    val sentDir = tempDir("graft-evsent")
     sentinel.coalesce(1).write.mode("overwrite").parquet(sentDir.toString)
     val part = {
       val ls = Files.list(sentDir)

@@ -19,7 +19,7 @@ class StreamingCurationSpec extends SparkSpec {
   test("qualityGate over a file stream == batch verdicts, per doc") {
     val src = Paths.get("/root/testdata/sf0.001/documents.parquet")
     assume(Files.exists(src), "driver testdata not present")
-    val dir = Files.createTempDirectory("graft-docstream")
+    val dir = tempDir("graft-docstream")
     Files.copy(src, dir.resolve("d1.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
 
@@ -51,7 +51,7 @@ class StreamingCurationSpec extends SparkSpec {
     // scorer — including trained-weights serving (the q108 path)
     val src = Paths.get("/root/testdata/sf0.001/documents.parquet")
     assume(Files.exists(src), "driver testdata not present")
-    val dir = Files.createTempDirectory("graft-clsstream")
+    val dir = tempDir("graft-clsstream")
     Files.copy(src, dir.resolve("d1.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     val batchDocs = spark.read.parquet(dir.toString)
@@ -82,7 +82,7 @@ class StreamingCurationSpec extends SparkSpec {
     // per-doc stateful count, Complete mode for the re-emitted totals)
     val src = Paths.get("/root/testdata/sf0.001/documents.parquet")
     assume(Files.exists(src), "driver testdata not present")
-    val dir = Files.createTempDirectory("graft-bpestream")
+    val dir = tempDir("graft-bpestream")
     Files.copy(src, dir.resolve("d1.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     val batchDocs = spark.read.parquet(dir.toString)
