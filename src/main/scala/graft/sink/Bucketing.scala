@@ -21,9 +21,10 @@ object Bucketing {
   /** Write `df` as a bucketed+sorted managed table. */
   def writeBucketed(df: DataFrame, table: String, buckets: Int,
       keys: Seq[String]): Unit =
-    Parquet.tableWriter(df)
+    df.write
       .bucketBy(buckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)
       .mode("overwrite")
+      .format("parquet")
       .saveAsTable(table)
 }

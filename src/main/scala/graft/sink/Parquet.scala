@@ -26,14 +26,19 @@ import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
   *    options: manifest commits, fresh layouts and versioned rewrites
   *    create directories through it.
   *  - [[read]] resolves the schema on the driver: it lists the
-  *    directory down to its first data file, in name order and skipping
-  *    the `_`- and `.`-prefixed names Spark's file index skips, and
-  *    converts that file's footer with Spark's own footer-to-schema code
-  *    ([[FooterSchema]]). `spark.read.parquet(dir)` without a schema
-  *    submits a Spark job for the same footer while the plan is built.
-  *    Like Spark's inference without `mergeSchema`, it assumes the files
-  *    of one directory agree on their schema. Partition columns are
-  *    still discovered from the directory names, and come last.
+  *    directory down to the data file Spark's inference would read —
+  *    the first by full path string, skipping the `_`- and `.`-prefixed
+  *    names Spark's file index skips — and converts that file's footer
+  *    with Spark's own footer-to-schema code ([[FooterSchema]]).
+  *    `spark.read.parquet(dir)` without a schema submits a Spark job for
+  *    the same footer while the plan is built. Like Spark's inference
+  *    without `mergeSchema`, it assumes the files of one directory agree
+  *    on their schema; with `spark.sql.parquet.mergeSchema` on in the
+  *    session it leaves the inference to Spark. The summary files
+  *    `_metadata` and `_common_metadata`, which Spark's inference would
+  *    prefer, are not read: Spark has not written them by default since
+  *    2.0. Partition columns are still discovered from the directory
+  *    names, and come last.
   */
 object Parquet {
 
@@ -45,13 +50,6 @@ object Parquet {
   def writer(df: DataFrame): DataFrameWriter[Row] =
     df.write.options(fileOptions)
 
-  /** `df.write` in parquet for a managed table (`saveAsTable`). The
-    * options of a table write persist into its catalog entry, where a
-    * later reader of the table would need this library's classes, so
-    * this one writer goes without them. */
-  def tableWriter(df: DataFrame): DataFrameWriter[Row] =
-    df.write.format("parquet")
-
   /** The driver-side `FileSystem` of `path`, with [[writer]]'s options. */
   def fs(spark: SparkSession, path: Path): FileSystem = {
     val conf = spark.sessionState.newHadoopConf()
@@ -60,12 +58,15 @@ object Parquet {
   }
 
   /** `spark.read.parquet(dir)` with its schema resolved on the driver.
-    * With no data file under `dir` (or no `dir`), Spark's own read
-    * runs and fails as it does. */
+    * With no data file under `dir` (or no `dir`), or with schema merging
+    * on, Spark's own read runs, and fails, as it does. */
   def read(spark: SparkSession, dir: String): DataFrame = {
     val p = new Path(dir)
     val conf = spark.sessionState.newHadoopConf()
-    firstDataFile(p.getFileSystem(conf), p) match {
+    val first =
+      if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+      else firstDataFile(p.getFileSystem(conf), p)
+    first match {
       case Some(file) =>
         spark.read.schema(FooterSchema.of(spark, file, conf)).parquet(dir)
       case None => spark.read.parquet(dir)
@@ -78,14 +79,17 @@ object Parquet {
       if (st.isFile) Some(st) else firstBelow(fs, p)
     } catch { case _: FileNotFoundException => None }
 
-  private def firstBelow(fs: FileSystem, dir: Path): Option[FileStatus] = {
-    val (files, dirs) = fs.listStatus(dir)
+  /** The first data file below `dir` by full path string, the order
+    * of Spark's `ParquetUtils.splitFiles`. A directory sorts by its
+    * name plus `/`, the prefix every path below it shares, so the first
+    * non-empty entry in that order holds the first path. */
+  private def firstBelow(fs: FileSystem, dir: Path): Option[FileStatus] =
+    fs.listStatus(dir)
       .filterNot(st => hidden(st.getPath.getName))
-      .sortBy(_.getPath.getName)
-      .partition(_.isFile)
-    files.headOption.orElse(
-      dirs.iterator.flatMap(d => firstBelow(fs, d.getPath)).nextOption())
-  }
+      .sortBy(st => st.getPath.getName + (if (st.isFile) "" else "/"))
+      .iterator
+      .flatMap(st => if (st.isFile) Some(st) else firstBelow(fs, st.getPath))
+      .nextOption()
 
   /** The names Spark's file listing leaves out
     * (`HadoopFSUtils.shouldFilterOutPathName`). The summary files

@@ -4,16 +4,19 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Optimization-round plan dumper + per-query timer.
   *
-  * `runMain graft.tools.PlanDump <suffix> <q1,q2,...> [sfDir] [outDir] [reps]`
+  * `runMain graft.tools.PlanDump <suffix> <q1,q2,...> [sfDir] [outDir]`
   *
   * For each selected catalog query (names select as `SPARK_GRAFT_ONLY`
   * does, [[graft.EntryPoint.select]]): writes `.explain("formatted")`
   * to `<outDir>/<name>_<suffix>.txt` (the plan evidence) under a
   * `== Build jobs: <n> ==` header that lists the call site of each job
   * the row ran while building its frame, and times the noop-sink
-  * evaluation (`reps` timed, default 4, min reported). The summary line
-  * also counts the jobs of one untimed execution of the frame whose
-  * build jobs the header lists (`exec_jobs=`).
+  * evaluation (`reps` timed, min reported). The summary line also
+  * counts the jobs of one untimed execution of the frame whose build
+  * jobs the header lists (`exec_jobs=`). The timed passes run after
+  * that execution, one warm-up more than the mins recorded in
+  * OPTIMIZATION_r19/r20 had, so compare a min only with mins taken
+  * the same way.
   * Session bootstrap and warm-up are Bench's own
   * ([[graft.EntryPoint]]), so the numbers are comparable to the bench
   * floors.
@@ -46,7 +49,7 @@ object PlanDump {
       }
     }
 
-    val reps = args.lift(4).map(_.toInt).getOrElse(4)
+    val reps = 4
     resolved.foreach { name =>
       val fn = all(name)
       spark.sparkContext.setJobDescription(name)

@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `spark.read.parquet(`, `read.schema(` or DataFrame `.write` under
   * `graft/sink`, `graft/operators` or `Tables.scala`, outside that
   * module, fails here with its `path:line`. JDBC writes are not
-  * parquet writes and stay where they are. */
+  * parquet writes, and a managed-table write (`saveAsTable`) keeps its
+  * options in the catalog entry, where a later reader would need this
+  * library's classes; both stay where they are. */
 class ParquetIoScanSpec extends AnyFunSuite {
 
   private val main = SourceScan.srcRoot.resolve("main/scala/graft")
@@ -34,12 +36,13 @@ class ParquetIoScanSpec extends AnyFunSuite {
     assert(found.isEmpty, s"${found.size} hits: ${found.mkString(", ")}")
   }
 
-  test("no DataFrame .write outside the module, JDBC writes aside") {
+  test("no DataFrame .write outside the module, JDBC and table writes " +
+      "aside") {
     // `.write` followed by a chained call (`out.write(b)` is a stream
-    // write); a chain that reaches `.jdbc(` within the statement is a
-    // JDBC write
-    val found =
-      hits("""\.write\s*\.(?![^;{}]{0,200}?\.jdbc\()""".r)
+    // write); a chain that reaches `.jdbc(` or `.saveAsTable(` within
+    // the statement is a JDBC or a managed-table write
+    val found = hits(
+      """\.write\s*\.(?![^;{}]{0,200}?\.(?:jdbc|saveAsTable)\()""".r)
     assert(found.isEmpty, s"${found.size} hits: ${found.mkString(", ")}")
   }
 }

@@ -174,6 +174,43 @@ class ParquetIoSpec extends SparkSpec {
     }
   }
 
+  /** Two partition directories whose files disagree on their schema:
+    * `k=1` holds `id, extra`, `k=1-x` holds `id`. By name `k=1` comes
+    * first; by full path string (`-` sorts before `/`) `k=1-x` does. */
+  private def disagreeingParts(): String = {
+    val root = tempDir("pq-parts")
+    spark.range(3).selectExpr("id", "'x' AS extra")
+      .write.parquet(root.resolve("k=1").toString)
+    spark.range(3).write.parquet(root.resolve("k=1-x").toString)
+    root.toString
+  }
+
+  test("the footer read is the file Spark's inference reads: first by " +
+      "full path string") {
+    val dir = disagreeingParts()
+    assertSameSchema(dir)
+    assert(Parquet.read(spark, dir).schema.fieldNames.toSeq ==
+      Seq("id", "k"))
+  }
+
+  test("with schema merging on in the session, the read merges as " +
+      "Spark's does") {
+    val root = tempDir("pq-merge")
+    spark.range(3).selectExpr("id", "'x' AS extra")
+      .write.parquet(root.resolve("k=1").toString)
+    spark.range(3).selectExpr("id", "'y' AS other")
+      .write.parquet(root.resolve("k=2").toString)
+    val dir = root.toString
+    val key = "spark.sql.parquet.mergeSchema"
+    spark.conf.set(key, "true")
+    try {
+      assertSameSchema(dir)
+      // both footers count: no one file holds every column
+      assert(Parquet.read(spark, dir).schema.fieldNames.toSeq.sorted ==
+        Seq("extra", "id", "k", "other"))
+    } finally spark.conf.unset(key)
+  }
+
   /** Every fact tree under an index root (one per physical subtree,
     * versioned rewrites included). */
   private def assertFactTrees(root: String, step: String): Unit = {
