@@ -11,6 +11,9 @@ import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 /** The library's one parquet I/O path. Every parquet read and write
   * of `Tables`, `graft.sink` and `graft.operators` goes through here,
   * and so does every driver-side Hadoop `FileSystem` of `graft.sink`.
+  * A managed-table write (`saveAsTable`) does not: its options persist
+  * into the table's catalog entry, where a later reader would need
+  * this library's classes.
   * The rule: no plan-time Spark job and no forked process per file.
   *
   *  - [[writer]] is `df.write` with two per-write Hadoop options that
